@@ -1,5 +1,6 @@
 package graft.run
 
+import graft.Tables
 import graft.ops.CdcOps
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
@@ -117,7 +118,7 @@ object FullEtl {
   }
 
   def read(spark: SparkSession, src: Source): DataFrame = src match {
-    case ParquetSource(p) => spark.read.parquet(p)
+    case ParquetSource(p) => Tables.readParquet(spark, p)
     case j: JdbcSource =>
       val base = spark.read.format("jdbc")
         .option("url", j.url).option("dbtable", j.table)
