@@ -3,10 +3,11 @@ package graft.run
 import graft.ops.CdcOps
 import graft.sink.{ParquetStateStore, SinkKeys, SinkStrategy}
 import graft.model.Engine
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
@@ -215,6 +216,14 @@ object Consume {
     }
   }
 
+  /** Resolve ordering for a table: the configured version column when
+    * set, else event arrival time; arrival metadata breaks ties. */
+  def keysFor(t: TableSync): SinkKeys = t.versionColumn match {
+    case Some(v) => SinkKeys(t.pkCols, versionCol = v,
+      tieBreakers = Seq("event_unixtime", "action_seq"))
+    case None => SinkKeys(t.pkCols)
+  }
+
   /** Apply one micro-batch of one table to its store.
     *
     * Every engine — including MergeTree — appends an O(batch)-sized delta;
@@ -227,14 +236,6 @@ object Consume {
     * batch's delete must beat an earlier insert even when their event
     * timestamps tie or arrive out of order.
     */
-  /** Resolve ordering for a table: the configured version column when
-    * set, else event arrival time; arrival metadata breaks ties. */
-  def keysFor(t: TableSync): SinkKeys = t.versionColumn match {
-    case Some(v) => SinkKeys(t.pkCols, versionCol = v,
-      tieBreakers = Seq("event_unixtime", "action_seq"))
-    case None => SinkKeys(t.pkCols)
-  }
-
   def applyBatch(spark: SparkSession, t: TableSync, store: ParquetStateStore,
                  changelog: DataFrame, batchId: Long): Unit = {
     val keys = keysFor(t)
@@ -289,30 +290,10 @@ object Consume {
                runDdl: String => Unit, skipError: Boolean): Seq[(String, Long, String)] =
     applyDdl(collectDdl(batch, db), db, runDdl, skipError)
 
-  /** Collect schema `db`'s DDL statements from a batch, in event order —
-    * the one driver-side materialization of the K4 path (DDL rows are
-    * rare: one per ALTER, never data).
-    *
-    * Binlog timestamps are second-coarse and every DDL row carries
-    * action_seq 0, so `event_unixtime` alone leaves same-second ALTERs
-    * (ADD then MODIFY of one column) at the mercy of partition order —
-    * Spark's sort is not stable across equal keys, and the file scan
-    * packs partitions in SIZE order, not staged order. The tiebreak is
-    * (source file name, `monotonically_increasing_id()`), both stamped
-    * BEFORE the filter (see [[stampSourceOrder]]): staged file names
-    * carry the chronological order (the Redis bridge zero-pads entry
-    * ids into them), and within a file the monotonic id follows read
-    * order even across split chunks (chunk offsets map to partition
-    * indexes in order). Downstream consumers (`evolveTable`,
-    * `tableChangelog`, `renamesIn`) re-sort with Scala's STABLE
-    * `sortBy(_._2)`, so the refined order threads through untouched. */
+  /** Schema `db`'s DDL statements from a batch, in event order (see
+    * [[collectDdlAll]]). */
   private[run] def collectDdl(batch: DataFrame, db: String): Seq[(String, Long)] =
-    stampSourceOrder(batch)
-      .filter(col("action") === "query" && col("schema") === db)
-      .select(col("values"), col("event_unixtime"), col("_src_file"), col("_src_seq"))
-      .orderBy(col("event_unixtime"), col("_src_file"), col("_src_seq"))
-      .collect().toSeq
-      .map(row => (row.getString(0), row.getLong(1)))
+    collectDdlAll(batch).getOrElse(db, Nil)
 
   /** Stamp the source-order tiebreak columns unless the caller already
     * did. MUST run on the un-cached plan: `input_file_name()` over an
@@ -324,22 +305,53 @@ object Consume {
     else batch.withColumn("_src_file", input_file_name())
       .withColumn("_src_seq", monotonically_increasing_id())
 
-  /** All schemas' DDL in one Spark job — the consume loop runs this once
-    * per micro-batch (vs one filter+collect job per schema, which showed
-    * up as N sequential driver round-trips per trigger on multi-schema
-    * pipelines). Same source-order tiebreak as [[collectDdl]]; Scala's
-    * `groupBy` preserves encounter order within each group. */
+  /** Every schema's DDL statements from a batch, in event order — the one
+    * driver-side materialization of the K4 path. The consume loop runs it
+    * once per micro-batch (vs one filter+collect job per schema, which
+    * showed up as N sequential driver round-trips per trigger on
+    * multi-schema pipelines).
+    *
+    * One Spark job: the filter and the collect. DDL rows are rare (one per
+    * ALTER, never data), so they are sorted on the driver by
+    * [[ddlOrder]] — a SQL `orderBy` would add a range-partition sample
+    * job and a shuffle-map job per call.
+    *
+    * Binlog timestamps are second-coarse and every DDL row carries
+    * action_seq 0, so `event_unixtime` alone leaves same-second ALTERs
+    * (ADD then MODIFY of one column) at the mercy of partition order —
+    * the file scan packs partitions in SIZE order, not staged order. The
+    * tiebreak is (source file name, `monotonically_increasing_id()`),
+    * both stamped BEFORE the filter (see [[stampSourceOrder]]): staged
+    * file names carry the chronological order (the Redis bridge
+    * zero-pads entry ids into them), and within a file the monotonic id
+    * follows read order even across split chunks (chunk offsets map to
+    * partition indexes in order). Downstream consumers (`evolveTable`,
+    * `tableChangelog`, `renamesIn`) re-sort with Scala's STABLE
+    * `sortBy(_._2)`, and `groupBy` preserves encounter order within each
+    * schema, so the refined order threads through untouched. */
   private[run] def collectDdlAll(batch: DataFrame): Map[String, Seq[(String, Long)]] =
     stampSourceOrder(batch)
       .filter(col("action") === "query")
       .select(col("schema"), col("values"), col("event_unixtime"),
         col("_src_file"), col("_src_seq"))
-      .orderBy(col("event_unixtime"), col("_src_file"), col("_src_seq"))
       .collect().toSeq
+      .sorted(ddlOrder)
       .groupBy(_.getString(0))
       .map { case (db, rows) =>
         db -> rows.map(r => (r.getString(1), r.getLong(2)))
       }
+
+  /** Ascending (`event_unixtime`, `_src_file`, `_src_seq`) over
+    * [[collectDdlAll]]'s rows, nulls first — the total order Spark's
+    * `orderBy` of the same keys gives. The file name compares as UTF-8
+    * bytes ([[UTF8String]]), as Spark compares strings; `String`'s
+    * UTF-16 order differs above the BMP. */
+  private val ddlOrder: Ordering[Row] = {
+    implicit val utf8: Ordering[UTF8String] = (a, b) => a.compareTo(b)
+    def long(r: Row, i: Int) = Option(r.getAs[java.lang.Long](i)).map(_.longValue)
+    Ordering.by((r: Row) =>
+      (long(r, 2), Option(r.getString(3)).map(UTF8String.fromString), long(r, 4)))
+  }
 
   /** Statement-list form of [[applyDdl]] for callers that already
     * collected the batch's DDL (the consume loop collects once and feeds
@@ -410,11 +422,12 @@ object Consume {
     *
     * Read-time visibility is unchanged — [[currentState]] still filters
     * tombstones and non-positive nets.
-    */
-  /** `pre` is applied to the merged LOG before resolution — the hook
+    *
+    * `pre` is applied to the merged LOG before resolution — the hook
     * store-side schema evolution rides (a column RENAME rewrites the log
     * once, like the target database's in-place RENAME COLUMN; see
-    * [[renameTransform]] for why it must run before the resolver). */
+    * [[renameTransform]] for why it must run before the resolver).
+    */
   def compact(t: TableSync, store: ParquetStateStore,
               pre: DataFrame => DataFrame = identity): Unit =
     store.readLog().map(pre).foreach { log =>
@@ -492,6 +505,16 @@ object Consume {
     }
   }
 
+  /** Whether a micro-batch is small enough to run as one partition: its
+    * size estimate is at most `spark.sql.files.openCostInBytes`. Spark's
+    * own file split never cuts a file smaller than that, so a batch under
+    * it has several partitions only because it arrived as several files.
+    * Sources without a size statistic estimate `defaultSizeInBytes`
+    * (Long.MaxValue) and keep their partitioning. */
+  private def fitsOnePartition(batch: DataFrame): Boolean =
+    batch.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      batch.sparkSession.sessionState.conf.filesOpenCostInBytes
+
   /** Thread pool for concurrent per-table applies (C5): Spark is
     * thread-safe for concurrent job submission, so T tables become T
     * overlapping jobs per trigger instead of T serial ones — the same
@@ -509,10 +532,21 @@ object Consume {
     * `compactEvery` > 0 triggers [[compact]] on every table after that
     * many micro-batches — the OPTIMIZE/background-merge analogue that
     * keeps read-time resolution at O(base + recent deltas).
-    */
-  /** `deadLetter`: with skip-error on, park each failing table's slice of
+    *
+    * `deadLetter`: with skip-error on, park each failing table's slice of
     * the batch (and skipped DDL) in the dead-letter table instead of just
-    * logging — see [[DeadLetter]] for the replay contract. */
+    * logging — see [[DeadLetter]] for the replay contract.
+    *
+    * A small micro-batch runs as ONE partition (see [[fitsOnePartition]]):
+    * the stamped batch is coalesced before the cache, so the DDL collect,
+    * the cache fill and each table's apply run one task apiece, every
+    * table's `v=<batch>` delta is one part file, and MergeTree's per-key
+    * dedup window needs no exchange (a single partition already
+    * satisfies its clustering). A batch that arrived as several files
+    * would otherwise pay a task, a part file and a shuffle partition per
+    * file for no parallel work. Larger batches, and batches without a
+    * size estimate (Kafka), keep the source's partitioning.
+    */
   def start(spark: SparkSession, events: DataFrame, tables: Seq[TableSync],
             stateRoot: String, checkpoint: String,
             triggerInterval: String = "1 second",
@@ -545,14 +579,17 @@ object Consume {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime(triggerInterval))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // source-order tiebreak stamped BEFORE the cache (input_file_name
-        // reads "" through an InMemoryTableScan); the canonical event
-        // view the appliers see drops the bookkeeping columns
-        val cached = stampSourceOrder(batch).cache()
+        // source-order tiebreak stamped BEFORE the coalesce and the cache
+        // (input_file_name reads "" through an InMemoryTableScan); the
+        // canonical event view the appliers see drops the bookkeeping
+        // columns
+        val stamped = stampSourceOrder(batch)
+        val cached =
+          (if (fitsOnePartition(batch)) stamped.coalesce(1) else stamped).cache()
         val events = cached.drop("_src_file", "_src_seq")
         try {
           // The batch's DDL statements, collected ONCE across all schemas
-          // (tiny: one row per ALTER, one Spark job per batch): they feed
+          // (tiny: one row per ALTER; the job also fills the cache): they feed
           // the per-table intra-batch split, the K4 apply, and the
           // store-side rename compact below.
           val ddlBySchema: Map[String, Seq[(String, Long)]] = collectDdlAll(cached)

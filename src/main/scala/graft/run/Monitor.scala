@@ -13,13 +13,19 @@ import scala.collection.mutable
   * (no extra action) + a [[StreamingQueryListener]] that collects one row
   * per micro-batch. Rows carry (query, batch, events, wall-clock) — the
   * same information as the reference's monitoring rows (type 1=producer,
-  * 2=consumer).
+  * 2=consumer) — plus where the batch's time went.
   */
 object Monitor {
 
+  /** One monitoring row. `phases` is the batch's
+    * `StreamingQueryProgress.durationMs`: Spark's per-trigger phase
+    * durations in ms (`latestOffset`, `getBatch`, `queryPlanning`,
+    * `addBatch`, `walCommit`, `commitOffsets`, `triggerExecution`, ...);
+    * empty on error rows. */
   final case class BatchMetric(queryName: String, batchId: Long,
                                numEvents: Long, timestampMs: Long,
-                               error: Option[String] = None)
+                               error: Option[String] = None,
+                               phases: Map[String, Long] = Map.empty)
 
   /** Attach an observation named `graft_monitor` counting events. */
   def observed(df: DataFrame): DataFrame =
@@ -77,8 +83,10 @@ object Monitor {
       val observed = Option(p.observedMetrics.get("graft_monitor"))
       val events = observed.map(_.getAs[Long]("events"))
         .getOrElse(p.numInputRows)
+      import scala.jdk.CollectionConverters._
       record(BatchMetric(Option(p.name).getOrElse(p.id.toString),
-        p.batchId, events, System.currentTimeMillis()))
+        p.batchId, events, System.currentTimeMillis(),
+        phases = p.durationMs.asScala.map { case (k, v) => k -> v.longValue }.toMap))
     }
   }
 
@@ -248,7 +256,8 @@ object Monitor {
     }
   }
 
-  /** Read the persisted metrics table. */
+  /** Read the persisted metrics table; schema-merged, so rows appended
+    * before `phases` existed read alongside newer ones (as null). */
   def metricsTable(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.option("mergeSchema", "true").parquet(path)
 }

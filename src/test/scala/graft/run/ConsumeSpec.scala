@@ -73,6 +73,123 @@ class ConsumeSpec extends SparkSpec {
     assert(rt2 == Set.empty[Long]) // tombstone wins at read time
   }
 
+  test("a small multi-file micro-batch runs as one partition: one DDL-collect " +
+    "job, no MergeTree exchange, one part file per delta") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    import scala.jdk.CollectionConverters._
+
+    val root = Files.createTempDirectory("consumeshape").toString
+    val eventsDir = s"$root/events"; Files.createDirectories(Paths.get(eventsDir))
+    val tables = Seq(
+      TableSync("db", "mt", valueSchema, Seq("id"), Engine.MergeTree),
+      TableSync("db", "rt", valueSchema, Seq("id"), Engine.ReplacingMergeTree),
+      TableSync("db", "ct", valueSchema, Seq("id"), Engine.CollapsingMergeTree))
+    val alter = """{"schema":"db","table":"audit","action":"query",""" +
+      """"values":"ALTER TABLE db.audit ADD COLUMN note VARCHAR(20)",""" +
+      """"event_unixtime":200,"action_seq":0}"""
+    writeBatch(eventsDir, "b0.json", Seq(
+      ev("mt", "insert", 1, 10.0, 100), ev("mt", "insert", 2, 20.0, 100),
+      ev("rt", "insert", 7, 70.0, 100), ev("ct", "insert", 5, 50.0, 100)))
+    writeBatch(eventsDir, "b1.json", Seq(
+      ev("mt", "update", 1, 11.0, 200), ev("rt", "update", 7, 77.0, 200),
+      ev("ct", "insert", 6, 60.0, 200), alter))
+    writeBatch(eventsDir, "b2.json", Seq(
+      ev("mt", "delete", 2, 20.0, 300), ev("rt", "insert", 8, 80.0, 300),
+      ev("ct", "delete", 5, 50.0, 300)))
+    val expected = Map("mt" -> Set((1L, 11.0)), "rt" -> Set((7L, 77.0), (8L, 80.0)),
+      "ct" -> Set((6L, 60.0)))
+
+    // what one consume run over the three files (one micro-batch) showed
+    final case class Shape(ddlJobTasks: Seq[Seq[Int]], mtWritePlans: Seq[String],
+                           partFiles: Map[String, Int],
+                           state: Map[String, Set[(Long, Double)]])
+    def consume(tag: String): Shape = {
+      val sc = spark.sparkContext
+      val plans = new ConcurrentHashMap[Long, String]() // execution id -> plan
+      val jobs = new ConcurrentLinkedQueue[(Long, Int)]() // (execution id, tasks)
+      val flushed = new CountDownLatch(1)
+      val sentinel = s"consumeshape-$tag-flush"
+      val jobListener = new SparkListener {
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case s: SparkListenerSQLExecutionStart =>
+            plans.put(s.executionId, s.physicalPlanDescription)
+          case _ =>
+        }
+        override def onJobStart(e: SparkListenerJobStart): Unit = {
+          val props = Option(e.properties)
+          if (props.exists(_.getProperty("spark.jobGroup.id") == sentinel))
+            flushed.countDown()
+          props.flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+            .foreach(id => jobs.add((id.toLong, e.stageInfos.map(_.numTasks).sum)))
+        }
+      }
+      val writes = new ConcurrentLinkedQueue[String]()
+      val qeListener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+          val plan = qe.executedPlan.toString
+          if (plan.contains("/db/mt/v=")) writes.add(plan)
+        }
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      val stateRoot = s"$root/$tag/state"
+      sc.addSparkListener(jobListener)
+      spark.listenerManager.register(qeListener)
+      try {
+        val q = Consume.start(spark, EventSource.files(spark, eventsDir),
+          tables, stateRoot, s"$root/$tag/ckpt",
+          triggerInterval = "250 milliseconds", ddlSink = Some(_ => ()))
+        q.processAllAvailable(); q.stop()
+        sc.setJobGroup(sentinel, "listener-bus flush")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        assert(flushed.await(30, TimeUnit.SECONDS), "listener bus never flushed")
+        val deadline = System.currentTimeMillis() + 20000
+        while (writes.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
+      } finally {
+        sc.removeSparkListener(jobListener)
+        spark.listenerManager.unregister(qeListener)
+      }
+      // the DDL collect is the one execution over the stamped columns
+      // that writes nothing
+      val ddlExecs = plans.asScala.collect {
+        case (id, p) if p.contains("_src_seq") &&
+          !p.contains("InsertIntoHadoopFsRelationCommand") => id
+      }.toSeq
+      val jobList = jobs.asScala.toSeq
+      Shape(
+        ddlExecs.map(id => jobList.filter(_._1 == id).map(_._2)),
+        writes.asScala.toSeq,
+        tables.map(t => t.table -> new java.io.File(s"$stateRoot/db/${t.table}/v=0")
+          .listFiles().count(_.getName.startsWith("part-"))).toMap,
+        tables.map(t => t.table ->
+          Consume.currentState(t, new ParquetStateStore(spark, s"$stateRoot/db/${t.table}"))
+            .get.select("id", "amount").collect()
+            .map(r => (r.getLong(0), r.getDouble(1))).toSet).toMap)
+    }
+
+    val small = consume("small")
+    assert(small.ddlJobTasks == Seq(Seq(1)),
+      s"DDL collect: expected one job of one task, got ${small.ddlJobTasks}")
+    assert(small.mtWritePlans.size == 1, s"MergeTree writes: ${small.mtWritePlans.size}")
+    assert(!small.mtWritePlans.head.contains("Exchange"), small.mtWritePlans.head)
+    assert(small.partFiles == tables.map(_.table -> 1).toMap, s"${small.partFiles}")
+    assert(small.state == expected)
+
+    // a batch whose size estimate exceeds openCostInBytes keeps the
+    // source's partitioning, with the same result
+    spark.conf.set("spark.sql.files.openCostInBytes", "1")
+    val large = try consume("large")
+      finally spark.conf.unset("spark.sql.files.openCostInBytes")
+    assert(large.ddlJobTasks.size == 1 && large.ddlJobTasks.head.size == 1,
+      s"DDL collect: ${large.ddlJobTasks}")
+    assert(large.ddlJobTasks.head.head > 1,
+      s"batch collapsed to one partition: ${large.ddlJobTasks}")
+    assert(large.state == expected)
+  }
+
   test("composite-PK events delete and upsert by the full key tuple") {
     val root = Files.createTempDirectory("composite").toString
     val eventsDir = s"$root/events"; Files.createDirectories(Paths.get(eventsDir))

@@ -538,11 +538,39 @@ class DdlMidStreamSpec extends SparkSpec {
       "ALTER TABLE db.t MODIFY COLUMN note TEXT"))
   }
 
+  test("driver-side DDL sort gives the total order of Spark's orderBy") {
+    // collectDdlAll sorts on the driver; it must reproduce the SQL sort
+    // it replaced: nulls first, file names as UTF-8 bytes (U+FFFD sorts
+    // before an above-BMP name there, after it in UTF-16 String order)
+    import org.apache.spark.sql.Row
+    val rnd = new scala.util.Random(0x5EED)
+    val files = Array[String](null, "", "f1", "f10", "f2", "\u00e9", "\uFFFD",
+      "\uD83D\uDE00")
+    val rows = (0 until 400).map { i =>
+      Row("db", "query", s"s$i", (rnd.nextInt(4) * 100).toLong,
+        files(rnd.nextInt(files.length)),
+        if (rnd.nextInt(8) == 0) null else java.lang.Long.valueOf(rnd.nextInt(50)))
+    }
+    val schema = StructType(Seq(StructField("schema", StringType),
+      StructField("action", StringType), StructField("values", StringType),
+      StructField("event_unixtime", LongType), StructField("_src_file", StringType),
+      StructField("_src_seq", LongType)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
+    // compare sort KEYS, so rows tied on all three keys may come in any order
+    val key = rows.map(r => r.getString(2) -> (r.get(3), r.get(4), r.get(5))).toMap
+    val sql = df.orderBy("event_unixtime", "_src_file", "_src_seq")
+      .collect().map(r => key(r.getString(2))).toSeq
+    val got = Consume.collectDdlAll(df)("db").map(d => key(d._1))
+    assert(got == sql)
+  }
+
   test("same-second cross-file DDL applies in staged order through the live loop") {
     // E2E pin that input_file_name() resolves inside the foreachBatch
-    // micro-batch (stamped BEFORE the cache): two staged files in ONE
-    // trigger, the chronologically-later file byte-larger, the K4 sink
-    // must still see ADD before MODIFY
+    // micro-batch (stamped BEFORE the coalesce and the cache): three
+    // staged files in ONE small trigger, each chronologically-later file
+    // byte-larger (the scan packs them in reverse, and the coalesced
+    // partition reads them in that order), the K4 sink must still see
+    // ADD, then MODIFY, then DROP
     val root = Files.createTempDirectory("ddlxfilelive").toString
     val eventsDir = s"$root/events"; Files.createDirectories(Paths.get(eventsDir))
     val stateRoot = s"$root/state"; val ckpt = s"$root/ckpt"
@@ -555,6 +583,9 @@ class DdlMidStreamSpec extends SparkSpec {
     Files.write(Paths.get(eventsDir, "f2.txt"),
       (ddl("ALTER TABLE db.t MODIFY COLUMN note TEXT", 100) + (" " * 4096))
         .getBytes("UTF-8"))
+    Files.write(Paths.get(eventsDir, "f3.txt"),
+      (ddl("ALTER TABLE db.t DROP COLUMN note", 100) + (" " * 8192))
+        .getBytes("UTF-8"))
     val applied = scala.collection.mutable.ArrayBuffer.empty[String]
     val q = Consume.start(spark, EventSource.files(spark, eventsDir),
       Seq(t1), stateRoot, ckpt, triggerInterval = "250 milliseconds",
@@ -562,8 +593,9 @@ class DdlMidStreamSpec extends SparkSpec {
     q.processAllAvailable(); q.stop()
     val addIdx = applied.indexWhere(_.contains("ADD COLUMNS"))
     val modIdx = applied.indexWhere(_.contains("ALTER COLUMN"))
-    assert(addIdx >= 0 && modIdx >= 0, s"DDL missing: $applied")
-    assert(addIdx < modIdx, s"MODIFY applied before ADD: $applied")
+    val dropIdx = applied.indexWhere(_.contains("DROP COLUMN"))
+    assert(addIdx >= 0 && modIdx >= 0 && dropIdx >= 0, s"DDL missing: $applied")
+    assert(addIdx < modIdx && modIdx < dropIdx, s"DDL out of staged order: $applied")
   }
 
   test("property: random ALTER chains x degraded-handoff crash points keep row fidelity") {

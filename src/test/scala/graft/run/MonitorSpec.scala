@@ -34,7 +34,27 @@ class MonitorSpec extends SparkSpec {
       }
       assert(rows.nonEmpty, "no metric rows persisted")
       assert(rows.exists(_.numEvents == 3L))
+      // the row carries Spark's per-trigger phase split, persisted as is
+      val phases = rows.find(_.numEvents == 3L).get.phases
+      val expected = Seq("latestOffset", "getBatch", "queryPlanning",
+        "addBatch", "walCommit", "triggerExecution")
+      assert(expected.forall(phases.contains), s"phases missing: $phases")
+      assert(phases("addBatch") <= phases("triggerExecution"), s"$phases")
     } finally spark.streams.removeListener(listener)
+  }
+
+  test("a metrics table written before the phases column still reads") {
+    val path = Files.createTempDirectory("metricsold").toString + "/log"
+    Seq(("q", 0L, 5L, 1L, Option.empty[String]))
+      .toDF("queryName", "batchId", "numEvents", "timestampMs", "error")
+      .write.parquet(path)
+    val listener = new Monitor.PersistingListener(spark, path)
+    listener.recordDirect(Monitor.BatchMetric("q", 1L, 7L, 2L,
+      phases = Map("addBatch" -> 3L)))
+    listener.close()
+    val rows = Monitor.metricsTable(spark, path).as[Monitor.BatchMetric]
+      .collect().map(m => m.batchId -> Option(m.phases)).toMap
+    assert(rows == Map(0L -> None, 1L -> Some(Map("addBatch" -> 3L))))
   }
 
   test("terminal query failure is recorded as an error metric (C6)") {
