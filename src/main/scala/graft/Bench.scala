@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs the headline queries on
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with per-query seconds.
   *
@@ -78,7 +76,6 @@ object Bench {
     if (dirtyMb > 1024)
       System.err.println(f"[bench] WARNING: $dirtyMb%.0f MiB of dirty/writeback pages at bench start: residual I/O from a prior run; this run's numbers are suspect")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // local iteration aid: run a comma-separated subset of the headline
     // set (driver runs the full set — the contract output is unchanged)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -95,11 +92,8 @@ object Bench {
     // regime difference local[32] cannot exhibit). Executors spawned by
     // the worker get the spark distribution from SPARK_HOME; our classes
     // must ride along explicitly.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-    val builder =
+    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", Tables.defaultMaster)
+    val clusterConf =
       if (master.startsWith("local-cluster")) {
         // the master string's third field budgets the WORKER; executor
         // heap still defaults to 1g and dies at sf10 — size it to the
@@ -116,18 +110,10 @@ object Bench {
             .map(cs => new java.io.File(cs.getLocation.toURI).getAbsolutePath))
           .getOrElse(sys.error(
             "cannot locate build classes for executor classpath; set SPARK_GRAFT_CLASSES"))
-        builder0
-          .config("spark.executor.memory", s"${math.max(1024, workerMb - 1024)}m")
-          .config("spark.executor.extraClassPath", classesDir)
-      } else builder0
-    val spark = builder
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+        Map("spark.executor.memory" -> s"${math.max(1024, workerMb - 1024)}m",
+          "spark.executor.extraClassPath" -> classesDir)
+      } else Map.empty[String, String]
+    val spark = Tables.session(master, conf = clusterConf)
 
     // Warmup: spin executors + codegen + parquet reader paths + the noop
     // write command once, through one scan-heavy and one join-heavy plan,

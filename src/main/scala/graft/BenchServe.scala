@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Interleaved A/B bench server (VERDICT r14 directive #1).
   *
   * The box's clean-run sf0.1 total band spans 41.5–56.9 s (±17%, steal
@@ -15,12 +13,15 @@ import org.apache.spark.sql.SparkSession
   * noise cancels by construction. `tools/abbench.py` orchestrates;
   * `tools/regress.py --paired` issues the verdicts.
   *
-  * This main is deliberately SELF-CONTAINED over the API surface that
-  * has been stable since r13 (`SparkEntry.queries`, `SessionDrain`,
-  * the noop sink) and nothing else: the orchestrator copies this ONE
-  * file into the old build's worktree, because the timing harness must
-  * be bit-identical on both sides — only the engine under it may
-  * differ. Do not grow dependencies on round-local code.
+  * This main is deliberately SELF-CONTAINED over the API surface old
+  * trees share (`SparkEntry.queries`, `SessionDrain` and the noop sink
+  * since r13; `Tables.session()` since `d6dad7b`) and nothing else: the
+  * orchestrator copies this ONE file into the old build's worktree,
+  * because the timing harness must be bit-identical on both sides —
+  * only the engine under it may differ. Do not grow dependencies on
+  * round-local code. An old tree whose `Tables.session()` ignores
+  * `SPARK_GRAFT_CPUS` builds `local[32]`; `tools/abbench.py` refuses to
+  * pair it against another core count.
   *
   * Protocol (line-oriented; replies prefixed `@AB ` so Spark's own
   * stdout logging can never corrupt the channel):
@@ -66,17 +67,7 @@ object BenchServe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session()
 
     // same global warmup SHAPE as Bench: executors + codegen + parquet
     // footers + the noop write command, through one scan-heavy and one

@@ -232,7 +232,7 @@ object Main {
         "usage: Main corpus <docsParquet> <outDir> [--shards=N] [--min-tokens=N] " +
           "[--rates=src:rate,...] [--eval=parquetDir] [--paragraph-sep=S]")
       val s = SparkSession.getActiveSession.getOrElse(
-        Tables.session(sys.env.getOrElse("SPARK_MASTER", "local[32]")))
+        Tables.session(sys.env.getOrElse("SPARK_MASTER", Tables.defaultMaster)))
       val docs = s.read.parquet(pos(1))
       val rates = flags.get("rates")
         .map(_.split(',').toSeq.filter(_.nonEmpty).map { kv =>
@@ -307,7 +307,7 @@ object Main {
     }
     val preexisting = SparkSession.getActiveSession
     val spark = preexisting.getOrElse(
-      Tables.session(sys.env.getOrElse("SPARK_MASTER", "local[32]")))
+      Tables.session(sys.env.getOrElse("SPARK_MASTER", Tables.defaultMaster)))
 
     /** A rewind is whole-checkpoint scoped: it truncates every table
       * store under the state root (Resume.rewind discovers them there),

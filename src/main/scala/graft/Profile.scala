@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -24,17 +23,7 @@ object Profile {
     require(args.length >= 2, "usage: Profile <sfDir> <query> [passes]")
     val (sfDir, qname) = (args(0), args(1))
     val passes = args.drop(2).headOption.map(_.toInt).getOrElse(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session()
     val fn = SparkEntry.queries(qname)
 
     val jobs = mutable.LinkedHashMap.empty[Int, (String, Long, Long)] // id -> (desc, t0, t1)

@@ -2630,8 +2630,8 @@ object SparkEntry {
 
     "ann_pq_topk" -> {
       // per-subspace distance list of `embedding`'s slice s to each of
-      // the 16 LCG centroids, in code order (the exact fold the Spark
-      // sliceDist chain performs)
+      // the 16 LCG centroids, in code order (the exact fold PqCodesExpr
+      // and PqAdcTabsExpr perform)
       def dl(s: Int): String = {
         val xd = s"CAST(embedding[CAST(${s * 8} + d AS INT)+1] AS DOUBLE)"
         val w = OracleSql.lcgUnit(s"((${s}*16+c)*8+d)")

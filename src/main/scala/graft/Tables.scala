@@ -23,9 +23,9 @@ import scala.jdk.CollectionConverters._
   * `events.ts` has shipped in two physical encodings across driver
   * generations: parquet TIMESTAMP(NANOS) or plain int64 nanoseconds —
   * read as a raw long (TIMESTAMP(NANOS) via
-  * `spark.sql.legacy.parquet.nanosAsLong=true`) — and plain
-  * TIMESTAMP(MICROS) without the UTC flag, which Spark reads as
-  * TIMESTAMP_NTZ. Both are normalized here to a µs-precision session
+  * `spark.sql.legacy.parquet.nanosAsLong=true`, which [[session]] sets)
+  * — and plain TIMESTAMP(MICROS) without the UTC flag, which Spark reads
+  * as TIMESTAMP_NTZ. Both are normalized here to a µs-precision session
   * (LTZ) timestamp: in a UTC session the NTZ reinterpretation and the
   * nanos`div`1000 rebuild land on the identical instant DuckDB sees when
   * it reads the same file as its naive µs TIMESTAMP, so oracle
@@ -51,7 +51,6 @@ object Tables {
 
   /** Read one test table with canonical typing. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val (df, footer) = readWithFooter(spark, path(dir, name))
     if (name == "events") df.schema("ts").dataType match {
       case LongType =>
@@ -105,20 +104,30 @@ object Tables {
   def registerAll(spark: SparkSession, dir: String): Unit =
     names.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
 
-  /** Session defaults tuned for local[32] but designed for cluster scale:
-    * AQE on (runtime re-plan, skew-join splitting), modest shuffle
-    * partition count for local mode, UTC session time.
+  /** Cores a graft JVM runs on: `SPARK_GRAFT_CPUS`, 32 when unset. */
+  private lazy val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  /** The master [[session]] builds on unless told otherwise. */
+  lazy val defaultMaster: String = s"local[$cpus]"
+
+  /** The one place a graft `SparkSession` is built: UTC session time (the
+    * `events.ts` normalization in [[apply]] depends on it), TIMESTAMP(NANOS)
+    * read as a raw long, no UI, and `shufflePartitions` shuffle partitions.
+    * AQE, with partition coalescing and skew-join splitting, is Spark's
+    * default and stays on. `conf` carries extra static confs that must be
+    * set before the context starts (executor sizing, warehouse dir); set
+    * runtime SQL confs with `spark.conf.set` on the returned session. As
+    * with `getOrCreate`, a session that already exists is returned.
     */
-  def session(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession = {
+  def session(master: String = defaultMaster, shufflePartitions: Int = cpus,
+              conf: Map[String, String] = Map.empty): SparkSession = {
     val spark = SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config(conf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

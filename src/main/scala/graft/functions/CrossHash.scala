@@ -112,12 +112,4 @@ object CrossHash {
     ColumnBridge.column(
       CosineSimExpr(ColumnBridge.expression(a), ColumnBridge.expression(b)))
   }
-
-  /** Deterministic pseudo-random hyperplane component for LSH bucketing:
-    * LCG over (plane, dim), scaled to [-0.5, 0.5) as an exact rational. */
-  def hyperplane(plane: Column, dim: Column, dims: Int): Column = {
-    val idx = (plane * lit(dims.toLong) + dim).cast("long")
-    val lcg = (lit(1103515245L) * idx + lit(12345L)) % lit(2147483648L)
-    (lcg.cast("double") / lit(2147483648.0d)) - lit(0.5d)
-  }
 }

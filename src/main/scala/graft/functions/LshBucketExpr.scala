@@ -8,15 +8,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
 /** Native random-hyperplane LSH bucket id over a numeric array.
   *
   * Bit-for-bit equal to the portable nested-HOF formulation
-  * ([[graft.ops.SimilarityOps.lshBucketHof]], which the DuckDB oracle
-  * mirrors): per plane, the dot product is a sequential index-order fold
-  * of `vec[d] * hyperplane(plane, d)` in double precision; the bucket
-  * folds one sign bit per plane. The HOF form evaluates planes×dims
+  * (`graft.ops.SimilarityHof.lshBucketHof`, a test-scope twin the DuckDB
+  * oracle mirrors): per plane, the dot product is a sequential
+  * index-order fold of `vec[d] * hyperplane(plane, d)` in double
+  * precision; the bucket folds one sign bit per plane. The HOF form evaluates planes×dims
   * interpreted lambda calls per row — this is one tight JVM loop, inside
   * whole-stage codegen, which matters when bucketing a 100 TB corpus.
   *
-  * Hyperplane components come from the same exact-rational LCG as
-  * [[CrossHash.hyperplane]]: every value is a dyadic rational, so both
+  * Hyperplane components come from the exact-rational LCG in
+  * [[LshBucketExpr.hyperplane]]: every value is a dyadic rational, so both
   * engines see identical doubles.
   */
 case class LshBucketExpr(child: Expression, planes: Int, dims: Int)

@@ -10,8 +10,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
   * tight codegen'd loop.
   *
   * Bit-for-bit equal to the declarative struct-argmin chain
-  * ([[graft.ops.SimilarityOps.pqCodeHof]], which the DuckDB oracle
-  * mirrors): per (subspace, centroid) the distance is a sequential
+  * (`graft.ops.SimilarityHof.pqCodeHof`, a test-scope twin the DuckDB
+  * oracle mirrors): per (subspace, centroid) the distance is a sequential
   * dim-order fold seeded 0.0 in double precision, and ties pick the
   * lowest code — but the chain form is m×ncode×sub expression nodes per
   * row (measured seconds per 20k vectors once past codegen limits);

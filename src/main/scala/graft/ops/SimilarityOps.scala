@@ -86,8 +86,9 @@ object SimilarityOps {
   }
 
   /** Sign-of-projection LSH signature: `planes` deterministic hyperplanes
-    * (shared with the oracle via the LCG in [[graft.functions.CrossHash]]),
-    * one bit each, folded into a long bucket id. Backed by the native
+    * (shared with the oracle via the LCG in
+    * [[graft.functions.LshBucketExpr.hyperplane]]), one bit each, folded
+    * into a long bucket id. Backed by the native
     * codegen'd [[graft.functions.LshBucketExpr]] — one tight loop per row
     * instead of planes×dims interpreted lambda calls.
     */
@@ -96,22 +97,6 @@ object SimilarityOps {
     ColumnBridge.column(graft.functions.LshBucketExpr(
       ColumnBridge.expression(vec), planes, dims))
   }
-
-  /** The portable HOF twin of [[lshBucket]] — kept as the executable spec
-    * the native expression is parity-tested against (the oracle SQL
-    * mirrors this form).
-    */
-  def lshBucketHof(vec: org.apache.spark.sql.Column, planes: Int, dims: Int): org.apache.spark.sql.Column =
-    aggregate(
-      sequence(lit(0), lit(planes - 1)),
-      lit(0L),
-      (acc, pl) => {
-        val dot = aggregate(
-          zip_with(vec, sequence(lit(0), lit(dims - 1)),
-            (x, d) => x.cast("double") * hyperplane(pl.cast("long"), d.cast("long"), dims)),
-          lit(0.0d), (s, v) => s + v)
-        acc * lit(2L) + when(dot >= 0, 1L).otherwise(lit(0L))
-      })
 
   /** Random-projection compression of an embedding column: each vector is
     * projected onto `k` deterministic LCG hyperplanes (the same planes as
@@ -183,18 +168,6 @@ object SimilarityOps {
           lit(0.0d), (a, s) => a + s.getField("_x").cast("double")).as("_sum"))
       .select(col("label"), col("dim"), col("n_vecs"),
         round(col("_sum") / col("n_vecs"), 6).as("centroid"))
-
-  /** Portable HOF twin of the projection inside [[projectEmbeddings]]
-    * (unrounded) — the executable spec the native expression is
-    * parity-tested against; the oracle SQL mirrors this form.
-    */
-  def projectHof(vec: org.apache.spark.sql.Column, k: Int, dims: Int): org.apache.spark.sql.Column =
-    transform(
-      sequence(lit(0), lit(k - 1)),
-      pl => aggregate(
-        zip_with(vec, sequence(lit(0), lit(dims - 1)),
-          (x, d) => x.cast("double") * hyperplane(pl.cast("long"), d.cast("long"), dims)),
-        lit(0.0d), (s, v) => s + v))
 
   /** Per-row similarity-to-centroid structs, orderable as (sim desc, cid
     * asc): centroids are driver-side constants, so each struct is a pure
@@ -470,26 +443,6 @@ object SimilarityOps {
     (0 until m).map(s => (0 until ncode).map(c =>
       (0 until sub).map(d => graft.functions.LshBucketExpr.hyperplane(
         (s.toLong * ncode + c) * sub + d))))
-
-  /** Squared L2 distance of subspace `s` of `vec` to one centroid, as a
-    * left-associated chain seeded with 0.0 (the exact fold order the
-    * oracle's list_reduce mirrors — bit-identical IEEE). */
-  private[ops] def sliceDist(vec: org.apache.spark.sql.Column, s: Int, sub: Int,
-                             cent: Seq[Double]): org.apache.spark.sql.Column =
-    (0 until sub).map { d =>
-      val x = element_at(vec, s * sub + d + 1).cast("double") - lit(cent(d))
-      x * x
-    }.foldLeft(lit(0.0d): org.apache.spark.sql.Column)(_ + _)
-
-  /** Per-subspace PQ code (argmin centroid) as a declarative struct-min
-    * chain — kept as the executable spec [[graft.functions.PqCodesExpr]]
-    * is parity-tested against (the oracle SQL mirrors this form); the
-    * hot encode path uses the native expression via [[pqCodes]]. */
-  private[ops] def pqCodeHof(vec: org.apache.spark.sql.Column, s: Int, sub: Int,
-                             book: Seq[Seq[Double]]): org.apache.spark.sql.Column =
-    array_min(array(book.zipWithIndex.map { case (cv, c) =>
-      struct(sliceDist(vec, s, sub, cv).as("d"), lit(c).as("c"))
-    }: _*)).getField("c")
 
   /** All `m` PQ codes in one native codegen'd pass (array<int>). */
   def pqCodes(vec: org.apache.spark.sql.Column, m: Int, ncode: Int,

@@ -529,9 +529,10 @@ object Consume {
 
   /** Start the consume query over a canonical event stream.
     *
-    * `compactEvery` > 0 triggers [[compact]] on every table after that
-    * many micro-batches — the OPTIMIZE/background-merge analogue that
-    * keeps read-time resolution at O(base + recent deltas).
+    * `compactionPolicy` runs [[compact]] on each table whose version log
+    * [[SinkStrategy.shouldCompact]] judges too long, after the batch — the
+    * OPTIMIZE/background-merge analogue that keeps read-time resolution
+    * at O(base + recent deltas).
     *
     * `deadLetter`: with skip-error on, park each failing table's slice of
     * the batch (and skipped DDL) in the dead-letter table instead of just
@@ -552,7 +553,6 @@ object Consume {
             triggerInterval: String = "1 second",
             skipError: Boolean = false,
             ddlSink: Option[String => Unit] = None,
-            compactEvery: Int = 0,
             deadLetter: Option[DeadLetter] = None,
             compactionPolicy: Option[SinkStrategy.CompactionPolicy] = None): StreamingQuery = {
     // A rewind crashed between store truncation and checkpoint seek →
@@ -669,8 +669,6 @@ object Consume {
                 .foreach(t => compact(live(t), stores(t), renameTransform(o, n)))
             }
           }
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-            tables.foreach(t => compact(live(t), stores(t)))
           // size/count-triggered compaction (the OPTIMIZE scheduler):
           // per-table decision, so one hot table compacting doesn't drag
           // every cold table through an O(state) rewrite

@@ -55,7 +55,6 @@ object CrashSoak {
 
   private def spawn(main: String, args: Seq[String], log: java.io.File): Process = {
     val cmd = Seq("java", "-Xmx8g", "-Xms8g") ++ addOpens ++ Seq(
-      "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
       "-cp", System.getProperty("java.class.path"), main) ++ args
     new ProcessBuilder(cmd: _*)
       .redirectErrorStream(true)
@@ -99,15 +98,7 @@ object CrashSoak {
     val (sfDir, workDir) = (args(0), args(1))
     val batches = if (args.length > 2) args(2).toInt else 5000
     val kills = if (args.length > 3) args(3).toInt else 20
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.session()
 
     val Soak.Staged(muts, nMut, expectedParks, orders, tables) =
       Soak.stageWorkload(spark, sfDir, workDir, batches, ddlEvery = 250)
@@ -349,15 +340,7 @@ object CrashSoakWorker {
   def main(args: Array[String]): Unit = {
     val (sfDir, workDir) = (args(0), args(1))
     val stateRoot = s"$workDir/state"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.session()
     val orders = spark.read.parquet(s"$sfDir/orders.parquet")
     val tables = Seq(
       TableSync("db", "orders_mt", orders.schema, Seq("o_orderkey"), graft.model.Engine.MergeTree),

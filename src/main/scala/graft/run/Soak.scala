@@ -119,16 +119,7 @@ object Soak {
     val (sfDir, workDir) = (args(0), args(1))
     val batches = if (args.length > 2) args(2).toInt else 5000
     val ddlEvery = 250
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.session()
     import spark.implicits._
 
     val staged0 = stageWorkload(spark, sfDir, workDir, batches, ddlEvery)

@@ -172,22 +172,7 @@ object StreamRehearsal {
     require(args.length >= 2, "usage: StreamRehearsal <sfDir> <workDir> [eventsPerFile]")
     val (sfDir, workDir) = (args(0), args(1))
     val perFile = if (args.length > 2) args(2).toInt else 20000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the progress buffer is the phase accounting (events, batch
-      // percentiles): it must hold the WHOLE phase or rates silently
-      // undercount and the batch-count watcher can hang (r13 review);
-      // re-sized to the staged file count after staging, and drain()
-      // fails loudly if a phase ever fills it
-      .config("spark.sql.streaming.numRecentProgressUpdates", "1200")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.session()
     import spark.implicits._
 
     val orders = spark.read.parquet(s"$sfDir/orders.parquet")

@@ -5,18 +5,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole test JVM (sbt forks once). */
 object TestSpark {
+  /** Managed tables (bucketed-store tests) land here, not in the repo. */
+  val warehouse: String =
+    java.nio.file.Files.createTempDirectory("graft-warehouse").toString
+
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // managed tables (bucketed-store tests) land in /tmp, not the repo
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
+    val s = Tables.session("local[4]", 4, conf = Map(
+      "spark.app.name" -> "graft-tests",
+      "spark.sql.warehouse.dir" -> warehouse))
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -1,7 +1,8 @@
 package graft
 
 import graft.run.FullEtl
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
@@ -9,6 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ParquetFooters
 import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** `Tables.apply` resolves each table's schema from its parquet footer on
   * the driver: the same schema inference gives, without a Spark job. */
@@ -138,9 +140,45 @@ class TablesSpec extends SparkSpec {
     assert(Tables(ny, sf, "events").schema == inferred(sf, "events").schema)
   }
 
+  test("Tables.session builds the graft session conf and passes static confs through") {
+    // TestSpark builds the suite's session as Tables.session("local[4]", 4, conf)
+    val conf = spark.conf
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
+    assert(spark.sparkContext.uiWebUrl.isEmpty)
+    for (aqe <- Seq("enabled", "coalescePartitions.enabled", "skewJoin.enabled"))
+      assert(conf.get(s"spark.sql.adaptive.$aqe") == "true", aqe)
+    assert(conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(conf.get("spark.sql.warehouse.dir").contains(TestSpark.warehouse))
+  }
+
+  test("reading a table leaves the session's nanosAsLong as the caller set it") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    assert(Tables(s, sf, "events").schema == inferred(sf, "events").schema)
+    assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "false")
+  }
+
+  test("Tables.scala alone builds a SparkSession and reads the core-count variable") {
+    // spelled in pieces so this file does not match itself
+    val builder = "SparkSession" + ".builder"
+    val cpusRead = "\"SPARK_GRAFT" + "_CPUS\""
+    val roots = Seq("src/main/scala", "src/test/scala").map(Paths.get(_))
+    roots.foreach(r => assert(Files.isDirectory(r), s"$r is not under the working directory"))
+    val sources = roots.flatMap(r => Using.resource(Files.walk(r))(
+      _.iterator.asScala.filter(_.toString.endsWith(".scala")).toList))
+    def filesWith(token: String): Set[String] =
+      sources.filter(p => new String(Files.readAllBytes(p), UTF_8).contains(token))
+        .map(_.toString).toSet
+    val tables = Set("src/main/scala/graft/Tables.scala")
+    assert(filesWith(builder) == tables)
+    assert(filesWith(cpusRead) == tables)
+  }
+
   test("a missing or empty table path fails as spark.read.parquet does") {
     val tmp = Files.createTempDirectory("tables-empty").toString
-    Files.createDirectory(java.nio.file.Paths.get(Tables.path(tmp, "orders")))
+    Files.createDirectory(Paths.get(Tables.path(tmp, "orders")))
     for ((dir, expected) <- Seq(s"$tmp/absent" -> "PATH_NOT_FOUND", tmp -> "UNABLE_TO_INFER_SCHEMA"))
       withClue(s"$dir: ") {
         assert(condition(spark.read.parquet(Tables.path(dir, "orders"))) == expected)

@@ -20,11 +20,11 @@ class SqlFunctionsSpec extends SparkSpec {
 
   test("native lsh bucket equals the portable HOF formulation") {
     import org.apache.spark.sql.functions._
-    import graft.ops.SimilarityOps
+    import graft.ops.{SimilarityHof, SimilarityOps}
     val emb = graft.Tables(spark, sf, "embeddings").limit(200)
     val both = emb.select(
       SimilarityOps.lshBucket(col("embedding"), 4, 64).as("native"),
-      SimilarityOps.lshBucketHof(col("embedding"), 4, 64).as("hof"))
+      SimilarityHof.lshBucketHof(col("embedding"), 4, 64).as("hof"))
     assert(both.filter(col("native") =!= col("hof")).count() == 0)
     assert(both.count() == 200)
   }
@@ -174,7 +174,7 @@ class SqlFunctionsSpec extends SparkSpec {
 
   test("lsh bucket: NaN components follow Spark SQL's NaN-above-everything ordering") {
     import org.apache.spark.sql.functions._
-    import graft.ops.SimilarityOps
+    import graft.ops.{SimilarityHof, SimilarityOps}
     // regression: JVM NaN >= 0 is false, but the HOF spec's when(dot >= 0)
     // is TRUE under Spark's NaN ordering — the native expr bucketed NaN
     // vectors differently from the executable spec
@@ -182,7 +182,7 @@ class SqlFunctionsSpec extends SparkSpec {
     val df = spark.createDataFrame(Seq(Tuple1(nanVec.toSeq))).toDF("embedding")
     val both = df.select(
       SimilarityOps.lshBucket(col("embedding"), 4, 64).as("native"),
-      SimilarityOps.lshBucketHof(col("embedding"), 4, 64).as("hof"))
+      SimilarityHof.lshBucketHof(col("embedding"), 4, 64).as("hof"))
       .collect().head
     assert(both.getLong(0) == both.getLong(1))
   }

@@ -483,7 +483,7 @@ class ExtOpsSpec extends SparkSpec {
     val books = SimilarityOps.pqCodebooks(8, 16, 8)
     val native = SimilarityOps.pqCodes(col("embedding"), 8, 16, 8)
     val chain = (0 until 8).map(s =>
-      SimilarityOps.pqCodeHof(col("embedding"), s, 8, books(s)).cast("int"))
+      SimilarityHof.pqCodeHof(col("embedding"), s, 8, books(s)).cast("int"))
     val mismatches = emb.select(col("vec_id"), native.as("n"),
         array(chain: _*).as("h"))
       .filter(col("n") =!= col("h")).count()
@@ -495,7 +495,7 @@ class ExtOpsSpec extends SparkSpec {
     val books = SimilarityOps.pqCodebooks(8, 16, 8)
     val native = SimilarityOps.pqAdcTabs(col("embedding"), 8, 16, 8)
     val chain = array((0 until 8).map(s => array(books(s).map(cv =>
-      SimilarityOps.sliceDist(col("embedding"), s, 8, cv)): _*)): _*)
+      SimilarityHof.sliceDist(col("embedding"), s, 8, cv)): _*)): _*)
     val mismatches = emb.select(native.as("n"), chain.as("h"))
       .filter(col("n") =!= col("h")).count()
     assert(mismatches == 0)

@@ -89,7 +89,7 @@ class MixtureClassifierSpec extends SparkSpec {
     val emb = graft.Tables(spark, sf, "embeddings").limit(200)
     val native = SimilarityOps.projectEmbeddings(emb, k = 8, dims = 64)
     val hof = emb.select(col("vec_id"),
-      transform(SimilarityOps.projectHof(col("embedding"), 8, 64),
+      transform(SimilarityHof.projectHof(col("embedding"), 8, 64),
         x => round(x, 6)).as("hof_r"))
     val both = native.join(hof, "vec_id")
     assert(both.filter(col("proj") =!= col("hof_r")).count() == 0)

@@ -2,7 +2,7 @@ package graft.run
 
 import graft.SparkSpec
 import graft.model.Engine
-import graft.sink.ParquetStateStore
+import graft.sink.{ParquetStateStore, SinkStrategy}
 import graft.streaming.EventSource
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
@@ -416,15 +416,16 @@ class ConsumeSpec extends SparkSpec {
     assert(ids == Seq(Set(1L), Set(2L)))
   }
 
-  test("compactEvery folds the log on a batch cadence inside the stream") {
-    val root = Files.createTempDirectory("compactevery").toString
+  test("a zero-delta compactionPolicy folds the log after every batch") {
+    val root = Files.createTempDirectory("compactpolicy").toString
     val eventsDir = s"$root/events"; Files.createDirectories(Paths.get(eventsDir))
     val tables = Seq(TableSync("db", "mt", valueSchema, Seq("id"), Engine.MergeTree))
     writeBatch(eventsDir, "b0.json", Seq(ev("mt", "insert", 1, 10.0, 100)))
     writeBatch(eventsDir, "b1.json", Seq(ev("mt", "insert", 2, 20.0, 200)))
     val q = Consume.start(spark, EventSource.files(spark, eventsDir),
       tables, s"$root/state", s"$root/ckpt",
-      triggerInterval = "250 milliseconds", compactEvery = 1)
+      triggerInterval = "250 milliseconds",
+      compactionPolicy = Some(SinkStrategy.CompactionPolicy(maxDeltaVersions = 0)))
     q.processAllAvailable(); q.stop()
     val store = new ParquetStateStore(spark, s"$root/state/db/mt")
     // every batch compacted: exactly one surviving version, full state

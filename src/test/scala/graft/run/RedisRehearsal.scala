@@ -4,7 +4,6 @@ import graft.model.Engine
 import graft.sink.ParquetStateStore
 import graft.sources.FakeRedisServer
 import graft.streaming.{EventSource, RedisBroker}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -38,17 +37,10 @@ object RedisRehearsal {
     require(args.length >= 2, "usage: RedisRehearsal <sfDir> <workDir> [eventsPerFile]")
     val (sfDir, workDir) = (args(0), args(1))
     val perFile = if (args.length > 2) args(2).toInt else 20000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.numRecentProgressUpdates", "1200")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.session()
+    // the progress ring is the phase accounting: StreamRehearsal.drain
+    // refuses a phase that fills it
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "1200")
     import spark.implicits._
 
     val orders = spark.read.parquet(s"$sfDir/orders.parquet")

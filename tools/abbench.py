@@ -68,6 +68,13 @@ def build_old(commit, keep):
     # surface stable since r13 (see BenchServe scaladoc)
     shutil.copy2(REPO / "src/main/scala/graft/BenchServe.scala",
                  tree / "src/main/scala/graft/BenchServe.scala")
+    # BenchServe builds through Tables.session(); an old tree whose
+    # session ignores SPARK_GRAFT_CPUS runs local[32] whatever it says
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    if cpus != "32" and "SPARK_GRAFT_CPUS" not in (
+            tree / "src/main/scala/graft/Tables.scala").read_text():
+        raise SystemExit(f"old tree {sha} ignores SPARK_GRAFT_CPUS={cpus} "
+                         "(it would run local[32]): unset it to pair at 32")
     print(f"[ab] compiling old side ({sha}) in {tree} ...", flush=True)
     r = subprocess.run(["sbt", "-batch", "compile"], cwd=tree,
                        stdout=subprocess.PIPE, stderr=subprocess.STDOUT)
@@ -83,8 +90,7 @@ class Serve:
         self.log = open(logpath, "w")
         env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf)
         cmd = (["java", f"-Xmx{mem}", f"-Xms{mem}"] + ADD_OPENS +
-               ["-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-                "-cp", f"{classes}:{SPARK_JARS}", "graft.BenchServe"])
+               ["-cp", f"{classes}:{SPARK_JARS}", "graft.BenchServe"])
         self.p = subprocess.Popen(cmd, env=env, stdin=subprocess.PIPE,
                                   stdout=subprocess.PIPE, stderr=self.log,
                                   text=True, bufsize=1)

@@ -22,5 +22,4 @@ for p in java.base/java.lang java.base/java.lang.invoke \
   ADD_OPENS="$ADD_OPENS --add-opens $p=ALL-UNNAMED"
 done
 exec java -Xmx"$MEM" -Xms"$XMS" $ADD_OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$CLASSES:/opt/spark/jars/*" "$@"
