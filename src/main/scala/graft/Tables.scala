@@ -1,5 +1,6 @@
 package graft
 
+import graft.sink.{NoForkLocalFileSystem, NoForkLocalFs}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -114,10 +115,16 @@ object Tables {
     * `events.ts` normalization in [[apply]] depends on it), TIMESTAMP(NANOS)
     * read as a raw long, no UI, and `shufflePartitions` shuffle partitions.
     * AQE, with partition coalescing and skew-join splitting, is Spark's
-    * default and stays on. `conf` carries extra static confs that must be
-    * set before the context starts (executor sizing, warehouse dir); set
-    * runtime SQL confs with `spark.conf.set` on the returned session. As
-    * with `getOrCreate`, a session that already exists is returned.
+    * default and stays on. `file:` paths resolve, for `FileSystem` and
+    * `FileContext` alike and on every executor, to
+    * [[graft.sink.NoForkLocalFileSystem]] and [[graft.sink.NoForkLocalFs]]:
+    * Hadoop's local filesystem without the `chmod` and `readlink`
+    * processes it forks per file and per checkpoint rename; `hdfs:` and
+    * `s3a:` are untouched. `conf` carries extra static confs that must be
+    * set before the context starts (executor sizing, warehouse dir) and
+    * overrides the two filesystem keys when it sets them; set runtime SQL
+    * confs with `spark.conf.set` on the returned session. As with
+    * `getOrCreate`, a session that already exists is returned.
     */
   def session(master: String = defaultMaster, shufflePartitions: Int = cpus,
               conf: Map[String, String] = Map.empty): SparkSession = {
@@ -127,6 +134,8 @@ object Tables {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[NoForkLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NoForkLocalFs].getName)
       .config(conf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
