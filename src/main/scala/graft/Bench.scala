@@ -140,8 +140,8 @@ object Bench {
     // idle box, which made the clearing evidence fail the very gate it
     // served (VERDICT r13 "what's wrong" #2). Sustained machine load
     // still trips the gate — it inflates the post-warmup min just as
-    // much. Protocol side: regress.py --gate checks any single record
-    // against all contamination gates; adjudication records must pass.
+    // much. A record whose start or end canary exceeds 0.50 s was taken
+    // on a contaminated machine; read its times as such.
     def canary(): Double = {
       spark.range(50000000L).selectExpr("sum(id * 3 + 1)").collect()
       (0 until 3).map { _ =>
@@ -190,7 +190,7 @@ object Bench {
       s"SPARK_GRAFT_BENCH_REPEAT must be >= 1 (got $loops); unset it or use 1 to disable repeats")
     val names = only.fold(headline)(s => headline.filter(s))
     // queries whose every execution attempt threw (see run()'s catch):
-    // reported in both metric lines so regress.py/readers can refuse
+    // reported in both metric lines so readers of the record can refuse
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     val loopResults = (1 to loops).map { li =>
       if (loops > 1) System.err.println(s"[bench] ==== loop $li/$loops ====")
@@ -205,7 +205,7 @@ object Bench {
         org.apache.spark.sql.graftshim.SessionDrain.drain(spark.sparkContext)
       val fn = SparkEntry.queries(name)
       // LOUD on failure (r14 review): a silently-swallowed failure times
-      // the exception throw (~0.01 s) and regress.py reads the broken
+      // the exception throw (~0.01 s) and any comparison reads the broken
       // query as a huge improvement — invisible until a separate
       // correctness run, and at sf10 there IS no correctness run. Only a
       // failure in a TIMED pass gates the record (meta review: a
@@ -287,15 +287,15 @@ object Bench {
     // TAIL of this line, so the per-query times map goes LAST (and the gc
     // diagnostic map, the next-most-useful, right before it) — in round 8
     // the map fell off the capture and the gc numbers were misread as times
-    // settle/contamination evidence rides in BOTH lines so regress.py can
-    // gate on whichever record survives the driver's fixed-size tail
+    // settle/contamination evidence rides in BOTH lines so a reader can
+    // judge whichever record survives the driver's fixed-size tail
     def envLine(failedJson: String) =
       """"io_canary_start_sec":%.3f,"io_canary_end_sec":%.3f,"mem_canary_start_sec":%.3f,"mem_canary_end_sec":%.3f,"settle_gap_s":%.1f,"active_jvms_start":%d,"busy_frac_start":%.3f,"dirty_mb_start":%.1f,"steal_frac_run":%.4f,"loops":%d,"failed_queries":%s"""
         .formatLocal(java.util.Locale.ROOT, ioStart, ioEnd, memStart, memEnd, settleGap, activeJvms.size, busyFrac, dirtyMb, stealFrac, loops, failedJson)
     val env = envLine(failed.map("\"" + _ + "\"").mkString("[", ",", "]"))
     // compact line (≤1.5 KB tail budget): a MASS-failure run must not blow
     // the budget with the very field that gates it — cap at 3 names (the
-    // non-empty list trips regress.py's gate either way; the full line
+    // non-empty list marks the record either way; the full line
     // carries every name). The overflow count rides as its own numeric
     // field, NOT a synthetic "+N more" entry inside the list (r15
     // advisor: a fake name breaks any consumer that cross-references the

@@ -33,8 +33,11 @@ import java.nio.file.Files
   *     /proc checks above are the primary defense here and the probe
   *     is the backstop for genuinely I/O-bound machines.
   *
-  * Bench emits all of these in both metric lines; `tools/regress.py`
-  * exits 2 (contaminated, verdicts withheld) when any gate trips.
+  * Bench emits all of these in both metric lines, and the `BENCH_rNN`
+  * records carry them as context for reading one record.
+  * No tool gates them: speed claims are paired (`tools/abbench.py` +
+  * `tools/regress.py --paired`, which gates on its serves' own CPU and
+  * page-supply canaries).
   */
 object SettleGuard {
   /** Minimum seconds between graft JVMs for a trustworthy bench. */
@@ -232,9 +235,9 @@ object SettleGuard {
     * green, /proc/stat sys% at 24-42 (r15 sf10 refresh adjudication,
     * SCALE.md). Measured band on this box in the r15 window: 0.25-0.27 s
     * (~2 GB/s page supply) — stable across minutes, so the gate sits at
-    * 1.0 s (regress.py MEM_CANARY_BAD) to catch an order-of-magnitude
-    * collapse, not the box's ambient speed; re-floor if a quiet window
-    * ever shows a materially lower ambient.
+    * 1.0 s (`regress.py --paired`, `graft.run.Rehearsal`) to catch an
+    * order-of-magnitude collapse, not the box's ambient speed; re-floor
+    * if a quiet window ever shows a materially lower ambient.
     * Off-heap (allocateDirect) on purpose: JVM heap pages under
     * a pinned Xms are faulted in by earlier work and would measure
     * reuse, not the host. Each round's buffer is freed EXPLICITLY
@@ -274,12 +277,12 @@ object SettleGuard {
 
   /** Timed 16 MiB write + fsync + readback + delete in target/, min of
     * 3. Idle floor on this box: 0.021-0.031 s (round-12 measurement,
-    * SCALE.md). regress.py gates at 0.30 s. */
+    * SCALE.md); above 0.30 s the box is I/O-contaminated. */
   def ioProbeSec(): Double =
     try {
       // like every other probe here: never kill the measurement run the
       // probe exists to protect — unwritable/odd anchor dirs yield the
-      // -1 sentinel (regress.py gates ignore it)
+      // -1 sentinel (unknown, never read as clean or dirty)
       val dir = Option(markerFile.getParentFile)
         .getOrElse(new File(sys.props("user.dir")))
       dir.mkdirs()

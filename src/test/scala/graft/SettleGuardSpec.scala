@@ -98,7 +98,7 @@ class SettleGuardSpec extends AnyFunSuite {
     if (s == -1.0)
       cancel("mem probe allocation failed on this host — environment-" +
         "sensitive contract cannot be checked here (sentinel path is " +
-        "exercised by regress.py gates, not this smoke)")
+        "not exercised by this smoke)")
     assert(s > 0.0 && java.lang.Double.isFinite(s),
       s"memProbeSec not a positive finite first-touch time: $s")
   }

@@ -185,7 +185,7 @@ class DdlMidStreamSpec extends SparkSpec {
   test("CHANGE COLUMN rename with NO ddlSink (store-only pipeline) still compacts the store") {
     // regression: the store-side rename compact used to live inside
     // ddlSink.foreach, so a pipeline with the default ddlSink = None
-    // (StreamRehearsal, any store-only consumer) never collapsed the log
+    // (any store-only consumer) never collapsed the log
     // and pre-rename rows read as null under the new name after restart
     val root = Files.createTempDirectory("ddlrenamenosink").toString
     val eventsDir = s"$root/events"; Files.createDirectories(Paths.get(eventsDir))

@@ -1,17 +1,15 @@
 package graft.run
 
-import graft.model.Engine
-import graft.sink.ParquetStateStore
 import graft.sources.FakeRedisServer
-import graft.streaming.{EventSource, RedisBroker}
-import org.apache.spark.sql.functions._
+import graft.streaming.RedisBroker
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-/** [[StreamRehearsal]] routed through the REAL Redis-Streams transport
-  * (VERDICT r10 #3): the same sf-scale mutation workload, but instead of
-  * copying staged wire files into the source directory, every event
-  * travels produce → RESP broker → consume:
+/** [[Rehearsal]]'s workload routed through the REAL Redis-Streams
+  * transport (VERDICT r10 #3): the same staging, bootstrap, consume loop
+  * and checks, but instead of landing the staged wire files in the
+  * source directory, every event travels produce → RESP broker →
+  * consume:
   *
   *  - produce: [[Produce.produceBatch]] (the exactly-once protocol —
   *    explicit `<batchId>-<seq>` ids, produced-batch commit) XADDs each
@@ -21,51 +19,41 @@ import scala.jdk.CollectionConverters._
   *  - transport: [[RedisBroker.drainToStaging]] (XREAD → staged wire
   *    file + broker-side position commit) runs CONCURRENTLY with the
   *    consume query, exactly the S4 bridge a deployment runs;
-  *  - consume: the same two-engine consume loop, killed mid-stream in
-  *    phase 1 with the same commit-marker crash window, restarted from
-  *    the checkpoint in phase 2; final state checked exactly.
+  *  - consume: [[Rehearsal.consume]], stopped after the first half with
+  *    the commit-marker crash window, restarted from the checkpoint in
+  *    phase 2; final state checked exactly.
+  *
+  * The workload carries no DDL: the broker regroups events into staged
+  * files of its own size, so a DDL slot would not stay its own batch.
   *
   * Lives in test scope because the hermetic RESP server is a test
-  * double (`sbt "Test/runMain graft.run.RedisRehearsal <sfDir> <work>"`).
-  * Prints the same per-phase + summary JSON as StreamRehearsal, plus
-  * produce/drain transport legs, for the SCALE.md row.
+  * double (`sbt "Test/runMain graft.run.RedisRehearsal <sfDir> <work>
+  * [batches=50]"`). Prints per-phase lines and a summary line like
+  * [[Rehearsal]], plus the produce/drain transport legs.
   */
 object RedisRehearsal {
 
   def main(args: Array[String]): Unit = {
     graft.SettleGuard.install()
-    require(args.length >= 2, "usage: RedisRehearsal <sfDir> <workDir> [eventsPerFile]")
+    require(args.length >= 2, "usage: RedisRehearsal <sfDir> <workDir> [batches]")
     val (sfDir, workDir) = (args(0), args(1))
-    val perFile = if (args.length > 2) args(2).toInt else 20000
+    val batches = if (args.length > 2) args(2).toInt else 50
+    require(batches >= 2, s"batches must be >= 2, got $batches")
     val spark = graft.Tables.session()
-    // the progress ring is the phase accounting: StreamRehearsal.drain
-    // refuses a phase that fills it
-    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "1200")
-    import spark.implicits._
-
-    val orders = spark.read.parquet(s"$sfDir/orders.parquet")
-    val maxKey = orders.agg(max("o_orderkey")).as[Long].head()
-    val stage = s"$workDir/stage"; val eventsDir = s"$workDir/events"
-    val stateRoot = s"$workDir/state"; val ckpt = s"$workDir/ckpt"
+    val eventsDir = s"$workDir/events"; val ckpt = s"$workDir/ckpt"
     Files.createDirectories(Paths.get(eventsDir))
 
-    // --- stage the wire files (the capture agent's output) ---
-    val muts = StreamRehearsal.mutations(orders, maxKey).cache()
-    val nMut = muts.count()
-    val lines = StreamRehearsal.wireLines(muts, "orders_mt")
-      .unionByName(StreamRehearsal.wireLines(muts, "orders_rt"))
-    val nFiles = math.max(1, math.ceil(nMut * 2.0 / perFile).toInt)
-    lines.repartition(nFiles).write.mode("overwrite").text(stage)
-    val staged = Files.list(Paths.get(stage)).toArray.map(_.toString)
-      .filter(_.endsWith(".txt")).sorted
-    println(s"""{"stage":"staged","files":${staged.length},"events":${nMut * 2}}""")
+    // --- stage the wire files (the capture agent's output) + bootstrap ---
+    val st = Rehearsal.stage(spark, sfDir, workDir, s"$workDir/produce", batches, withDdl = false)
+    val staged = st.files
+    val perFile = math.ceil(st.nMut * 2.0 / batches).toInt
 
     // hermetic RESP broker; maxlen sized above the full event volume so
     // the rehearsal measures the transport, not the trim policy (trim
     // semantics are pinned in ProduceProtocolSpec/FakeRedisFidelitySpec)
     val server = new FakeRedisServer
     def broker() = new RedisBroker("127.0.0.1", server.port, alias = "rehearsal",
-      queueMaxLen = math.max(5000000L, nMut * 4))
+      queueMaxLen = math.max(5000000L, st.nMut * 4))
 
     // --- produce leg: the exactly-once protocol, one batch per file ---
     def produceFiles(files: Seq[String], fromBatch: Int): Double = {
@@ -88,30 +76,10 @@ object RedisRehearsal {
       (System.nanoTime() - t0) / 1e9
     }
 
-    val tables = Seq(
-      TableSync("db", "orders_mt", orders.schema, Seq("o_orderkey"), Engine.MergeTree),
-      TableSync("db", "orders_rt", orders.schema, Seq("o_orderkey"), Engine.ReplacingMergeTree))
-
-    val t0 = System.nanoTime()
-    Consume.bootstrap(spark, tables, stateRoot,
-      Map(("db", "orders_mt") -> FullEtl.ParquetSource(s"$sfDir/orders.parquet"),
-          ("db", "orders_rt") -> FullEtl.ParquetSource(s"$sfDir/orders.parquet")))
-    val bootstrapSec = (System.nanoTime() - t0) / 1e9
-
-    val policy = graft.sink.SinkStrategy.CompactionPolicy(
-      maxDeltaVersions = 64, maxDeltaToBaseRatio = 1.0)
-    def startQuery() = Consume.start(spark, EventSource.files(spark, eventsDir,
-      maxFilesPerTrigger = 1), tables, stateRoot, ckpt,
-      triggerInterval = "0 seconds", compactionPolicy = Some(policy))
-
-    // quiescent page-supply bracket (r16, VERDICT r15 #4): the rehearsal's
-    // produce/apply events/s bands are citable only under a healthy
-    // first-touch path — the r15 leg ran 17.7k/108.8k (below the 22-31k /
-    // 166-216k bands) on the documented degraded host with nothing in
-    // the artifact showing it
+    def startQuery() = Rehearsal.consume(spark, workDir, st.tables, Rehearsal.SoakPolicy)
     val memStart = graft.SettleGuard.memProbeSec()
 
-    // --- phase 1: first half produced + drained, query killed mid-stream ---
+    // --- phase 1: first half produced, drained and applied ---
     val half = staged.length / 2
     val prod1Sec = produceFiles(staged.take(half), 0)
 
@@ -153,44 +121,37 @@ object RedisRehearsal {
     val replaySec = produceFiles(staged.slice(half - 1, half), half - 1)
     val q1 = startQuery()
     val drain1Sec = drainAll() // stages while the query applies
-    val p1 = StreamRehearsal.drain(q1, "phase1_interrupted",
-      stopAfterBatches = math.max(1, half / 2))
+    val p1 = Rehearsal.drain(q1, "phase1_first_half")
 
-    StreamRehearsal.injectCrashWindow(ckpt)
+    Rehearsal.injectCrashWindow(ckpt)
 
     // --- phase 2: rest produced + drained, restart replays the crashed
     //     batch, everything drains to the end ---
     val prod2Sec = produceFiles(staged.drop(half), half)
     val q2 = startQuery()
     val drain2Sec = drainAll()
-    val p2 = StreamRehearsal.drain(q2, "phase2_restart_drain")
+    val p2 = Rehearsal.drain(q2, "phase2_restart_drain")
+    val mem = Rehearsal.MemBracket(memStart, graft.SettleGuard.memProbeSec())
 
-    val failures = StreamRehearsal.finalStateFailures(spark, muts, orders, tables, stateRoot)
-    muts.unpersist()
+    val (_, checks) = Rehearsal.runChecks(spark, st, workDir, Rehearsal.SoakPolicy, Map.empty)
+    st.muts.unpersist()
+    server.close()
 
-    println(StreamRehearsal.phaseJson(p1))
-    println(StreamRehearsal.phaseJson(p2))
-    val versionJson = tables.map { t =>
-      val stats = new ParquetStateStore(
-        spark, s"$stateRoot/${t.schema}/${t.table}").versionStats()
-      val (bases, deltas) = stats.partition(_._3)
-      s""""${t.table}":{"bases":${bases.size},"deltas":${deltas.size}}"""
-    }.mkString("{", ",", "}")
+    println(Rehearsal.phaseJson(p1))
+    println(Rehearsal.phaseJson(p2))
     val totalEvents = p1.rows + p2.rows
     val totalWall = p1.wallSec + p2.wallSec
-    val prodRate = (nMut * 2) / (prod1Sec + prod2Sec)
-    println(f"""{"summary":"redis_rehearsal","sf_dir":"$sfDir","bootstrap_sec":$bootstrapSec%.2f,""" +
-      f""""events":$totalEvents,"wall_sec":$totalWall%.2f,""" +
-      f""""events_per_sec":${totalEvents / totalWall}%.0f,""" +
-      f""""produce_sec":${prod1Sec + prod2Sec}%.2f,"produce_events_per_sec":$prodRate%.0f,""" +
-      f""""produce_replay_skip_sec":$replaySec%.2f,""" +
-      f""""drain_sec":${drain1Sec + drain2Sec}%.2f,""" +
-      f""""mem_canary_start_sec":$memStart%.3f,"mem_canary_end_sec":${graft.SettleGuard.memProbeSec()}%.3f,""" +
-      s""""crash_replayed_batch":${p2.firstBatchId <= p1.lastBatchId},""" +
-      s""""p1_last_batch":${p1.lastBatchId},"p2_first_batch":${p2.firstBatchId},""" +
-      s""""state_versions":$versionJson,""" +
-      s""""state_checks":${if (failures.isEmpty) "\"pass\"" else failures.mkString("\"", "; ", "\"")}}""")
-    server.close()
+    val failures = checks ++ mem.failure
+    println(Rehearsal.summary("redis_rehearsal", Seq(
+      "sf_dir" -> s""""$sfDir"""", "bootstrap_sec" -> f"${st.bootstrapSec}%.2f",
+      "events" -> s"$totalEvents", "wall_sec" -> f"$totalWall%.2f",
+      "events_per_sec" -> f"${totalEvents / totalWall}%.0f",
+      "produce_sec" -> f"${prod1Sec + prod2Sec}%.2f",
+      "produce_events_per_sec" -> f"${st.nMut * 2 / (prod1Sec + prod2Sec)}%.0f",
+      "produce_replay_skip_sec" -> f"$replaySec%.2f",
+      "drain_sec" -> f"${drain1Sec + drain2Sec}%.2f",
+      "state_versions" -> Rehearsal.stateVersions(spark, s"$workDir/state", st.tables)) ++
+      Rehearsal.crashReplay(p1, p2, st.nMut * 2) ++ mem.fields, failures))
     if (failures.nonEmpty) sys.exit(1)
     spark.stop()
   }

@@ -1,42 +1,15 @@
 #!/usr/bin/env python3
-"""Round-over-round bench regression verdicts with per-query noise floors.
+"""Paired bench regression verdicts with per-query noise floors.
 
-Usage: regress.py <old_bench> <new_bench>
-       regress.py --gate <bench>
-       regress.py --paired <BENCH_AB.json>
+Usage: regress.py --paired <BENCH_AB.json>
 
 --paired reads a tools/abbench.py record (two builds alternated
 query-by-query in one host window) and issues per-query verdicts with
 PAIRED floors: host noise cancels out of each ratio by construction, so
-the floors are the measured INTRA-JVM spread (GC, AQE wobble), far
-tighter than the cross-run floors below. This is the primary regression
-signal since r15 (VERDICT r14 #1); cross-round record comparison remains
-for trend context only.
-
---gate checks ONE record against every contamination gate (canary, io
-canary, settle gap, active JVMs, busy/dirty/steal) and exits 2 if any
-trips, 0 otherwise. Adjudication rule (r14, VERDICT r13 #2): a record
-offered as adjudication evidence must ITSELF pass this gate — a
-contaminated clearing run proves nothing, whichever way it points. Run
---gate on the adjudication JSON before citing it. (Bench's canary takes
-an untimed warmup pass since r14, so a cold isolated JVM no longer
-manufactures a hot start canary; a --gate failure on a fresh record now
-means real machine state, not JIT.)
-
-Both args are either raw graft.Bench stdout (a line with {"metric":...})
-or a driver BENCH_r{N}.json (the metric lines are extracted from its
-"tail" field; when the full "queries" line is truncated the compact
-"top20_ms" map is used instead).
-
-Motivation (VERDICT r10 #6): the minhash_pairs inter-JVM variance floor
-(~1.4x, established in the round-9/10 adjudications — the fastest run had
-the WORST start canary, ruling out page cache) kept getting re-flagged
-and re-adjudicated by hand. This tool applies the measured per-query
-floors so future rounds' deltas arrive pre-classified:
+the floors are the measured INTRA-JVM spread (GC, AQE wobble).
 
   - FLAG        ratio beyond the query's floor AND the delta is material
-                (>= MATERIAL_S) -> adjudicate (isolated canary-gated
-                re-run via SPARK_GRAFT_BENCH_ONLY=<q>)
+                -> adjudicate by re-running abbench on the flagged queries
   - watch       beyond the floor but immaterial in seconds — ignored
                 individually; many of them promote to a run-level DRIFT
   - within      inside the floor -> known machine noise, no action
@@ -44,48 +17,18 @@ floors so future rounds' deltas arrive pre-classified:
   - noise-abs   both runs under the absolute floor where scheduling
                 overhead dominates any ratio
 
-Exit 1 when anything needs adjudication (FLAG rows, a flagged TOTAL, or
-DRIFT), 2 on a contaminated canary, 0 otherwise.
-
-Canary gate: if either run's start/end canary exceeds CANARY_BAD the run
-is machine-contaminated and per-query verdicts are meaningless — exit 2
-and re-run the bench instead of adjudicating.
+Exit 1 when anything needs adjudication (FLAG rows, a flagged TOTAL,
+DRIFT, or a query that errored), 2 when the record's own CPU or
+page-supply canary is contaminated, 0 otherwise.
 
 Floors are MEASURED, not aspirational: add a query here only with an
 adjudication trail (SCALE.md) showing the variance is machine-state, not
 plan-state.
 """
-import json, re, sys
+import json, sys
 
-DEFAULT_FLOOR = 1.20   # +-20% run-to-run band for an uncontaminated box
-FLOORS = {
-    # inter-JVM machine-state floor: r10 min-of-3 + per-pass instrumentation
-    # (SCALE.md round-10 note; BENCH_sf10_r10_adjudication.json)
-    "dedup_minhash_pairs": 1.40,
-    # r11 judge adjudication: canary-clean isolated runs spanned
-    # 1.18-1.66 s at sf0.1 on identical code (code path untouched that
-    # round); FLAGged falsely in two independent full runs. Bench also
-    # runs it min-of-3 since r12.
-    "envelope_debezium": 1.40,
-}
 ABS_NOISE_S = 0.30     # both-run seconds below which ratios are scheduling noise
-MATERIAL_S = 0.25      # beyond-floor deltas smaller than this are "watch", not FLAG
-TOTAL_FLOOR = 1.10     # whole-run total is far more stable than any query
-# Full-run-comparable-only class (VERDICT r12 #3): these queries pay
-# per-query warmup when run ALONE that the full run amortizes away —
-# graph_pagerank's iterative jobs (2.92 s isolated vs ~1.0-1.5 in-run,
-# r11 adjudication) and the sf10 r12 adjudication's ann_topk /
-# ann_lsh_topk / q17_intersect rows, where isolated re-runs were SLOWER
-# than the flagged in-run values. An isolated SPARK_GRAFT_BENCH_ONLY
-# re-run can therefore neither confirm nor clear a FLAG on them; the
-# only valid adjudication is a repeat-loop full run
-# (SPARK_GRAFT_BENCH_REPEAT>=2, per-query minima).
-FULL_RUN_ONLY = {"graph_pagerank", "ann_topk", "ann_lsh_topk", "q17_intersect"}
 CANARY_BAD = 0.50      # canary seconds beyond this = contaminated run
-# Settle-protocol gates (fields emitted by Bench since r12; absent in
-# older records -> not checked). Floors measured on clean runs, SCALE.md
-# round-12 "settle guard" note.
-IO_CANARY_BAD = 0.30   # write+fsync+readback probe; idle floor 0.021-0.031 s
 MEM_CANARY_BAD = 1.0   # first-touch of 512 MiB fresh pages (min of 3);
                        # measured band on this box in the r15 window:
                        # 0.25-0.27 s (~2 GB/s). The r15 sf10 refresh found
@@ -93,134 +36,6 @@ MEM_CANARY_BAD = 1.0   # first-touch of 512 MiB fresh pages (min of 3);
                        # other gate green while the host's page-supply path
                        # crawled; the gate catches an order-of-magnitude
                        # collapse, not the ambient speed
-SETTLE_MIN_S = 15.0    # the >=15 s between-JVMs rule (SettleGuard.MinSettleSec)
-BUSY_FRAC_BAD = 0.25   # box-wide busy fraction sampled before Spark init
-DIRTY_MB_BAD = 1024.0  # residual dirty/writeback backlog at bench start
-STEAL_FRAC_BAD = 0.05  # whole-run hypervisor steal fraction (VM neighbor)
-
-
-def metric_objects(text):
-    """Every parseable {...} JSON object in `text` that has a "metric" key."""
-    out = []
-    for m in re.finditer(r'\{"metric"', text):
-        depth, i = 0, m.start()
-        for j in range(m.start(), len(text)):
-            if text[j] == '{':
-                depth += 1
-            elif text[j] == '}':
-                depth -= 1
-                if depth == 0:
-                    try:
-                        out.append(json.loads(text[i:j + 1]))
-                    except json.JSONDecodeError:
-                        pass
-                    break
-    return out
-
-
-def load(path):
-    with open(path) as f:
-        text = f.read()
-    tail = text
-    try:
-        obj = json.loads(text)
-        if isinstance(obj, dict) and "tail" in obj:
-            tail = obj["tail"]
-    except json.JSONDecodeError:
-        pass
-    metrics = metric_objects(tail)
-    full = [m for m in metrics if "queries" in m]
-    compact = [m for m in metrics if "top20_ms" in m]
-    if full:
-        m = full[-1]
-        queries = dict(m["queries"])
-    elif compact:
-        m = compact[-1]
-        queries = {q: ms / 1000.0 for q, ms in m["top20_ms"].items()}
-    else:
-        # head-truncated driver tails (pre-r10 format): the fragment is a
-        # run of  "query":seconds  pairs from inside the queries map —
-        # recover what survives, excluding the metric line's own scalars
-        not_queries = {"metric", "value", "unit", "sf", "total_s", "nq",
-                       "canary_start_sec", "canary_end_sec",
-                       "io_canary_start_sec", "io_canary_end_sec",
-                       "mem_canary_start_sec", "mem_canary_end_sec",
-                       "settle_gap_s", "active_jvms_start",
-                       "busy_frac_start", "dirty_mb_start",
-                       "steal_frac_run", "loops", "failed_queries"}
-        frag = tail[:tail.find("}}") + 1] if "}}" in tail else tail
-        # anchored on a preceding delimiter (or fragment start) so a
-        # truncation landing MID-key cannot mint a phantom query from
-        # the key's tail, while a fragment that begins exactly at an
-        # intact pair's opening quote is still recovered
-        pairs = re.findall(r'(?:^|[,{])"([A-Za-z0-9_]+)":([0-9]+\.[0-9]+)', frag)
-        m = {}
-        queries = {q: float(v) for q, v in pairs if q not in not_queries}
-        if not queries:
-            raise SystemExit(f"{path}: no parseable metric line")
-    return {
-        "queries": queries,
-        "total_s": m.get("total_s", m.get("value", sum(queries.values()))) or
-                   sum(queries.values()),
-        "canary_start": m.get("canary_start_sec"),
-        "canary_end": m.get("canary_end_sec"),
-        "io_canary_start": m.get("io_canary_start_sec"),
-        "io_canary_end": m.get("io_canary_end_sec"),
-        "mem_canary_start": m.get("mem_canary_start_sec"),
-        "mem_canary_end": m.get("mem_canary_end_sec"),
-        "settle_gap_s": m.get("settle_gap_s"),
-        "active_jvms_start": m.get("active_jvms_start"),
-        "busy_frac_start": m.get("busy_frac_start"),
-        "dirty_mb_start": m.get("dirty_mb_start"),
-        "steal_frac_run": m.get("steal_frac_run"),
-        "loops": m.get("loops"),
-        "failed_queries": m.get("failed_queries"),
-        "partial": not full,
-    }
-
-
-def gate_trips(run):
-    """Contamination-gate messages for one loaded record (empty = clean).
-
-    Each gate checks only when Bench emitted the field (None on pre-r12
-    records) and -1 sentinels (unknown) never trip."""
-    checks = [
-            (run["canary_start"] or 0) > CANARY_BAD and
-            f"canary_start={run['canary_start']}s > {CANARY_BAD}s",
-            (run["canary_end"] or 0) > CANARY_BAD and
-            f"canary_end={run['canary_end']}s > {CANARY_BAD}s",
-            (run["io_canary_start"] or 0) > IO_CANARY_BAD and
-            f"io_canary_start={run['io_canary_start']}s > {IO_CANARY_BAD}s (idle floor 0.02-0.03)",
-            (run["io_canary_end"] or 0) > IO_CANARY_BAD and
-            f"io_canary_end={run['io_canary_end']}s > {IO_CANARY_BAD}s (idle floor 0.02-0.03)",
-            (run["mem_canary_start"] or 0) > MEM_CANARY_BAD and
-            f"mem_canary_start={run['mem_canary_start']}s > {MEM_CANARY_BAD}s "
-            f"(host page-supply collapsed; r15 ambient 0.25-0.27)",
-            (run["mem_canary_end"] or 0) > MEM_CANARY_BAD and
-            f"mem_canary_end={run['mem_canary_end']}s > {MEM_CANARY_BAD}s "
-            f"(host page-supply collapsed; r15 ambient 0.25-0.27)",
-            run["settle_gap_s"] is not None and 0 <= run["settle_gap_s"] < SETTLE_MIN_S and
-            f"settle_gap_s={run['settle_gap_s']} < {SETTLE_MIN_S} (bench started "
-            f"too soon after the previous graft JVM — the r11 failure mode)",
-            (run["active_jvms_start"] or 0) > 0 and
-            f"active_jvms_start={run['active_jvms_start']} (another java process "
-            f"was burning CPU at bench start)",
-            (run["busy_frac_start"] or 0) > BUSY_FRAC_BAD and
-            f"busy_frac_start={run['busy_frac_start']} > {BUSY_FRAC_BAD}",
-            (run["dirty_mb_start"] or 0) > DIRTY_MB_BAD and
-            f"dirty_mb_start={run['dirty_mb_start']} MiB > {DIRTY_MB_BAD} "
-            f"(residual writeback backlog)",
-            (run["steal_frac_run"] or 0) > STEAL_FRAC_BAD and
-            f"steal_frac_run={run['steal_frac_run']} > {STEAL_FRAC_BAD} "
-            f"(hypervisor stole CPU during the run)",
-            # r14: Bench records queries whose every execution attempt
-            # threw — their "times" measure the exception throw, so the
-            # record is not evidence for anything
-            bool(run["failed_queries"]) and
-            f"failed_queries={run['failed_queries']} (these entries timed "
-            f"an exception throw, not the query)",
-    ]
-    return [msg for msg in checks if msg]
 
 
 # Paired-mode floors, MEASURED on the r15 engine-identical calibration
@@ -352,7 +167,8 @@ def paired(path):
           f"{tr:>8.2f}{PAIRED_TOTAL_FLOOR:>7.2f}  {tv}")
     if rec.get("errors"):
         print(f"ERRORED queries (not compared): {sorted(rec['errors'])}")
-    # one-direction wobble promotion, as in cross-run mode
+    # many small beyond-floor wobbles in ONE direction = drift even when no
+    # single query is material — promote to a run-level flag
     drift = len(watch) > max(3, len(qs) // 8)
     print(f"\nflag={len(flags)} watch={len(watch)} within={len(within)} "
           f"improved={len(improved)} noise-abs={len(noise)}" +
@@ -370,160 +186,9 @@ def paired(path):
 
 
 def main():
-    if len(sys.argv) == 3 and sys.argv[1] == "--paired":
-        paired(sys.argv[2])
-        return
-    if len(sys.argv) == 3 and sys.argv[1] == "--gate":
-        # single-record contamination gate: the check an adjudication
-        # artifact must pass before it may serve as clearing evidence
-        run = load(sys.argv[2])
-        tripped = gate_trips(run)
-        for msg in tripped:
-            print(f"CONTAMINATED: {msg}")
-        if run["settle_gap_s"] is not None and run["settle_gap_s"] < 0:
-            print("WATCH: settle_gap_s=-1 (marker channel inert — unknown "
-                  "is NOT clean)")
-        for k in ("mem_canary_start", "mem_canary_end"):
-            if run[k] is not None and run[k] < 0:
-                print(f"ADVISORY: {k}=-1 (mem probe FAILED for that run — "
-                      f"deliberately not gated, but the record carries no "
-                      f"page-supply evidence; ADVICE r15)")
-        if tripped:
-            print("— this record is NOT valid adjudication evidence; re-run")
-            sys.exit(2)
-        print("gate-clean: usable as adjudication evidence")
-        return
-    if len(sys.argv) != 3:
+    if len(sys.argv) != 3 or sys.argv[1] != "--paired":
         raise SystemExit(__doc__)
-    old, new = load(sys.argv[1]), load(sys.argv[2])
-
-    for name, run in (("old", old), ("new", new)):
-        tripped = gate_trips(run)
-        if tripped:
-            for msg in tripped:
-                print(f"CONTAMINATED: {name} run: {msg}")
-            print("— re-run the bench; per-query verdicts withheld")
-            sys.exit(2)
-
-    # Unknown settle gap on a post-r12 record (the field is present but
-    # carries the -1 "no marker / unreadable" sentinel) is NOT clean — it
-    # means the marker channel was inert for that run (the r12 driver-bench
-    # failure mode: a bench launched from another checkout saw no marker
-    # and its verdicts sailed through this gate). Loud WATCH, not a gate
-    # trip: the run may still be clean, but the primary defense was blind.
-    for name, run in (("old", old), ("new", new)):
-        if run["settle_gap_s"] is not None and run["settle_gap_s"] < 0:
-            print(f"WATCH: {name} run: settle_gap_s=-1 (marker channel inert "
-                  f"or unreadable for that run — unknown is NOT clean; the "
-                  f"machine-global /tmp marker should make this impossible "
-                  f"post-r13, so -1 deserves investigation)\n")
-        for k in ("mem_canary_start", "mem_canary_end"):
-            if run[k] is not None and run[k] < 0:
-                print(f"ADVISORY: {name} run: {k}=-1 (mem probe FAILED — "
-                      f"not gated, but that run carries no page-supply "
-                      f"evidence; ADVICE r15)")
-
-    lo, ln = (old["loops"] or 1), (new["loops"] or 1)
-    loops_mismatch = lo != ln
-    if loops_mismatch:
-        bias = ("new-run per-query minima come from a DEEPER pool — 'improved' "
-                "verdicts may be sampling artifacts" if ln > lo else
-                "old-run minima come from a deeper pool — FLAGs may be "
-                "sampling artifacts, not regressions")
-        print(f"NOTE: loops mismatch (old={lo}, new={ln}): {bias}; per-query "
-              f"and TOTAL verdicts are DOWNGRADED to watch(loops) — compare "
-              f"equal-loops runs for real verdicts\n")
-
-    shared = sorted(set(old["queries"]) & set(new["queries"]))
-    same_set = set(old["queries"]) == set(new["queries"])
-    scope = ("top20-only" if (old["partial"] or new["partial"])
-             else ("shared-subset" if not same_set else "full"))
-    flags, improved, within, noise, watch = [], [], [], [], []
-    # withheld-by-loops-mismatch rows: kept out of drift (they aren't
-    # one-direction wobble evidence) and out of the adjudication list
-    # (the only valid adjudication is an equal-loops re-run); would-be
-    # FLAGs among them still force exit 1 so a pipeline can't silently
-    # consume a mismatched compare as clean
-    loopsw, loopsw_flags = [], []
-    print(f"{'query':<34}{'old_s':>9}{'new_s':>9}{'ratio':>8}{'floor':>7}  verdict")
-    rows = []
-    for q in shared:
-        to, tn = old["queries"][q], new["queries"][q]
-        ratio = tn / to if to > 0 else float("inf")
-        floor = FLOORS.get(q, DEFAULT_FLOOR)
-        if to < ABS_NOISE_S and tn < ABS_NOISE_S:
-            verdict, bucket = "noise-abs", noise
-        elif ratio > floor and (tn - to) >= MATERIAL_S:
-            # cross-loop minima from unequal pools aren't comparable —
-            # a FLAG here is a sampling artifact until proven on equal loops
-            if loops_mismatch:
-                verdict, bucket = "watch(loops)", loopsw_flags
-            else:
-                verdict, bucket = "FLAG", flags
-        elif ratio > floor:
-            verdict, bucket = "watch", watch
-        elif ratio < 1.0 / floor:
-            # a deeper new-run pool manufactures 'improved' the same way
-            verdict, bucket = (("watch(loops)", loopsw) if loops_mismatch and ln > lo
-                               else ("improved", improved))
-        else:
-            verdict, bucket = "within", within
-        bucket.append(q)
-        rows.append((ratio, q, to, tn, floor, verdict))
-    for ratio, q, to, tn, floor, verdict in sorted(rows, reverse=True):
-        print(f"{q:<34}{to:>9.3f}{tn:>9.3f}{ratio:>8.2f}{floor:>7.2f}  {verdict}")
-
-    # Whenever the two records cover DIFFERENT query sets — a truncated
-    # tail, or (r14 review) a full-format record from a
-    # SPARK_GRAFT_BENCH_ONLY subset run — the stored totals are not
-    # like-for-like and the ratio would flag (or clear) on coverage, not
-    # performance: compare the shared-query sums instead.
-    if old["partial"] or new["partial"] or not same_set:
-        old_total = sum(old["queries"][q] for q in shared)
-        new_total = sum(new["queries"][q] for q in shared)
-    else:
-        old_total, new_total = old["total_s"], new["total_s"]
-    tr = new_total / old_total if old_total else float("inf")
-    tv = "FLAG" if tr > TOTAL_FLOOR else ("improved" if tr < 1 / TOTAL_FLOOR else "within")
-    # a repeat-run total is a composite of cross-loop minima no single
-    # pass achieved — against a single-pass baseline both directions of
-    # the total verdict are sampling artifacts (ADVICE r12)
-    if loops_mismatch and tv != "within":
-        tv = "watch(loops)"
-    label = ("TOTAL(shared)" if (old["partial"] or new["partial"] or not same_set)
-             else "TOTAL")
-    print(f"\n{label:<34}{old_total:>9.2f}{new_total:>9.2f}"
-          f"{tr:>8.2f}{TOTAL_FLOOR:>7.2f}  {tv}")
-    # many small beyond-floor wobbles in ONE direction = drift even when no
-    # single query is material — promote to a run-level flag
-    drift = len(watch) > max(3, len(shared) // 8)
-    print(f"\nscope={scope} shared={len(shared)} flag={len(flags)} "
-          f"watch={len(watch)} within={len(within)} improved={len(improved)} "
-          f"noise-abs={len(noise)}" +
-          (f" loops-withheld={len(loopsw) + len(loopsw_flags)}"
-           if loops_mismatch else "") + (" DRIFT" if drift else ""))
-    if loopsw_flags:
-        print("withheld would-be FLAGs (loops mismatch — re-run at equal "
-              "loops, no other adjudication is valid):", ",".join(loopsw_flags))
-        sys.exit(1)
-    if flags or tv == "FLAG" or drift:
-        todo = flags + (watch if (drift or tv == "FLAG") else [])
-        # the full-run-only class pays isolated-run warmup (iterative jobs,
-        # shared-scan amortization) — an isolated re-run can neither confirm
-        # nor clear it; route those to repeat-loop full-run minima instead
-        isolated = [q for q in todo if q not in FULL_RUN_ONLY]
-        full_only = [q for q in todo if q in FULL_RUN_ONLY]
-        if isolated or not full_only:
-            print("adjudicate (isolated canary-gated re-run, SPARK_GRAFT_BENCH_ONLY=):",
-                  ",".join(isolated) if isolated else "<total-only>")
-        if full_only:
-            print("adjudicate (FULL-RUN-ONLY class — isolated runs pay warmup; "
-                  "compare repeat-loop full-run minima, SPARK_GRAFT_BENCH_REPEAT>=2):",
-                  ",".join(full_only))
-        print("adjudication records must THEMSELVES be gate-clean: check with "
-              "regress.py --gate <record> before citing one as evidence")
-        sys.exit(1)
-    print("no per-query regressions beyond measured noise floors")
+    paired(sys.argv[2])
 
 
 if __name__ == "__main__":
