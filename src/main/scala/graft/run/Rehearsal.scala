@@ -6,7 +6,7 @@ import graft.sink.SinkStrategy.CompactionPolicy
 import graft.streaming.EventSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, StreamingQueryProgress}
 import org.apache.spark.sql.types.{StringType, StructType}
 import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -38,13 +38,13 @@ import scala.jdk.CollectionConverters._
   *    batch-id idempotence before draining the rest. A sampler prints one `soak_sample` line per 30 s
   *    (RSS, heap, version counts, parked DDL, window batch rate).
   *  - `kills > 0`: the consumer runs in a child JVM (this object in its
-  *    `--worker` role) that is SIGKILLed each time its reported batch id
-  *    reaches the next [[killTargets]] entry, then restarted; batch ids
-  *    must never regress across restarts. An aggressive compaction
-  *    policy keeps swaps in flight for kills to land in. A second phase
-  *    parks a synthetic backlog and SIGKILLs >= 2 dead-letter drains, at
-  *    least one provably mid-replay, then asserts exactly-once
-  *    convergence.
+  *    `--worker` role) that is SIGKILLed after each [[killTargets]]
+  *    entry, then restarted; batch ids must never regress across
+  *    restarts. Odd kills land a seeded random way into the next batch,
+  *    even kills inside the next compaction; each kill's [[killPhase]]
+  *    is reported. A second phase parks a synthetic backlog and
+  *    SIGKILLs >= 2 dead-letter drains, at least one provably
+  *    mid-replay, then asserts exactly-once convergence.
   *
   * Both end with the same checks: [[finalStateFailures]], parked DDL
   * statements against the schedule, store versions against 2x the
@@ -52,8 +52,9 @@ import scala.jdk.CollectionConverters._
   * `summary` JSON line carries the run's numbers and `state_checks`.
   *
   * Usage: Rehearsal <sfDir> <workDir> [batches=5000] [kills=0]
-  * (through tools/run-main.sh; the child JVM inherits the parent's JVM
-  * flags and classpath).
+  * (through tools/run-main.sh; the child JVM gets the parent's classpath
+  * and JVM flags, see [[childJvmFlags]]). A `kills > 0` run holds two
+  * JVMs, each up to the parent's -Xmx: give it at most half the box.
   */
 object Rehearsal {
 
@@ -62,14 +63,15 @@ object Rehearsal {
     * never trip the size ratio), so read fan-in stays bounded at ~65
     * versions while the O(base) rewrite amortizes over many batches. */
   private[run] val SoakPolicy = CompactionPolicy(maxDeltaVersions = 64, maxDeltaToBaseRatio = 1.0)
-  /** Under kills: 16 keeps ~300 compaction swaps in flight over 5000
-    * batches, so kills land inside them. */
+  /** Under kills: every batch adds a delta to every table, so each
+    * compacts at least every 17th batch and a kill that waits for a
+    * compaction finds one within 18 batches. */
   private[run] val KillPolicy = CompactionPolicy(maxDeltaVersions = 16, maxDeltaToBaseRatio = 1.0)
 
   /** Fewest batches per kill window: the last target leaves at least
-    * three quarters of a window to drain, seconds of margin for the
-    * parent's progress poll at any scale. */
-  private[run] val MinBatchesPerKill = 20
+    * three quarters of a window, 24 batches, to drain: room for a kill
+    * that waits up to 18 batches for a compaction, at any scale. */
+  private[run] val MinBatchesPerKill = 2 * KillPolicy.maxDeltaVersions
   /** Below this, [[ddlEvery]] leaves no DML file between DDL slots. */
   private[run] val MinBatches = 16
   private val KillSeed = 0xC5A15L // fixed: failures must reproduce
@@ -113,10 +115,10 @@ object Rehearsal {
   private[run] def ddlEvery(batches: Int): Int = math.min(250, batches / 8)
 
   /** A staged and bootstrapped workload: the cached mutation set (the
-    * final-state oracle's input), the orders base, the replicas, the
-    * event files in batch order and the DDL statements in schedule
-    * order. */
-  private[run] final case class Staged(muts: DataFrame, nMut: Long, orders: DataFrame,
+    * final-state oracle's input), the orders base and its highest key,
+    * the replicas, the event files in batch order and the DDL statements
+    * in schedule order. */
+  private[run] final case class Staged(muts: DataFrame, nMut: Long, orders: DataFrame, maxKey: Long,
                                        tables: Seq[TableSync], files: Seq[String],
                                        ddl: Seq[String], bootstrapSec: Double) {
     def expectedParks: Int = ddl.count(_ == Unparseable)
@@ -172,7 +174,7 @@ object Rehearsal {
     val t0 = System.nanoTime()
     Consume.bootstrap(spark, tables, s"$workDir/state",
       tables.map(t => (t.schema, t.table) -> FullEtl.ParquetSource(s"$sfDir/orders.parquet")).toMap)
-    Staged(muts, nMut, orders, tables, files, ddl.toSeq, (System.nanoTime() - t0) / 1e9)
+    Staged(muts, nMut, orders, maxKey, tables, files, ddl.toSeq, (System.nanoTime() - t0) / 1e9)
   }
 
   /** Start the consume loop over `workDir/events`: one file per
@@ -269,27 +271,25 @@ object Rehearsal {
     * the store's batch-id idempotence must absorb the duplicate. This is
     * deterministic, unlike hoping a stop interrupts mid-batch. */
   private[run] def injectCrashWindow(ckpt: String): Unit = {
-    def logEntries(dir: java.nio.file.Path) = Files.list(dir).toArray
-      .map(_.toString).map(Paths.get(_))
-      .filter(_.getFileName.toString.forall(_.isDigit))
-      .sortBy(_.getFileName.toString.toLong)
-    def deleteWithCrc(p: java.nio.file.Path): Unit = {
-      Files.delete(p)
+    def deleteWithCrc(log: String)(n: Long): Unit = {
+      Files.delete(Paths.get(ckpt, log, s"$n"))
       // the local checksum FS keeps a ".N.crc" sibling; leaving it behind
       // fails the re-commit rename on restart
-      Files.deleteIfExists(p.resolveSibling("." + p.getFileName.toString + ".crc"))
+      Files.deleteIfExists(Paths.get(ckpt, log, s".$n.crc"))
     }
-    logEntries(Paths.get(ckpt, "commits")).lastOption.foreach { c =>
-      val n = c.getFileName.toString.toLong
-      deleteWithCrc(c)
+    logIds(s"$ckpt/commits").maxOption.foreach { n =>
+      deleteWithCrc("commits")(n)
       // also drop any NEWER planned-but-uncommitted offsets entries: the
       // restart must re-execute the batch that WAS applied (offsets N,
       // no commit N), not just the in-flight one that never touched the
       // store — otherwise no duplicate reaches the idempotence layer
-      logEntries(Paths.get(ckpt, "offsets"))
-        .filter(_.getFileName.toString.toLong > n).foreach(deleteWithCrc)
+      logIds(s"$ckpt/offsets").filter(_ > n).foreach(deleteWithCrc("offsets"))
     }
   }
+
+  /** The batch ids of a checkpoint log dir (`offsets`, `commits`). */
+  private def logIds(dir: String): Seq[Long] = Option(new File(dir).list()).toSeq.flatten
+    .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
 
   /** Exact final-state checks against batch-computed expectations —
     * empty means every table resolved to exactly the mutated truth. */
@@ -502,60 +502,83 @@ object Rehearsal {
     (1 to kills).map(k => k * spacing + rnd.nextLong(2 * jitter + 1) - jitter)
   }
 
-  /** The highest `crashsoak_progress` batch id a worker generation
-    * wrote to `log` from the length `log` had when the tail was made
-    * (-1 none). Each call reads only what was appended since the last,
-    * whole lines only, so polling a long generation's log stays cheap
-    * and a half-written line is never misread. Reading only THAT
-    * generation's segment keeps the monotonicity check honest: a
-    * cumulative max is >= its own past by construction, so a worker
-    * restarting from a reset checkpoint and re-reporting batch 0 would
-    * sail through it. */
-  private final class ProgressTail(log: File) {
-    private var pos = if (log.exists()) log.length() else 0L
-    private var best = -1L
-    private val Progress = """"crashsoak_progress":(\d+)""".r
+  /** A child JVM's output, appended to `log` by a reader thread that
+    * keeps the highest `crashsoak_progress` batch id THIS child reported
+    * (-1 none) and the last one's `trigger_ms`. Per child, not
+    * cumulative, which keeps the monotonicity check honest: a cumulative
+    * max is >= its own past by construction, so a worker restarting from
+    * a reset checkpoint and re-reporting batch 0 would sail through it. */
+  private[run] final class ChildOutput(in: java.io.InputStream, log: File) {
+    @volatile var max = -1L
+    @volatile var lastTriggerMs = 0L
+    private val Progress = """"crashsoak_progress":(\d+),"trigger_ms":(\d+)""".r
+    private val reader = new Thread(() => {
+      val out = new java.io.PrintWriter(new java.io.FileWriter(log, true), true)
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().foreach { line =>
+        out.println(line)
+        Progress.findFirstMatchIn(line).foreach { m =>
+          max = math.max(max, m.group(1).toLong)
+          lastTriggerMs = m.group(2).toLong
+        }
+      } finally out.close()
+    }, "child-output")
+    reader.setDaemon(true); reader.start()
 
-    def max(): Long = {
-      if (log.exists()) {
-        val ch = java.nio.channels.FileChannel.open(log.toPath)
-        try {
-          val in = new java.io.BufferedInputStream(
-            java.nio.channels.Channels.newInputStream(ch.position(pos)))
-          val line = new java.io.ByteArrayOutputStream()
-          var b = in.read()
-          while (b >= 0) {
-            if (b == '\n') {
-              Progress.findAllMatchIn(line.toString("UTF-8"))
-                .foreach(m => best = math.max(best, m.group(1).toLong))
-              pos += line.size + 1
-              line.reset()
-            } else line.write(b)
-            b = in.read()
-          }
-        } finally ch.close()
-      }
-      best
+    /** Returns once the child's output ended (it exited). */
+    def join(): Unit = reader.join()
+  }
+
+  /** The parent's JVM flags a child JVM starts with: all but an initial
+    * heap size (a pinned heap in each of two JVMs doubles what the run
+    * pins), a flight recording (the child would write the parent's file)
+    * and agents (a fixed debug port would refuse the child's start).
+    * -Xmx is kept. */
+  private[run] def childJvmFlags(parent: Seq[String]): Seq[String] =
+    parent.filterNot(f => Seq("-Xms", "-XX:InitialHeapSize", "-XX:StartFlightRecording",
+      "-XX:FlightRecorderOptions", "-agentlib:", "-agentpath:", "-javaagent:").exists(f.startsWith))
+
+  /** Some store of `workDir` holds a compaction stage or tmp dir: a
+    * compaction is in flight (or was, in a killed worker). */
+  private def compacting(workDir: String, tables: Seq[TableSync]): Boolean =
+    tables.exists(t => Option(new File(s"$workDir/state/${t.schema}/${t.table}").list())
+      .exists(_.exists(_.startsWith(".compact_"))))
+
+  /** Where in the micro-batch a killed worker died, read off the disk it
+    * left: `between_batches` (the newest planned batch is committed),
+    * else, for the planned-but-uncommitted batch b, `compaction` (see
+    * [[compacting]]), `after_apply` (every store committed v=b: DDL,
+    * compaction check or commit write), `apply` (some store began v=b)
+    * or `before_apply` (planning, input read). */
+  private[run] def killPhase(workDir: String, tables: Seq[TableSync]): String = {
+    val committed = logIds(s"$workDir/ckpt/commits").maxOption
+    logIds(s"$workDir/ckpt/offsets").maxOption.filter(b => committed.forall(_ < b)) match {
+      case None => "between_batches"
+      case Some(b) =>
+        val stores = tables.map(t => new File(s"$workDir/state/${t.schema}/${t.table}"))
+        if (compacting(workDir, tables)) "compaction"
+        else if (stores.forall(d => new File(d, s"v=$b/_SUCCESS").exists)) "after_apply"
+        else if (stores.exists(d => new File(d, s"v=$b").exists)) "apply"
+        else "before_apply"
     }
   }
 
-  /** Run this object in a child JVM with the parent's own JVM flags and
-    * classpath, output appended to `log`. */
-  private def spawn(args: Seq[String], log: File): Process = {
-    val jvmFlags = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toSeq
+  /** Run this object in a child JVM with [[childJvmFlags]] and the
+    * parent's classpath, its output read by a [[ChildOutput]] into
+    * `log`. */
+  private def spawn(args: Seq[String], log: File): (Process, ChildOutput) = {
+    val jvmFlags = childJvmFlags(java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.toSeq)
     val cmd = Seq(s"${sys.props("java.home")}/bin/java") ++ jvmFlags ++
       Seq("-cp", sys.props("java.class.path"), getClass.getName.stripSuffix("$")) ++ args
-    new ProcessBuilder(cmd: _*)
-      .redirectErrorStream(true)
-      .redirectOutput(ProcessBuilder.Redirect.appendTo(log))
-      .start()
+    val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    (p, new ChildOutput(p.getInputStream, log))
   }
 
   /** The killable child of a `kills > 0` run: the consume loop over the
     * staged workload (`--worker`), or one dead-letter drain of orders_mt
     * (`--drain`). The consume loop prints one `crashsoak_progress` line
-    * per batch for the parent's kill schedule and monotonicity check.
+    * per batch, with its `triggerExecution` ms, for the parent's kill
+    * schedule, kill delay and monotonicity check.
     * Exits 0 once its work is drained; a throw exits nonzero, which the
     * parent treats as a failure. */
   private def worker(role: String, sfDir: String, workDir: String): Unit = {
@@ -565,16 +588,19 @@ object Rehearsal {
       new DeadLetter(spark, s"$workDir/deadletter")
         .drain(widened(spark, s"$workDir/state", tables.head), s"$workDir/state")
     else {
-      def report(batchId: Long): Unit = println(s"""{"crashsoak_progress":$batchId}""")
+      def report(p: StreamingQueryProgress): Unit = {
+        val ms = p.durationMs.getOrDefault("triggerExecution", 0L)
+        println(s"""{"crashsoak_progress":${p.batchId},"trigger_ms":$ms}""")
+      }
       spark.streams.addListener(new StreamingQueryListener {
         override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
         override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-          report(e.progress.batchId)
+          report(e.progress)
         override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
       })
       val q = consume(spark, workDir, tables, KillPolicy)
       q.processAllAvailable()
-      Option(q.lastProgress).foreach(p => report(p.batchId))
+      Option(q.lastProgress).foreach(report)
       q.stop(); q.awaitTermination()
     }
     spark.stop()
@@ -594,36 +620,54 @@ object Rehearsal {
     // ---- phase 1: consume under SIGKILLs ----
     var killsDone = 0; var gen = 0; var maxSeen = -1L
     val uptimes = ArrayBuffer.empty[Double]
+    val phases = ArrayBuffer.empty[String]
+    val delays = new scala.util.Random(KillSeed)
     var consumed = false
     while (!consumed) {
       gen += 1
       val before = maxSeen // cumulative max over all PRIOR generations
-      val progress = new ProgressTail(log)
-      val p = spawn(Seq("--worker", sfDir, workDir), log)
+      val (p, progress) = spawn(Seq("--worker", sfDir, workDir), log)
       val started = System.nanoTime()
-      while (killsDone < kills && p.isAlive && progress.max() < targets(killsDone))
-        p.waitFor(200, TimeUnit.MILLISECONDS)
+      while (killsDone < kills && p.isAlive && progress.max < targets(killsDone))
+        p.waitFor(50, TimeUnit.MILLISECONDS)
+      // the target batch committed. An odd kill lands a seeded random way
+      // into the next batch, up to the last batch's length; an even one
+      // as soon as a compaction is in flight (a batch phase too short for
+      // a random delay to hit at small scale), or 18 batches on. A worker
+      // that exits first is not killed and counts as done.
       val killIssued = killsDone < kills && p.isAlive
-      if (killIssued) p.destroyForcibly()
+      if (killIssued) {
+        if (killsDone % 2 == 0)
+          p.waitFor(delays.nextLong(progress.lastTriggerMs + 1), TimeUnit.MILLISECONDS)
+        else {
+          val giveUp = targets(killsDone) + KillPolicy.maxDeltaVersions + 2
+          while (p.isAlive && !compacting(workDir, st.tables) && progress.max < giveUp)
+            p.waitFor(10, TimeUnit.MILLISECONDS)
+        }
+        p.destroyForcibly()
+      }
       val exit = p.waitFor()
-      if (killIssued && exit == SigKillExit) {
+      progress.join()
+      val phase = if (killIssued && exit == SigKillExit) killPhase(workDir, st.tables) else ""
+      if (phase.nonEmpty) {
         killsDone += 1
         uptimes += (System.nanoTime() - started) / 1e9
+        phases += phase
       } else if (exit != 0)
         sys.error(s"gen $gen: worker exit $exit without a kill — see $log")
       else consumed = true
       // THIS generation's own reported max: a restart that re-reports a
       // batch id below everything already committed means the checkpoint
-      // went backwards — the double-apply shape. A generation killed
-      // before its first report (-1) is fine; Structured Streaming
+      // went backwards — the double-apply shape. A generation that
+      // reported nothing (-1) is fine; Structured Streaming
       // legitimately RETRIES the killed batch id itself, so `>= before`
       // (not `> before`) is the bound.
-      val genMax = progress.max()
+      val genMax = progress.max
       if (genMax >= 0 && genMax < before)
         sys.error(s"gen $gen: progress REGRESSED across restart " +
           s"(cumulative $before -> this generation reported $genMax)")
       maxSeen = math.max(maxSeen, genMax)
-      println(s"""{"crashsoak_gen":$gen,"kills":$killsDone,"max_batch":$maxSeen,"consumed":$consumed}""")
+      println(s"""{"crashsoak_gen":$gen,"kills":$killsDone,"max_batch":$maxSeen,"consumed":$consumed,"kill_phase":"$phase"}""")
     }
     // Completion is proven by the SOURCE offset, not the engine batch id:
     // a kill landing between the file source's metadata-log write and the
@@ -632,15 +676,10 @@ object Rehearsal {
     // at engine batch 4996 whose offset was source logOffset 4999, nothing
     // lost — the exact-state oracle below is the ground-truth completion
     // proof over every staged mutation).
-    val lastOffsetFile = Files.list(Paths.get(s"$workDir/ckpt/offsets")).toArray
-      .map(_.toString.split('/').last).filter(_.forall(_.isDigit))
-      .map(_.toLong).max
-    val lastLogOffset =
-      Files.readAllLines(Paths.get(s"$workDir/ckpt/offsets/$lastOffsetFile"))
-        .asScala.collectFirst {
-          case l if l.contains("logOffset") =>
-            """"logOffset":(\d+)""".r.findFirstMatchIn(l).get.group(1).toLong
-        }
+    val offsets = s"$workDir/ckpt/offsets"
+    val lastLogOffset = """"logOffset":(\d+)""".r
+      .findFirstMatchIn(Files.readString(Paths.get(s"$offsets/${logIds(offsets).max}")))
+      .map(_.group(1).toLong)
     require(lastLogOffset.contains(batches - 1L),
       s"worker exited clean at source offset $lastLogOffset, expected " +
         s"${batches - 1} (engine batch $maxSeen)")
@@ -651,7 +690,10 @@ object Rehearsal {
 
     val (parked, checks) = runChecks(spark, st, workDir, KillPolicy, Map.empty)
     val phase1 = checks ++ Option.when(killsDone < kills)(
-      s"only $killsDone of $kills kills landed — raise batches")
+      s"only $killsDone of $kills kills landed — raise batches") ++
+      Option.when(kills >= 2 && !phases.contains("compaction"))(
+        s"no kill landed inside a compaction (phases ${phases.mkString(",")}) — " +
+          "the crash-resumable swap went unexercised")
 
     // ---- phase 2: SIGKILL a dead-letter DRAIN mid-replay, re-run, converge ----
     // park a synthetic insert backlog for orders_mt under FRESH batch ids
@@ -659,14 +701,14 @@ object Rehearsal {
     // child mid-drain, drain again to completion.
     import spark.implicits._
     val t = st.tables.head
-    val maxKey = st.orders.agg(max("o_orderkey")).as[Long].head()
+    val mtStore = new ParquetStateStore(spark, s"$stateRoot/db/orders_mt")
     val dl = new DeadLetter(spark, s"$workDir/deadletter")
     val parkBatches = 60; val rowsPerBatch = 200
     val base = maxSeen + 1000
     // key range DISJOINT from the workload's own inserts (those also sit
     // above maxKey): the phase-2 exactly-once count must see only the
     // synthetic backlog
-    val synthBase = maxKey + 10000000L
+    val synthBase = st.maxKey + 10000000L
     (0 until parkBatches).foreach { i =>
       val rows = (0 until rowsPerBatch).map { j =>
         val k = synthBase + i * rowsPerBatch + j
@@ -678,8 +720,7 @@ object Rehearsal {
         "event_unixtime", "action_seq", "_src_file", "_src_seq"),
         "db", "orders_mt", base + i, "synthetic backlog", preSync = Some(t))
     }
-    val preDrainCount = Consume.currentState(t,
-      new ParquetStateStore(spark, s"$stateRoot/db/orders_mt")).get.count()
+    val preDrainCount = Consume.currentState(t, mtStore).get.count()
     val dlog = new File(s"$workDir/drain.log")
     // >= 2 drain-phase kills: each attempt replays the still-parked
     // backlog batch-by-batch (each its own Spark job), so a kill lands
@@ -699,41 +740,30 @@ object Rehearsal {
     // range on the TARGET store (applyBatch commits per batch) — the
     // parked queue itself is useless as a progress signal because drain
     // clears it only at the very end, which a killed drain never reaches
-    def replayedBatches(): Int =
-      new ParquetStateStore(spark, s"$stateRoot/db/orders_mt")
-        .versionIds().count(_ >= base)
+    def replayedBatches(): Int = mtStore.versionIds().count(_ >= base)
     var prevReplayed = 0
     var drainDone = false
     while (!drainDone) {
       drainAttempts += 1
-      val dp = spawn(Seq("--drain", sfDir, workDir), dlog)
+      val (dp, _) = spawn(Seq("--drain", sfDir, workDir), dlog)
       // keep killing until BOTH the kill quota is met and at least one
       // kill provably landed mid-replay (capped: a box too fast/slow for
       // any window proceeds and fails the named check loudly below)
-      if ((drainKills < drainKillTarget || midReplayKills < 1) && drainAttempts <= 10) {
-        val exited = dp.waitFor(delayBaseMs + rnd.nextInt(8000), TimeUnit.MILLISECONDS)
-        if (!exited) {
-          dp.destroyForcibly(); dp.waitFor()
-          drainKills += 1
-          val replayed = replayedBatches()
-          if (replayed > prevReplayed && replayed < parkBatches) midReplayKills += 1
-          else if (replayed == prevReplayed) delayBaseMs += 6000 // init — widen
-          println(s"""{"crashsoak_drain_attempt":$drainAttempts,"killed":true,"batches_replayed":$replayed}""")
-          prevReplayed = replayed
-        } else {
-          require(dp.exitValue() == 0,
-            s"drain worker exit ${dp.exitValue()} — see $dlog")
-          drainDone = true
-        }
+      val killing = (drainKills < drainKillTarget || midReplayKills < 1) && drainAttempts <= 10
+      if (killing && !dp.waitFor(delayBaseMs + rnd.nextInt(8000), TimeUnit.MILLISECONDS)) {
+        dp.destroyForcibly(); dp.waitFor()
+        drainKills += 1
+        val replayed = replayedBatches()
+        if (replayed > prevReplayed && replayed < parkBatches) midReplayKills += 1
+        else if (replayed == prevReplayed) delayBaseMs += 6000 // init — widen
+        println(s"""{"crashsoak_drain_attempt":$drainAttempts,"killed":true,"batches_replayed":$replayed}""")
+        prevReplayed = replayed
       } else {
-        dp.waitFor()
-        require(dp.exitValue() == 0,
-          s"drain re-run exit ${dp.exitValue()} — see $dlog")
+        require(dp.waitFor() == 0, s"drain worker exit ${dp.exitValue()} — see $dlog")
         drainDone = true
       }
     }
-    val postState = Consume.currentState(t,
-      new ParquetStateStore(spark, s"$stateRoot/db/orders_mt")).get.cache()
+    val postState = Consume.currentState(t, mtStore).get.cache()
     val postDrainCount = postState.count()
     val newKeys = postState.filter(col("o_orderkey") >= synthBase)
     val newCount = newKeys.count()
@@ -764,6 +794,7 @@ object Rehearsal {
       "wall_sec" -> f"$wall%.1f", "kills" -> s"$killsDone", "generations" -> s"$gen",
       "kill_targets" -> targets.mkString("\"", ",", "\""),
       "kill_uptimes_sec" -> uptimes.map(u => f"$u%.0f").mkString("\"", ",", "\""),
+      "kill_phases" -> phases.mkString("\"", ",", "\""),
       "max_batch" -> s"$maxSeen", "dl_ddl_statements" -> s"$parked",
       "expected_parks" -> s"${st.expectedParks}",
       "state_versions" -> stateVersions(spark, stateRoot, st.tables),
@@ -776,7 +807,8 @@ object Rehearsal {
     case Seq(role @ ("--worker" | "--drain"), sfDir, workDir) => worker(role, sfDir, workDir)
     case _ =>
       graft.SettleGuard.install()
-      require(args.length >= 2, "usage: Rehearsal <sfDir> <workDir> [batches=5000] [kills=0]")
+      require(args.length >= 2, "usage: Rehearsal <sfDir> <workDir> [batches=5000] [kills=0] " +
+        "(kills > 0 runs two JVMs, each up to this one's -Xmx: give it at most half the box)")
       val (sfDir, workDir) = (args(0), args(1))
       val batches = if (args.length > 2) args(2).toInt else 5000
       val kills = if (args.length > 3) args(3).toInt else 0

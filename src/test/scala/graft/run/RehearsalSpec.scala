@@ -1,7 +1,10 @@
 package graft.run
 
 import graft.SparkSpec
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path}
+import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 class RehearsalSpec extends SparkSpec {
 
@@ -27,7 +30,7 @@ class RehearsalSpec extends SparkSpec {
   }
 
   test("kill targets strictly increase inside [1, batches), reproduce per seed, and refuse small sizes") {
-    for ((batches, kills) <- Seq((300, 3), (5000, 20), (80, 3), (40, 1), (1000, 49))) {
+    for ((batches, kills) <- Seq((300, 3), (5000, 20), (128, 3), (64, 1), (1000, 30))) {
       val ts = Rehearsal.killTargets(batches, kills)
       assert(ts.length == kills)
       assert(ts.zip(ts.tail).forall { case (a, b) => a < b }, ts)
@@ -35,8 +38,52 @@ class RehearsalSpec extends SparkSpec {
       assert(Rehearsal.killTargets(batches, kills) == ts)
     }
     assert(Rehearsal.killTargets(5000, 20, seed = 1L) != Rehearsal.killTargets(5000, 20, seed = 2L))
-    val refused = intercept[IllegalArgumentException](Rehearsal.killTargets(79, 3))
-    assert(refused.getMessage.contains("batches >= 80"), refused.getMessage)
+    val refused = intercept[IllegalArgumentException](Rehearsal.killTargets(127, 3))
+    assert(refused.getMessage.contains("batches >= 128"), refused.getMessage)
     intercept[IllegalArgumentException](Rehearsal.killTargets(300, 0))
+  }
+
+  test("a child's output reaches its log and yields its batch ids and last trigger time") {
+    val log = Files.createTempFile("worker", ".log")
+    Files.write(log, "an earlier child's line\n".getBytes(UTF_8))
+    val lines = Seq("""{"crashsoak_progress":3,"trigger_ms":410}""", "noise",
+      """{"crashsoak_progress":5,"trigger_ms":380}""", """{"crashsoak_progress":4,"trigger_ms":390}""")
+    val out = new Rehearsal.ChildOutput(
+      new java.io.ByteArrayInputStream(lines.mkString("", "\n", "\n").getBytes(UTF_8)), log.toFile)
+    out.join()
+    assert(out.max == 5L && out.lastTriggerMs == 390L)
+    assert(Files.readAllLines(log).asScala == "an earlier child's line" +: lines)
+    val silent = new Rehearsal.ChildOutput(new java.io.ByteArrayInputStream(Array.emptyByteArray), log.toFile)
+    silent.join()
+    assert(silent.max == -1L)
+  }
+
+  test("a killed worker's phase is read off its checkpoint and stores") {
+    val work = Files.createTempDirectory("killphase")
+    val tables = Rehearsal.tableSyncs(new StructType())
+    def touch(rel: String): Unit = {
+      val f = work.resolve(rel); Files.createDirectories(f.getParent); Files.createFile(f)
+    }
+    def store(t: Int): Path = work.resolve(s"state/db/${tables(t).table}")
+    def phase = Rehearsal.killPhase(work.toString, tables)
+    Seq("ckpt/offsets/0", "ckpt/offsets/1", "ckpt/offsets/.1.crc", "ckpt/commits/0",
+      "ckpt/commits/1").foreach(touch)
+    assert(phase == "between_batches")
+    touch("ckpt/offsets/2")
+    assert(phase == "before_apply")
+    Files.createDirectories(store(0).resolve("v=2"))
+    assert(phase == "apply")
+    touch("state/db/orders_mt/v=2/_SUCCESS"); touch("state/db/orders_rt/v=2/_SUCCESS")
+    assert(phase == "after_apply")
+    Files.createDirectories(store(1).resolve(".compact_stage_v=2"))
+    assert(phase == "compaction")
+  }
+
+  test("a child JVM keeps the parent's flags but its initial heap, recordings and agents") {
+    val parent = Seq("-Xmx2g", "-Xms2g", "--add-opens", "java.base/java.lang=ALL-UNNAMED",
+      "-XX:StartFlightRecording=filename=/tmp/r.jfr", "-XX:FlightRecorderOptions=stackdepth=128",
+      "-agentlib:jdwp=transport=dt_socket,address=5005", "-javaagent:a.jar", "-Dx=1")
+    assert(Rehearsal.childJvmFlags(parent) ==
+      Seq("-Xmx2g", "--add-opens", "java.base/java.lang=ALL-UNNAMED", "-Dx=1"))
   }
 }
