@@ -101,10 +101,6 @@ object Tables {
     else stats.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue).minOption
   }
 
-  /** Register all tables as temp views (names match the DuckDB oracle). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
-
   /** Cores a graft JVM runs on: `SPARK_GRAFT_CPUS`, 32 when unset. */
   private lazy val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 

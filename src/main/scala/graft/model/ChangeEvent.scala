@@ -46,14 +46,6 @@ object ChangeEvent {
   ))
 }
 
-/** Actions, ordered by intended apply sequence (reference action_seq). */
-object Action {
-  val Query = "query"   // DDL, action_seq 0
-  val Delete = "delete" // action_seq 1
-  val Insert = "insert" // action_seq 2
-  val Update = "update" // decomposed into Delete+Insert (T4)
-}
-
 /** ClickHouse-style table-engine semantics the sink strategies realize
   * (reference synch/writer modules). */
 object Engine extends Enumeration {

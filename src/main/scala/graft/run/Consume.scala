@@ -234,20 +234,27 @@ object Consume {
     * carries at most one row per touched key; the batch id is stamped on
     * MergeTree deltas because eager apply is ARRIVAL-ordered — a later
     * batch's delete must beat an earlier insert even when their event
-    * timestamps tie or arrive out of order.
+    * timestamps tie or arrive out of order. The stamp is a zero-argument
+    * UDF, not `lit(batchId)`: Spark inlines a long literal into generated
+    * Java as `<n>L`, so each batch id would compile the stage anew, while
+    * the UDF's generated code reads its function from the references
+    * array and is the same for every batch.
+    *
+    * `onDriver` selects [[ParquetStateStore.append]]'s driver-side write
+    * (the consume loop passes it for one-partition batches).
     */
   def applyBatch(spark: SparkSession, t: TableSync, store: ParquetStateStore,
-                 changelog: DataFrame, batchId: Long): Unit = {
+                 changelog: DataFrame, batchId: Long, onDriver: Boolean = false): Unit = {
     val keys = keysFor(t)
-    t.engine match {
+    val delta = t.engine match {
       case Engine.MergeTree =>
-        store.append(SinkStrategy.latestPerKey(changelog, keys)
-          .withColumn("_batch", lit(batchId)), batchId)
+        SinkStrategy.latestPerKey(changelog, keys)
+          .withColumn("_batch", udf(() => batchId).asNonNullable()())
       case Engine.CollapsingMergeTree | Engine.VersionedCollapsingMergeTree =>
-        store.append(CdcOps.withCollapsingSign(changelog), batchId)
-      case Engine.ReplacingMergeTree =>
-        store.append(changelog, batchId)
+        CdcOps.withCollapsingSign(changelog)
+      case Engine.ReplacingMergeTree => changelog
     }
+    store.append(delta, batchId, onDriver)
   }
 
   /** MergeTree read-time resolution: batch (arrival) order dominates,
@@ -540,13 +547,16 @@ object Consume {
     *
     * A small micro-batch runs as ONE partition (see [[fitsOnePartition]]):
     * the stamped batch is coalesced before the cache, so the DDL collect,
-    * the cache fill and each table's apply run one task apiece, every
-    * table's `v=<batch>` delta is one part file, and MergeTree's per-key
-    * dedup window needs no exchange (a single partition already
-    * satisfies its clustering). A batch that arrived as several files
-    * would otherwise pay a task, a part file and a shuffle partition per
-    * file for no parallel work. Larger batches, and batches without a
-    * size estimate (Kafka), keep the source's partitioning.
+    * the cache fill and each table's apply run one task apiece, and
+    * MergeTree's per-key dedup window needs no exchange (a single
+    * partition already satisfies its clustering). A batch that arrived as
+    * several files would otherwise pay a task, a part file and a shuffle
+    * partition per file for no parallel work. Each table's `v=<batch>`
+    * delta of such a batch is collected and written on the driver as one
+    * part file ([[ParquetStateStore.append]] with `onDriver`): a one-task
+    * Spark write job costs more to ship and commit than the rows cost to
+    * write. Larger batches, and batches without a size estimate (Kafka),
+    * keep the source's partitioning and write through `df.write`.
     */
   def start(spark: SparkSession, events: DataFrame, tables: Seq[TableSync],
             stateRoot: String, checkpoint: String,
@@ -584,8 +594,8 @@ object Consume {
         // canonical event view the appliers see drops the bookkeeping
         // columns
         val stamped = stampSourceOrder(batch)
-        val cached =
-          (if (fitsOnePartition(batch)) stamped.coalesce(1) else stamped).cache()
+        val onePartition = fitsOnePartition(batch)
+        val cached = (if (onePartition) stamped.coalesce(1) else stamped).cache()
         val events = cached.drop("_src_file", "_src_seq")
         try {
           // The batch's DDL statements, collected ONCE across all schemas
@@ -605,7 +615,7 @@ object Consume {
             val tNext = evolveTable(tCur, ddls)
             Future {
               try { applyBatch(spark, tNext, stores(t),
-                tableChangelog(events, tCur, ddls), batchId); None }
+                tableChangelog(events, tCur, ddls), batchId, onDriver = onePartition); None }
               catch {
                 case e: Exception if skipError =>
                   // C3 skip-error mode: continue with the next table,

@@ -3,7 +3,6 @@ package graft.sink
 import graft.ddl.ClickHouseDdl
 import graft.model.Engine
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import java.sql.{Connection, DriverManager}
 
 /** JDBC-backed sink leg (reference operators K1 bulk insert, K2
@@ -98,46 +97,6 @@ object JdbcSink {
     withConnection(t) { c =>
       foreachKeyChunk(t.db, table, pk,
         keys.toLocalIterator().asScala.map(_.toSeq), chunk)(executeOn(c, _, _))
-    }
-  }
-
-  /** Apply one deduplicated micro-batch of one table through JDBC:
-    * deletes first, then time-ordered inserts (reference flush order,
-    * synch/replication/continuous.py:102-139).
-    *
-    * The delete list covers EVERY touched key, not just keys whose final
-    * action is delete: plain MergeTree does not dedup, so an update
-    * (delete+insert pair collapsed to its insert half by latestPerKey)
-    * must still delete the pre-existing row or the insert duplicates it —
-    * the same anti-join-on-touched-keys contract as
-    * [[SinkStrategy.mergeTreeApply]].
-    *
-    * `keys` is the table's resolve order ([[graft.run.Consume.keysFor]]
-    * — the configured version column when set, else arrival order): the
-    * r13 review found this leg hardcoding arrival order, so the JDBC
-    * sink could crown a DIFFERENT per-key winner than the parquet state
-    * leg on the same batch whenever a version column was configured.
-    *
-    * `latest` is locally checkpointed before the two actions: the delete
-    * pass (toLocalIterator) and the insert pass (jdbc write) are separate
-    * jobs, and an uncached plan would re-execute the dedup window twice —
-    * and, on exact resolve-order ties, could even crown DIFFERENT winners
-    * in the two passes (r13 review).
-    */
-  def applyMergeTreeBatch(changelog: DataFrame, t: JdbcTarget, table: String,
-                          keys: SinkKeys): Unit = {
-    val latest = SinkStrategy.latestPerKey(changelog, keys).localCheckpoint()
-    try {
-      val pk = keys.pkCols
-      val touched = latest.select(pk.map(col): _*).distinct()
-      deleteKeysStreamed(t, table, pk, touched, chunk = t.batchSize)
-      val inserts = latest.filter(col("action") =!= "delete")
-        .orderBy(col("event_unixtime"), col("action_seq"))
-        .drop("action", "event_unixtime", "action_seq")
-      appendBatch(inserts, t, table)
-    } finally latest.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
     }
   }
 

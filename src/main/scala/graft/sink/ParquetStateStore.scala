@@ -2,13 +2,15 @@ package graft.sink
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.graftshim.DriverParquetWriter
 
 /** Minimal multi-versioned parquet "table" used as the local stand-in for a
   * transactional sink (Delta/Iceberg/JDBC in production). Each commit
   * writes a fresh `v=<n>` directory and readers always see committed
-  * versions only — a directory counts as committed iff Spark's `_SUCCESS`
-  * marker landed, so a crash mid-write leaves an ignorable partial dir
-  * rather than a phantom commit.
+  * versions only — a directory counts as committed iff its `_SUCCESS`
+  * marker landed (Spark's job commit writes it, or [[append]]'s driver
+  * path after its part file), so a crash mid-write leaves an ignorable
+  * partial dir rather than a phantom commit.
   *
   * Also the idempotence point for streaming: `append(batchId)` is a no-op
   * iff that batch id was already *committed*, which upgrades foreachBatch's
@@ -180,8 +182,15 @@ final class ParquetStateStore(spark: SparkSession, root: String) {
     * post-rewind drain's rename compact folds the drained batch ids, and
     * the restarted stream then replays exactly those ids from the broker
     * (RewindDrainSpec pins the shape). The folded ids travel in the
-    * compaction marker — see [[compact]]. */
-  def append(df: DataFrame, batchId: Long): Unit = {
+    * compaction marker — see [[compact]].
+    *
+    * `onDriver` writes the delta through [[DriverParquetWriter]] instead
+    * of a Spark write job: one part file, written in place, then the
+    * `_SUCCESS` marker. The commit point is the same marker, so a crash
+    * before it leaves the same invisible partial dir, which the replay
+    * deletes first just as Overwrite does. For frames small enough to
+    * collect (the consume loop's one-partition batches). */
+  def append(df: DataFrame, batchId: Long, onDriver: Boolean = false): Unit = {
     recoverCompaction() // writer entry: settle any pending swap physically
     val p = new Path(s"$root/v=$batchId")
     if (committed(p)) return
@@ -189,14 +198,46 @@ final class ParquetStateStore(spark: SparkSession, root: String) {
       v >= batchId && fs.exists(new Path(vp, CompactedMarker)) &&
         foldedIds(vp).contains(batchId)
     }
-    if (!folded) df.write.mode(SaveMode.Overwrite).parquet(p.toString)
+    if (folded) return
+    if (onDriver) {
+      fs.delete(p, true)
+      DriverParquetWriter.write(df, p.toString)
+      fs.create(new Path(p, "_SUCCESS"), true).close()
+    } else df.write.mode(SaveMode.Overwrite).parquet(p.toString)
   }
+
+  /** Each version with its directory's modification time, which moves
+    * when a file inside is deleted or the directory is replaced by a
+    * rename. A missing directory reads as -1. */
+  private def stamped(vs: Seq[(Long, Path)]): Seq[((Long, Path), Long)] =
+    vs.map { case v @ (_, p) =>
+      v -> (try fs.getFileStatus(p).getModificationTime
+            catch { case _: java.io.FileNotFoundException => -1L })
+    }
 
   /** Committed versions, schema-merged: a snapshot base written before a
     * schema-carrying delta (e.g. MergeTree's `_batch` stamp) must not
-    * decide the union schema alone. */
+    * decide the union schema alone.
+    *
+    * A reader racing the writer's compaction swap can list a stale view:
+    * the version listing can miss both the superseded dirs (deleted
+    * before their `_SUCCESS` check) and the tmp that replaces them
+    * (listed before it existed), and the frame's own file listing can
+    * catch a superseded dir mid-delete and hold only part of it. Either
+    * way a version it used is gone or changed (its directory's
+    * modification time moves) by the time the frame is built, so the
+    * read is retried until every version it used is still listed,
+    * unchanged, afterwards. A file deleted after that fails the read
+    * loudly instead. */
   def readLog(): Option[DataFrame] = {
-    val vs = versions
+    val before = stamped(versions)
+    val log = mergedLog(before.map(_._1))
+    val after = stamped(versions)
+    if (before.isEmpty == after.isEmpty && before.forall(after.contains)) log
+    else readLog()
+  }
+
+  private def mergedLog(vs: Seq[(Long, Path)]): Option[DataFrame] =
     if (vs.isEmpty) None
     else
       try Some(spark.read.option("mergeSchema", "true")
@@ -230,7 +271,6 @@ final class ParquetStateStore(spark: SparkSession, root: String) {
           }
           Some(aligned.reduce(_.unionByName(_)))
       }
-  }
 
   private def deepMessage(t: Throwable): String = {
     val sb = new StringBuilder

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.sources.RespClient
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.attribute.FileTime
 
 /** Redis-Streams broker transport (reference operator S4's Redis form,
   * synch/broker/redis.py): one stream per schema at
@@ -32,6 +33,13 @@ final class RedisBroker(host: String, port: Int, alias: String,
   private val client = new RespClient(host, port)
   password.foreach(p => client.command("AUTH", p))
   if (db != 0) client.command("SELECT", db.toString)
+
+  /** mtime (ms) of the last file this broker staged. Spark's file source
+    * orders new files by millisecond mtime and breaks ties in listing
+    * order, so two polls staged within one millisecond could land in the
+    * wrong micro-batch order; each staged file gets an mtime strictly
+    * after the previous one's. */
+  private var lastStagedMs = 0L
 
   private def queueKey(schema: String) = s"$prefix:$alias:$schema"
   private def lastIdKey = s"$prefix:$alias:last_msg_id"
@@ -533,6 +541,11 @@ final class RedisBroker(host: String, port: Int, alias: String,
             idTuple(firstId), idTuple(lastId))
           val tmp = Paths.get(stagingDir, s".$name.tmp")
           Files.write(tmp, lines.mkString("", "\n", "\n").getBytes(UTF_8))
+          val mtime = synchronized {
+            lastStagedMs = math.max(System.currentTimeMillis(), lastStagedMs + 1)
+            lastStagedMs
+          }
+          Files.setLastModifiedTime(tmp, FileTime.fromMillis(mtime))
           Files.move(tmp, Paths.get(stagingDir, name),
             StandardCopyOption.ATOMIC_MOVE,
             StandardCopyOption.REPLACE_EXISTING)

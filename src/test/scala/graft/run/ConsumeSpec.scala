@@ -26,6 +26,11 @@ class ConsumeSpec extends SparkSpec {
     Files.write(Paths.get(dir, name),
       lines.mkString("\n").getBytes("UTF-8"))
 
+  /** The canonical event frame of a directory of wire-JSON files, read
+    * as a batch. */
+  private def readEvents(dir: String) =
+    EventSource.parse(spark.read.text(dir).withColumnRenamed("value", "json"))
+
   test("consume applies events to MergeTree and Replacing tables, resumes from checkpoint") {
     val root = Files.createTempDirectory("consume").toString
     val eventsDir = s"$root/events"; Files.createDirectories(Paths.get(eventsDir))
@@ -76,9 +81,7 @@ class ConsumeSpec extends SparkSpec {
   test("a small multi-file micro-batch runs as one partition: one DDL-collect " +
     "job, no MergeTree exchange, one part file per delta") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-    import org.apache.spark.sql.util.QueryExecutionListener
     import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
     import scala.jdk.CollectionConverters._
 
@@ -103,9 +106,11 @@ class ConsumeSpec extends SparkSpec {
     val expected = Map("mt" -> Set((1L, 11.0)), "rt" -> Set((7L, 77.0), (8L, 80.0)),
       "ct" -> Set((6L, 60.0)))
 
-    // what one consume run over the three files (one micro-batch) showed
-    final case class Shape(ddlJobTasks: Seq[Seq[Int]], mtWritePlans: Seq[String],
-                           partFiles: Map[String, Int],
+    // what one consume run over the three files (one micro-batch) showed:
+    // the DDL collect's jobs, the MergeTree delta's plans (the only ones
+    // carrying the `_batch` stamp), the plans of Spark write commands
+    final case class Shape(ddlJobTasks: Seq[Seq[Int]], mtDeltaPlans: Seq[String],
+                           writeCommands: Seq[String], partFiles: Map[String, Int],
                            state: Map[String, Set[(Long, Double)]])
     def consume(tag: String): Shape = {
       val sc = spark.sparkContext
@@ -127,17 +132,8 @@ class ConsumeSpec extends SparkSpec {
             .foreach(id => jobs.add((id.toLong, e.stageInfos.map(_.numTasks).sum)))
         }
       }
-      val writes = new ConcurrentLinkedQueue[String]()
-      val qeListener = new QueryExecutionListener {
-        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
-          val plan = qe.executedPlan.toString
-          if (plan.contains("/db/mt/v=")) writes.add(plan)
-        }
-        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-      }
       val stateRoot = s"$root/$tag/state"
       sc.addSparkListener(jobListener)
-      spark.listenerManager.register(qeListener)
       try {
         val q = Consume.start(spark, EventSource.files(spark, eventsDir),
           tables, stateRoot, s"$root/$tag/ckpt",
@@ -146,22 +142,19 @@ class ConsumeSpec extends SparkSpec {
         sc.setJobGroup(sentinel, "listener-bus flush")
         try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
         assert(flushed.await(30, TimeUnit.SECONDS), "listener bus never flushed")
-        val deadline = System.currentTimeMillis() + 20000
-        while (writes.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
-      } finally {
-        sc.removeSparkListener(jobListener)
-        spark.listenerManager.unregister(qeListener)
-      }
+      } finally sc.removeSparkListener(jobListener)
+      val batchPlans = plans.asScala.toSeq.filter(_._2.contains("_src_seq"))
       // the DDL collect is the one execution over the stamped columns
-      // that writes nothing
-      val ddlExecs = plans.asScala.collect {
-        case (id, p) if p.contains("_src_seq") &&
+      // that neither parses values nor writes
+      val ddlExecs = batchPlans.collect {
+        case (id, p) if !p.contains("from_json") &&
           !p.contains("InsertIntoHadoopFsRelationCommand") => id
-      }.toSeq
+      }
       val jobList = jobs.asScala.toSeq
       Shape(
         ddlExecs.map(id => jobList.filter(_._1 == id).map(_._2)),
-        writes.asScala.toSeq,
+        batchPlans.map(_._2).filter(_.contains("AS _batch")),
+        plans.asScala.values.toSeq.filter(_.contains("InsertIntoHadoopFsRelationCommand")),
         tables.map(t => t.table -> new java.io.File(s"$stateRoot/db/${t.table}/v=0")
           .listFiles().count(_.getName.startsWith("part-"))).toMap,
         tables.map(t => t.table ->
@@ -173,13 +166,16 @@ class ConsumeSpec extends SparkSpec {
     val small = consume("small")
     assert(small.ddlJobTasks == Seq(Seq(1)),
       s"DDL collect: expected one job of one task, got ${small.ddlJobTasks}")
-    assert(small.mtWritePlans.size == 1, s"MergeTree writes: ${small.mtWritePlans.size}")
-    assert(!small.mtWritePlans.head.contains("Exchange"), small.mtWritePlans.head)
+    assert(small.mtDeltaPlans.size == 1, s"MergeTree deltas: ${small.mtDeltaPlans.size}")
+    assert(!small.mtDeltaPlans.head.contains("Exchange"), small.mtDeltaPlans.head)
+    assert(small.writeCommands.isEmpty,
+      s"a one-partition batch ran Spark write jobs: ${small.writeCommands}")
     assert(small.partFiles == tables.map(_.table -> 1).toMap, s"${small.partFiles}")
     assert(small.state == expected)
 
     // a batch whose size estimate exceeds openCostInBytes keeps the
-    // source's partitioning, with the same result
+    // source's partitioning and writes through df.write, with the same
+    // result
     spark.conf.set("spark.sql.files.openCostInBytes", "1")
     val large = try consume("large")
       finally spark.conf.unset("spark.sql.files.openCostInBytes")
@@ -187,7 +183,72 @@ class ConsumeSpec extends SparkSpec {
       s"DDL collect: ${large.ddlJobTasks}")
     assert(large.ddlJobTasks.head.head > 1,
       s"batch collapsed to one partition: ${large.ddlJobTasks}")
+    assert(large.writeCommands.count(_.contains("/db/mt/v=0")) == 1,
+      s"MergeTree df.write commands: ${large.writeCommands}")
     assert(large.state == expected)
+  }
+
+  test("a driver-written delta equals the df.write delta of the same frame, " +
+    "for every engine: rows, footer schema, nullability, Spark row metadata") {
+    import org.apache.spark.sql.graftshim.ParquetFooters
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("driverwrite").toString
+    val eventsDir = s"$root/events"; Files.createDirectories(Paths.get(eventsDir))
+    writeBatch(eventsDir, "b0.json", Seq(
+      ev("t", "insert", 1, 10.0, 100), ev("t", "insert", 2, 20.0, 100),
+      ev("t", "update", 1, 11.0, 200), ev("t", "delete", 2, 20.0, 300),
+      ev("t", "insert", 3, 30.0, 300)))
+    val events = readEvents(eventsDir)
+    val rowMeta = "org.apache.spark.sql.parquet.row.metadata"
+    def footer(dir: String) = ParquetFooters.read(spark, dir)
+    def rows(dir: String) = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
+    def partFiles(dir: String) =
+      new java.io.File(dir).listFiles().count(_.getName.startsWith("part-"))
+    Engine.values.toSeq.foreach { engine =>
+      val t = TableSync("db", "t", valueSchema, Seq("id"), engine)
+      Seq(("full", Consume.tableChangelog(events, t)),
+          ("empty", Consume.tableChangelog(events, t).filter("false"))).foreach {
+        case (shape, changelog) =>
+          val Seq(viaSpark, viaDriver) = Seq(false, true).map { onDriver =>
+            val base = s"$root/$engine-$shape-$onDriver"
+            Consume.applyBatch(spark, t, new ParquetStateStore(spark, base), changelog,
+              batchId = 0L, onDriver = onDriver)
+            s"$base/v=0"
+          }
+          val what = s"$engine $shape"
+          assert(partFiles(viaDriver) == 1, what)
+          assert(new java.io.File(s"$viaDriver/_SUCCESS").exists(), what)
+          val (fs, fd) = (footer(viaSpark), footer(viaDriver))
+          assert(fd.schema == fs.schema, what)
+          assert(fd.metadata.getFileMetaData.getSchema == fs.metadata.getFileMetaData.getSchema, what)
+          val (ms, md) = (fs.metadata.getFileMetaData.getKeyValueMetaData.asScala,
+            fd.metadata.getFileMetaData.getKeyValueMetaData.asScala)
+          assert(md.get(rowMeta).isDefined && md.get(rowMeta) == ms.get(rowMeta), what)
+          assert(rows(viaDriver) == rows(viaSpark), what)
+          assert(rows(viaDriver).isEmpty == (shape == "empty"), what)
+          if (engine == Engine.MergeTree)
+            assert(!fd.schema("_batch").nullable, s"$what: the stamp is non-null")
+      }
+    }
+  }
+
+  test("the MergeTree _batch stamp keeps generated code stable across batch ids") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val root = Files.createTempDirectory("stampcodegen").toString
+    val eventsDir = s"$root/events"; Files.createDirectories(Paths.get(eventsDir))
+    writeBatch(eventsDir, "b0.json", Seq(
+      ev("t", "insert", 1, 10.0, 100), ev("t", "update", 1, 11.0, 200)))
+    val t = TableSync("db", "t", valueSchema, Seq("id"), Engine.MergeTree)
+    val changelog = Consume.tableChangelog(readEvents(eventsDir), t)
+    Seq(false, true).foreach { onDriver =>
+      val store = new ParquetStateStore(spark, s"$root/state-$onDriver")
+      Consume.applyBatch(spark, t, store, changelog, 0L, onDriver)
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      Consume.applyBatch(spark, t, store, changelog, 1L, onDriver)
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+        s"the second batch compiled new code (onDriver = $onDriver)")
+      assert(store.versionIds() == Seq(0L, 1L))
+    }
   }
 
   test("composite-PK events delete and upsert by the full key tuple") {

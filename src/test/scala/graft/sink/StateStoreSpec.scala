@@ -45,6 +45,24 @@ class StateStoreSpec extends SparkSpec {
     assert(names == Set("v=0", "v=1", ".compact_tmp_v=1"))
   }
 
+  test("a driver-path append replaces an uncommitted leftover of its batch") {
+    import org.apache.spark.sql.graftshim.DriverParquetWriter
+    val root = Files.createTempDirectory("ssleftover").toString + "/s"
+    val store = new ParquetStateStore(spark, root)
+    store.append(df(1), 0, onDriver = true)
+    // a crash after the part file, before the _SUCCESS commit point
+    DriverParquetWriter.write(df(7, 8), s"$root/v=1")
+    assert(store.versionIds() == Seq(0L))
+    assert(store.readLog().get.collect().map(_.getLong(0)).toSeq == Seq(1L))
+
+    store.append(df(7, 8), 1, onDriver = true) // the replay
+    assert(store.versionIds() == Seq(0L, 1L))
+    assert(store.readLog().get.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 7L, 8L))
+    assert(new java.io.File(s"$root/v=1").listFiles().count(_.getName.startsWith("part-")) == 1)
+    store.append(df(9), 1, onDriver = true) // committed: a no-op
+    assert(store.readLog().get.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 7L, 8L))
+  }
+
   test("an unmarked tmp (crashed pre-commit) is invisible to readers and survives reads") {
     val root = Files.createTempDirectory("ssunmarked").toString + "/s"
     val store = new ParquetStateStore(spark, root)

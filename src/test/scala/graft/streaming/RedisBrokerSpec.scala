@@ -89,6 +89,26 @@ class RedisBrokerSpec extends SparkSpec {
     } finally server.close()
   }
 
+  test("staged files get strictly increasing mtimes in poll order") {
+    // the file source orders files by millisecond mtime, ties in listing
+    // order: polls within one millisecond must not share an mtime
+    val server = new FakeRedisServer
+    try {
+      val staging = Files.createTempDirectory("redis-mtime").toString + "/s"
+      val broker = new RedisBroker("127.0.0.1", server.port, "m")
+      val n = 200
+      for (i <- 1 to n) broker.send("db", ev("t", "insert", i.toLong, i.toDouble, 100L + i))
+      assert(broker.drainToStaging("db", staging, count = 1) == n)
+      val staged = Files.list(Paths.get(staging)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.toString.endsWith(".txt")).sortBy(_.getFileName.toString)
+      assert(staged.length == n)
+      val mtimes = staged.map(Files.getLastModifiedTime(_).toMillis).toSeq
+      val unordered = mtimes.zip(mtimes.tail).filter { case (a, b) => a >= b }
+      assert(unordered.isEmpty, s"consecutive files with non-increasing mtimes: ${unordered.take(5)}")
+      broker.close()
+    } finally server.close()
+  }
+
   test("Produce.toRedis XADDs each micro-batch in (event_unixtime, action_seq) " +
     "order through one serial connection") {
     val server = new FakeRedisServer
