@@ -5,59 +5,12 @@ package graft
   *
   * A warmup action first absorbs session/codegen/parquet-footer init so
   * the timings measure the operators, not JVM warmup. The headline set
-  * covers every operator family (scan, filter, split, dedup, engine
-  * resolution, joins/aggregation, dedup/similarity/text extensions);
-  * the two all-pairs stress queries (`dedup_ngram_jaccard`,
-  * `dedup_simhash_pairs`) run in the correctness gate but are excluded
-  * here — on this synthetic corpus (tiny shared vocabulary) they are
-  * intentionally quadratic.
+  * is every benched [[graft.queries.QuerySpec]], family by family, so it
+  * covers every operator family; the few specs marked `benched = false`
+  * say why they run in the correctness gate only.
   */
 object Bench {
-  val headline: Seq[String] = Seq(
-    "q1_pricing_summary", "q2_part_supplier", "q3_top_orders", "q5_region_revenue",
-    "q4_exists_orders", "q7_window_running", "q8_rollup_revenue",
-    "q9_distinct_agg", "q10_except", "q11_topk_per_group", "q12_correlated_avg",
-    "q13_disjunctive",
-    "s3_snapshot_sign", "t2_filter_tables", "t3_filter_dml",
-    "t4_split_updates", "t6_normalize", "t7_decimal_stringify",
-    "a1_microbatch", "a2_dedup_pk", "a2_dedup_pk_salted", "a3_sign_collapse",
-    "a4_apply_order", "a5_count_check",
-    "engine_mergetree", "engine_replacing", "engine_collapsing", "engine_versioned_collapsing",
-    "engine_replacing_compact", "engine_versioned_collapsing_compact",
-    "dedup_exact", "dedup_exact_digest", "dedup_minhash_sig", "dedup_minhash_pairs",
-    "dedup_simhash", "dedup_embedding", "dedup_embedding_lsh",
-    "ann_topk", "ann_lsh_topk", "ann_ivf_topk", "ann_pq_topk", "ann_ivfpq_topk",
-    "text_langid", "text_quality", "text_tokens", "text_fingerprint", "text_tfidf",
-    "split_assign", "text_boilerplate", "text_winnow", "text_webmarks", "corpus_vocab",
-    "session_stats", "multimodal_meta",
-    "dedup_components", "dedup_keep_one", "asof_join", "asof_join_forward",
-    "asof_join_nearest", "range_join",
-    "sample_stratified", "corpus_quantiles", "corpus_pack", "text_repetition",
-    "text_decontaminate", "text_pii", "dedup_incremental",
-    "corpus_filter", "dedup_incremental_near",
-    "corpus_mixture", "text_classifier", "embed_project",
-    "dedup_incremental_bloom", "corpus_bpe_pairs", "corpus_bpe_learn100",
-    "embed_centroids",
-    "dedup_winnow_pairs", "multimodal_frames", "text_oov", "embed_quantize",
-    "dedup_semantic", "text_unigram_lp", "embed_knn_classify", "dedup_containment",
-    "session_funnel", "session_retention",
-    "q14_pivot", "q15_cube", "dedup_substring_spans", "corpus_zorder",
-    "event_rate_sliding",
-    "q16_window_funcs", "q17_intersect", "dedup_graph_degree",
-    "asof_join_tolerance", "text_entropy",
-    "event_rate_anomaly", "session_paths", "event_props_json",
-    "corpus_ccnet_buckets", "dedup_span_removal", "multimodal_features",
-    "q6_forecast_revenue", "q18_large_orders", "q19_anti_join",
-    "interval_join", "sketch_hll_users", "sketch_cm_counts",
-    "sketch_hist_quantiles", "multimodal_resize", "text_bigram_lp",
-    "corpus_sample_weighted", "q20_above_avg",
-    "q21_waiting_supplier", "q22_idle_customers",
-    "dedup_paragraph", "dedup_url_canonical", "corpus_budget_select",
-    "dedup_edit_verify", "ann_ivf_trained_topk", "multimodal_meta_codec",
-    "corpus_chunk", "text_bm25", "sketch_heavy_hitters",
-    "session_attribution", "graph_pagerank",
-    "envelope_wal2json", "envelope_debezium", "ann_ivfpq_trained_topk",
-    "ann_ivf_auto_topk")
+  val headline: Seq[String] = SparkEntry.specs.filter(_.benched).map(_.name)
 
   def main(args: Array[String]): Unit = {
     // Settle protocol as code (SettleGuard scaladoc: the r11 driver bench
@@ -78,14 +31,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // local iteration aid: run a comma-separated subset of the headline
     // set (driver runs the full set — the contract output is unchanged)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // an all-typo subset would otherwise run an empty benchmark and exit 0
-    only.foreach { s =>
-      val unknown = s -- headline.toSet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names not in the headline set: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
+    val only = graft.queries.QuerySpec.subset(sys.env.get("SPARK_GRAFT_BENCH_ONLY"),
+      headline.toSet, "SPARK_GRAFT_BENCH_ONLY names not in the headline set")
     // SPARK_GRAFT_MASTER overrides the master for the multi-JVM bench leg
     // (e.g. "local-cluster[2,16,40960]": 2 real worker JVMs x 16 cores —
     // real serializer + wire costs on every exchange/broadcast, the one

@@ -23,6 +23,11 @@ package graft
   * `SPARK_GRAFT_CPUS` builds `local[32]`; `tools/abbench.py` refuses to
   * pair it against another core count.
   *
+  * `BenchServe names` prints `@AB {"names":[...]}` — this build's
+  * `Bench.headline`, which every old tree also declares — and exits
+  * before any Spark session starts; the orchestrator takes its query list
+  * from there.
+  *
   * Protocol (line-oriented; replies prefixed `@AB ` so Spark's own
   * stdout logging can never corrupt the channel):
   *   stdin:  `warm <query>` | `time <query>` | `canary` | `quit`
@@ -65,7 +70,14 @@ object BenchServe {
       }.min
     } catch { case _: Throwable => -1.0 }
 
+  private def jstr(s: String): String =
+    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+
   def main(args: Array[String]): Unit = {
+    if (args.headOption.contains("names")) {
+      println(Bench.headline.map(jstr).mkString("@AB {\"names\":[", ",", "]}"))
+      return
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Tables.session()
 
@@ -92,9 +104,6 @@ object BenchServe {
     val out = new java.io.PrintWriter(new java.io.OutputStreamWriter(
       java.lang.System.out, java.nio.charset.StandardCharsets.UTF_8), true)
     def reply(json: String): Unit = { out.println("@AB " + json); out.flush() }
-
-    def jstr(s: String): String =
-      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 
     def exec(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)

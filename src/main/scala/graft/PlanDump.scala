@@ -24,12 +24,8 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanDump <sfDir> <outDir> [q1,q2,...]")
     val Array(sfDir, outDir) = args.take(2)
-    val only = args.drop(2).headOption
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { s =>
-      val unknown = s -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    }
+    val only = graft.queries.QuerySpec.subset(args.drop(2).headOption,
+      SparkEntry.queries.keySet, "unknown queries")
     val spark = Tables.session()
     Files.createDirectories(Paths.get(outDir))
     val names = SparkEntry.queries.keys.toSeq.sorted

@@ -9,12 +9,8 @@ object Verify {
     // (the driver always runs the full set)
     require(args.length >= 2, "usage: Verify <sfDir> <outDir> [q1,q2,...]")
     val Array(sfDir, outDir) = args.take(2)
-    val only = args.drop(2).headOption
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { s =>
-      val unknown = s -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    }
+    val only = graft.queries.QuerySpec.subset(args.drop(2).headOption,
+      SparkEntry.queries.keySet, "unknown queries")
     val spark = Tables.session()
     new java.io.File(outDir).mkdirs()
     var ok = 0

@@ -5,22 +5,21 @@ import graft.model.Engine
 import org.apache.spark.sql.DataFrame
 import java.sql.{Connection, DriverManager}
 
-/** JDBC-backed sink leg (reference operators K1 bulk insert, K2
-  * delete-by-PK, K4 DDL apply, K6 database create) for running against a
-  * real ClickHouse/warehouse endpoint. The hermetic test/bench path uses
+/** JDBC-backed sink leg (reference operators K2 delete-by-PK, K4 DDL
+  * apply, K6 database create) for running against a real
+  * ClickHouse/warehouse endpoint; K1 bulk insert is Spark's own
+  * `df.write.jdbc`. The hermetic test/bench path uses
   * [[ParquetStateStore]] instead; this class is the production wiring and
   * is exercised in tests only down to the SQL-string boundary (no live DB
   * in the build container).
   *
-  * Scale notes: inserts go through Spark's parallel JDBC writer (one
-  * connection per partition, `batchsize` rows per round-trip); deletes
-  * stream the touched keys off the executors in `batchSize` chunks
-  * ([[deleteKeysStreamed]]) — one ALTER DELETE per chunk, one chunk on
-  * the driver at a time, so delete memory never scales with the batch.
+  * Scale note: deletes stream the touched keys off the executors in
+  * `batchSize` chunks ([[deleteKeysStreamed]]) — one ALTER DELETE per
+  * chunk, one chunk on the driver at a time, so delete memory never
+  * scales with the batch.
   */
 final case class JdbcTarget(url: String, user: String, password: String,
-                            db: String, numPartitions: Int = 8,
-                            batchSize: Int = 20000)
+                            db: String, batchSize: Int = 20000)
 
 object JdbcSink {
 
@@ -50,16 +49,6 @@ object JdbcSink {
       ps.execute(); ()
     } finally ps.close()
   }
-
-  /** K1: bulk append of a typed batch. */
-  def appendBatch(df: DataFrame, t: JdbcTarget, table: String): Unit =
-    df.write.mode("append")
-      .option("numPartitions", t.numPartitions)
-      .option("batchsize", t.batchSize)
-      .jdbc(t.url, s"${t.db}.$table",
-        new java.util.Properties() {
-          put("user", t.user); put("password", t.password)
-        })
 
   /** Chunked-delete core: drain a key iterator into `chunk`-sized
     * prepared DELETE statements, never holding more than one chunk on

@@ -64,7 +64,7 @@ class JdbcSinkSpec extends SparkSpec {
     assert(maxBinds === 50000)
   }
 
-  test("deleteKeysStreamed issues chunked prepared deletes over live Derby") {
+  test("foreachKeyChunk deletes a toLocalIterator key stream in chunks on Derby") {
     val dbDir = java.nio.file.Files.createTempDirectory("jdbc-sink-spec")
     val t = JdbcTarget(s"jdbc:derby:$dbDir/db;create=true", "", "",
       db = "APP", batchSize = 100)

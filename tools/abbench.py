@@ -11,6 +11,8 @@ per-query noise floor — so cross-round record comparison stopped carrying
 information and every round burned a directive adjudicating the machine.
 This tool removes the machine from the comparison by construction:
 
+  0. takes the query list from this checkout's compiled `Bench.headline`
+     (`graft.BenchServe names`), never from the Scala source;
   1. builds the OLD commit in a git worktree under target/abtree/ with
      HEAD's BenchServe.scala copied in (the timing harness must be
      bit-identical on both sides; only the engine differs);
@@ -32,7 +34,7 @@ Prereq: compile HEAD first (sbt compile). The OLD side is compiled here.
 Run on an otherwise-quiet box — pairing cancels shared noise, it cannot
 conjure CPU the neighbors are stealing (steal shows up in both columns).
 """
-import argparse, json, os, re, shutil, subprocess, sys, threading, time
+import argparse, json, os, shutil, subprocess, sys, threading, time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -47,16 +49,18 @@ for p in ("java.base/java.lang java.base/java.lang.invoke "
     ADD_OPENS += ["--add-opens", p + "=ALL-UNNAMED"]
 
 
-def headline_queries():
-    """The headline list, parsed from Bench.scala (the driver's set)."""
-    src = (REPO / "src/main/scala/graft/Bench.scala").read_text()
-    m = re.search(r"val headline: Seq\[String\] = Seq\((.*?)\)\n", src, re.S)
-    if not m:
-        raise SystemExit("cannot parse Bench.headline from Bench.scala")
-    return re.findall(r'"([A-Za-z0-9_]+)"', m.group(1))
+def headline_queries(classes):
+    """`Bench.headline` of the build in `classes` (BenchServe's `names`
+    mode prints it and exits before starting Spark)."""
+    out = subprocess.run(["java", "-cp", f"{classes}:{SPARK_JARS}", "graft.BenchServe", "names"],
+                         stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
+    for line in out.stdout.splitlines():
+        if line.startswith("@AB "):
+            return json.loads(line[4:])["names"]
+    raise SystemExit(f"graft.BenchServe names printed no list:\n{out.stderr[-2000:]}")
 
 
-def build_old(commit, keep):
+def build_old(commit):
     sha = subprocess.check_output(
         ["git", "rev-parse", "--short", commit], cwd=REPO).decode().strip()
     tree = REPO / "target" / "abtree" / sha
@@ -147,10 +151,16 @@ def main():
     ap.add_argument("--mem", default="8g")
     ap.add_argument("--queries", default="all")
     ap.add_argument("--out", default=None)
-    ap.add_argument("--keep-worktree", action="store_true")
+    ap.add_argument("--keep-worktree", action="store_true",
+                    help="no-op: the old side's worktree is always kept for reuse")
     args = ap.parse_args()
 
-    names = headline_queries()
+    new_classes = REPO / "target/scala-2.13/classes"
+    if not (new_classes / "graft/BenchServe.class").exists():
+        raise SystemExit("HEAD classes lack graft.BenchServe — run sbt compile first")
+    # the list comes from the NEW build and is checked before the old tree
+    # is built, so a typo fails in seconds rather than after a compile
+    names = headline_queries(new_classes)
     if args.queries != "all":
         want = [q.strip() for q in args.queries.split(",") if q.strip()]
         unknown = set(want) - set(names)
@@ -160,10 +170,7 @@ def main():
 
     head_sha = subprocess.check_output(
         ["git", "rev-parse", "--short", "HEAD"], cwd=REPO).decode().strip()
-    old_sha, old_classes = build_old(args.old, args.keep_worktree)
-    new_classes = REPO / "target/scala-2.13/classes"
-    if not (new_classes / "graft/BenchServe.class").exists():
-        raise SystemExit("HEAD classes lack graft.BenchServe — run sbt compile first")
+    old_sha, old_classes = build_old(args.old)
 
     out_path = args.out or str(REPO / f"BENCH_AB_{head_sha}_vs_{old_sha}.json")
     print(f"[ab] NEW={head_sha} OLD={old_sha} sf={args.sf} passes={args.passes} "
@@ -242,10 +249,6 @@ def main():
         json.dump(rec, f, indent=1)
     print(f"[ab] done: total new {rec['total_new_s']} s, old {rec['total_old_s']} s, "
           f"median ratio {rec['median_ratio']}; wrote {out_path}", flush=True)
-    if not args.keep_worktree:
-        # keep the worktree by default across runs of the same old sha;
-        # --keep-worktree is a no-op retained for explicitness
-        pass
 
 
 if __name__ == "__main__":
