@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * `SparkEntry`: the family objects initialise while `SparkEntry` is
   * still initialising its specs, so an eager oracle string reading a
   * `SparkEntry` field would read `null`. */
-object Shared {
+private[queries] object Shared {
 
   def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables(s, dir, name)
