@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -104,20 +104,23 @@ object CdcOps {
     // reference col(seqCol) blindly: inputs like Changelog.fromEvents
     // carry no action_seq and the unresolved column kills the whole query
     val passThroughSeq = if (df.columns.contains(seqCol)) col(seqCol) else lit(0)
-    val exploded = df.withColumn("_half", explode(halves))
-    val withImage = oldValuesCol.filter(df.columns.contains) match {
-      case Some(old) => exploded.withColumn(valuesCol,
-        when(a === "update" && col("_half") === "delete",
-          coalesce(col(old), col(valuesCol))).otherwise(col(valuesCol)))
-      case None => exploded
+    val half = col("_half")
+    val seq = when(half === "delete", 1).when(half === "insert", 2)
+      .otherwise(passThroughSeq).as(seqCol)
+    val image = oldValuesCol.filter(df.columns.contains).map(old =>
+      when(a === "update" && half === "delete", coalesce(col(old), col(valuesCol)))
+        .otherwise(col(valuesCol)).as(valuesCol))
+    // one projection over the exploded rows (each Dataset step re-runs the
+    // analyzer over the whole plan): the columns keep their order, and a
+    // missing seq column is appended, as withColumn would
+    val cols = df.columns.toSeq.map {
+      case c if c == seqCol => seq
+      case c if c == actionCol => half.as(actionCol)
+      case c if c == valuesCol && image.isDefined => image.get
+      case c => col(s"`${c.replace("`", "``")}`")
     }
-    withImage
-      .withColumn(seqCol,
-        when(col("_half") === "delete", 1)
-          .when(col("_half") === "insert", 2)
-          .otherwise(passThroughSeq))
-      .withColumn(actionCol, col("_half"))
-      .drop("_half")
+    df.withColumn("_half", explode(halves))
+      .select((if (df.columns.contains(seqCol)) cols else cols :+ seq): _*)
   }
 
   // ---------------------------------------------------------------------

@@ -2,7 +2,6 @@ package graft.ops
 
 import scala.collection.mutable.ListBuffer
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._

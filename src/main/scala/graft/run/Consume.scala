@@ -4,7 +4,9 @@ import graft.ops.CdcOps
 import graft.sink.{ParquetStateStore, SinkKeys, SinkStrategy}
 import graft.model.Engine
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.DriverRows
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
@@ -239,23 +241,23 @@ object Consume {
     * Java as `<n>L`, so each batch id would compile the stage anew, while
     * the UDF's generated code reads its function from the references
     * array and is the same for every batch.
-    *
-    * `onDriver` selects [[ParquetStateStore.append]]'s driver-side write
-    * (the consume loop passes it for one-partition batches).
     */
   def applyBatch(spark: SparkSession, t: TableSync, store: ParquetStateStore,
-                 changelog: DataFrame, batchId: Long, onDriver: Boolean = false): Unit = {
-    val keys = keysFor(t)
-    val delta = t.engine match {
+                 changelog: DataFrame, batchId: Long): Unit =
+    store.append(delta(t, changelog, batchId), batchId)
+
+  /** The delta [[applyBatch]] appends for one table's changelog (the
+    * one-partition consume path collects it and writes it on the driver
+    * instead). */
+  private[run] def delta(t: TableSync, changelog: DataFrame, batchId: Long): DataFrame =
+    t.engine match {
       case Engine.MergeTree =>
-        SinkStrategy.latestPerKey(changelog, keys)
+        SinkStrategy.latestPerKey(changelog, keysFor(t))
           .withColumn("_batch", udf(() => batchId).asNonNullable()())
       case Engine.CollapsingMergeTree | Engine.VersionedCollapsingMergeTree =>
         CdcOps.withCollapsingSign(changelog)
       case Engine.ReplacingMergeTree => changelog
     }
-    store.append(delta, batchId, onDriver)
-  }
 
   /** MergeTree read-time resolution: batch (arrival) order dominates,
     * event time and action_seq break ties within a batch — the exact
@@ -286,42 +288,36 @@ object Consume {
     }
   }
 
-  /** K4 — apply DDL events (action="query") carried in the stream: the
-    * values field holds the source ALTER statement; it is translated with
-    * [[graft.ddl.AlterParser]] and applied via the supplied callback
-    * (spark.sql for catalog tables, JDBC for external sinks). Parse
-    * failures are dropped with a log line, like the reference
-    * (synch/reader/mysql.py:167-171).
-    */
-  def applyDdl(batch: DataFrame, db: String,
-               runDdl: String => Unit, skipError: Boolean): Seq[(String, Long, String)] =
-    applyDdl(collectDdl(batch, db), db, runDdl, skipError)
-
   /** Schema `db`'s DDL statements from a batch, in event order (see
     * [[collectDdlAll]]). */
   private[run] def collectDdl(batch: DataFrame, db: String): Seq[(String, Long)] =
     collectDdlAll(batch).getOrElse(db, Nil)
 
   /** Stamp the source-order tiebreak columns unless the caller already
-    * did. MUST run on the un-cached plan: `input_file_name()` over an
-    * InMemoryTableScan evaluates to "" (the consume loop stamps before
-    * its `.cache()` for exactly this reason). Non-file sources get a
-    * constant "" file and fall back to the monotonic id alone. */
+    * did. MUST run on the source's own plan: `input_file_name()` over an
+    * InMemoryTableScan or a local relation evaluates to "" (the consume
+    * loop stamps before its `.cache()` or its collect for exactly this
+    * reason). Non-file sources get a constant "" file and fall back to
+    * the monotonic id alone. */
   private[run] def stampSourceOrder(batch: DataFrame): DataFrame =
     if (batch.columns.contains("_src_file")) batch
     else batch.withColumn("_src_file", input_file_name())
       .withColumn("_src_seq", monotonically_increasing_id())
 
-  /** Every schema's DDL statements from a batch, in event order — the one
-    * driver-side materialization of the K4 path. The consume loop runs it
-    * once per micro-batch (vs one filter+collect job per schema, which
-    * showed up as N sequential driver round-trips per trigger on
-    * multi-schema pipelines).
-    *
-    * One Spark job: the filter and the collect. DDL rows are rare (one per
-    * ALTER, never data), so they are sorted on the driver by
-    * [[ddlOrder]] — a SQL `orderBy` would add a range-partition sample
-    * job and a shuffle-map job per call.
+  /** A one-partition micro-batch, stamped and collected onto the driver
+    * in one job of one task: the source read, the parse and the stamps. */
+  private[run] def collectBatch(batch: DataFrame): DriverRows.Rows =
+    DriverRows.collect(stampSourceOrder(batch).coalesce(1))
+
+  /** Every schema's DDL statements from a batch, in event order — the
+    * driver-side materialization of the K4 path (DDL events,
+    * action="query", whose values field holds the source ALTER). The
+    * consume loop takes them once per micro-batch, from the batch it
+    * already collected ([[ddlAll]]) or in one filter+collect job over the
+    * cached batch; DeadLetter's drain uses this DataFrame entry. DDL rows
+    * are rare (one per ALTER, never data), so they are sorted on the
+    * driver by [[ddlOrder]] — a SQL `orderBy` would add a range-partition
+    * sample job and a shuffle-map job per call.
     *
     * Binlog timestamps are second-coarse and every DDL row carries
     * action_seq 0, so `event_unixtime` alone leaves same-second ALTERs
@@ -337,19 +333,35 @@ object Consume {
     * `sortBy(_._2)`, and `groupBy` preserves encounter order within each
     * schema, so the refined order threads through untouched. */
   private[run] def collectDdlAll(batch: DataFrame): Map[String, Seq[(String, Long)]] =
-    stampSourceOrder(batch)
+    groupDdl(stampSourceOrder(batch)
       .filter(col("action") === "query")
       .select(col("schema"), col("values"), col("event_unixtime"),
         col("_src_file"), col("_src_seq"))
-      .collect().toSeq
-      .sorted(ddlOrder)
+      .collect().toSeq)
+
+  /** [[collectDdlAll]] over a batch already on the driver
+    * ([[collectBatch]]): the same rows in the same order, with no job. */
+  private[run] def ddlAll(batch: DriverRows.Rows): Map[String, Seq[(String, Long)]] = {
+    val Seq(schema, values, eu, file, seq, action) =
+      Seq("schema", "values", "event_unixtime", "_src_file", "_src_seq", "action")
+        .map(batch.schema.fieldIndex)
+    val query = UTF8String.fromString("query")
+    def str(r: InternalRow, i: Int) = if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+    def long(r: InternalRow, i: Int) = if (r.isNullAt(i)) null else java.lang.Long.valueOf(r.getLong(i))
+    groupDdl(batch.rows.toSeq
+      .filter(r => !r.isNullAt(action) && r.getUTF8String(action) == query)
+      .map(r => Row(str(r, schema), str(r, values), long(r, eu), str(r, file), long(r, seq))))
+  }
+
+  /** DDL rows (schema, values, event_unixtime, _src_file, _src_seq) in
+    * [[ddlOrder]], grouped by schema. */
+  private def groupDdl(rows: Seq[Row]): Map[String, Seq[(String, Long)]] =
+    rows.sorted(ddlOrder)
       .groupBy(_.getString(0))
-      .map { case (db, rows) =>
-        db -> rows.map(r => (r.getString(1), r.getLong(2)))
-      }
+      .map { case (db, rs) => db -> rs.map(r => (r.getString(1), r.getLong(2))) }
 
   /** Ascending (`event_unixtime`, `_src_file`, `_src_seq`) over
-    * [[collectDdlAll]]'s rows, nulls first — the total order Spark's
+    * [[groupDdl]]'s rows, nulls first — the total order Spark's
     * `orderBy` of the same keys gives. The file name compares as UTF-8
     * bytes ([[UTF8String]]), as Spark compares strings; `String`'s
     * UTF-16 order differs above the BMP. */
@@ -360,9 +372,13 @@ object Consume {
       (long(r, 2), Option(r.getString(3)).map(UTF8String.fromString), long(r, 4)))
   }
 
-  /** Statement-list form of [[applyDdl]] for callers that already
-    * collected the batch's DDL (the consume loop collects once and feeds
-    * the apply, the rename compact, and the intra-batch split from it). */
+  /** K4 — apply a schema's DDL statements from the stream (see
+    * [[collectDdlAll]]): each is translated with [[graft.ddl.AlterParser]]
+    * and applied via the supplied callback (spark.sql for catalog tables,
+    * JDBC for external sinks). Parse failures are dropped with a log
+    * line, like the reference (synch/reader/mysql.py:167-171). The
+    * consume loop collects the batch's DDL once and feeds the apply, the
+    * rename compact, and the intra-batch split from it. */
   private[run] def applyDdl(ddls: Seq[(String, Long)], db: String,
                             runDdl: String => Unit, skipError: Boolean): Seq[(String, Long, String)] = {
     // returns (statement, event_unixtime, error) for every statement that
@@ -522,10 +538,10 @@ object Consume {
     batch.queryExecution.optimizedPlan.stats.sizeInBytes <=
       batch.sparkSession.sessionState.conf.filesOpenCostInBytes
 
-  /** Thread pool for concurrent per-table applies (C5): Spark is
-    * thread-safe for concurrent job submission, so T tables become T
-    * overlapping jobs per trigger instead of T serial ones — the same
-    * fix the reference needs for its serialized per-table flush loop.
+  /** Thread pool for concurrent per-table work (C5): Spark is thread-safe
+    * for concurrent planning and job submission, so T tables overlap
+    * instead of running one after another — the same fix the reference
+    * needs for its serialized per-table flush loop.
     */
   private lazy val applyPool: ExecutionContext =
     ExecutionContext.fromExecutorService(
@@ -533,6 +549,13 @@ object Consume {
         (r: Runnable) => {
           val th = new Thread(r, "graft-apply"); th.setDaemon(true); th
         }))
+
+  /** `f` over every table concurrently on [[applyPool]], in table order.
+    * `f` must catch its own errors: a throwing `f` would end the wait
+    * before its siblings finish. */
+  private def perTable[A](tables: Seq[TableSync])(f: TableSync => A): Seq[A] =
+    Await.result(Future.traverse(tables)(t => Future(f(t))(applyPool))(
+      scala.collection.BuildFrom.buildFromIterableOps, applyPool), Duration.Inf)
 
   /** Start the consume query over a canonical event stream.
     *
@@ -545,18 +568,21 @@ object Consume {
     * the batch (and skipped DDL) in the dead-letter table instead of just
     * logging — see [[DeadLetter]] for the replay contract.
     *
-    * A small micro-batch runs as ONE partition (see [[fitsOnePartition]]):
-    * the stamped batch is coalesced before the cache, so the DDL collect,
-    * the cache fill and each table's apply run one task apiece, and
-    * MergeTree's per-key dedup window needs no exchange (a single
-    * partition already satisfies its clustering). A batch that arrived as
-    * several files would otherwise pay a task, a part file and a shuffle
-    * partition per file for no parallel work. Each table's `v=<batch>`
-    * delta of such a batch is collected and written on the driver as one
-    * part file ([[ParquetStateStore.append]] with `onDriver`): a one-task
-    * Spark write job costs more to ship and commit than the rows cost to
-    * write. Larger batches, and batches without a size estimate (Kafka),
-    * keep the source's partitioning and write through `df.write`.
+    * A small micro-batch (see [[fitsOnePartition]]) runs in two Spark
+    * jobs. The first collects the stamped batch onto the driver as one
+    * task ([[collectBatch]]): the source read, the parse and the stamps.
+    * Its DDL rows are found and sorted on the driver ([[ddlAll]]), and
+    * each table's changelog and delta are planned over a one-partition
+    * local relation of the collected rows, so MergeTree's per-key dedup
+    * window needs no exchange. The second job computes every table's
+    * delta, one task per table ([[DriverRows.collectEach]]), and each
+    * delta is written on the driver as one part file
+    * ([[ParquetStateStore.appendRows]]): a Spark write job, or a job per
+    * table, costs more to ship and commit than the rows cost to compute
+    * and write. `_SUCCESS` stays each version's commit point. Larger
+    * batches, and batches without a size estimate (Kafka), keep the
+    * source's partitioning: the batch is cached, its DDL collected in one
+    * job, and the tables apply concurrently through `df.write`.
     */
   def start(spark: SparkSession, events: DataFrame, tables: Seq[TableSync],
             stateRoot: String, checkpoint: String,
@@ -585,111 +611,139 @@ object Consume {
     // foreachBatch callbacks are serialized per query; TrieMap is belt
     // and braces against a future multi-query share of this map.
     val live = scala.collection.concurrent.TrieMap(tables.map(t => t -> t): _*)
+
+    // One table's apply: None when it applied, or when it failed under
+    // C3 skip-error mode (continue with the next table, parking the
+    // failed slice for replay); Some(error) otherwise, which the batch
+    // rethrows once every table ran. The slice is taken from the STAMPED
+    // batch: it keeps the schema's DDL rows REGARDLESS of their table
+    // column — Debezium schema-change documents carry table="" (the
+    // statement names the table instead), and a table-scoped filter would
+    // drop them, breaking the drain's intra-batch schema split ("parked
+    // slices carry their own DDL rows") — and it keeps its
+    // _src_file/_src_seq stamps so the drain's collectDdl re-sorts
+    // same-second ALTERs in the ORIGINAL staged order (re-stamping a
+    // parquet-read slice would follow part-file layout instead;
+    // DeadLetterSpec pins the replay order). It is parked WITH the
+    // pre-batch value schema (tCur): the drain replays each batch under
+    // its own recorded schema — chaining through parked slices alone
+    // loses any ALTER in a batch that applied live BETWEEN two parks (r13
+    // property-test finding, DeadLetter.record).
+    def applyTable(t: TableSync, tCur: TableSync, stamped: DataFrame, batchId: Long)
+                  (apply: => Unit): Option[Exception] =
+      try { apply; None }
+      catch {
+        case e: Exception if skipError =>
+          System.err.println(s"[consume] skip error on ${t.schema}.${t.table}: ${e.getMessage}")
+          deadLetter.foreach(_.record(
+            stamped.filter(col("schema") === t.schema &&
+              (col("table") === t.table || col("action") === "query")),
+            t.schema, t.table, batchId,
+            Option(e.getMessage).getOrElse(e.getClass.getName),
+            preSync = Some(tCur)))
+          None
+        case e: Exception => Some(e)
+      }
+
+    // The one-partition batch: one job collects it, one job computes
+    // every table's delta. Returns the batch's DDL and the tables' errors.
+    def applyOnDriver(batch: DataFrame, batchId: Long)
+        : (Map[String, Seq[(String, Long)]], Seq[Exception]) = {
+      val rows = collectBatch(batch)
+      val ddlBySchema = ddlAll(rows)
+      val stamped = DriverRows.frame(spark, rows)
+      val events = stamped.drop("_src_file", "_src_seq")
+      // each table's delta is built and planned on its own thread (the
+      // analysis and planning are driver CPU work); the one job that
+      // computes them all runs on this thread
+      val deltas = perTable(tables) { t =>
+        val ddls = ddlBySchema.getOrElse(t.schema, Nil)
+        // the changelog is lifted to the batch-END shape, so key
+        // resolution uses the batch-END TableSync (a renamed PK column
+        // has its new name by the time the delta sees rows); a batch with
+        // DDL for the table unions one slice per schema, hence the
+        // coalesce back to one partition
+        try Right(DriverRows.plan(delta(evolveTable(live(t), ddls),
+          tableChangelog(events, live(t), ddls).coalesce(1), batchId)))
+        catch { case e: Exception => Left(e) }
+      }
+      val collected = DriverRows.collectEach(spark, deltas.collect { case Right(p) => p }).iterator
+      val results = deltas.map(_.flatMap(_ => collected.next())).zip(tables).map(_.swap).toMap
+      val errors = perTable(tables)(t => applyTable(t, live(t), stamped, batchId)(
+        stores(t).appendRows(results(t).fold(e => throw e, identity), batchId))).flatten
+      (ddlBySchema, errors)
+    }
+
+    // A larger batch: cached once (stamped BEFORE the cache —
+    // input_file_name reads "" through an InMemoryTableScan), its DDL
+    // collected in one job, and each table applied through df.write, the
+    // tables concurrently.
+    def applyCached(batch: DataFrame, batchId: Long)
+        : (Map[String, Seq[(String, Long)]], Seq[Exception]) = {
+      val cached = stampSourceOrder(batch).cache()
+      val events = cached.drop("_src_file", "_src_seq")
+      try {
+        val ddlBySchema = collectDdlAll(cached)
+        // every table catches its own error, so the wait covers EVERY
+        // table before the cache is released — failing fast would orphan
+        // in-flight siblings onto an unpersisted batch
+        val errors = perTable(tables) { t =>
+          val tCur = live(t)
+          val ddls = ddlBySchema.getOrElse(t.schema, Nil)
+          applyTable(t, tCur, cached, batchId)(applyBatch(spark, evolveTable(tCur, ddls),
+            stores(t), tableChangelog(events, tCur, ddls), batchId))
+        }.flatten
+        (ddlBySchema, errors)
+      } finally cached.unpersist()
+    }
+
     events.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime(triggerInterval))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // source-order tiebreak stamped BEFORE the coalesce and the cache
-        // (input_file_name reads "" through an InMemoryTableScan); the
-        // canonical event view the appliers see drops the bookkeeping
-        // columns
-        val stamped = stampSourceOrder(batch)
-        val onePartition = fitsOnePartition(batch)
-        val cached = (if (onePartition) stamped.coalesce(1) else stamped).cache()
-        val events = cached.drop("_src_file", "_src_seq")
-        try {
-          // The batch's DDL statements, collected ONCE across all schemas
-          // (tiny: one row per ALTER; the job also fills the cache): they feed
-          // the per-table intra-batch split, the K4 apply, and the
-          // store-side rename compact below.
-          val ddlBySchema: Map[String, Seq[(String, Long)]] = collectDdlAll(cached)
-          // Each future catches its own error so the barrier always waits
-          // for EVERY table before the cache is released — failing fast
-          // would orphan in-flight siblings onto an unpersisted batch.
-          val applies = tables.map { t =>
-            val tCur = live(t)
-            val ddls = ddlBySchema.getOrElse(t.schema, Nil)
-            // the changelog is lifted to the batch-END shape, so key
-            // resolution must use the batch-END TableSync (a renamed PK
-            // column has its new name by the time applyBatch sees rows)
-            val tNext = evolveTable(tCur, ddls)
-            Future {
-              try { applyBatch(spark, tNext, stores(t),
-                tableChangelog(events, tCur, ddls), batchId, onDriver = onePartition); None }
-              catch {
-                case e: Exception if skipError =>
-                  // C3 skip-error mode: continue with the next table,
-                  // parking the failed slice for replay. The slice keeps
-                  // the schema's DDL rows REGARDLESS of their table
-                  // column — Debezium schema-change documents carry
-                  // table="" (the statement names the table instead), and
-                  // a table-scoped filter would drop them, breaking the
-                  // drain's intra-batch schema split ("parked slices
-                  // carry their own DDL rows")
-                  System.err.println(s"[consume] skip error on ${t.schema}.${t.table}: ${e.getMessage}")
-                  // parked from `cached`, NOT `events`: the slice keeps
-                  // its _src_file/_src_seq stamps so the drain's
-                  // collectDdl re-sorts same-second ALTERs in the
-                  // ORIGINAL staged order — re-stamping a parquet-read
-                  // slice would follow part-file layout instead
-                  // (DeadLetterSpec pins the replay order)
-                  // parked WITH the pre-batch value schema (tCur): the
-                  // drain replays each batch under its own recorded
-                  // schema — chaining through parked slices alone loses
-                  // any ALTER in a batch that applied live BETWEEN two
-                  // parks (r13 property-test finding, DeadLetter.record)
-                  deadLetter.foreach(_.record(
-                    cached.filter(col("schema") === t.schema &&
-                      (col("table") === t.table || col("action") === "query")),
-                    t.schema, t.table, batchId,
-                    Option(e.getMessage).getOrElse(e.getClass.getName),
-                    preSync = Some(tCur)))
-                  None
-                case e: Exception => Some(e)
-              }
-            }(applyPool)
+        // The batch's DDL statements, taken ONCE across all schemas (tiny:
+        // one row per ALTER): they feed the per-table intra-batch split,
+        // the K4 apply, and the store-side rename compact below.
+        val (ddlBySchema, errors) =
+          if (fitsOnePartition(batch)) applyOnDriver(batch, batchId)
+          else applyCached(batch, batchId)
+        errors.headOption.foreach(e => throw e)
+        // the schema evolution follows the DDL stream, not per-table
+        // apply success: a skip-error'd slice is parked RAW and replays
+        // under whatever schema is live at replay time
+        tables.foreach { t =>
+          val ddls = ddlBySchema.getOrElse(t.schema, Nil)
+          if (ddls.nonEmpty) live(t) = evolveTable(live(t), ddls)
+        }
+        tables.map(_.schema).distinct.foreach { db =>
+          val ddls = ddlBySchema.getOrElse(db, Nil)
+          ddlSink.foreach { run =>
+            val skipped = applyDdl(ddls, db, run, skipError)
+            deadLetter.foreach(_.recordDdl(db, skipped, batchId))
           }
-          val errors = Await.result(Future.sequence(applies)(
-            scala.collection.BuildFrom.buildFromIterableOps, applyPool), Duration.Inf).flatten
-          errors.headOption.foreach(e => throw e)
-          // the schema evolution follows the DDL stream, not per-table
-          // apply success: a skip-error'd slice is parked RAW and replays
-          // under whatever schema is live at replay time
+          // store-side half of a column RENAME: an external sink (if
+          // any) renames in place, but the parquet log keeps old-name
+          // versions whose rows would read as null under the new
+          // name after the restart — collapse the log to ONE
+          // renamed base (atomic compact swap) so pre-rename rows
+          // carry their values into the new generation. This runs
+          // whether or not a ddlSink is wired: a store-only pipeline
+          // (ddlSink = None) suffers the exact same null-read without
+          // the compact.
+          renamesIn(ddls).foreach { case (tbl, o, n) =>
+            tables.filter(t => t.schema == db && t.table == tbl)
+              .foreach(t => compact(live(t), stores(t), renameTransform(o, n)))
+          }
+        }
+        // size/count-triggered compaction (the OPTIMIZE scheduler):
+        // per-table decision, so one hot table compacting doesn't drag
+        // every cold table through an O(state) rewrite
+        compactionPolicy.foreach { pol =>
           tables.foreach { t =>
-            val ddls = ddlBySchema.getOrElse(t.schema, Nil)
-            if (ddls.nonEmpty) live(t) = evolveTable(live(t), ddls)
+            if (SinkStrategy.shouldCompact(stores(t).versionStats(), pol))
+              compact(live(t), stores(t))
           }
-          tables.map(_.schema).distinct.foreach { db =>
-            val ddls = ddlBySchema.getOrElse(db, Nil)
-            ddlSink.foreach { run =>
-              val skipped = applyDdl(ddls, db, run, skipError)
-              deadLetter.foreach(_.recordDdl(db, skipped, batchId))
-            }
-            // store-side half of a column RENAME: an external sink (if
-            // any) renames in place, but the parquet log keeps old-name
-            // versions whose rows would read as null under the new
-            // name after the restart — collapse the log to ONE
-            // renamed base (atomic compact swap) so pre-rename rows
-            // carry their values into the new generation. This runs
-            // whether or not a ddlSink is wired: a store-only pipeline
-            // (ddlSink = None) suffers the exact same null-read without
-            // the compact.
-            renamesIn(ddls).foreach { case (tbl, o, n) =>
-              tables.filter(t => t.schema == db && t.table == tbl)
-                .foreach(t => compact(live(t), stores(t), renameTransform(o, n)))
-            }
-          }
-          // size/count-triggered compaction (the OPTIMIZE scheduler):
-          // per-table decision, so one hot table compacting doesn't drag
-          // every cold table through an O(state) rewrite
-          compactionPolicy.foreach { pol =>
-            tables.foreach { t =>
-              if (SinkStrategy.shouldCompact(stores(t).versionStats(), pol))
-                compact(live(t), stores(t))
-            }
-          }
-        } finally cached.unpersist()
-        ()
+        }
       }
       .start()
   }

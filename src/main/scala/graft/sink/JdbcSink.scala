@@ -79,13 +79,14 @@ object JdbcSink {
     * partition) however large the batch — a misconfigured
     * `maxOffsetsPerTrigger` degrades to more round-trips, not a driver
     * OOM (the failure mode of the collect-then-bind form this replaces).
+    * Chunks hold `t.batchSize` keys.
     */
   def deleteKeysStreamed(t: JdbcTarget, table: String, pk: Seq[String],
-                         keys: DataFrame, chunk: Int): Long = {
+                         keys: DataFrame): Long = {
     import scala.jdk.CollectionConverters._
     withConnection(t) { c =>
       foreachKeyChunk(t.db, table, pk,
-        keys.toLocalIterator().asScala.map(_.toSeq), chunk)(executeOn(c, _, _))
+        keys.toLocalIterator().asScala.map(_.toSeq), t.batchSize)(executeOn(c, _, _))
     }
   }
 

@@ -2,14 +2,14 @@ package graft.sink
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.graftshim.DriverParquetWriter
+import org.apache.spark.sql.graftshim.{DriverParquetWriter, DriverRows}
 
 /** Minimal multi-versioned parquet "table" used as the local stand-in for a
   * transactional sink (Delta/Iceberg/JDBC in production). Each commit
   * writes a fresh `v=<n>` directory and readers always see committed
   * versions only — a directory counts as committed iff its `_SUCCESS`
-  * marker landed (Spark's job commit writes it, or [[append]]'s driver
-  * path after its part file), so a crash mid-write leaves an ignorable
+  * marker landed (Spark's job commit writes it, or [[appendRows]]
+  * after its part file), so a crash mid-write leaves an ignorable
   * partial dir rather than a phantom commit.
   *
   * Also the idempotence point for streaming: `append(batchId)` is a no-op
@@ -182,15 +182,26 @@ final class ParquetStateStore(spark: SparkSession, root: String) {
     * post-rewind drain's rename compact folds the drained batch ids, and
     * the restarted stream then replays exactly those ids from the broker
     * (RewindDrainSpec pins the shape). The folded ids travel in the
-    * compaction marker — see [[compact]].
-    *
-    * `onDriver` writes the delta through [[DriverParquetWriter]] instead
-    * of a Spark write job: one part file, written in place, then the
-    * `_SUCCESS` marker. The commit point is the same marker, so a crash
-    * before it leaves the same invisible partial dir, which the replay
-    * deletes first just as Overwrite does. For frames small enough to
-    * collect (the consume loop's one-partition batches). */
-  def append(df: DataFrame, batchId: Long, onDriver: Boolean = false): Unit = {
+    * compaction marker — see [[compact]]. */
+  def append(df: DataFrame, batchId: Long): Unit =
+    appendVersion(batchId)(p => df.write.mode(SaveMode.Overwrite).parquet(p.toString))
+
+  /** [[append]] of a delta already collected on the driver (the consume
+    * loop's one-partition batches): one part file written through
+    * [[DriverParquetWriter]] in place, then the `_SUCCESS` marker. The
+    * commit point is the same marker, so a crash before it leaves the
+    * same invisible partial dir, which the replay deletes first just as
+    * Overwrite does. */
+  def appendRows(rows: DriverRows.Rows, batchId: Long): Unit =
+    appendVersion(batchId) { p =>
+      fs.delete(p, true)
+      DriverParquetWriter.write(spark, rows, p.toString)
+      fs.create(new Path(p, "_SUCCESS"), true).close()
+    }
+
+  /** Run `write` into `v=<batchId>` unless that batch is already
+    * committed or folded (see [[append]]). */
+  private def appendVersion(batchId: Long)(write: Path => Unit): Unit = {
     recoverCompaction() // writer entry: settle any pending swap physically
     val p = new Path(s"$root/v=$batchId")
     if (committed(p)) return
@@ -198,12 +209,7 @@ final class ParquetStateStore(spark: SparkSession, root: String) {
       v >= batchId && fs.exists(new Path(vp, CompactedMarker)) &&
         foldedIds(vp).contains(batchId)
     }
-    if (folded) return
-    if (onDriver) {
-      fs.delete(p, true)
-      DriverParquetWriter.write(df, p.toString)
-      fs.create(new Path(p, "_SUCCESS"), true).close()
-    } else df.write.mode(SaveMode.Overwrite).parquet(p.toString)
+    if (!folded) write(p)
   }
 
   /** Each version with its directory's modification time, which moves

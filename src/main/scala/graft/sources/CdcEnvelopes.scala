@@ -132,8 +132,9 @@ object CdcEnvelopes {
     *     history topic: no `op`, a `ddl` string + `databaseName`) →
     *     one `query` event carrying the raw DDL text with action_seq 0,
     *     exactly the canonical form the K4 sink translates and applies
-    *     ([[graft.run.Consume.applyDdl]]) — the same flow the reference
-    *     gives binlog QueryEvents (mysql.py:165-172,
+    *     (`graft.run.Consume.applyDdl(ddls, db, runDdl, skipError)`, over
+    *     the statements the consume loop collects from each batch) — the
+    *     same flow the reference gives binlog QueryEvents (mysql.py:165-172,
     *     replication/continuous.py:156-162)
     *   - anything else (truncate `t`, message `m`, unparseable) →
     *     excluded from the event stream; [[debeziumDropped]] yields
@@ -173,7 +174,8 @@ object CdcEnvelopes {
       imageJson(after, before).as("values"), lit(2).as("action_seq"))
     val op = pick("op")
     // schema-change documents have no op; the raw DDL string IS the
-    // values payload (the K4 contract — applyDdl reads it verbatim)
+    // values payload (the K4 contract — the consume loop collects it
+    // verbatim and Consume.applyDdl's statement list carries it)
     val ddl = pick("ddl")
     val qry = struct(lit("query").as("action"),
       ddl.as("values"), lit(0).as("action_seq"))

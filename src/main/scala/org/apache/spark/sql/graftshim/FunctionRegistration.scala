@@ -2,7 +2,6 @@ package org.apache.spark.sql.graftshim
 
 import graft.functions.{CharEntropyExpr, CosineSimExpr, LangScoresExpr, LshBucketExpr, MinHashBandsExpr, MinHashExpr, PolyHashExpr, PqAdcTabsExpr, PqCodesExpr, ProjectEmbedExpr, SimHashExpr, WinnowExpr, WordGramsExpr}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 /** Registers the engine's native expressions as SQL functions, so

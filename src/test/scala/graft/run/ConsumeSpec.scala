@@ -26,6 +26,16 @@ class ConsumeSpec extends SparkSpec {
     Files.write(Paths.get(dir, name),
       lines.mkString("\n").getBytes("UTF-8"))
 
+  /** Apply one batch's changelog through `df.write`, or (`onDriver`) as
+    * the one-partition consume path does: collect the delta and write it
+    * on the driver. */
+  private def applyBatch(t: TableSync, store: ParquetStateStore,
+                         changelog: org.apache.spark.sql.DataFrame, batchId: Long,
+                         onDriver: Boolean): Unit =
+    if (onDriver) store.appendRows(
+      org.apache.spark.sql.graftshim.DriverRows.collect(Consume.delta(t, changelog, batchId)), batchId)
+    else Consume.applyBatch(spark, t, store, changelog, batchId)
+
   /** The canonical event frame of a directory of wire-JSON files, read
     * as a batch. */
   private def readEvents(dir: String) =
@@ -78,8 +88,8 @@ class ConsumeSpec extends SparkSpec {
     assert(rt2 == Set.empty[Long]) // tombstone wins at read time
   }
 
-  test("a small multi-file micro-batch runs as one partition: one DDL-collect " +
-    "job, no MergeTree exchange, one part file per delta") {
+  test("a small multi-file micro-batch runs in two jobs: a one-task batch collect, " +
+    "then one delta job of a task per table with no exchange; one part file per delta") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
     import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
@@ -106,16 +116,21 @@ class ConsumeSpec extends SparkSpec {
     val expected = Map("mt" -> Set((1L, 11.0)), "rt" -> Set((7L, 77.0), (8L, 80.0)),
       "ct" -> Set((6L, 60.0)))
 
+    // one job as the listener saw it: its tasks, its stages, and the
+    // names of the RDDs its stages ran (an exchange reads a ShuffledRowRDD)
+    final case class Job(tasks: Int, stages: Int, rdds: Seq[String])
     // what one consume run over the three files (one micro-batch) showed:
-    // the DDL collect's jobs, the MergeTree delta's plans (the only ones
-    // carrying the `_batch` stamp), the plans of Spark write commands
-    final case class Shape(ddlJobTasks: Seq[Seq[Int]], mtDeltaPlans: Seq[String],
+    // the jobs carrying the stream's query id, the DDL collect's jobs
+    // (the execution over the stamped columns that neither parses values
+    // nor writes), the plans of Spark write commands
+    final case class Shape(streamJobs: Seq[Job], ddlJobTasks: Seq[Seq[Int]],
                            writeCommands: Seq[String], partFiles: Map[String, Int],
                            state: Map[String, Set[(Long, Double)]])
     def consume(tag: String): Shape = {
       val sc = spark.sparkContext
       val plans = new ConcurrentHashMap[Long, String]() // execution id -> plan
       val jobs = new ConcurrentLinkedQueue[(Long, Int)]() // (execution id, tasks)
+      val byQuery = new ConcurrentLinkedQueue[(String, Job)]() // (query id, job)
       val flushed = new CountDownLatch(1)
       val sentinel = s"consumeshape-$tag-flush"
       val jobListener = new SparkListener {
@@ -128,13 +143,17 @@ class ConsumeSpec extends SparkSpec {
           val props = Option(e.properties)
           if (props.exists(_.getProperty("spark.jobGroup.id") == sentinel))
             flushed.countDown()
+          val tasks = e.stageInfos.map(_.numTasks).sum
           props.flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-            .foreach(id => jobs.add((id.toLong, e.stageInfos.map(_.numTasks).sum)))
+            .foreach(id => jobs.add((id.toLong, tasks)))
+          props.flatMap(p => Option(p.getProperty("sql.streaming.queryId")))
+            .foreach(q => byQuery.add((q, Job(tasks, e.stageInfos.size,
+              e.stageInfos.flatMap(_.rddInfos.map(_.name))))))
         }
       }
       val stateRoot = s"$root/$tag/state"
       sc.addSparkListener(jobListener)
-      try {
+      val queryId = try {
         val q = Consume.start(spark, EventSource.files(spark, eventsDir),
           tables, stateRoot, s"$root/$tag/ckpt",
           triggerInterval = "250 milliseconds", ddlSink = Some(_ => ()))
@@ -142,18 +161,16 @@ class ConsumeSpec extends SparkSpec {
         sc.setJobGroup(sentinel, "listener-bus flush")
         try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
         assert(flushed.await(30, TimeUnit.SECONDS), "listener bus never flushed")
+        q.id.toString
       } finally sc.removeSparkListener(jobListener)
-      val batchPlans = plans.asScala.toSeq.filter(_._2.contains("_src_seq"))
-      // the DDL collect is the one execution over the stamped columns
-      // that neither parses values nor writes
-      val ddlExecs = batchPlans.collect {
-        case (id, p) if !p.contains("from_json") &&
+      val ddlExecs = plans.asScala.toSeq.collect {
+        case (id, p) if p.contains("_src_seq") && !p.contains("from_json") &&
           !p.contains("InsertIntoHadoopFsRelationCommand") => id
       }
       val jobList = jobs.asScala.toSeq
       Shape(
+        byQuery.asScala.toSeq.collect { case (`queryId`, j) => j },
         ddlExecs.map(id => jobList.filter(_._1 == id).map(_._2)),
-        batchPlans.map(_._2).filter(_.contains("AS _batch")),
         plans.asScala.values.toSeq.filter(_.contains("InsertIntoHadoopFsRelationCommand")),
         tables.map(t => t.table -> new java.io.File(s"$stateRoot/db/${t.table}/v=0")
           .listFiles().count(_.getName.startsWith("part-"))).toMap,
@@ -164,10 +181,13 @@ class ConsumeSpec extends SparkSpec {
     }
 
     val small = consume("small")
-    assert(small.ddlJobTasks == Seq(Seq(1)),
-      s"DDL collect: expected one job of one task, got ${small.ddlJobTasks}")
-    assert(small.mtDeltaPlans.size == 1, s"MergeTree deltas: ${small.mtDeltaPlans.size}")
-    assert(!small.mtDeltaPlans.head.contains("Exchange"), small.mtDeltaPlans.head)
+    // the batch collect (source read, parse, stamps) as one task, then
+    // every table's delta in one job of one task per table: one stage,
+    // so no table's plan (MergeTree's per-key window included) shuffles
+    assert(small.streamJobs.map(_.tasks) == Seq(1, tables.size),
+      s"stream jobs: ${small.streamJobs}")
+    val deltaJob = small.streamJobs.last
+    assert(deltaJob.stages == 1 && !deltaJob.rdds.contains("ShuffledRowRDD"), s"$deltaJob")
     assert(small.writeCommands.isEmpty,
       s"a one-partition batch ran Spark write jobs: ${small.writeCommands}")
     assert(small.partFiles == tables.map(_.table -> 1).toMap, s"${small.partFiles}")
@@ -186,6 +206,34 @@ class ConsumeSpec extends SparkSpec {
     assert(large.writeCommands.count(_.contains("/db/mt/v=0")) == 1,
       s"MergeTree df.write commands: ${large.writeCommands}")
     assert(large.state == expected)
+  }
+
+  test("an observe count on the input equals the batch's rows: the source is read once") {
+    import org.apache.spark.sql.functions.{count, lit}
+    val root = Files.createTempDirectory("consumeobserve").toString
+    val eventsDir = s"$root/events"; Files.createDirectories(Paths.get(eventsDir))
+    val tables = Seq(
+      TableSync("db", "mt", valueSchema, Seq("id"), Engine.MergeTree),
+      TableSync("db", "rt", valueSchema, Seq("id"), Engine.ReplacingMergeTree))
+    writeBatch(eventsDir, "b0.json", Seq(
+      ev("mt", "insert", 1, 10.0, 100), ev("rt", "insert", 7, 70.0, 100)))
+    writeBatch(eventsDir, "b1.json", Seq(
+      ev("mt", "update", 1, 11.0, 200), ev("rt", "delete", 7, 70.0, 200),
+      ev("mt", "insert", 2, 20.0, 200)))
+    // the one-partition path, then (openCostInBytes=1) the cached path
+    Seq("small" -> None, "large" -> Some("1")).foreach { case (tag, openCost) =>
+      openCost.foreach(spark.conf.set("spark.sql.files.openCostInBytes", _))
+      try {
+        val q = Consume.start(spark,
+          EventSource.files(spark, eventsDir).observe(s"in-$tag", count(lit(1)).as("n")),
+          tables, s"$root/$tag/state", s"$root/$tag/ckpt", triggerInterval = "250 milliseconds")
+        q.processAllAvailable(); q.stop()
+        val ps = q.recentProgress.filter(_.numInputRows > 0).toSeq
+        assert(ps.map(_.numInputRows).sum == 5, tag)
+        assert(ps.map(_.observedMetrics.get(s"in-$tag").getLong(0)) == ps.map(_.numInputRows),
+          s"$tag: the source was evaluated more than once")
+      } finally spark.conf.unset("spark.sql.files.openCostInBytes")
+    }
   }
 
   test("a driver-written delta equals the df.write delta of the same frame, " +
@@ -211,8 +259,7 @@ class ConsumeSpec extends SparkSpec {
         case (shape, changelog) =>
           val Seq(viaSpark, viaDriver) = Seq(false, true).map { onDriver =>
             val base = s"$root/$engine-$shape-$onDriver"
-            Consume.applyBatch(spark, t, new ParquetStateStore(spark, base), changelog,
-              batchId = 0L, onDriver = onDriver)
+            applyBatch(t, new ParquetStateStore(spark, base), changelog, 0L, onDriver)
             s"$base/v=0"
           }
           val what = s"$engine $shape"
@@ -242,9 +289,9 @@ class ConsumeSpec extends SparkSpec {
     val changelog = Consume.tableChangelog(readEvents(eventsDir), t)
     Seq(false, true).foreach { onDriver =>
       val store = new ParquetStateStore(spark, s"$root/state-$onDriver")
-      Consume.applyBatch(spark, t, store, changelog, 0L, onDriver)
+      applyBatch(t, store, changelog, 0L, onDriver)
       val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      Consume.applyBatch(spark, t, store, changelog, 1L, onDriver)
+      applyBatch(t, store, changelog, 1L, onDriver)
       assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
         s"the second batch compiled new code (onDriver = $onDriver)")
       assert(store.versionIds() == Seq(0L, 1L))

@@ -538,6 +538,31 @@ class DdlMidStreamSpec extends SparkSpec {
       "ALTER TABLE db.t MODIFY COLUMN note TEXT"))
   }
 
+  test("same-second DDL rows from a batch collected on the driver come out in " +
+    "collectDdlAll's order") {
+    // the one-partition consume path takes its DDL from the collected
+    // batch (Consume.ddlAll) instead of collectDdlAll's job over the
+    // frame; both must give every schema's statements in the same order:
+    // same-second ALTERs within a file in read order, and across files in
+    // file-name order even when the later file is byte-larger
+    val root = Files.createTempDirectory("ddldriverrows").toString
+    val stmts = (1 to 6).map(i => s"ALTER TABLE db.t ADD COLUMN c$i INT")
+    Files.write(Paths.get(root, "f1.txt"), Seq(
+      ddl(stmts(0), 100), ddl(stmts(1), 100), ddl(stmts(4), 200)
+    ).mkString("\n").getBytes("UTF-8"))
+    Files.write(Paths.get(root, "f2.txt"), (Seq(
+      ddl(stmts(2), 100), ddl(stmts(3), 100),
+      ddl(stmts(5), 200).replace("\"db\"", "\"db2\"")
+    ).mkString("\n") + (" " * 4096)).getBytes("UTF-8"))
+    val batch = spark.read.schema(graft.model.ChangeEvent.wireSchema)
+      .json(s"$root/f1.txt", s"$root/f2.txt")
+    val viaFrame = Consume.collectDdlAll(batch)
+    val viaRows = Consume.ddlAll(Consume.collectBatch(batch))
+    assert(viaRows == viaFrame)
+    assert(viaRows("db").map(_._1) == Seq(stmts(0), stmts(1), stmts(2), stmts(3), stmts(4)))
+    assert(viaRows("db2").map(_._1) == Seq(stmts(5)))
+  }
+
   test("driver-side DDL sort gives the total order of Spark's orderBy") {
     // collectDdlAll sorts on the driver; it must reproduce the SQL sort
     // it replaced: nulls first, file names as UTF-8 bytes (U+FFFD sorts

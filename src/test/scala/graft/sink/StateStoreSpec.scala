@@ -46,21 +46,42 @@ class StateStoreSpec extends SparkSpec {
   }
 
   test("a driver-path append replaces an uncommitted leftover of its batch") {
-    import org.apache.spark.sql.graftshim.DriverParquetWriter
+    import org.apache.spark.sql.graftshim.{DriverParquetWriter, DriverRows}
     val root = Files.createTempDirectory("ssleftover").toString + "/s"
     val store = new ParquetStateStore(spark, root)
-    store.append(df(1), 0, onDriver = true)
+    store.appendRows(DriverRows.collect(df(1)), 0)
     // a crash after the part file, before the _SUCCESS commit point
-    DriverParquetWriter.write(df(7, 8), s"$root/v=1")
+    DriverParquetWriter.write(spark, DriverRows.collect(df(7, 8)), s"$root/v=1")
     assert(store.versionIds() == Seq(0L))
     assert(store.readLog().get.collect().map(_.getLong(0)).toSeq == Seq(1L))
 
-    store.append(df(7, 8), 1, onDriver = true) // the replay
+    store.appendRows(DriverRows.collect(df(7, 8)), 1) // the replay
     assert(store.versionIds() == Seq(0L, 1L))
     assert(store.readLog().get.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 7L, 8L))
     assert(new java.io.File(s"$root/v=1").listFiles().count(_.getName.startsWith("part-")) == 1)
-    store.append(df(9), 1, onDriver = true) // committed: a no-op
+    store.appendRows(DriverRows.collect(df(9)), 1) // committed: a no-op
     assert(store.readLog().get.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 7L, 8L))
+  }
+
+  test("collectEach computes several frames in one job; a failing frame keeps its error") {
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    import org.apache.spark.sql.graftshim.DriverRows
+    val ok = Seq(df(1, 2), df(3).withColumn("x", col("id") * 2))
+    def ids(r: DriverRows.Rows) = r.rows.map(_.getLong(0)).toSeq
+    val sc = spark.sparkContext
+    sc.setJobGroup("collect-each", "collectEach")
+    val both = try DriverRows.collectEach(spark, ok.map(DriverRows.plan)) finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup("collect-each").length == 1)
+    assert(both.map(_.map(ids)) == Seq(Right(Seq(1L, 2L)), Right(Seq(3L))))
+    assert(both(1).map(_.schema.fieldNames.toSeq) == Right(Seq("id", "x")))
+    // a frame that fails at run time fails the shared job; each frame is
+    // then collected alone, so only that frame reports the error (a range,
+    // not a local relation, which the optimizer would evaluate at planning)
+    val bad = spark.range(4, 5)
+      .withColumn("id", when(col("id") === 4, raise_error(lit("boom"))).otherwise(col("id")))
+    val mixed = DriverRows.collectEach(spark, Seq(ok.head, bad, ok(1)).map(DriverRows.plan))
+    assert(mixed.map(_.isRight) == Seq(true, false, true))
+    assert(mixed(0).map(ids) == Right(Seq(1L, 2L)))
   }
 
   test("an unmarked tmp (crashed pre-commit) is invisible to readers and survives reads") {
