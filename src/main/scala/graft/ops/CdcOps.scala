@@ -111,16 +111,18 @@ object CdcOps {
       when(a === "update" && half === "delete", coalesce(col(old), col(valuesCol)))
         .otherwise(col(valuesCol)).as(valuesCol))
     // one projection over the exploded rows (each Dataset step re-runs the
-    // analyzer over the whole plan): the columns keep their order, and a
-    // missing seq column is appended, as withColumn would
+    // analyzer over the whole plan): columns match by the session's
+    // resolver and keep their order, and a missing seq column is
+    // appended, as withColumn would
+    val same = df.sparkSession.sessionState.conf.resolver
     val cols = df.columns.toSeq.map {
-      case c if c == seqCol => seq
-      case c if c == actionCol => half.as(actionCol)
-      case c if c == valuesCol && image.isDefined => image.get
+      case c if same(c, seqCol) => seq
+      case c if same(c, actionCol) => half.as(actionCol)
+      case c if same(c, valuesCol) && image.isDefined => image.get
       case c => col(s"`${c.replace("`", "``")}`")
     }
     df.withColumn("_half", explode(halves))
-      .select((if (df.columns.contains(seqCol)) cols else cols :+ seq): _*)
+      .select((if (df.columns.exists(same(_, seqCol))) cols else cols :+ seq): _*)
   }
 
   // ---------------------------------------------------------------------

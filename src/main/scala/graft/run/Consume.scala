@@ -668,7 +668,7 @@ object Consume {
         catch { case e: Exception => Left(e) }
       }
       val collected = DriverRows.collectEach(spark, deltas.collect { case Right(p) => p }).iterator
-      val results = deltas.map(_.flatMap(_ => collected.next())).zip(tables).map(_.swap).toMap
+      val results = tables.zip(deltas.map(_.flatMap(_ => collected.next()))).toMap
       val errors = perTable(tables)(t => applyTable(t, live(t), stamped, batchId)(
         stores(t).appendRows(results(t).fold(e => throw e, identity), batchId))).flatten
       (ddlBySchema, errors)

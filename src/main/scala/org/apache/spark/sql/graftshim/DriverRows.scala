@@ -38,9 +38,9 @@ object DriverRows {
     * holds a keyed operator (a window) even when no exchange is needed,
     * and re-plans it as a query stage when it runs, and whole-stage
     * codegen generates each stage's Java source on the driver at every
-    * execution (the compiled class is cached, the source is not) — each
-    * tens of milliseconds of driver work per frame for a frame of a few
-    * hundred rows, which the operators' own per-row code does not need. */
+    * execution (the compiled class is cached, the source is not). Each
+    * costs up to tens of milliseconds of driver work per frame, which a
+    * frame of a few hundred rows does not win back. */
   def plan(df: DataFrame): Planned = {
     val qe = df.queryExecution
     val conf = qe.sparkSession.sessionState.conf.clone()
