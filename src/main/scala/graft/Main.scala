@@ -180,7 +180,7 @@ object Main {
     val expanded = args.toSeq.foldLeft(Vector.empty[String]) {
       case (acc, "-t") => acc :+ "--table" // value folds in on the next arg
       case (acc, a) if a.startsWith("-t=") => acc :+ s"--table=${a.drop(3)}"
-      case (acc, a) if a.startsWith("-") && !a.startsWith("--") =>
+      case (_, a) if a.startsWith("-") && !a.startsWith("--") =>
         sys.error(s"unknown flag $a (did you mean -$a or --${a.stripPrefix("-")}?)")
       case (acc, a) if acc.lastOption.contains("--table") =>
         // a flag here means -t had no value — fail loud, never fold a
@@ -371,11 +371,13 @@ object Main {
       case "etl" =>
         // The snapshot lands as the store's version -1 changelog delta via
         // the SAME apply path `consume`'s bootstrap uses (engine stamping,
-        // recoverCompaction, committed-version idempotence — a hand-rolled
-        // parquet write would be invisible behind a pending compaction swap
-        // and would silently skip its batch-id check). --renew drops the
-        // whole store first (reference `etl --renew`: drop target tables);
-        // without it a committed v=-1 makes the re-run a no-op. Manual etl
+        // the store's log entry, committed-version idempotence — a
+        // hand-rolled parquet write would be named by no log entry, so
+        // readers would never see it, and would skip the batch-id check).
+        // --renew drops the whole store first (reference `etl --renew`:
+        // drop target tables), which is also how a store written before
+        // the store kept a commit log is rebuilt; without it a committed
+        // v=-1 makes the re-run a no-op. Manual etl
         // deliberately ignores auto_full_etl: that flag opts a table out of
         // the AUTOMATIC consume-time bootstrap, and this command is exactly
         // the documented manual path for those tables.

@@ -58,7 +58,7 @@ object TypeMap {
       t.params.headOption.map(n => s"FixedString($n)").getOrElse("String")
     case "varchar" | "text" | "longtext" | "mediumtext" | "tinytext" |
          "bigchar" | "json" | "enum"  => "String"
-    case other                        => "String" // safe fallback, like the reference's str default
+    case _                            => "String" // safe fallback, like the reference's str default
   }
 
   def toClickHouse(raw: String): String = toClickHouse(parse(raw))

@@ -159,14 +159,14 @@ object CdcOps {
                       saltBuckets: Int = 16): DataFrame = {
     val keys = extraPartition ++ pkCols
     val ord = struct(orderCols.map(col): _*)
-    val payload = struct(df.columns.map(col): _*)
+    val payload = struct(df.columns.toSeq.map(col): _*)
     val salted = df.withColumn("_salt",
       pmod(hash(orderCols.map(col): _*), lit(saltBuckets)))
     val phase1 = salted.groupBy((keys.map(col) :+ col("_salt")): _*)
       .agg(max_by(payload, ord).as("_row"), max(ord).as("_ord"))
     val phase2 = phase1.groupBy(keys.map(col): _*)
       .agg(max_by(col("_row"), col("_ord")).as("_row"))
-    phase2.select(df.columns.map(c => col(s"_row.$c").as(c)): _*)
+    phase2.select(df.columns.toSeq.map(c => col(s"_row.$c").as(c)): _*)
   }
 
   // ---------------------------------------------------------------------
@@ -231,7 +231,7 @@ object CdcOps {
         .withColumn("apply_rank", col("_rank").cast("int")).drop("_rank")
         // restore the input's column order (the rank join moved keys to
         // the front) so both applyOrder forms are drop-in equal
-        .select(df.columns.map(col) :+ col("apply_rank"): _*)
+        .select(df.columns.toSeq.map(col) :+ col("apply_rank"): _*)
     }
 
   /** Shared bucket-prefix-sum rank: the per-(partition, seq-prefix) ROW
@@ -324,7 +324,7 @@ object CdcOps {
         .withColumn("batch_id",
           graft.functions.IntMath.floorDiv(col("_rank") - 1L, insertNum.toLong))
         .drop("_rank")
-        .select(df.columns.map(col) :+ col("batch_id"): _*)
+        .select(df.columns.toSeq.map(col) :+ col("batch_id"): _*)
     }
 
   // ---------------------------------------------------------------------

@@ -823,7 +823,7 @@ object DedupOps {
     // band, where it is reachable as a "b" by that band's earlier rows
     val tagged = e.withColumn("_rn", rn)
       .select(col(blockCol).as("_blk"),
-        struct(e.columns.map(col): _*).as("_p"), col("_rn"),
+        struct(e.columns.toSeq.map(col): _*).as("_p"), col("_rn"),
         posexplode(array(band, band - 1)).as(Seq("_own", "_band")))
     val lists = tagged.groupBy(col("_blk"), col("_band"))
       .agg(array_sort(collect_list(struct(col("_rn"), col("_own"), col("_p"))))

@@ -183,7 +183,6 @@ object MultimodalOps {
     */
   def decodeMeta(df: DataFrame, decoder: MediaDecoder,
                  idCol: String = "doc_id", blobCol: String = "media"): DataFrame = {
-    val spark = df.sparkSession
     val input = df.select(col(idCol).cast("long"), col(blobCol))
     val outSchema = StructType(StructField(idCol, LongType) +: metaSchema.fields)
     val encoder = org.apache.spark.sql.Encoders.row(outSchema)

@@ -579,10 +579,10 @@ object Consume {
     * delta is written on the driver as one part file
     * ([[ParquetStateStore.appendRows]]): a Spark write job, or a job per
     * table, costs more to ship and commit than the rows cost to compute
-    * and write. `_SUCCESS` stays each version's commit point. Larger
-    * batches, and batches without a size estimate (Kafka), keep the
-    * source's partitioning: the batch is cached, its DDL collected in one
-    * job, and the tables apply concurrently through `df.write`.
+    * and write. The store's log entry stays each version's commit point.
+    * Larger batches, and batches without a size estimate (Kafka), keep
+    * the source's partitioning: the batch is cached, its DDL collected in
+    * one job, and the tables apply concurrently through `df.write`.
     */
   def start(spark: SparkSession, events: DataFrame, tables: Seq[TableSync],
             stateRoot: String, checkpoint: String,
@@ -725,7 +725,7 @@ object Consume {
           // any) renames in place, but the parquet log keeps old-name
           // versions whose rows would read as null under the new
           // name after the restart — collapse the log to ONE
-          // renamed base (atomic compact swap) so pre-rename rows
+          // renamed base (one compaction entry) so pre-rename rows
           // carry their values into the new generation. This runs
           // whether or not a ddlSink is wired: a store-only pipeline
           // (ddlSink = None) suffers the exact same null-read without

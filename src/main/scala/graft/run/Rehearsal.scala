@@ -99,7 +99,7 @@ object Rehearsal {
     EventSource.serialize(
       muts.select(
         lit("db").as("schema"), lit(table).as("table"), col("action"),
-        to_json(struct(valueCols.map(col): _*)).as("values"),
+        to_json(struct(valueCols.toSeq.map(col): _*)).as("values"),
         (lit(1000000L) + col("o_orderkey")).as("event_unixtime"),
         when(col("action") === "delete", lit(1)).otherwise(lit(2)).as("action_seq")))
   }
@@ -537,27 +537,41 @@ object Rehearsal {
     parent.filterNot(f => Seq("-Xms", "-XX:InitialHeapSize", "-XX:StartFlightRecording",
       "-XX:FlightRecorderOptions", "-agentlib:", "-agentpath:", "-javaagent:").exists(f.startsWith))
 
-  /** Some store of `workDir` holds a compaction stage or tmp dir: a
-    * compaction is in flight (or was, in a killed worker). */
-  private def compacting(workDir: String, tables: Seq[TableSync]): Boolean =
-    tables.exists(t => Option(new File(s"$workDir/state/${t.schema}/${t.table}").list())
-      .exists(_.exists(_.startsWith(".compact_"))))
+  /** The directories of `workDir`'s stores that no log entry names
+    * ([[ParquetStateStore.unnamedDirs]]), each as `<table>/<dir>`. */
+  private[run] def unnamedDirs(spark: SparkSession, workDir: String,
+                               tables: Seq[TableSync]): Set[String] =
+    tables.flatMap(t => store(spark, workDir, t).unnamedDirs().map(d => s"${t.table}/$d")).toSet
 
-  /** Where in the micro-batch a killed worker died, read off the disk it
-    * left: `between_batches` (the newest planned batch is committed),
-    * else, for the planned-but-uncommitted batch b, `compaction` (see
-    * [[compacting]]), `after_apply` (every store committed v=b: DDL,
-    * compaction check or commit write), `apply` (some store began v=b)
-    * or `before_apply` (planning, input read). */
-  private[run] def killPhase(workDir: String, tables: Seq[TableSync]): String = {
+  private def store(spark: SparkSession, workDir: String, t: TableSync): ParquetStateStore =
+    new ParquetStateStore(spark, s"$workDir/state/${t.schema}/${t.table}")
+
+  /** Some store of `workDir` holds a compaction directory that no entry
+    * names and that is not among `stale`, the unnamed directories found
+    * when the worker started: a compaction is in flight (or was, in a
+    * killed worker). */
+  private def compacting(spark: SparkSession, workDir: String, tables: Seq[TableSync],
+                         stale: Set[String]): Boolean =
+    (unnamedDirs(spark, workDir, tables) -- stale)
+      .exists(_.contains(s"/${ParquetStateStore.CompactPrefix}"))
+
+  /** Where in the micro-batch a killed worker died, read off its
+    * checkpoint and the stores' logs: `between_batches` (the newest
+    * planned batch is committed), else, for the planned-but-uncommitted
+    * batch b, `compaction` (see [[compacting]]), `after_apply` (every
+    * store's newest entry holds b: DDL, compaction check or commit
+    * write), `apply` (some store has a `v=b` directory no entry names,
+    * and that is not among `stale`) or `before_apply` (planning, input
+    * read). */
+  private[run] def killPhase(spark: SparkSession, workDir: String, tables: Seq[TableSync],
+                             stale: Set[String]): String = {
     val committed = logIds(s"$workDir/ckpt/commits").maxOption
     logIds(s"$workDir/ckpt/offsets").maxOption.filter(b => committed.forall(_ < b)) match {
       case None => "between_batches"
       case Some(b) =>
-        val stores = tables.map(t => new File(s"$workDir/state/${t.schema}/${t.table}"))
-        if (compacting(workDir, tables)) "compaction"
-        else if (stores.forall(d => new File(d, s"v=$b/_SUCCESS").exists)) "after_apply"
-        else if (stores.exists(d => new File(d, s"v=$b").exists)) "apply"
+        if (compacting(spark, workDir, tables, stale)) "compaction"
+        else if (tables.forall(t => store(spark, workDir, t).committed(b))) "after_apply"
+        else if ((unnamedDirs(spark, workDir, tables) -- stale).exists(_.endsWith(s"/v=$b"))) "apply"
         else "before_apply"
     }
   }
@@ -626,6 +640,7 @@ object Rehearsal {
     while (!consumed) {
       gen += 1
       val before = maxSeen // cumulative max over all PRIOR generations
+      val stale = unnamedDirs(spark, workDir, st.tables)
       val (p, progress) = spawn(Seq("--worker", sfDir, workDir), log)
       val started = System.nanoTime()
       while (killsDone < kills && p.isAlive && progress.max < targets(killsDone))
@@ -641,14 +656,14 @@ object Rehearsal {
           p.waitFor(delays.nextLong(progress.lastTriggerMs + 1), TimeUnit.MILLISECONDS)
         else {
           val giveUp = targets(killsDone) + KillPolicy.maxDeltaVersions + 2
-          while (p.isAlive && !compacting(workDir, st.tables) && progress.max < giveUp)
+          while (p.isAlive && !compacting(spark, workDir, st.tables, stale) && progress.max < giveUp)
             p.waitFor(10, TimeUnit.MILLISECONDS)
         }
         p.destroyForcibly()
       }
       val exit = p.waitFor()
       progress.join()
-      val phase = if (killIssued && exit == SigKillExit) killPhase(workDir, st.tables) else ""
+      val phase = if (killIssued && exit == SigKillExit) killPhase(spark, workDir, st.tables, stale) else ""
       if (phase.nonEmpty) {
         killsDone += 1
         uptimes += (System.nanoTime() - started) / 1e9

@@ -1,444 +1,388 @@
 package graft.sink
 
-import org.apache.hadoop.fs.Path
+import java.io.{FileNotFoundException, InputStreamReader}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.UUID
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graftshim.{DriverParquetWriter, DriverRows}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.json4s.{Formats, NoTypeHints}
+import org.json4s.jackson.Serialization
+import scala.annotation.tailrec
+import scala.collection.mutable
 
 /** Minimal multi-versioned parquet "table" used as the local stand-in for a
-  * transactional sink (Delta/Iceberg/JDBC in production). Each commit
-  * writes a fresh `v=<n>` directory and readers always see committed
-  * versions only — a directory counts as committed iff its `_SUCCESS`
-  * marker landed (Spark's job commit writes it, or [[appendRows]]
-  * after its part file), so a crash mid-write leaves an ignorable
-  * partial dir rather than a phantom commit.
+  * transactional sink (Delta/Iceberg/JDBC in production), kept the way
+  * Spark's file sink keeps its output (`FileStreamSinkLog`): data files in
+  * version directories, and one commit log, `<root>/_log/<n>`, whose
+  * newest entry holds the whole live state — every version's id, files
+  * (name and size), schema, and, for a compacted base, the batch ids it
+  * folded ([[ParquetStateStore.Entry]]).
+  *
+  * A writer writes a version's files, then commits one entry, atomically
+  * (`CheckpointFileManager.createAtomic`, which refuses an existing id: a
+  * writer that loses an id to a concurrent writer re-applies its change
+  * over the winner's entry). An append, a compaction and each truncation
+  * are one entry each. Files no entry names are invisible: a crash
+  * between a file write and its entry leaves garbage, not a commit.
+  *
+  * A reader reads the newest entry and builds its frame over the entry's
+  * files with the entry's schemas: no directory listing, no schema job,
+  * and nothing a concurrent writer can change under it. Readers NEVER
+  * mutate the filesystem.
   *
   * Also the idempotence point for streaming: `append(batchId)` is a no-op
-  * iff that batch id was already *committed*, which upgrades foreachBatch's
+  * iff the newest entry already holds that batch, as its own version or
+  * folded into a compacted base, which upgrades foreachBatch's
   * at-least-once replay to effectively-once (reference's analogue:
-  * broker.commit after flush, synch/replication/continuous.py:163); a
-  * replay over a partial dir rewrites it.
+  * broker.commit after flush, synch/replication/continuous.py:163).
   *
-  * Single writer assumed (one streaming query owns a store) — matching a
-  * per-table sink; concurrent readers see the last committed version.
-  * Readers NEVER mutate the filesystem (they resolve an in-flight
-  * compaction swap logically, [[versions]]); only writer entry points run
-  * the destructive swap recovery, so any number of concurrent readers is
-  * safe alongside the single writer.
+  * Garbage: a directory the newest entry neither lists nor has dropped
+  * within [[ParquetStateStore.GraceMs]] is deleted by the next commit once
+  * its own modification time is that old too, so a reader of an older
+  * entry, or a concurrent writer still writing, keeps its files for the
+  * grace period. The log keeps its newest [[ParquetStateStore.RetainedEntries]].
+  *
+  * A store with `v=` directories and no `_log` was written before the
+  * log existed and is refused; rebuild it with `etl --renew`. A writer
+  * creates `_log` before its first data write, so a crash before the
+  * first entry reads as an empty store.
   */
 final class ParquetStateStore(spark: SparkSession, root: String) {
-  private val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  import ParquetStateStore._
 
-  private def committed(p: Path): Boolean = fs.exists(new Path(p, "_SUCCESS"))
+  private val conf = spark.sparkContext.hadoopConfiguration
+  private val fs = new Path(root).getFileSystem(conf)
+  private val rootPath = fs.makeQualified(new Path(root))
+  private val logDir = new Path(rootPath, "_log")
+  private lazy val log = CheckpointFileManager.create(logDir, conf)
 
-  private val CompactTmpPrefix = ".compact_tmp_v="
-  private val CompactStagePrefix = ".compact_stage_v="
-
-  /** The ONE superseded-stale-tmp rule, shared by the reader view and the
-    * physical recovery (meta review: two hand-copied predicates drift —
-    * the repo's own r13 lesson): a marked tmp at `keep` is stale garbage
-    * when a settled compacted base STRICTLY NEWER than keep exists among
-    * `entries` — that base already folds everything the tmp folds, and
-    * presenting/renaming the tmp beside it would double-count. Strictly
-    * `>`: a marked tmp at the SAME version as a settled base is a
-    * legitimate re-compaction whose content may differ (the dead-letter
-    * drain's rename compact re-compacts a store whose latest version is
-    * already a settled base when every replayed batch no-op'd) — the
-    * meta chain caught `>=` silently discarding exactly that rename. */
-  private def supersededBySettled(entries: Seq[(Long, Path)], keep: Long): Boolean =
-    entries.exists { case (v, p) =>
-      v > keep && fs.exists(new Path(p, CompactedMarker)) }
-
-  /** Complete (or discard) an in-flight compaction swap — WRITER-ONLY.
-    * The compaction's logical commit point is the [[CompactedMarker]]
-    * inside the fully written tmp dir: once present, the tmp IS the state
-    * through version K, so recovery deletes every superseded `v<=K` dir
-    * and renames the tmp into place; without the marker the tmp is
-    * garbage from a crashed write and is dropped.
-    *
-    * Only mutating entry points run this. Readers resolve the SAME view
-    * logically in [[versions]] without touching the filesystem — two
-    * concurrent readers running this destructively would race each other
-    * (reader B's inner listing sees reader A's freshly renamed `v=K`,
-    * deletes it as superseded, and B's rename of the now-gone tmp fails
-    * silently → committed base lost), and a reader could delete the
-    * writer's fully-written-but-not-yet-marked tmp out from under the
-    * marker creation. Writer-only mutation + the single-writer contract
-    * makes the swap race-free.
-    */
-  private def recoverCompaction(keepStage: Option[Path] = None): Unit = {
-    val dir = new Path(root)
-    if (!fs.exists(dir)) return
-    // ASCENDING keep order + checked rename (r14 review): normally at most
-    // one marked tmp exists, but a failed (unchecked) rename here used to
-    // leave the old marked tmp behind while a later compact added a newer
-    // one — and settling the NEWER first would then resurrect the older
-    // tmp as a superseded base NEXT to the new one, duplicating every
-    // batch it folds (sign-sum corruption on the collapsing engines).
-    // Oldest-first, each settle deletes everything its keep supersedes and
-    // the newest settle sweeps the earlier-settled bases away; a rename
-    // failure now throws instead of silently deferring half a swap.
-    fs.listStatus(dir).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(CompactTmpPrefix))
-      .sortBy(_.getPath.getName.stripPrefix(CompactTmpPrefix).toLong)
-      .foreach { s =>
-        val keep = s.getPath.getName.stripPrefix(CompactTmpPrefix).toLong
-        // a marked tmp SUPERSEDED by an already-settled newer compacted
-        // base is garbage, not state (meta review: legacy pre-fix damage
-        // could leave {settled v=12 base, stale marked tmp9} — renaming
-        // tmp9 in would resurrect batches <=9 beside the base that
-        // already folds them); one rule shared with the reader view
-        val settled = fs.listStatus(dir).toSeq
-          .filter(v => v.isDirectory && v.getPath.getName.startsWith("v="))
-          .map(v => (v.getPath.getName.stripPrefix("v=").toLong, v.getPath))
-        if (!fs.exists(new Path(s.getPath, CompactedMarker)) ||
-            supersededBySettled(settled, keep))
-          fs.delete(s.getPath, true)
-        else {
-          settled.filter(_._1 <= keep).foreach { case (_, p) => fs.delete(p, true) }
-          if (!fs.rename(s.getPath, new Path(s"$root/v=$keep")))
-            throw new java.io.IOException(
-              s"recoverCompaction: rename ${s.getPath} -> $root/v=$keep failed; " +
-                "refusing to continue with a half-settled swap")
-        }
-        ()
-      }
-    // a crashed compact's write-stage is garbage (it never reached the
-    // tmp+marker commit point); `keepStage` protects the live compact's
-    // own — compared by NAME, since listStatus returns qualified paths
-    fs.listStatus(dir).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(CompactStagePrefix) &&
-        !keepStage.exists(_.getName == s.getPath.getName))
-      .foreach(s => fs.delete(s.getPath, true))
+  /** The newest entry with its id; None when the store has none. A log
+    * entry that cannot be read or parsed fails the call. */
+  private def newest(): Option[(Long, Entry)] = {
+    val ids = try fs.listStatus(logDir).flatMap(s => s.getPath.getName.toLongOption)
+      catch { case _: FileNotFoundException => refuseOldFormat(); Array.empty[Long] }
+    ids.maxOption.map(n => n -> read(new Path(logDir, n.toString)))
   }
 
-  /** Committed versions as a NON-MUTATING logical view: a marker-committed
-    * compaction tmp is presented as its target version (hiding the
-    * superseded `v<=K` dirs it replaces); an unmarked tmp is invisible.
-    * The physical swap happens later, on the next writer operation. A
-    * reader racing the writer's swap can still lose a path between
-    * listing and reading (transient, retryable) — but never causes or
-    * observes data loss. */
-  private def versions: Seq[(Long, Path)] = {
-    val dir = new Path(root)
-    if (!fs.exists(dir)) return Nil
-    val entries = fs.listStatus(dir).toSeq.filter(_.isDirectory)
-    val committedVs = entries
-      .filter(s => s.getPath.getName.startsWith("v=") && committed(s.getPath))
-      .map(s => (s.getPath.getName.stripPrefix("v=").toLong, s.getPath))
-    val tmps = entries
-      .filter(_.getPath.getName.startsWith(CompactTmpPrefix))
-      .map(s => (s.getPath.getName.stripPrefix(CompactTmpPrefix).toLong, s.getPath))
-      .filter { case (_, p) => fs.exists(new Path(p, CompactedMarker)) }
-    tmps.sortBy(_._1).foldLeft(committedVs) { case (vs, (keep, tmpP)) =>
-      // the marked tmp supersedes EVERY v<=keep — including v=keep itself:
-      // compact keeps the latest version number, so the ordinary delta dir
-      // at v=keep coexists with the tmp until the physical swap (and a
-      // re-compact's tmp over an older base at the same keep is
-      // content-identical by resolver idempotence). The REVERSE also
-      // holds (meta review): a marked tmp superseded by an
-      // already-settled compacted base at version >= keep is stale
-      // garbage (legacy pre-r14 recovery damage) — presenting it beside
-      // the base would double-count every batch it folds.
-      if (supersededBySettled(vs, keep)) vs
-      else vs.filter(_._1 > keep) :+ ((keep, tmpP))
-    }.sortBy(_._1)
+  private def read(entry: Path): Entry =
+    try {
+      val in = fs.open(entry)
+      try Serialization.read[Entry](new InputStreamReader(in, UTF_8)) finally in.close()
+    } catch {
+      case e: Exception =>
+        throw new IllegalStateException(s"cannot read state store log entry $entry", e)
+    }
+
+  private def refuseOldFormat(): Unit =
+    if (fs.exists(rootPath) && fs.listStatus(rootPath).exists(_.getPath.getName.startsWith("v=")))
+      throw new IllegalStateException(
+        s"state store $root has `v=` directories and no `_log`: it was written before " +
+          "the store kept a commit log; rebuild it with `etl --renew`")
+
+  private def current(): Entry = latest()._2
+
+  /** The newest entry and its id, -1 when there is none. */
+  private def latest(): (Long, Entry) = newest().getOrElse((-1L, Entry.empty))
+
+  /** The newest entry, for a writer about to write data files: `_log` is
+    * created first, so a crash before the first entry leaves an empty
+    * store rather than one that reads as old-format. */
+  private def startWriting(): (Long, Entry) = {
+    val cur = latest()
+    if (cur._1 < 0) fs.mkdirs(logDir)
+    cur
   }
 
-  def latestVersion: Option[Long] = versions.lastOption.map(_._1)
-
-  /** (version id, bytes, isCompactedBase) per committed version — the
-    * input to [[SinkStrategy.shouldCompact]]'s scheduling decision. */
-  def versionStats(): Seq[(Long, Long, Boolean)] = versions.map { case (v, p) =>
-    (v, fs.getContentSummary(p).getLength, fs.exists(new Path(p, CompactedMarker)))
-  }
-
-  def isEmpty: Boolean = versions.isEmpty
-
-  def read(): Option[DataFrame] =
-    versions.lastOption.map { case (_, p) => spark.read.parquet(p.toString) }
-
-  /** Write `df` as the next version; returns the committed version. */
-  def write(df: DataFrame, batchId: Option[Long] = None): Long = {
-    recoverCompaction() // writer entry: settle any pending swap physically
-    val next = batchId.getOrElse(latestVersion.getOrElse(-1L) + 1L)
-    if (latestVersion.exists(_ >= next)) next // replay of a committed batch: no-op
-    else {
-      df.write.mode(SaveMode.Overwrite).parquet(s"$root/v=$next")
-      next
+  /** Commit `change` of the newest entry as the next entry (nothing when
+    * it changes no version), then collect garbage. The first attempt
+    * changes `from`; when another writer has committed since, the change
+    * is applied again over its entry. */
+  @tailrec private def commit(change: Entry => Entry, from: (Long, Entry) = latest()): Unit = {
+    val (n, cur) = from
+    val changed = change(cur)
+    if (changed.versions != cur.versions) {
+      val now = System.currentTimeMillis()
+      val live = changed.versions.map(_.dir).toSet
+      val next = changed.pruned.copy(dropped = (cur.dropped.filter(_.atMs > now - GraceMs) ++
+        cur.versions.map(v => Dropped(v.dir, now))).filterNot(d => live(d.dir)))
+      if (add(n + 1, next)) collectGarbage(n + 1, next, now)
+      else commit(change, latest())
     }
   }
 
-  /** Append-only log flavor: one subdir per batch, read() unions all.
-    * Overwrite (not ErrorIfExists): the only way the dir can pre-exist
-    * without being committed is a crashed write of this same batch.
+  /** Write entry `n`; false when another writer committed `n` first. */
+  private def add(n: Long, e: Entry): Boolean = {
+    val out = log.createAtomic(new Path(logDir, n.toString), false)
+    try { out.write(Serialization.write(e).getBytes(UTF_8)); out.close(); true }
+    catch {
+      case _: FileAlreadyExistsException => out.cancel(); false
+      case t: Throwable => out.cancel(); throw t
+    }
+  }
+
+  private def collectGarbage(n: Long, e: Entry, now: Long): Unit = {
+    unnamed(e).filter(_.getModificationTime < now - GraceMs).foreach(s => fs.delete(s.getPath, true))
+    fs.listStatus(logDir).flatMap(_.getPath.getName.toLongOption)
+      .filter(_ <= n - RetainedEntries).foreach(i => fs.delete(new Path(logDir, i.toString), false))
+  }
+
+  private def unnamed(e: Entry): Seq[FileStatus] = {
+    val named = e.versions.map(_.dir).toSet ++ e.dropped.map(_.dir) + logDir.getName
+    if (!fs.exists(rootPath)) Nil
+    else fs.listStatus(rootPath).toSeq.filter(s => s.isDirectory && !named(s.getPath.getName))
+  }
+
+  /** Directories under the root that the newest entry neither lists nor
+    * has dropped: the files of a write whose entry was never committed
+    * (its writer crashed, or is still writing). The garbage collector
+    * deletes them once [[ParquetStateStore.GraceMs]] old. */
+  def unnamedDirs(): Seq[String] = unnamed(current()).map(_.getPath.getName)
+
+  /** The data files of version directory `dir`, as just written. */
+  private def filesIn(dir: String): Seq[DataFile] =
+    fs.listStatus(new Path(rootPath, dir)).toSeq
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+      .map(s => DataFile(s.getPath.getName, s.getLen))
+
+  def latestVersion: Option[Long] = current().versions.lastOption.map(_.id)
+
+  /** (version id, bytes, isCompactedBase) per live version — the input to
+    * [[SinkStrategy.shouldCompact]]'s scheduling decision. */
+  def versionStats(): Seq[(Long, Long, Boolean)] =
+    current().versions.map(v => (v.id, v.files.map(_.size).sum, v.compacted))
+
+  def isEmpty: Boolean = current().versions.isEmpty
+
+  /** Ids of the live versions, oldest first. */
+  def versionIds(): Seq[Long] = current().versions.map(_.id)
+
+  /** True when the newest entry holds batch `batchId`: as its own version,
+    * or folded into a compacted base. */
+  def committed(batchId: Long): Boolean = current().holds(batchId)
+
+  /** Every live version as one frame (see [[frame]]). */
+  def readLog(): Option[DataFrame] = newest().flatMap { case (_, e) => frame(e, e.versions) }
+
+  /** ONE live version, with its own schema (None if that id isn't live). */
+  def readVersion(batchId: Long): Option[DataFrame] =
+    newest().flatMap { case (_, e) => frame(e, e.versions.filter(_.id == batchId)) }
+
+  /** Versions `vs` of `e` as one frame over their files. The columns are
+    * the union of the versions' schemas, oldest first; a column a version
+    * lacks reads as null. A snapshot base written before a
+    * schema-carrying delta (e.g. MergeTree's `_batch` stamp) therefore
+    * does not decide the schema alone.
     *
-    * "Committed" includes batches a compaction FOLDED (r14): the fold
-    * deletes the per-batch delta dirs, so the dir check alone would let a
-    * replay of a folded batch re-append rows the compacted base already
-    * contains — harmless for the LWW engines (identical rows, same
-    * winner) but corrupting for the collapsing family, whose sign-sum
-    * counts the duplicate +1 and a later single -1 then leaves a deleted
-    * row alive. Found by the rewind × dead-letter composition: a
-    * post-rewind drain's rename compact folds the drained batch ids, and
-    * the restarted stream then replays exactly those ids from the broker
-    * (RewindDrainSpec pins the shape). The folded ids travel in the
-    * compaction marker — see [[compact]]. */
+    * A type-CHANGING DDL (MODIFY COLUMN INT -> BIGINT) leaves versions
+    * whose column types conflict. Every version is then aligned to the
+    * newest version's type by explicit cast instead: widening history is
+    * exact; a NARROWING change with out-of-range history fails the cast
+    * loudly (ANSI), which is the correct surface for genuinely lossy
+    * evolution. */
+  private def frame(e: Entry, vs: Seq[Version]): Option[DataFrame] =
+    if (vs.isEmpty) None
+    else {
+      val schemas = vs.map(_.schema).distinct
+        .map(i => i -> DataType.fromJson(e.schemas(i)).asInstanceOf[StructType]).toMap
+      val target = mutable.LinkedHashMap.empty[String, StructField]
+      vs.foreach(v => schemas(v.schema).fields.foreach(f => target(f.name) = f.copy(nullable = true)))
+      val union = StructType(target.values.toSeq)
+      if (schemas.values.forall(_.fields.forall(f => target(f.name).dataType == f.dataType)))
+        Some(relation(vs, union))
+      else Some(vs.groupBy(_.schema).toSeq.sortBy(_._2.head.id).map { case (i, g) =>
+        val have = schemas(i).fieldNames.toSet
+        relation(g, schemas(i)).select(union.fields.toSeq.map { f =>
+          (if (have(f.name)) col(f.name) else lit(null)).cast(f.dataType).as(f.name)
+        }: _*)
+      }.reduce(_.unionByName(_)))
+    }
+
+  private def relation(vs: Seq[Version], schema: StructType): DataFrame =
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      new LogFileIndex(vs.flatMap(v => v.files.map(f =>
+        new FileStatus(f.size, false, 0, 0, 0, new Path(rootPath, s"${v.dir}/${f.name}"))))),
+      new StructType(), schema, None, new ParquetFileFormat, Map.empty)(spark))
+
+  /** Append-only log flavor: one directory per batch, [[readLog]] unions
+    * all. Overwrite (not ErrorIfExists): the only way the directory can
+    * pre-exist without the newest entry holding its batch is a crashed
+    * write of this same batch, or a version a truncation dropped.
+    *
+    * "Holds" includes batches a compaction FOLDED: a replay of a folded
+    * batch must not re-append rows the compacted base already contains —
+    * harmless for the LWW engines (identical rows, same winner) but
+    * corrupting for the collapsing family, whose sign-sum counts the
+    * duplicate +1 and a later single -1 then leaves a deleted row alive.
+    * Found by the rewind × dead-letter composition: a post-rewind
+    * drain's rename compact folds the drained batch ids, and the
+    * restarted stream then replays exactly those ids from the broker
+    * (RewindDrainSpec pins the shape). */
   def append(df: DataFrame, batchId: Long): Unit =
-    appendVersion(batchId)(p => df.write.mode(SaveMode.Overwrite).parquet(p.toString))
+    appendVersion(batchId, df.schema)(dir => df.write.mode(SaveMode.Overwrite).parquet(dir.toString))
 
   /** [[append]] of a delta already collected on the driver (the consume
-    * loop's one-partition batches): one part file written through
-    * [[DriverParquetWriter]] in place, then the `_SUCCESS` marker. The
-    * commit point is the same marker, so a crash before it leaves the
-    * same invisible partial dir, which the replay deletes first just as
-    * Overwrite does. */
+    * loop's one-partition batches): any leftover of the batch's
+    * directory is deleted, then one part file is written through
+    * [[DriverParquetWriter]] in place. The commit point is the same
+    * entry. */
   def appendRows(rows: DriverRows.Rows, batchId: Long): Unit =
-    appendVersion(batchId) { p =>
-      fs.delete(p, true)
-      DriverParquetWriter.write(spark, rows, p.toString)
-      fs.create(new Path(p, "_SUCCESS"), true).close()
+    appendVersion(batchId, rows.schema) { dir =>
+      fs.delete(dir, true)
+      DriverParquetWriter.write(spark, rows, dir.toString)
+      ()
     }
 
-  /** Run `write` into `v=<batchId>` unless that batch is already
-    * committed or folded (see [[append]]). */
-  private def appendVersion(batchId: Long)(write: Path => Unit): Unit = {
-    recoverCompaction() // writer entry: settle any pending swap physically
-    val p = new Path(s"$root/v=$batchId")
-    if (committed(p)) return
-    val folded = versions.exists { case (v, vp) =>
-      v >= batchId && fs.exists(new Path(vp, CompactedMarker)) &&
-        foldedIds(vp).contains(batchId)
+  private def appendVersion(batchId: Long, schema: StructType)(write: Path => Unit): Unit = {
+    val from = startWriting()
+    if (!from._2.holds(batchId)) {
+      val dir = s"v=$batchId"
+      write(new Path(rootPath, dir))
+      val v = Version(batchId, dir, filesIn(dir), 0, compacted = false, Nil)
+      commit(e => if (e.holds(batchId)) e else e.plus(v, schema.json), from)
     }
-    if (!folded) write(p)
-  }
-
-  /** Each version with its directory's modification time, which moves
-    * when a file inside is deleted or the directory is replaced by a
-    * rename. A missing directory reads as -1. */
-  private def stamped(vs: Seq[(Long, Path)]): Seq[((Long, Path), Long)] =
-    vs.map { case v @ (_, p) =>
-      v -> (try fs.getFileStatus(p).getModificationTime
-            catch { case _: java.io.FileNotFoundException => -1L })
-    }
-
-  /** Committed versions, schema-merged: a snapshot base written before a
-    * schema-carrying delta (e.g. MergeTree's `_batch` stamp) must not
-    * decide the union schema alone.
-    *
-    * A reader racing the writer's compaction swap can list a stale view:
-    * the version listing can miss both the superseded dirs (deleted
-    * before their `_SUCCESS` check) and the tmp that replaces them
-    * (listed before it existed), and the frame's own file listing can
-    * catch a superseded dir mid-delete and hold only part of it. Either
-    * way a version it used is gone or changed (its directory's
-    * modification time moves) by the time the frame is built, so the
-    * read is retried until every version it used is still listed,
-    * unchanged, afterwards. A file deleted after that fails the read
-    * loudly instead. */
-  def readLog(): Option[DataFrame] = {
-    val before = stamped(versions)
-    val log = mergedLog(before.map(_._1))
-    val after = stamped(versions)
-    if (before.isEmpty == after.isEmpty && before.forall(after.contains)) log
-    else readLog()
-  }
-
-  private def mergedLog(vs: Seq[(Long, Path)]): Option[DataFrame] =
-    if (vs.isEmpty) None
-    else
-      try Some(spark.read.option("mergeSchema", "true")
-        .parquet(vs.map(_._2.toString): _*))
-      catch {
-        // A type-CHANGING DDL (MODIFY COLUMN INT -> BIGINT) leaves
-        // committed versions whose column types conflict, which parquet
-        // schema merging refuses outright — and add/drop alone can't
-        // trigger this branch (mergeSchema handles those). Align every
-        // version to the newest generation's types by explicit cast
-        // instead: widening history is exact; a NARROWING change with
-        // out-of-range history fails the cast loudly (ANSI), which is
-        // the correct surface for genuinely lossy evolution.
-        case e @ (_: org.apache.spark.SparkException |
-                  _: org.apache.spark.sql.AnalysisException)
-            if isMergeConflict(e) =>
-          import org.apache.spark.sql.functions.{col, lit}
-          val frames = vs.map { case (_, p) => spark.read.parquet(p.toString) }
-          // newest occurrence of each column wins its type; insertion
-          // order keeps oldest-first column layout like mergeSchema
-          val target = scala.collection.mutable.LinkedHashMap
-            .empty[String, org.apache.spark.sql.types.StructField]
-          frames.foreach(_.schema.fields.foreach(f => target(f.name) = f))
-          val tgt = target.values.toSeq
-          val aligned = frames.map { df =>
-            val have = df.schema.fieldNames.toSet
-            df.select(tgt.map { f =>
-              if (have(f.name)) col(f.name).cast(f.dataType).as(f.name)
-              else lit(null).cast(f.dataType).as(f.name)
-            }: _*)
-          }
-          Some(aligned.reduce(_.unionByName(_)))
-      }
-
-  private def deepMessage(t: Throwable): String = {
-    val sb = new StringBuilder
-    var cur: Throwable = t
-    while (cur != null) { sb.append(Option(cur.getMessage).getOrElse("")); cur = cur.getCause }
-    sb.toString
-  }
-
-  /** True iff the failure is parquet schema-merge type incompatibility.
-    * Matched primarily on the structured error condition (walking the
-    * cause chain — the merge failure is usually wrapped in a task/job
-    * SparkException), with the message substring kept as a fallback for
-    * wrappers that don't implement SparkThrowable; matching only the
-    * message would silently break if a Spark upgrade reworded it. */
-  private def isMergeConflict(t: Throwable): Boolean = {
-    var cur: Throwable = t
-    while (cur != null) {
-      cur match {
-        case st: org.apache.spark.SparkThrowable
-            if Option(st.getCondition).exists(_.startsWith("CANNOT_MERGE")) =>
-          return true
-        case _ =>
-      }
-      cur = cur.getCause
-    }
-    deepMessage(t).contains("CANNOT_MERGE_INCOMPATIBLE_DATA_TYPE")
   }
 
   /** Drop versions with id > `batchId` — the state-side half of a resume
     * rewind ([[graft.run.Resume]]): batch-id idempotence would otherwise
     * skip the replayed batches. Refuses when the surviving data lives in
-    * a compaction newer than the target batch — that directory holds rows
-    * from batches ≤ `batchId`, and deleting it would lose them (recover
+    * a compaction newer than the target batch — that version holds rows
+    * from batches ≤ `batchId`, and dropping it would lose them (recover
     * via `etl --renew` + fresh consume instead).
     */
   def truncateAfter(batchId: Long): Unit = {
-    recoverCompaction() // writer entry: settle any pending swap physically
     truncateAfterBlocker(batchId).foreach(reason =>
       throw new IllegalStateException(
         s"cannot rewind to batch $batchId: $reason; " +
           "re-bootstrap the store instead"))
-    versions.filter(_._1 > batchId).foreach { case (_, p) => fs.delete(p, true) }
+    commit(e => e.copy(versions = e.versions.filter(_.id <= batchId)))
   }
 
   /** The validation half of [[truncateAfter]], mutation-free: Some(reason)
     * when the truncation would refuse. Lets a multi-store rewind
     * ([[graft.run.Resume.rewind]]) check EVERY store before mutating any
-    * state or checkpoint — the r13 review found that failing on store k
-    * after store 1..k-1 truncated (and after the checkpoint seek) left a
-    * half-rewound system whose restart silently swallowed replays. */
+    * state or checkpoint — failing on store k after store 1..k-1
+    * truncated (and after the checkpoint seek) would leave a half-rewound
+    * system whose restart silently swallowed replays. */
   def truncateAfterBlocker(batchId: Long): Option[String] =
-    versions.filter(_._1 > batchId)
-      .find { case (_, p) => fs.exists(new Path(p, CompactedMarker)) }
-      .map { case (v, _) =>
-        s"version $v is a compaction containing earlier batches" }
+    current().versions.find(v => v.id > batchId && v.compacted)
+      .map(v => s"version ${v.id} is a compaction containing earlier batches")
 
   /** Drop versions with id <= `batchId` — the dead-letter drain's bounded
     * clear: removes exactly the batches a drain snapshot replayed, leaving
     * anything parked AFTER the snapshot (a live skip-error stream keeps
     * recording while a drain runs; a full truncate would delete rows the
     * drain never saw). A compacted base at v <= batchId spans only batches
-    * <= v <= batchId, so deleting it is safe. */
-  def dropThrough(batchId: Long): Unit = {
-    recoverCompaction() // writer entry: settle any pending swap physically
-    versions.filter(_._1 <= batchId).foreach { case (_, p) => fs.delete(p, true) }
-  }
+    * <= v <= batchId, so dropping it is safe. */
+  def dropThrough(batchId: Long): Unit =
+    commit(e => e.copy(versions = e.versions.filter(_.id > batchId)))
 
-  /** Drop ONE committed version (dead-letter drainDdl: per-batch clear,
-    * so a crash between batches loses at most that batch's re-park).
-    * Refuses a compacted base like [[truncateAfter]]: that directory
-    * folds every batch <= its id, and a single "delete one version"
-    * call destroying all of them is the silent-data-loss shape (today's
-    * only caller, the dead-letter DDL store, never compacts — the guard
-    * protects future callers of this public method). */
-  def deleteVersion(batchId: Long): Unit = {
-    recoverCompaction() // writer entry: settle any pending swap physically
-    versions.find(_._1 == batchId).foreach { case (_, p) =>
-      if (fs.exists(new Path(p, CompactedMarker)))
+  /** Drop ONE live version (dead-letter drainDdl: per-batch clear, so a
+    * crash between batches loses at most that batch's re-park). Refuses
+    * a compacted base like [[truncateAfter]]: that version folds every
+    * batch <= its id, and a single "delete one version" call destroying
+    * all of them is the silent-data-loss shape. */
+  def deleteVersion(batchId: Long): Unit =
+    commit { e =>
+      if (e.versions.exists(v => v.id == batchId && v.compacted))
         throw new IllegalStateException(
           s"cannot delete version $batchId: it is a compaction containing " +
             "every earlier batch; use dropThrough/truncateAfter deliberately")
-      fs.delete(p, true)
+      e.copy(versions = e.versions.filterNot(_.id == batchId))
     }
-  }
-
-  /** Ids of the committed versions, oldest first — a pure listing (no
-    * Spark job), for callers that iterate versions as batches. */
-  def versionIds(): Seq[Long] = versions.map(_._1)
-
-  /** Read ONE committed version (None if that id isn't committed). */
-  def readVersion(batchId: Long): Option[DataFrame] =
-    versions.find(_._1 == batchId).map { case (_, p) =>
-      spark.read.parquet(p.toString) }
-
-  private val CompactedMarker = "_graft_compacted"
-
-  /** Batch ids a compaction folded, read from its marker (r14). An empty
-    * set for a pre-r14 legacy marker (no manifest) — those can't
-    * distinguish "folded" from "never applied", so [[append]] keeps its
-    * old always-write behavior for ids a legacy base might hold (the
-    * pre-r14 exposure, closed for every compaction written since). */
-  private def foldedIds(base: Path): Set[Long] = {
-    val m = new Path(base, CompactedMarker)
-    try {
-      val in = fs.open(m)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .map(_.trim).filter(_.nonEmpty).map(_.toLong).toSet
-      finally in.close()
-    } catch { case _: Exception => Set.empty }
-  }
 
   /** Compact the append-only log: materialize `resolved` as the single
     * surviving version (keeping the latest version number so batch-id
-    * idempotence still holds) and drop the per-batch deltas. The engine
-    * analogue of ClickHouse's background merge / OPTIMIZE: read-time
-    * resolution cost stays O(base + recent deltas) instead of O(history).
-    *
-    * Crash-safe, in two hops. The `resolved` plan may READ a pending
-    * marker-committed tmp (readers present it as the latest version), so
-    * the replacement is first fully materialized under a stage name that
-    * no plan can reference; only then — input fully consumed — is any
-    * pending swap settled and the stage promoted to the tmp name, whose
-    * [[CompactedMarker]] is the logical commit. [[recoverCompaction]]
-    * completes the physical swap (or discards an unmarked tmp / stale
-    * stage) on the next writer operation after any crash point, so no
-    * crash loses data or exposes a partial store. The marker also travels
-    * with the compacted dir so a later rewind knows it spans earlier
-    * batches.
+    * idempotence still holds) in a fresh `.compact_stage_v=<n>-<uuid>`
+    * directory, then commit one entry that replaces every version it
+    * folds. The engine analogue of ClickHouse's background merge /
+    * OPTIMIZE: read-time resolution cost stays O(base + recent deltas)
+    * instead of O(history). The base carries every batch id it folds
+    * (unioned across re-compactions), so a replay of a folded batch stays
+    * a no-op, and a later rewind knows it spans earlier batches.
     *
     * Correctness relies on the resolve functions being idempotent over
     * their own output (resolved rows keep pk/version/sign columns), which
     * [[SinkStrategy]] guarantees and ConsumeSpec asserts.
     */
   def compact(resolved: DataFrame): Unit = {
-    val vs = versions
-    if (vs.isEmpty) return
-    val keep = vs.last._1
-    // every batch id this fold makes disappear as a dir: the visible
-    // version ids, plus whatever a previous compacted base had already
-    // folded (a re-compaction folds the base too — dropping its manifest
-    // would re-open the replay window for the oldest batches)
-    val folded = vs.flatMap { case (v, p) =>
-      if (fs.exists(new Path(p, CompactedMarker))) foldedIds(p) + v else Seq(v)
-    }.distinct.sorted
-    val stage = new Path(s"$root/$CompactStagePrefix$keep")
-    if (fs.exists(stage)) fs.delete(stage, true)
-    resolved.write.mode(SaveMode.Overwrite).parquet(stage.toString)
-    // input plan fully executed: safe to settle a pending swap it may
-    // have been reading from
-    recoverCompaction(keepStage = Some(stage))
-    val tmp = new Path(s"$root/$CompactTmpPrefix$keep")
-    if (fs.exists(tmp)) fs.delete(tmp, true) // unmarked leftover
-    // the rename result MUST be checked: on a false return (quota, S3A
-    // semantics, interference) the marker create below would auto-create
-    // an EMPTY tmp dir that recovery then treats as the committed
-    // compaction — deleting every superseded version for a data-less swap
-    if (!fs.rename(stage, tmp))
-      throw new java.io.IOException(
-        s"compact: rename $stage -> $tmp failed; aborting before the marker commit")
-    // logical commit; the marker body is the folded-id manifest [[foldedIds]]
-    val mk = fs.create(new Path(tmp, CompactedMarker), true)
-    try mk.write(folded.mkString("\n").getBytes("UTF-8")) finally mk.close()
-    recoverCompaction() // physical swap, crash-resumable
+    val from @ (_, cur) = startWriting()
+    cur.versions.lastOption.foreach { last =>
+      val dir = s"$CompactPrefix${last.id}-${UUID.randomUUID}"
+      resolved.write.parquet(new Path(rootPath, dir).toString)
+      val folded = cur.versions.flatMap(v => v.folded :+ v.id).distinct.sorted
+      val base = Version(last.id, dir, filesIn(dir), 0, compacted = true, folded)
+      val gone = cur.versions.map(_.dir).toSet
+      commit(e => e.copy(versions = e.versions.filterNot(v => gone(v.dir))).plus(base, resolved.schema.json),
+        from)
+    }
+  }
+}
+
+object ParquetStateStore {
+
+  /** Entries the log keeps; older ones are deleted by the next commit. */
+  val RetainedEntries = 10
+
+  /** How long a directory the log stopped naming, or never named, waits
+    * before the garbage collector deletes it. */
+  val GraceMs = 60000L
+
+  /** Name prefix of a compaction's version directory. */
+  val CompactPrefix = ".compact_stage_v="
+
+  private implicit val formats: Formats = Serialization.formats(NoTypeHints)
+
+  private[sink] final case class DataFile(name: String, size: Long)
+
+  /** A live version: its files under `dir`, its schema as an index into
+    * the entry's `schemas`, and for a compacted base the batch ids it
+    * folded. */
+  private[sink] final case class Version(id: Long, dir: String, files: Seq[DataFile], schema: Int,
+                           compacted: Boolean, folded: Seq[Long])
+
+  /** A directory the log stopped naming at `atMs`, not yet deleted. */
+  private[sink] final case class Dropped(dir: String, atMs: Long)
+
+  /** One log entry: the store's whole live state. */
+  private[sink] final case class Entry(schemas: Seq[String], versions: Seq[Version], dropped: Seq[Dropped]) {
+
+    def holds(batchId: Long): Boolean =
+      versions.exists(v => v.id == batchId || v.folded.contains(batchId))
+
+    /** This entry with `v` added, its schema given as JSON. */
+    def plus(v: Version, schema: String): Entry = {
+      val i = schemas.indexOf(schema)
+      Entry(if (i >= 0) schemas else schemas :+ schema,
+        (versions :+ v.copy(schema = if (i >= 0) i else schemas.size)).sortBy(_.id), dropped)
+    }
+
+    /** This entry without the schemas no version uses. */
+    def pruned: Entry = {
+      val used = versions.map(_.schema).distinct.sorted
+      val at = used.zipWithIndex.toMap
+      copy(schemas = used.map(schemas), versions = versions.map(v => v.copy(schema = at(v.schema))))
+    }
+  }
+
+  private[sink] object Entry { val empty: Entry = Entry(Nil, Nil, Nil) }
+
+  /** The files of a log entry as a file index: what the scan reads is
+    * exactly what the entry names, with no listing. */
+  private final class LogFileIndex(files: Seq[FileStatus]) extends FileIndex {
+    def rootPaths: Seq[Path] = files.map(_.getPath)
+    def listFiles(partitionFilters: Seq[Expression], dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(InternalRow.empty, files.toArray))
+    def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+    def refresh(): Unit = ()
+    def sizeInBytes: Long = files.map(_.getLen).sum
+    def partitionSchema: StructType = new StructType()
   }
 }

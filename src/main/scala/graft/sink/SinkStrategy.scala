@@ -59,7 +59,7 @@ object SinkStrategy {
     val touchedKeys = latest.select(k.pkCols.map(col): _*).distinct()
     val survivors = state.join(broadcast(touchedKeys), k.pkCols, "left_anti")
     val upserts = latest.filter(col(actionCol) =!= "delete")
-      .select(state.columns.map(col): _*)
+      .select(state.columns.toSeq.map(col): _*)
     survivors.unionByName(upserts)
   }
 
@@ -110,7 +110,7 @@ object SinkStrategy {
     log.filter(col(signCol) =!= 0)
       .groupBy(k.pkCols.map(col): _*)
       .agg(sum(col(signCol).cast("long")).as("_net"),
-           max_by(when(pos, struct(valueCols.map(col): _*)),
+           max_by(when(pos, struct(valueCols.toSeq.map(col): _*)),
              when(pos, struct((k.versionCol +: k.tieBreakers).map(col): _*))).as("_last"))
       .filter(col("_net") > 0)
       .select(k.pkCols.map(col) ++ valueCols.map(c => col(s"_last.$c").as(c)): _*)
@@ -139,8 +139,8 @@ object SinkStrategy {
     val folded = log.filter(col(signCol) =!= 0)
       .groupBy(groupCols.map(col): _*)
       .agg(sum(col(signCol).cast("long")).as("_net"),
-           max_by(when(pos, struct(valueCols.map(col): _*)), when(pos, ord)).as("_pos"),
-           max_by(when(!pos, struct(valueCols.map(col): _*)), when(!pos, ord)).as("_neg"))
+           max_by(when(pos, struct(valueCols.toSeq.map(col): _*)), when(pos, ord)).as("_pos"),
+           max_by(when(!pos, struct(valueCols.toSeq.map(col): _*)), when(!pos, ord)).as("_neg"))
       .filter(col("_net") =!= 0)
       .withColumn("_row", when(col("_net") > 0, col("_pos")).otherwise(col("_neg")))
     folded.select(groupCols.map(col) ++ valueCols.map(c =>
@@ -158,7 +158,7 @@ object SinkStrategy {
     val valueCols = log.columns.filterNot(c => k.pkCols.contains(c))
     log.groupBy((k.pkCols :+ k.versionCol).map(col): _*)
       .agg(sum(col(signCol).cast("long")).as("_net"),
-           max_by(struct(valueCols.map(col): _*), col(signCol)).as("_row"))
+           max_by(struct(valueCols.toSeq.map(col): _*), col(signCol)).as("_row"))
       .filter(col("_net") > 0)
       .withColumn("_rn", row_number().over(
         Window.partitionBy(k.pkCols.map(col): _*).orderBy(col(k.versionCol).desc)))

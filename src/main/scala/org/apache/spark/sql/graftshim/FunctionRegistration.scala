@@ -65,7 +65,7 @@ object FunctionRegistration {
   /** Imperative per-session registration (tests, notebooks). */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, usage, b) =>
+    builders.foreach { case (name, _, b) =>
       reg.createOrReplaceTempFunction(name, b, "built-in")
     }
   }

@@ -259,12 +259,14 @@ class ConsumeSpec extends SparkSpec {
         case (shape, changelog) =>
           val Seq(viaSpark, viaDriver) = Seq(false, true).map { onDriver =>
             val base = s"$root/$engine-$shape-$onDriver"
-            applyBatch(t, new ParquetStateStore(spark, base), changelog, 0L, onDriver)
+            val store = new ParquetStateStore(spark, base)
+            applyBatch(t, store, changelog, 0L, onDriver)
+            // the store's newest log entry is the commit point of either write
+            assert(store.versionIds() == Seq(0L), s"$engine $shape onDriver=$onDriver")
             s"$base/v=0"
           }
           val what = s"$engine $shape"
           assert(partFiles(viaDriver) == 1, what)
-          assert(new java.io.File(s"$viaDriver/_SUCCESS").exists(), what)
           val (fs, fd) = (footer(viaSpark), footer(viaDriver))
           assert(fd.schema == fs.schema, what)
           assert(fd.metadata.getFileMetaData.getSchema == fs.metadata.getFileMetaData.getSchema, what)
@@ -541,9 +543,12 @@ class ConsumeSpec extends SparkSpec {
     val ids = Consume.currentState(tables.head, store).get
       .select("id").collect().map(_.getLong(0)).toSet
     assert(ids == Set(1L, 2L))
-    val versionDirs = Files.list(Paths.get(s"$root/state/db/mt")).toArray
-      .map(_.toString).count(_.contains("v="))
-    assert(versionDirs == 1, s"expected a single compacted version, got $versionDirs")
+    // the log's newest entry names one version, a compacted base; every
+    // other directory on disk is a version the log dropped, kept through
+    // the grace period for readers of older entries (none is unnamed)
+    assert(store.versionStats().map(_._3) == Seq(true),
+      s"expected a single compacted version, got ${store.versionStats()}")
+    assert(store.unnamedDirs().isEmpty, s"unnamed: ${store.unnamedDirs()}")
   }
 
   test("wire old_values: an UNSPLIT update applies on VersionedCollapsing end-to-end") {

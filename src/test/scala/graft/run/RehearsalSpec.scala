@@ -1,8 +1,9 @@
 package graft.run
 
 import graft.SparkSpec
+import graft.sink.ParquetStateStore
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
@@ -59,24 +60,35 @@ class RehearsalSpec extends SparkSpec {
   }
 
   test("a killed worker's phase is read off its checkpoint and stores") {
+    import spark.implicits._
     val work = Files.createTempDirectory("killphase")
     val tables = Rehearsal.tableSyncs(new StructType())
     def touch(rel: String): Unit = {
       val f = work.resolve(rel); Files.createDirectories(f.getParent); Files.createFile(f)
     }
-    def store(t: Int): Path = work.resolve(s"state/db/${tables(t).table}")
-    def phase = Rehearsal.killPhase(work.toString, tables)
+    def store(t: Int) = new ParquetStateStore(spark, work.resolve(s"state/db/${tables(t).table}").toString)
+    def phase(stale: Set[String] = Set.empty) = Rehearsal.killPhase(spark, work.toString, tables, stale)
     Seq("ckpt/offsets/0", "ckpt/offsets/1", "ckpt/offsets/.1.crc", "ckpt/commits/0",
       "ckpt/commits/1").foreach(touch)
-    assert(phase == "between_batches")
+    assert(phase() == "between_batches")
     touch("ckpt/offsets/2")
-    assert(phase == "before_apply")
-    Files.createDirectories(store(0).resolve("v=2"))
-    assert(phase == "apply")
-    touch("state/db/orders_mt/v=2/_SUCCESS"); touch("state/db/orders_rt/v=2/_SUCCESS")
-    assert(phase == "after_apply")
-    Files.createDirectories(store(1).resolve(".compact_stage_v=2"))
-    assert(phase == "compaction")
+    tables.indices.foreach(t => store(t).append(Seq(1L).toDF("id"), 1))
+    assert(phase() == "before_apply")
+    // a v=2 the log does not name: the apply of batch 2 began
+    Seq(2L).toDF("id").write.parquet(work.resolve(s"state/db/${tables(0).table}/v=2").toString)
+    assert(phase() == "apply")
+    // ...unless it was already there when the worker started
+    assert(phase(Rehearsal.unnamedDirs(spark, work.toString, tables)) == "before_apply")
+    tables.indices.foreach(t => store(t).append(Seq(2L).toDF("id"), 2))
+    assert(phase() == "after_apply")
+    // a compaction folds batch 2: its entry still holds it
+    store(1).compact(Seq(2L).toDF("id"))
+    assert(phase() == "after_apply")
+    // a compaction directory no entry names: a compaction was in flight
+    Seq(2L).toDF("id").write.parquet(
+      work.resolve(s"state/db/${tables(0).table}/${ParquetStateStore.CompactPrefix}2-x").toString)
+    assert(phase() == "compaction")
+    assert(phase(Rehearsal.unnamedDirs(spark, work.toString, tables)) == "after_apply")
   }
 
   test("a child JVM keeps the parent's flags but its initial heap, recordings and agents") {

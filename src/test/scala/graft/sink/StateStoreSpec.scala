@@ -2,15 +2,33 @@ package graft.sink
 
 import graft.SparkSpec
 import java.nio.file.{Files, Paths}
-import org.apache.hadoop.fs.Path
+import java.nio.file.attribute.FileTime
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graftshim.{DriverParquetWriter, DriverRows}
+import scala.jdk.CollectionConverters._
 
-/** ParquetStateStore swap-recovery contract: readers NEVER mutate the
-  * filesystem. The old design ran the destructive compaction recovery on
-  * every listing, so two concurrent readers could race each other into
-  * deleting the freshly renamed base (reader B's inner listing saw reader
-  * A's rename as a superseded version), and a reader could delete the
-  * writer's fully-written-but-not-yet-marked tmp. Now readers resolve the
-  * in-flight swap LOGICALLY and only writer entry points perform it.
+/** A raw local filesystem that counts the listing and status calls the
+  * thread in [[CountingFs.thread]] makes. */
+class CountingRawLocalFileSystem extends NoForkRawLocalFileSystem {
+  private def count(): Unit = if (Thread.currentThread eq CountingFs.thread) CountingFs.calls.incrementAndGet()
+  override def listStatus(f: Path): Array[FileStatus] = { count(); super.listStatus(f) }
+  override def getFileStatus(f: Path): FileStatus = { count(); super.getFileStatus(f) }
+}
+
+class CountingLocalFileSystem extends LocalFileSystem(new CountingRawLocalFileSystem)
+
+object CountingFs {
+  @volatile var thread: Thread = null
+  val calls = new AtomicLong
+}
+
+/** ParquetStateStore's commit-log contract: a reader sees exactly what the
+  * newest `_log` entry names and never mutates the filesystem; a writer
+  * writes files, then commits one entry; files no entry names are
+  * invisible, and the garbage collector deletes what the log stopped
+  * naming only after [[ParquetStateStore.GraceMs]].
   */
 class StateStoreSpec extends SparkSpec {
 
@@ -19,38 +37,59 @@ class StateStoreSpec extends SparkSpec {
     ids.toDF("id")
   }
 
-  private def crashAfterMarker(root: String, keep: Long): Unit = {
-    // simulate a compact that crashed after its logical commit: a fully
-    // written tmp dir carrying the marker, superseded v<=keep still present
-    val tmp = s"$root/.compact_tmp_v=$keep"
-    df(100L + keep).coalesce(1).write.parquet(tmp)
-    Files.createFile(Paths.get(tmp, "_graft_compacted"))
+  private def ids(d: org.apache.spark.sql.DataFrame): Seq[Long] =
+    d.collect().map(_.getLong(0)).toSeq.sorted
+
+  /** The directories in the store's root, `_log` aside. */
+  private def names(root: String): Set[String] =
+    Files.list(Paths.get(root)).toArray.map(_.toString.split('/').last).toSet - "_log"
+
+  /** The newest log entry's file. */
+  private def newestEntry(root: String): java.nio.file.Path =
+    Files.list(Paths.get(root, "_log")).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.forall(_.isDigit)).maxBy(_.getFileName.toString.toLong)
+
+  /** Move the store past the garbage grace period: the newest entry's
+    * drop times and every directory's modification time go to the epoch
+    * (the entry's checksum file goes, so it reads unverified). */
+  private def expireGrace(root: String): Unit = {
+    val e = newestEntry(root)
+    Files.writeString(e, Files.readString(e).replaceAll("\"atMs\":\\d+", "\"atMs\":0"))
+    Files.deleteIfExists(e.resolveSibling(s".${e.getFileName}.crc"))
+    names(root).foreach(n => Files.setLastModifiedTime(Paths.get(root, n), FileTime.fromMillis(0)))
+  }
+
+  /** A compaction that wrote its files and died before its entry. */
+  private def crashedCompaction(root: String, keep: Long): String = {
+    val dir = s"${ParquetStateStore.CompactPrefix}$keep-crashed"
+    df(100L + keep).coalesce(1).write.parquet(s"$root/$dir")
+    dir
   }
 
   test("readers present a marker-committed tmp logically without touching disk") {
+    // the compaction's directory is committed by its log entry: readers
+    // see the compacted view at once, and the superseded directories stay
+    // on disk, however often the store is read
     val root = Files.createTempDirectory("ssreader").toString + "/s"
     val store = new ParquetStateStore(spark, root)
     store.append(df(1), 0); store.append(df(2), 1)
-    crashAfterMarker(root, keep = 1)
+    store.compact(df(101))
+    val before = names(root)
 
-    // every read-side surface sees the compacted view...
     assert(store.latestVersion.contains(1L))
-    assert(store.read().get.collect().map(_.getLong(0)).toSeq == Seq(101L))
-    assert(store.readLog().get.collect().map(_.getLong(0)).toSeq == Seq(101L))
+    assert(ids(store.readLog().get) == Seq(101L))
+    assert(ids(store.readVersion(1L).get) == Seq(101L))
     assert(store.versionStats().map(v => (v._1, v._3)) == Seq((1L, true)))
+    assert(store.unnamedDirs().isEmpty)
 
-    // ...but NOTHING was deleted or renamed: the tmp and both superseded
-    // versions are still on disk after any number of reads
-    val names = Files.list(Paths.get(root)).toArray.map(_.toString.split('/').last).toSet
-    assert(names == Set("v=0", "v=1", ".compact_tmp_v=1"))
+    assert(names(root) == before)
+    assert(before.filterNot(_.startsWith(ParquetStateStore.CompactPrefix)) == Set("v=0", "v=1"))
   }
-
   test("a driver-path append replaces an uncommitted leftover of its batch") {
-    import org.apache.spark.sql.graftshim.{DriverParquetWriter, DriverRows}
     val root = Files.createTempDirectory("ssleftover").toString + "/s"
     val store = new ParquetStateStore(spark, root)
     store.appendRows(DriverRows.collect(df(1)), 0)
-    // a crash after the part file, before the _SUCCESS commit point
+    // a crash after the part file, before the entry that commits it
     DriverParquetWriter.write(spark, DriverRows.collect(df(7, 8)), s"$root/v=1")
     assert(store.versionIds() == Seq(0L))
     assert(store.readLog().get.collect().map(_.getLong(0)).toSeq == Seq(1L))
@@ -65,7 +104,6 @@ class StateStoreSpec extends SparkSpec {
 
   test("collectEach computes several frames in one job; a failing frame keeps its error") {
     import org.apache.spark.sql.functions.{col, lit, raise_error, when}
-    import org.apache.spark.sql.graftshim.DriverRows
     val ok = Seq(df(1, 2), df(3).withColumn("x", col("id") * 2))
     def ids(r: DriverRows.Rows) = r.rows.map(_.getLong(0)).toSeq
     val sc = spark.sparkContext
@@ -85,141 +123,111 @@ class StateStoreSpec extends SparkSpec {
   }
 
   test("an unmarked tmp (crashed pre-commit) is invisible to readers and survives reads") {
+    // a compaction's files fully written WITHOUT its entry — the crash
+    // point between the file write and the commit; the directory is
+    // unnamed, and deleting it is the garbage collector's job, after the
+    // grace period, never a reader's
     val root = Files.createTempDirectory("ssunmarked").toString + "/s"
     val store = new ParquetStateStore(spark, root)
     store.append(df(1), 0)
-    // a fully written tmp WITHOUT the marker — the crash point between
-    // parquet write and logical commit; a reader deleting it would yank it
-    // out from under the writer's marker creation
-    df(99L).coalesce(1).write.parquet(s"$root/.compact_tmp_v=0")
+    val dir = crashedCompaction(root, keep = 0)
 
-    assert(store.read().get.collect().map(_.getLong(0)).toSeq == Seq(1L))
-    assert(Files.exists(Paths.get(s"$root/.compact_tmp_v=0")))
+    assert(ids(store.readLog().get) == Seq(1L))
+    assert(store.unnamedDirs() == Seq(dir))
+    assert(Files.exists(Paths.get(s"$root/$dir")))
   }
-
   test("the next writer operation settles the pending swap physically") {
+    // the superseded directories outlive the compaction's entry for the
+    // grace period (a reader of the older entry may still read them); the
+    // first writer operation after it deletes them
     val root = Files.createTempDirectory("sswriter").toString + "/s"
     val store = new ParquetStateStore(spark, root)
     store.append(df(1), 0); store.append(df(2), 1)
-    crashAfterMarker(root, keep = 1)
+    store.compact(df(101))
+    val base = names(root).filter(_.startsWith(ParquetStateStore.CompactPrefix))
 
-    store.append(df(3), 2) // writer entry runs the recovery
+    store.append(df(3), 2) // inside the grace period: nothing is deleted
+    assert(names(root) == Set("v=0", "v=1", "v=2") ++ base)
 
-    val names = Files.list(Paths.get(root)).toArray.map(_.toString.split('/').last).toSet
-    assert(names == Set("v=1", "v=2")) // swap completed, superseded v=0 gone
-    assert(store.readLog().get.collect().map(_.getLong(0)).toSet == Set(101L, 3L))
+    expireGrace(root)
+    store.append(df(4), 3) // writer entry runs the collection
+    assert(names(root) == Set("v=2", "v=3") ++ base)
+    assert(ids(store.readLog().get) == Seq(3L, 4L, 101L))
   }
-
   test("TWO marked tmps settle oldest-first to a single newest base (r14)") {
-    // r14 review: a transient rename failure (now checked/thrown) could
-    // leave an OLD marked tmp behind while a later compact added a newer
-    // one. Settling in listing order could settle the newer tmp first and
-    // then resurrect the older one NEXT to it — v=2 (folding batches
-    // <=2) beside v=4 (also folding them) duplicates every early batch,
-    // corrupting the collapsing engines' sign-sums. Recovery now sorts
-    // ascending, so the newest settle sweeps the earlier-settled base.
-    // keep ids chosen so LEXICAL listing order ("v=12" < "v=9") differs
-    // from numeric order — the exact shape that resurrected the stale base
+    // a compaction at keep 9 that died before its entry, then one at keep
+    // 12 that committed (keep ids whose LEXICAL order, "v=12" < "v=9",
+    // differs from numeric order): readers see only the committed base,
+    // and after the grace period the collector leaves it alone on disk
     val root = Files.createTempDirectory("sstwotmp").toString + "/s"
     val store = new ParquetStateStore(spark, root)
     (0L to 12L).foreach(i => store.append(df(i), i))
-    crashAfterMarker(root, keep = 9)  // stale tmp a failed rename left behind
-    crashAfterMarker(root, keep = 12) // the newer crashed compact
+    crashedCompaction(root, keep = 9)
+    store.compact(df(112))
+    val base = names(root).filter(_.endsWith("-crashed") == false)
+      .filter(_.startsWith(ParquetStateStore.CompactPrefix))
+    assert(ids(store.readLog().get) == Seq(112L))
 
-    store.append(df(13), 13) // writer entry runs the recovery
+    expireGrace(root)
+    store.append(df(13), 13) // writer entry runs the collection
 
-    val names = Files.list(Paths.get(root)).toArray.map(_.toString.split('/').last).toSet
-    assert(names == Set("v=12", "v=13"),
-      s"stale superseded base resurrected beside the newest compaction: $names")
-    assert(store.readLog().get.collect().map(_.getLong(0)).toSet == Set(112L, 13L))
+    assert(names(root) == base + "v=13",
+      s"stale superseded base resurrected beside the newest compaction: ${names(root)}")
+    assert(ids(store.readLog().get) == Seq(13L, 112L))
   }
-
-  test("settle ORDER is load-bearing in isolation: oldest-first refuses BEFORE the newer tmp settles (r16)") {
-    // r15 pin mutation-audit finding: reverting the ascending settle sort
-    // ALONE left every end-state pin green — once the newer tmp settles,
-    // supersededBySettled deletes the older tmp either way, so the order
-    // half of the r14 defense pair had no isolated teeth. The order IS
-    // observable through a blocked oldest rename: a FILE squatting at the
-    // oldest tmp's target (not a directory — neither a settled base nor
-    // swept by the <=keep delete) makes the checked rename fail. Oldest-
-    // first, recovery THROWS on tmp9 before touching tmp12 (refusing the
-    // half-settled swap, newest tmp left pending but logically intact);
-    // a newest-first revert settles v=12 first, then silently deletes
-    // tmp9 as superseded and never throws — this pin goes red on exactly
-    // that revert.
-    val root = Files.createTempDirectory("ssorder").toString + "/s"
-    val store = new ParquetStateStore(spark, root)
-    ((0L to 8L) ++ (10L to 12L)).foreach(i => store.append(df(i), i))
-    crashAfterMarker(root, keep = 9)  // stale tmp from a failed rename
-    crashAfterMarker(root, keep = 12) // the newer crashed compact
-    Files.createFile(Paths.get(s"$root/v=9")) // blocks tmp9's rename target
-
-    val e = intercept[java.io.IOException] { store.append(df(13), 13) }
-    assert(e.getMessage.contains("refusing to continue"), e.getMessage)
-    // the newer tmp was NOT settled first: it is still a pending tmp...
-    assert(Files.exists(Paths.get(s"$root/.compact_tmp_v=12")),
-      "oldest-first means tmp12 must still be pending when tmp9 refuses")
-    // ...and the logical reader view of the store is intact throughout
-    assert(store.readLog().get.collect().map(_.getLong(0)).toSet == Set(112L))
-  }
-
   test("a stale marked tmp OLDER than a settled compacted base is deleted, not resurrected (r14)") {
-    // legacy pre-r14 damage shape: the old unchecked lexical-order
-    // recovery could settle tmp12 first and silently fail tmp9's rename,
-    // leaving {settled v=12 base (marker inside), stale marked tmp9}.
-    // Both the logical reader view and the physical recovery must treat
-    // the stale tmp as superseded garbage — renaming (or presenting) it
-    // beside the base double-counts every batch <=9.
+    // a crashed compaction's directory beside a committed base: readers
+    // never see it; a writer keeps it through the grace period (it may be
+    // a concurrent writer's unfinished write) and deletes it after
     val root = Files.createTempDirectory("sstale").toString + "/s"
     val store = new ParquetStateStore(spark, root)
     (0L to 12L).foreach(i => store.append(df(i), i))
-    store.compact(df(112)) // settled base at v=12, marker inside
-    crashAfterMarker(root, keep = 9) // the stale leftover
+    store.compact(df(112))
+    val stale = crashedCompaction(root, keep = 9)
 
-    // readers: only the settled base, never the stale tmp
-    assert(store.readLog().get.collect().map(_.getLong(0)).toSet == Set(112L))
-    // writers: recovery deletes the stale tmp instead of renaming it in
+    assert(ids(store.readLog().get) == Seq(112L))
     store.append(df(13), 13)
-    val names = Files.list(Paths.get(root)).toArray.map(_.toString.split('/').last).toSet
-    assert(names == Set("v=12", "v=13"),
-      s"stale tmp resurrected beside the settled base: $names")
-    assert(store.readLog().get.collect().map(_.getLong(0)).toSet == Set(112L, 13L))
+    assert(names(root).contains(stale))
+    expireGrace(root)
+    store.append(df(14), 14)
+    assert(!names(root).contains(stale), s"stale compaction survived the grace: ${names(root)}")
+    assert(store.unnamedDirs().isEmpty)
+    assert(ids(store.readLog().get) == Seq(13L, 14L, 112L))
   }
-
   test("a re-compaction at the SAME version as the settled base survives (r14 meta)") {
-    // the meta chain caught `>=` in the superseded rule silently
-    // deleting exactly this: a store whose latest version is already a
-    // settled base re-compacts at the same keep with DIFFERENT content
-    // (the dead-letter drain's rename compact when every replayed batch
-    // no-op'd). The fresh same-keep tmp must WIN, not be dropped.
+    // a store whose latest version is already a compacted base
+    // re-compacts at the same version with DIFFERENT content (the
+    // dead-letter drain's rename compact when every replayed batch
+    // no-op'd): the fresh base must WIN, in a directory of its own
     val root = Files.createTempDirectory("ssrekeep").toString + "/s"
     val store = new ParquetStateStore(spark, root)
     store.append(df(1), 0); store.append(df(2), 1)
-    store.compact(df(50)) // settled base at v=1
-    assert(store.read().get.collect().map(_.getLong(0)).toSeq == Seq(50L))
-    store.compact(df(60)) // re-compaction at the SAME keep, new content
-    assert(store.read().get.collect().map(_.getLong(0)).toSeq == Seq(60L),
-      "same-keep re-compaction was discarded as superseded")
+    store.compact(df(50)) // compacted base at v=1
+    assert(ids(store.readLog().get) == Seq(50L))
+    store.compact(df(60)) // re-compaction at the SAME version, new content
+    assert(ids(store.readLog().get) == Seq(60L),
+      "same-version re-compaction was discarded")
+    assert(store.versionStats().map(v => (v._1, v._3)) == Seq((1L, true)))
     store.append(df(3), 2)
-    assert(store.readLog().get.collect().map(_.getLong(0)).toSet == Set(60L, 3L))
+    assert(ids(store.readLog().get) == Seq(3L, 60L))
   }
-
   test("compact over a store whose latest version IS a pending swap") {
-    // the resolved input plan reads the marker-committed tmp; compact must
-    // fully materialize it to the stage before settling the swap, or the
-    // plan's file listing dies under the rename
+    // the resolved input plan reads the files of the newest entry's base
+    // while the superseded directories still wait out the grace period;
+    // the re-compaction writes a new directory, so the input is never
+    // overwritten under the plan reading it
     val root = Files.createTempDirectory("sscompact").toString + "/s"
     val store = new ParquetStateStore(spark, root)
     store.append(df(1), 0); store.append(df(2), 1)
-    crashAfterMarker(root, keep = 1)
+    store.compact(df(101))
 
-    store.compact(store.readLog().get) // input := the logical view (the tmp)
+    store.compact(store.readLog().get) // input := the committed base
 
-    assert(store.readLog().get.collect().map(_.getLong(0)).toSeq == Seq(101L))
-    val names = Files.list(Paths.get(root)).toArray.map(_.toString.split('/').last).toSet
-    assert(names == Set("v=1"))
+    assert(ids(store.readLog().get) == Seq(101L))
+    assert(store.versionStats().map(v => (v._1, v._3)) == Seq((1L, true)))
+    assert(names(root).count(_.startsWith(ParquetStateStore.CompactPrefix)) == 2)
+    assert(store.unnamedDirs().isEmpty)
   }
-
   test("dropThrough removes exactly the ids at or below the bound") {
     val root = Files.createTempDirectory("ssdrop").toString + "/s"
     val store = new ParquetStateStore(spark, root)
@@ -243,62 +251,8 @@ class StateStoreSpec extends SparkSpec {
     assert(store.versionIds() == Seq(1L))
   }
 
-  test("negative control: the legacy destructive reader recovery loses the base " +
-      "under the documented two-reader interleaving") {
-    // the pre-fix design ran the physical swap recovery on EVERY listing,
-    // including reads. Deterministic step-through of the race the scaladoc
-    // names: readers A and B both observe the pending marker-committed tmp
-    // (stale views), A completes the swap (delete v<=K, rename tmp->v=K),
-    // then B's inner listing sees A's freshly renamed v=K as 'superseded',
-    // deletes it, and B's rename of the now-gone tmp fails silently — the
-    // committed base is LOST. This pins why readers must never mutate.
-    val root = Files.createTempDirectory("sslegacy").toString + "/s"
-    val store = new ParquetStateStore(spark, root)
-    store.append(df(1), 0); store.append(df(2), 1)
-    crashAfterMarker(root, keep = 1)
-
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmpP = fs.listStatus(new Path(root)).toSeq
-      .filter(_.getPath.getName.startsWith(".compact_tmp_v=")).map(_.getPath).head
-    val keep = 1L
-    // both readers pass the legacy recovery's marker check while the tmp
-    // still exists — the stale-view window
-    assert(fs.exists(new Path(tmpP, "_graft_compacted"))) // reader A's check
-    assert(fs.exists(new Path(tmpP, "_graft_compacted"))) // reader B's check
-    def legacyDeleteAndRename(): Unit = {
-      // the legacy recovery body after the marker check: delete every
-      // superseded v<=keep, then rename the tmp into place (result ignored)
-      fs.listStatus(new Path(root)).toSeq
-        .filter(v => v.isDirectory && v.getPath.getName.startsWith("v=") &&
-          v.getPath.getName.stripPrefix("v=").toLong <= keep)
-        .foreach(v => fs.delete(v.getPath, true))
-      // rename of a vanished source returns false on HDFS and throws on
-      // RawLocalFileSystem — either way the loss already happened at the
-      // delete above, so the control tolerates both shapes
-      try { fs.rename(tmpP, new Path(s"$root/v=$keep")); () }
-      catch { case _: java.io.FileNotFoundException => () }
-    }
-    legacyDeleteAndRename() // A: swap completes, v=1 is the renamed tmp
-    legacyDeleteAndRename() // B: deletes A's fresh v=1, rename of gone tmp no-ops
-    assert(new ParquetStateStore(spark, root).isEmpty,
-      "interleaving did not reproduce the legacy loss — update the scenario")
-
-    // the CURRENT reader path under the same stale-view interleaving:
-    // reads resolve the swap logically, mutate nothing, lose nothing
-    val root2 = Files.createTempDirectory("sslogical").toString + "/s"
-    val s2 = new ParquetStateStore(spark, root2)
-    s2.append(df(1), 0); s2.append(df(2), 1)
-    crashAfterMarker(root2, keep = 1)
-    val r1 = new ParquetStateStore(spark, root2)
-    val r2 = new ParquetStateStore(spark, root2)
-    assert(r1.read().get.collect().map(_.getLong(0)).toSeq == Seq(101L))
-    assert(r2.read().get.collect().map(_.getLong(0)).toSeq == Seq(101L))
-    assert(r1.read().get.collect().map(_.getLong(0)).toSeq == Seq(101L))
-    assert(!new ParquetStateStore(spark, root2).isEmpty)
-  }
-
   test("race: concurrent readers never observe a lost base across 50 append+compact cycles") {
-    // VERDICT r10 #2: N reader threads loop read()/readLog() while the
+    // VERDICT r10 #2: N reader threads loop readLog() while the
     // single writer loops append+compact. Every SUCCESSFUL read must
     // observe a complete committed state (all 5 keys present); transient
     // listing races (path deleted between list and read) are documented
@@ -345,5 +299,94 @@ class StateStoreSpec extends SparkSpec {
     assert(finalIds == keys.toSet)
     assert(writer.latestVersion.contains(50L))
     info(s"good=${goodReads.get} transient=${transients.get}")
+  }
+
+  test("reads cost the same at any store size: no Spark job, no per-version listing or stat") {
+    // a reader takes everything from the newest log entry: the Spark jobs
+    // and the listing and status calls of readLog, versionStats and
+    // versionIds must not grow with the number of versions
+    val rows = DriverRows.collect(df(1))
+    def store(n: Int): String = {
+      val root = Files.createTempDirectory(s"sscost$n").toString + "/s"
+      val s = new ParquetStateStore(spark, root)
+      (0 until n).foreach(b => s.appendRows(rows, b))
+      root
+    }
+    val (small, large) = (store(10), store(200))
+    val sc = spark.sparkContext
+    val hc = sc.hadoopConfiguration
+    val jobs = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    /** (jobs, listing and status calls) of the three reads of `root`, on
+      * a handle whose filesystem counts this thread's calls. */
+    def cost(root: String): (Long, Long) = {
+      val impl = hc.get("fs.file.impl")
+      hc.set("fs.file.impl", classOf[CountingLocalFileSystem].getName)
+      hc.setBoolean("fs.file.impl.disable.cache", true)
+      val counted = try new ParquetStateStore(spark, root) finally {
+        hc.set("fs.file.impl", impl); hc.unset("fs.file.impl.disable.cache")
+      }
+      jobs.set(0); CountingFs.calls.set(0); CountingFs.thread = Thread.currentThread
+      try {
+        assert(counted.readLog().isDefined)
+        assert(counted.versionStats().nonEmpty && counted.versionIds().nonEmpty)
+      } finally CountingFs.thread = null
+      sc.parallelize(Seq(1), 1).count() // flushes the listener bus past the reads
+      (jobs.get - 1, CountingFs.calls.get)
+    }
+    sc.addSparkListener(listener)
+    val (costSmall, costLarge) = try (cost(small), cost(large))
+      finally sc.removeSparkListener(listener)
+    assert(costSmall._1 == 0 && costLarge._1 == 0, s"Spark jobs: 10 versions $costSmall, 200 $costLarge")
+    assert(costLarge._2 == costSmall._2 && costSmall._2 > 0,
+      s"filesystem calls: 10 versions ${costSmall._2}, 200 versions ${costLarge._2}")
+    val all = new ParquetStateStore(spark, large)
+    assert(all.versionIds() == (0L until 200L))
+    assert(all.readLog().get.count() == 200)
+  }
+
+  test("a log entry that cannot be read fails append and readLog instead of reading as empty") {
+    // the folded batch ids live in the entry: an entry read as "nothing
+    // folded" would let the replay of a folded batch re-append its rows,
+    // which corrupts the sign sums of the collapsing engines
+    val root = Files.createTempDirectory("sscorrupt").toString + "/s"
+    val writer = new ParquetStateStore(spark, root)
+    writer.append(df(1), 0); writer.append(df(2), 1)
+    writer.compact(df(101))
+    val e = newestEntry(root)
+    Files.writeString(e, Files.readString(e).take(40))
+    Files.deleteIfExists(e.resolveSibling(s".${e.getFileName}.crc"))
+
+    val store = new ParquetStateStore(spark, root)
+    val onRead = intercept[IllegalStateException](store.readLog())
+    assert(onRead.getMessage.contains(e.getFileName.toString), onRead.getMessage)
+    intercept[IllegalStateException](store.append(df(2), 1)) // the replay of a folded batch
+    intercept[IllegalStateException](store.append(df(3), 2))
+    assert(!Files.exists(Paths.get(s"$root/v=2")), "the append wrote before reading the log")
+  }
+
+  test("a store written before the commit log is refused; one that died before its first entry is empty") {
+    val old = Files.createTempDirectory("ssold").toString + "/s"
+    df(1).write.parquet(s"$old/v=0")
+    val store = new ParquetStateStore(spark, old)
+    Seq[() => Any](() => store.readLog(), () => store.isEmpty, () => store.append(df(2), 1))
+      .foreach { op =>
+        val e = intercept[IllegalStateException](op())
+        assert(e.getMessage.contains("etl --renew"), e.getMessage)
+      }
+    assert(names(old) == Set("v=0") && !Files.exists(Paths.get(s"$old/_log")))
+
+    // the writer creates `_log` before its first data write: a crash
+    // between that write and the first entry leaves an empty store
+    val fresh = Files.createTempDirectory("ssfresh").toString + "/s"
+    Files.createDirectories(Paths.get(s"$fresh/_log"))
+    DriverParquetWriter.write(spark, DriverRows.collect(df(1)), s"$fresh/v=0")
+    val empty = new ParquetStateStore(spark, fresh)
+    assert(empty.isEmpty && empty.readLog().isEmpty)
+    assert(empty.unnamedDirs() == Seq("v=0"))
+    empty.append(df(7), 0) // the replay
+    assert(ids(empty.readLog().get) == Seq(7L))
   }
 }
