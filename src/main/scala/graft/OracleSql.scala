@@ -109,9 +109,9 @@ object OracleSql {
     * `documents` — the shared blocking front-end of the connected-
     * component / PageRank queries. Buckets holding more than `maxBucket`
     * documents are dropped before the self-join, mirroring
-    * [[graft.ops.DedupOps.minhashCandidates]]' hot-bucket cap (round-8
-    * fix: the graph-family queries ran this front-end UNCAPPED, and the
-    * sf10 rehearsal caught the in-bucket quadratic blow-up). */
+    * [[graft.ops.DedupOps.minhashCandidates]]' required hot-bucket cap
+    * (the sf10 rehearsal caught the uncapped front-end's in-bucket
+    * quadratic blow-up). */
   def minhashPairsCte(maxBucket: Int = 64): String =
     s"""${toksCte(lower = false)},
        |sh0 AS (SELECT doc_id, list_distinct(${shingles(3)}) AS sh FROM toks),

@@ -10,7 +10,11 @@ import org.apache.spark.sql.functions._
   * only joins are equi-joins on a small blocking key (content hash, LSH
   * band bucket, SimHash band slice), so the shuffle is keyed and bounded
   * and no O(n²) comparison ever materializes. Pairwise verification runs
-  * only within candidate buckets.
+  * only within candidate buckets. Every candidate-pair generator takes a
+  * REQUIRED bound, applied by one of three forms: [[capGroups]] (drop
+  * groups over a cap), [[cappedGroupPairs]] (capped groups → in-group
+  * pairs) or [[sortedNeighborhoodPairs]] (a rank window). No blocking
+  * key is ever self-joined unbounded.
   *
   * Implementation shape: shingles/tokens are *exploded to rows* and hashed
   * once by the codegen'd [[graft.functions.PolyHashExpr]]; signatures are
@@ -20,18 +24,16 @@ import org.apache.spark.sql.functions._
   * Catalyst's CollapseProject re-inlines single-use array columns,
   * recomputing them once per permutation/bit.
   *
-  * Eager/ownership contract of the CAPPED paths (r16 choreography;
-  * r17 doc per the round-16 advisor): when a hot-group cap is set,
-  * [[minhashLsh]], [[ngramJaccard]], [[containmentPairs]],
-  * [[incrementalNearLsh]] (and [[graft.ops.TextOps.winnowPairs]]) run
-  * their Spark jobs EAGERLY at DataFrame-construction time — building
-  * the frame executes the full shingle/LSH pipelines via
-  * `localCheckpoint(true)` — and the RETURNED frame is itself backed by
-  * a local checkpoint. Intermediate checkpoints are freed before return;
-  * the returned one is owned by the CALLER: its blocks persist until the
-  * caller drops the frame (GC + ContextCleaner, or Bench's per-query
-  * drain) — long-lived sessions constructing these repeatedly should
-  * free or drop results promptly. Uncapped paths stay fully lazy.
+  * Eager/ownership contract: [[minhashLsh]], [[ngramJaccard]],
+  * [[containmentPairs]] and [[incrementalNearLsh]] run their Spark jobs
+  * EAGERLY at DataFrame-construction time — building the frame executes
+  * the full shingle/LSH pipelines via `localCheckpoint(true)` — and the
+  * RETURNED frame is itself backed by a local checkpoint. Intermediate
+  * checkpoints are freed before return; the returned one is owned by the
+  * CALLER: its blocks persist until the caller drops the frame (GC +
+  * ContextCleaner, or Bench's per-query drain) — long-lived sessions
+  * constructing these repeatedly should free or drop results promptly.
+  * The other operators here stay lazy.
   */
 object DedupOps {
 
@@ -303,52 +305,30 @@ object DedupOps {
     * recurring crawl pays O(|batch|) signature work plus one blocked join
     * against the corpus bucket index (which a real deployment computes
     * once and persists; it is pure column arithmetic over the corpus).
-    * `maxBucket` drops hot corpus buckets exactly as in [[minhashLsh]].
-    * Jaccard verification touches only candidate pairs' shingle rows.
+    * `maxBucket` drops hot corpus buckets exactly as in [[minhashLsh]]:
+    * the corpus band rows pass [[capGroups]] — a count window, not a
+    * count joined back — so the corpus signature pipeline is evaluated
+    * once, and a sort-merge cross-side join reuses the window's
+    * (band, bucket) partitioning. Jaccard verification
+    * ([[jaccardVerify]]) touches only candidate pairs' shingle rows.
     */
   def incrementalNearLsh(batch: DataFrame, corpus: DataFrame,
-                         threshold: Double, n: Int = 3, k: Int = 8,
-                         bands: Int = 4, idCol: String = "doc_id",
-                         textCol: String = "text",
-                         maxBucket: Int = Int.MaxValue): DataFrame = {
-    def explBuckets(docs: DataFrame) =
-      minhashBandRows(docs, n, k, bands, idCol, textCol)
-    val be = explBuckets(batch)
-    val ce = capHotBuckets(explBuckets(corpus), maxBucket)
-    val cands0 = be.as("a").join(ce.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.bucket") === col("b.bucket"))
-      .select(col(s"a.$idCol").as("batch_id"), col(s"b.$idCol").as("corpus_id"))
-      .distinct()
-    // r16: same capped-candidates materialization as [[minhashLsh]] —
-    // the pair list feeds both the intersection and the final left join,
-    // and re-deriving it re-runs BOTH sides' signature pipelines
-    val capped = maxBucket != Int.MaxValue
-    val cands = if (capped) cands0.localCheckpoint(true) else cands0
-    try {
-      val bex = shingleRows(batch, n, idCol, textCol).toDF("batch_id", "g")
-      val cex = shingleRows(corpus, n, idCol, textCol).toDF("_cid", "g2")
-      val bsz = bex.groupBy(col("batch_id")).agg(count(lit(1)).as("sz1"))
-      val csz = cex.groupBy(col("_cid").as("corpus_id")).agg(count(lit(1)).as("sz2"))
-      val inter = cands.join(bex, "batch_id")
-        .join(cex, col("corpus_id") === col("_cid") && col("g") === col("g2"))
-        .groupBy(col("batch_id"), col("corpus_id"))
-        .agg(count(lit(1)).as("inter_cnt"))
-      val out = cands
-        .join(inter, Seq("batch_id", "corpus_id"), "left")
-        .na.fill(0L, Seq("inter_cnt"))
-        .join(bsz, "batch_id")
-        .join(csz, "corpus_id")
-        .withColumn("uni_cnt", col("sz1") + col("sz2") - col("inter_cnt"))
-        .filter(col("uni_cnt") > 0)
-        .withColumn("jaccard", col("inter_cnt").cast("double") / col("uni_cnt"))
-        .filter(col("jaccard") >= threshold)
-        .select(col("batch_id"), col("corpus_id"),
-          col("inter_cnt").cast("int").as("inter"),
-          col("uni_cnt").cast("int").as("uni"),
-          round(col("jaccard"), 6).as("jaccard"))
-      if (capped) out.localCheckpoint(true) else out
-    } finally if (capped) GraphOps.freeCheckpoint(cands)
+                         threshold: Double, maxBucket: Int, n: Int = 3,
+                         k: Int = 8, bands: Int = 4, idCol: String = "doc_id",
+                         textCol: String = "text"): DataFrame = {
+    val be = minhashBandRows(batch, n, k, bands, idCol, textCol)
+    val ce = capGroups(minhashBandRows(corpus, n, k, bands, idCol, textCol),
+      Seq("band_idx", "bucket"), maxBucket)
+    // the pair list feeds both the intersection and the final left join;
+    // re-deriving it would re-run BOTH sides' signature pipelines
+    val cands = be.withColumnRenamed(idCol, "batch_id")
+      .join(ce.withColumnRenamed(idCol, "corpus_id"), Seq("band_idx", "bucket"))
+      .select(col("batch_id"), col("corpus_id"))
+      .distinct().localCheckpoint(true)
+    try jaccardVerify(cands, shingleRows(batch, n, idCol, textCol),
+      shingleRows(corpus, n, idCol, textCol), "batch_id", "corpus_id",
+      threshold).localCheckpoint(true)
+    finally GraphOps.freeCheckpoint(cands)
   }
 
   /** Distinct (doc, word-n-gram-shingle) rows — the shared base of the
@@ -404,8 +384,8 @@ object DedupOps {
     *
     * `maxBucket` caps the blocking-bucket size: a band bucket holding more
     * than `maxBucket` documents (a giant duplicate cluster) is dropped
-    * from candidate generation, bounding the self-join at O(n·maxBucket)
-    * instead of the cluster's n². At corpus scale, route such clusters to
+    * from candidate generation, bounding in-bucket pair generation at
+    * O(n·maxBucket) instead of the cluster's n². At corpus scale, route such clusters to
     * [[exactByDigest]] first — they are exact-dup families, not near-dups.
     *
     * Plan note: unlike [[containmentPairs]], the verify legs here are
@@ -418,58 +398,75 @@ object DedupOps {
     * yields a far tighter candidate set, which is why the same prune
     * wins ~4× there.
     */
-  def minhashLsh(docs: DataFrame, threshold: Double, n: Int = 3, k: Int = 8,
-                 bands: Int = 4, idCol: String = "doc_id",
-                 textCol: String = "text",
-                 maxBucket: Int = Int.MaxValue): DataFrame = {
+  def minhashLsh(docs: DataFrame, threshold: Double, maxBucket: Int,
+                 n: Int = 3, k: Int = 8, bands: Int = 4,
+                 idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val ex = shingleRows(docs, n, idCol, textCol)
-    val sizes = ex.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
     // r16: the candidate list is read by BOTH the intersection and the
-    // final left join — when the hot-bucket cap bounds it (O(n·cap), two
-    // longs per row) materialize it once instead of running the
+    // final left join — it is bounded by the hot-bucket cap (O(n·cap),
+    // two longs per row), so materialize it once instead of running the
     // signature+blocking pipeline twice; the verified result is
     // materialized before the checkpoint is freed, so nothing leaks past
-    // the query. The uncapped path keeps the lazy form — an unbounded
-    // pair list must stream, not persist.
-    val cands0 = minhashCandidates(docs, n, k, bands, idCol, textCol, maxBucket)
-    val capped = maxBucket != Int.MaxValue
-    val cands = if (capped) cands0.localCheckpoint(true) else cands0
-    try {
-      // Exact overlap, restricted to candidate pairs (no all-pairs join).
-      val e1 = ex.toDF("id1", "g")
-      val e2 = ex.toDF("_id2", "g2")
-      val inter = cands.join(e1, "id1")
-        .join(e2, col("id2") === col("_id2") && col("g") === col("g2"))
-        .groupBy(col("id1"), col("id2"))
-        .agg(count(lit(1)).as("inter_cnt"))
-      val out = cands
-        .join(inter, Seq("id1", "id2"), "left")
-        .na.fill(0L, Seq("inter_cnt"))
-        .join(sizes.toDF("id1", "sz1"), "id1")
-        .join(sizes.toDF("id2", "sz2"), "id2")
-        .withColumn("uni_cnt", col("sz1") + col("sz2") - col("inter_cnt"))
-        .filter(col("uni_cnt") > 0)
-        .withColumn("jaccard", col("inter_cnt").cast("double") / col("uni_cnt"))
-        .filter(col("jaccard") >= threshold)
-        .select(col("id1"), col("id2"), col("inter_cnt").cast("int").as("inter"),
-          col("uni_cnt").cast("int").as("uni"), round(col("jaccard"), 6).as("jaccard"))
-      if (capped) out.localCheckpoint(true) else out
-    } finally if (capped) GraphOps.freeCheckpoint(cands)
+    // the query.
+    val cands = minhashCandidates(docs, maxBucket, n, k, bands, idCol, textCol)
+      .localCheckpoint(true)
+    try jaccardVerify(cands, ex, ex, "id1", "id2", threshold).localCheckpoint(true)
+    finally GraphOps.freeCheckpoint(cands)
   }
 
-  /** Hot-bucket cap shared by every LSH blocking stage: drop (band,
-    * bucket) groups larger than `maxBucket` before any pair join — the
-    * candidate count is Σ bucket², so one degenerate bucket (boilerplate
-    * shingles) otherwise dominates the whole stage. One implementation so
-    * a cap fix can never diverge between the within-corpus and
-    * batch-vs-corpus paths. */
-  private def capHotBuckets(bandRows: DataFrame, maxBucket: Int): DataFrame =
-    if (maxBucket == Int.MaxValue) bandRows
-    else bandRows.join(
-      bandRows.groupBy(col("band_idx"), col("bucket"))
-        .agg(count(lit(1)).as("_bf")).filter(col("_bf") <= maxBucket)
-        .select(col("band_idx"), col("bucket")),
-      Seq("band_idx", "bucket"))
+  /** Exact shingle-set Jaccard over a candidate pair list: the verify
+    * stage of [[minhashLsh]] (`a` and `b` are the same rows) and
+    * [[incrementalNearLsh]] (batch against corpus). `cands` holds
+    * (`idA`, `idB`); `a` and `b` are (id, shingle) rows of each side. The
+    * intersection joins only candidate pairs' shingles (no all-pairs
+    * join); a candidate sharing no shingle scores inter 0. Output:
+    * (`idA`, `idB`, inter, uni, jaccard) for jaccard ≥ `threshold`. */
+  private def jaccardVerify(cands: DataFrame, a: DataFrame, b: DataFrame,
+                            idA: String, idB: String,
+                            threshold: Double): DataFrame = {
+    // sizes aggregate under the side's own column names and rename on
+    // top, so that with a == b both legs are one subtree (exchange reuse)
+    def sizes(e: DataFrame, id: String, sz: String) =
+      e.groupBy(col(e.columns.head)).agg(count(lit(1)).as("sz")).toDF(id, sz)
+    val inter = cands.join(a.toDF(idA, "g"), idA)
+      .join(b.toDF("_idB", "g2"), col(idB) === col("_idB") && col("g") === col("g2"))
+      .groupBy(col(idA), col(idB))
+      .agg(count(lit(1)).as("inter_cnt"))
+    jaccardScored(cands
+      .join(inter, Seq(idA, idB), "left")
+      .na.fill(0L, Seq("inter_cnt"))
+      .join(sizes(a, idA, "sz1"), idA)
+      .join(sizes(b, idB, "sz2"), idB), idA, idB, threshold)
+  }
+
+  /** Jaccard score, threshold and output shape over per-pair
+    * (inter_cnt, sz1, sz2) counts — shared by [[jaccardVerify]] and
+    * [[ngramJaccard]]. */
+  private def jaccardScored(counted: DataFrame, idA: String, idB: String,
+                            threshold: Double): DataFrame =
+    counted
+      .withColumn("uni_cnt", col("sz1") + col("sz2") - col("inter_cnt"))
+      .filter(col("uni_cnt") > 0)
+      .withColumn("jaccard", col("inter_cnt").cast("double") / col("uni_cnt"))
+      .filter(col("jaccard") >= threshold)
+      .select(col(idA), col(idB), col("inter_cnt").cast("int").as("inter"),
+        col("uni_cnt").cast("int").as("uni"), round(col("jaccard"), 6).as("jaccard"))
+
+  /** The group cap every count-bounded blocking stage shares: rows of
+    * groups (over `keys`) holding more than `cap` rows are dropped — the
+    * candidate count is Σ group², so one degenerate group (boilerplate
+    * shingles, an exact-dup family's LSH bucket) otherwise dominates the
+    * whole stage. A `count(*) over (partition by keys)` rides a keyed
+    * exchange (WindowExec buffers per group spill to disk) and over-cap
+    * groups leave as plain rows; a consumer keyed on the same `keys`
+    * (a collect, a join) reuses that partitioning. */
+  private[ops] def capGroups(rows: DataFrame, keys: Seq[String],
+                             cap: Int): DataFrame =
+    rows
+      .withColumn("_gcnt", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)))
+      .filter(col("_gcnt") <= cap)
+      .drop("_gcnt")
 
   /** All ordered (id1 < id2) pairs within each size-capped group,
     * generated IN-GROUP from a collected posting list (r16, guide §2/§3):
@@ -478,28 +475,20 @@ object DedupOps {
     * re-evaluated the expensive upstream (tokenize + explode/signature)
     * pipeline once per join leg, up to 40 corpus scans in one plan
     * (dedup_containment, r16 baseline). Groups over `cap` are dropped
-    * BEFORE pair generation, exactly like [[capHotBuckets]] /
-    * the maxDf blocking filter; the list is sorted so pair generation is
-    * order-independent; the pair SET is identical to the self-join form.
-    * Per-group work is bounded by cap²/2 (cap ≤ ~1000 here), and the
-    * two-level explode streams ≤ cap ids per emitted row — no quadratic
-    * single-row array ever materializes.
+    * BEFORE pair generation ([[capGroups]]); the list is sorted so pair
+    * generation is order-independent; the pair SET is identical to the
+    * self-join form over the capped rows. Per-group work is bounded by
+    * cap²/2, and the two-level explode streams ≤ cap ids per emitted
+    * row — no quadratic single-row array ever materializes.
     *
-    * r17 (VERDICT r16 #1): the cap is applied BEFORE the list collects.
-    * A `count(*) over (partition by groupCols)` rides the same keyed
-    * exchange (WindowExec buffers per group spill to disk), over-cap
-    * groups are filtered out as plain rows, and only surviving ≤cap
-    * groups reach `collect_list` — so a skewed blocking key (stop-word
-    * shingle, hot LSH bucket with 10⁸⁺ postings at 100 TB) can never
-    * materialize its full posting list in one aggregation buffer. The
-    * groupBy reuses the window's partitioning: still ONE exchange. */
+    * r17 (VERDICT r16 #1): the cap is applied BEFORE the list collects,
+    * so a skewed blocking key (stop-word shingle, hot LSH bucket with
+    * 10⁸⁺ postings at 100 TB) can never materialize its full posting
+    * list in one aggregation buffer. The groupBy reuses the window's
+    * partitioning: still ONE exchange. */
   private[ops] def cappedGroupPairs(rows: DataFrame, groupCols: Seq[String],
                                     idCol: String, cap: Int): DataFrame = {
-    val grp = org.apache.spark.sql.expressions.Window
-      .partitionBy(groupCols.map(col): _*)
-    val lists = rows
-      .withColumn("_gcnt", count(lit(1)).over(grp))
-      .filter(col("_gcnt") <= cap)
+    val lists = capGroups(rows, groupCols, cap)
       .groupBy(groupCols.map(col): _*)
       .agg(collect_list(col(idCol)).as("_ids"))
       .select(array_sort(col("_ids")).as("_ids"))
@@ -515,35 +504,20 @@ object DedupOps {
       .filter(col("id1") =!= col("id2"))
   }
 
-  /** LSH candidate pairs only (band equi-join, optional hot-bucket cap):
+  /** LSH candidate pairs only (band blocking with the hot-bucket cap):
     * the blocking stage shared by [[minhashLsh]] (Jaccard verify) and
     * [[editVerifiedPairs]] (edit-distance verify). One ordered (id1 < id2)
     * row per candidate pair; ids only — no text, no signatures — in the
-    * exchange.
+    * exchange. One exchange of the band rows with in-bucket pair
+    * generation (r16) — replaces [bucket-count + join-back + self-join],
+    * which evaluated the per-doc minhash signature pipeline four times
+    * per plan.
     */
-  def minhashCandidates(docs: DataFrame, n: Int = 3, k: Int = 8,
-                        bands: Int = 4, idCol: String = "doc_id",
-                        textCol: String = "text",
-                        maxBucket: Int = Int.MaxValue): DataFrame = {
-    val bandRows = minhashBandRows(docs, n, k, bands, idCol, textCol)
-    val pairs =
-      if (maxBucket == Int.MaxValue) {
-        // uncapped: groups are unbounded, so a collected posting list
-        // could materialize a giant cluster in one task — keep the
-        // streaming self-join here
-        bandRows.as("a").join(bandRows.as("b"),
-            col("a.band_idx") === col("b.band_idx") &&
-              col("a.bucket") === col("b.bucket") &&
-              col(s"a.$idCol") < col(s"b.$idCol"))
-          .select(col(s"a.$idCol").as("id1"), col(s"b.$idCol").as("id2"))
-      } else
-        // capped: one exchange of the band rows, in-bucket pair
-        // generation (r16) — replaces [bucket-count + join-back +
-        // self-join], which evaluated the per-doc minhash signature
-        // pipeline four times per plan
-        cappedGroupPairs(bandRows, Seq("band_idx", "bucket"), idCol, maxBucket)
-    pairs.distinct()
-  }
+  def minhashCandidates(docs: DataFrame, maxBucket: Int, n: Int = 3,
+                        k: Int = 8, bands: Int = 4, idCol: String = "doc_id",
+                        textCol: String = "text"): DataFrame =
+    cappedGroupPairs(minhashBandRows(docs, n, k, bands, idCol, textCol),
+      Seq("band_idx", "bucket"), idCol, maxBucket).distinct()
 
   /** Fuzzy dedup, record-linkage style: LSH candidate pairs verified by
     * EDIT DISTANCE instead of shingle Jaccard — the verifier of choice
@@ -567,14 +541,13 @@ object DedupOps {
     * — full-text Levenshtein on 100 KB docs would be 10¹⁰ cell updates
     * per pair.
     */
-  def editVerifiedPairs(docs: DataFrame, maxDist: Long = 60,
+  def editVerifiedPairs(docs: DataFrame, maxBucket: Int, maxDist: Long = 60,
                         prefixLen: Int = 200, n: Int = 3, k: Int = 8,
                         bands: Int = 4, idCol: String = "doc_id",
-                        textCol: String = "text",
-                        maxBucket: Int = Int.MaxValue): DataFrame = {
+                        textCol: String = "text"): DataFrame = {
     require(maxDist >= 0 && prefixLen > 0, "maxDist/prefixLen must be positive")
     require(maxDist <= Int.MaxValue, "maxDist must fit in Int")
-    val cands = minhashCandidates(docs, n, k, bands, idCol, textCol, maxBucket)
+    val cands = minhashCandidates(docs, maxBucket, n, k, bands, idCol, textCol)
       // The candidate set is BYTE-small (two longs per row) but each row
       // carries a banded-DP evaluation downstream — exactly the shape
       // where AQE's size-based partition coalescing guesses wrong: it
@@ -612,35 +585,14 @@ object DedupOps {
     * overlap is hot-shingles-only are (deliberately, documentedly)
     * missed — at corpus scale those are the "both contain 'the'" pairs.
     */
-  def ngramJaccard(docs: DataFrame, threshold: Double, n: Int = 3,
-                   idCol: String = "doc_id", textCol: String = "text",
-                   maxDf: Int = Int.MaxValue): DataFrame = {
-    val counted =
-      if (maxDf == Int.MaxValue) {
-        // uncapped: every shared shingle is a blocking shingle, so the
-        // blocking join's group count IS the exact intersection
-        val ex = shingleRows(docs, n, idCol, textCol)
-        val sizes = ex.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
-        ex.toDF("ida", "g").as("a")
-          .join(ex.toDF("idb", "gb").as("b"),
-            col("g") === col("gb") && col("ida") < col("idb"))
-          .groupBy(col("ida").as("id1"), col("idb").as("id2"))
-          .agg(count(lit(1)).as("inter_cnt"))
-          .join(sizes.toDF("id1", "sz1"), "id1")
-          .join(sizes.toDF("id2", "sz2"), "id2")
-      } else
-        // capped: shared posting-list blocking + exact overlap core (r16)
-        cappedPairCounts(docs, n, maxDf, idCol, textCol)
-    counted
-      .withColumn("uni_cnt", col("sz1") + col("sz2") - col("inter_cnt"))
-      .withColumn("jaccard", col("inter_cnt").cast("double") / col("uni_cnt"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id1"), col("id2"), col("inter_cnt").cast("int").as("inter"),
-        col("uni_cnt").cast("int").as("uni"), round(col("jaccard"), 6).as("jaccard"))
-  }
+  def ngramJaccard(docs: DataFrame, threshold: Double, maxDf: Int, n: Int = 3,
+                   idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    // shared posting-list blocking + exact overlap core (r16)
+    jaccardScored(cappedPairCounts(docs, n, maxDf, idCol, textCol),
+      "id1", "id2", threshold)
 
   /** Shared core of the df-capped exact-overlap verifiers
-    * ([[ngramJaccard]]'s capped path and [[containmentPairs]]): shingle
+    * ([[ngramJaccard]] and [[containmentPairs]]): shingle
     * posting lists → in-group candidate pairs ([[cappedGroupPairs]],
     * maxDf = the blocking cap) → exact intersection + per-doc shingle
     * sizes over the candidates' shingles. One row per candidate pair:
@@ -692,16 +644,15 @@ object DedupOps {
     * misses (the measure behind suffix-style subset dedup in
     * Lee et al. 2022, arXiv:2107.06499).
     *
-    * Same scale shape as the capped [[ngramJaccard]] path: inverted-index
-    * blocking with hot shingles (document frequency > `maxDf`) dropped
-    * from candidate generation — mandatory here, not optional, since
-    * containment's use-case is exactly the corpora where boilerplate
-    * shingles are near-global. Scores are then exact over ALL shingles
-    * for surviving candidates; only pairs overlapping solely in
-    * hot shingles are (documentedly) missed.
+    * Same scale shape as [[ngramJaccard]]: inverted-index blocking with
+    * hot shingles (document frequency > `maxDf`) dropped from candidate
+    * generation — containment's use-case is exactly the corpora where
+    * boilerplate shingles are near-global. Scores are then exact over
+    * ALL shingles for surviving candidates; only pairs overlapping
+    * solely in hot shingles are (documentedly) missed.
     */
-  def containmentPairs(docs: DataFrame, threshold: Double, n: Int = 3,
-                       maxDf: Int = 64, idCol: String = "doc_id",
+  def containmentPairs(docs: DataFrame, threshold: Double, maxDf: Int,
+                       n: Int = 3, idCol: String = "doc_id",
                        textCol: String = "text"): DataFrame =
     // shared posting-list blocking + exact overlap core (r16) — the
     // containment score is the only part not in common with ngramJaccard
@@ -729,28 +680,28 @@ object DedupOps {
   /** SimHash near-dup pairs with Hamming distance ≤ maxHamming, using
     * band blocking: the 32-bit fingerprint is cut into `bands` slices;
     * by pigeonhole any pair within maxHamming (< bands) shares ≥1 exact
-    * slice, so candidate generation is an equi-join on (band, slice).
+    * slice, so candidate generation is in-group pairing on (band, slice)
+    * through [[cappedGroupPairs]]: a slice group holding more than
+    * `maxBucket` documents is dropped. The posting entries are
+    * (id, simhash) structs, so each pair carries both fingerprints and
+    * the Hamming test needs no join back to the signatures.
     */
-  def simhashPairs(docs: DataFrame, maxHamming: Int = 3, bands: Int = 4,
-                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def simhashPairs(docs: DataFrame, maxBucket: Int, maxHamming: Int = 3,
+                   bands: Int = 4, idCol: String = "doc_id",
+                   textCol: String = "text"): DataFrame = {
     require(bands > maxHamming, "bands must exceed maxHamming for exact recall")
     val bits = 32 / bands
-    val sig = simhashSignatures(docs, idCol, textCol)
-    val sliced = sig.select(col(idCol), col("simhash"),
+    val sliced = simhashSignatures(docs, idCol, textCol).select(
+      struct(col(idCol).as("id"), col("simhash").as("h")).as("_d"),
       posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
         pmod(shiftrighthelper(col("simhash"), b, bits), lit(1L << bits))))
         .as(Seq("band_idx", "slice")))
-    val cands = sliced.as("a").join(sliced.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.slice") === col("b.slice") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id1"), col(s"b.$idCol").as("id2"),
-        col("a.simhash").as("h1"), col("b.simhash").as("h2"))
-      .dropDuplicates("id1", "id2")
-    cands
-      .withColumn("hamming", bit_count(col("h1").bitwiseXOR(col("h2"))))
+    // array_sort orders the structs by id first, so id1 < id2 holds
+    cappedGroupPairs(sliced, Seq("band_idx", "slice"), "_d", maxBucket)
+      .select(col("id1.id").as("id1"), col("id2.id").as("id2"),
+        bit_count(col("id1.h").bitwiseXOR(col("id2.h"))).cast("int").as("hamming"))
       .filter(col("hamming") <= maxHamming)
-      .select(col("id1"), col("id2"), col("hamming").cast("int").as("hamming"))
+      .distinct()
   }
 
   // simhash is non-negative (32-bit in a long), so subtract-mod division is
@@ -839,33 +790,31 @@ object DedupOps {
 
   /** Embedding near-duplicates blocked by random-hyperplane LSH bucket —
     * the label-free form of [[embeddingNearDup]]: the bucket is computed
-    * from the vector itself, so no external clustering key is needed and
-    * the pair join stays an equi-join on the bucket id.
+    * from the vector itself, so no external clustering key is needed.
     *
     * `maxPrev` bounds in-bucket work by sorted-neighborhood rank window
-    * (see [[sortedNeighborhoodPairs]]); the default keeps the exact
-    * all-in-bucket-pairs contract.
+    * (see [[sortedNeighborhoodPairs]]).
     */
-  def embeddingNearDupLsh(embs: DataFrame, threshold: Double, planes: Int = 4,
-                          dims: Int = 64, idCol: String = "vec_id",
-                          vecCol: String = "embedding",
-                          maxPrev: Int = Int.MaxValue): DataFrame = {
+  def embeddingNearDupLsh(embs: DataFrame, threshold: Double, maxPrev: Int,
+                          planes: Int = 4, dims: Int = 64,
+                          idCol: String = "vec_id",
+                          vecCol: String = "embedding"): DataFrame = {
     val withBucket = embs.select(col(idCol), col(vecCol),
       SimilarityOps.lshBucket(col(vecCol), planes, dims).as("_bucket"))
-    val joined =
-      if (maxPrev == Int.MaxValue)
-        withBucket.as("a").join(withBucket.as("b"),
-          col("a._bucket") === col("b._bucket") &&
-            col(s"a.$idCol") < col(s"b.$idCol"))
-      else sortedNeighborhoodPairs(withBucket, "_bucket", idCol, vecCol,
-        dims, maxPrev)
-    joined
+    cosinePairs(sortedNeighborhoodPairs(withBucket, "_bucket", idCol, vecCol,
+      dims, maxPrev), threshold, idCol, vecCol)
+  }
+
+  /** Pairs (sides `a`, `b`) whose cosine reaches `threshold`, as ordered
+    * (id1 < id2, cos) rows. */
+  private def cosinePairs(pairs: DataFrame, threshold: Double, idCol: String,
+                          vecCol: String): DataFrame =
+    pairs
       .withColumn("cos", cosine(col(s"a.$vecCol"), col(s"b.$vecCol")))
       .filter(col("cos") >= threshold)
       .select(least(col(s"a.$idCol"), col(s"b.$idCol")).as("id1"),
         greatest(col(s"a.$idCol"), col(s"b.$idCol")).as("id2"),
         round(col("cos"), 6).as("cos"))
-  }
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540) — semantic dedup at
     * the embedding level: cluster the corpus with a coarse quantizer,
@@ -884,33 +833,26 @@ object DedupOps {
     * Scale shape: assignment is a narrow shuffle-free argmax projection
     * (centroids are literals); pair generation is blocked by `cid` — the
     * paper's own trick for making semantic dedup tractable: pairs only
-    * form inside a cluster, so work is Σ|cluster|², controlled by nlist
-    * (production sizes nlist ~ √N to keep clusters ~√N). The verdict join
-    * back is keyed on id. No all-pairs, and only (id, cid) pairs plus the
+    * form inside a cluster. Tight clusters collapse into one cell at any
+    * nlist, so the in-cell check is bounded by the `maxPrev` rank window
+    * ([[sortedNeighborhoodPairs]], O(n·maxPrev)). The verdict join back
+    * is keyed on id. No all-pairs, and only (id, cid) pairs plus the
     * in-cluster vectors ever shuffle.
     */
-  def semDedup(embs: DataFrame, threshold: Double, nlist: Int = 8,
-               dims: Int = 64, idCol: String = "vec_id",
-               vecCol: String = "embedding",
-               maxPrev: Int = Int.MaxValue): DataFrame = {
+  def semDedup(embs: DataFrame, threshold: Double, maxPrev: Int,
+               nlist: Int = 8, dims: Int = 64, idCol: String = "vec_id",
+               vecCol: String = "embedding"): DataFrame = {
     val cents = SimilarityOps.lcgCentroids(nlist, dims)
     val assigned = embs.select(col(idCol), col(vecCol),
       SimilarityOps.nearestCentroid(col(vecCol), cents).as("cid"))
     // a row drops when a LOWER-id mate within threshold exists (the
-    // paper's example order); under the rank window only window-mates
-    // are checked, so the higher-id side of each qualifying pair drops
-    val dropped = (
-      if (maxPrev == Int.MaxValue)
-        assigned.as("a").join(assigned.as("b"),
-            col("a.cid") === col("b.cid") &&
-              col(s"b.$idCol") < col(s"a.$idCol"))
-          .filter(cosine(col(s"a.$vecCol"), col(s"b.$vecCol")) >= threshold)
-          .select(col(s"a.$idCol").as(idCol))
-      else
-        sortedNeighborhoodPairs(assigned, "cid", idCol, vecCol, dims, maxPrev)
-          .filter(cosine(col(s"a.$vecCol"), col(s"b.$vecCol")) >= threshold)
-          .select(greatest(col(s"a.$idCol"), col(s"b.$idCol")).as(idCol))
-      ).distinct()
+    // paper's example order); only window-mates are checked, so the
+    // higher-id side of each qualifying pair drops
+    val dropped =
+      sortedNeighborhoodPairs(assigned, "cid", idCol, vecCol, dims, maxPrev)
+        .filter(cosine(col(s"a.$vecCol"), col(s"b.$vecCol")) >= threshold)
+        .select(greatest(col(s"a.$idCol"), col(s"b.$idCol")).as(idCol))
+        .distinct()
     assigned
       .join(dropped.withColumn("_dup", lit(1)), Seq(idCol), "left")
       .select(col(idCol), col("cid"), col("_dup").isNull.as("keep"))
@@ -921,30 +863,15 @@ object DedupOps {
     * form of brute-force pair generation.
     *
     * `blockCol` cardinality is a DATA property, not a tuning knob — a
-    * fixed-cardinality key (labels) makes in-block all-pairs quadratic;
-    * pass `maxPrev` to bound it by sorted-neighborhood rank window
-    * ([[sortedNeighborhoodPairs]], O(n·maxPrev)). The default keeps the
-    * exact all-in-block-pairs contract.
+    * fixed-cardinality key (labels) makes in-block all-pairs quadratic,
+    * so in-block work is bounded by the `maxPrev` sorted-neighborhood
+    * rank window ([[sortedNeighborhoodPairs]], O(n·maxPrev)).
     */
-  def embeddingNearDup(embs: DataFrame, threshold: Double,
+  def embeddingNearDup(embs: DataFrame, threshold: Double, maxPrev: Int,
                        blockCol: String = "label", idCol: String = "vec_id",
-                       vecCol: String = "embedding", dims: Int = 64,
-                       maxPrev: Int = Int.MaxValue): DataFrame = {
-    // distinct: a caller may block on the id column itself (the
-    // exact-all-pairs degenerate form the spec exercises), and a
-    // duplicated column would make the pair structs' fields ambiguous
-    val e = embs.select(Seq(idCol, blockCol, vecCol).distinct.map(col): _*)
-    val joined =
-      if (maxPrev == Int.MaxValue)
-        e.as("a").join(e.as("b"),
-          col(s"a.$blockCol") === col(s"b.$blockCol") &&
-            col(s"a.$idCol") < col(s"b.$idCol"))
-      else sortedNeighborhoodPairs(e, blockCol, idCol, vecCol, dims, maxPrev)
-    joined
-      .withColumn("cos", cosine(col(s"a.$vecCol"), col(s"b.$vecCol")))
-      .filter(col("cos") >= threshold)
-      .select(least(col(s"a.$idCol"), col(s"b.$idCol")).as("id1"),
-        greatest(col(s"a.$idCol"), col(s"b.$idCol")).as("id2"),
-        round(col("cos"), 6).as("cos"))
-  }
+                       vecCol: String = "embedding",
+                       dims: Int = 64): DataFrame =
+    cosinePairs(sortedNeighborhoodPairs(
+      embs.select(col(idCol), col(blockCol), col(vecCol)), blockCol, idCol,
+      vecCol, dims, maxPrev), threshold, idCol, vecCol)
 }

@@ -211,9 +211,9 @@ object TextOps {
     * O(maxDf²) while shared counts over surviving fingerprints stay
     * exact. Shared text never shuffles — only (fp, id) pairs do.
     */
-  def winnowPairs(docs: DataFrame, n: Int = 3, window: Int = 4,
-                  minShared: Int = 2, maxDf: Int = 64,
-                  idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def winnowPairs(docs: DataFrame, maxDf: Int, n: Int = 3, window: Int = 4,
+                  minShared: Int = 2, idCol: String = "doc_id",
+                  textCol: String = "text"): DataFrame = {
     val fps = winnowFingerprints(docs, n, window, idCol, textCol)
     // r16: in-group pair generation over fp posting lists — one keyed
     // exchange of the fingerprint rows replaces the [df-count + join-back

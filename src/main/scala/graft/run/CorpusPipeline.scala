@@ -110,7 +110,11 @@ object CorpusPipeline {
       case None => exact
     }
 
-    val pairs = DedupOps.minhashLsh(para, threshold = cfg.nearDupThreshold)
+    // maxBucket = 64: the cap Shared.graphPairs puts on the same
+    // keepOne-over-minhash-candidates shape; exact_dedup has already
+    // removed the exact-dup families a hot band bucket is made of
+    val pairs = DedupOps.minhashLsh(para, threshold = cfg.nearDupThreshold,
+        maxBucket = 64)
       .select(col("id1"), col("id2"))
     val nearKeep = GraphOps.keepOne(para, pairs).select(col("keep_id").as("doc_id"))
     val near = stage("near_dedup", para.join(nearKeep, "doc_id"))

@@ -220,6 +220,22 @@ class PlanSpec extends SparkSpec {
       s"count window must feed (sit below) the collect_list aggregate:\n$blocking")
   }
 
+  test("incremental near-dup: the corpus-side cap is a count window; " +
+    "each side's minhash bands are evaluated once") {
+    // checkpoint-choreographed (candidates, then the verified result):
+    // assert over the executed sub-plans, final sections only
+    val ps = executedPlans("dedup_incremental_near").map(finalSection)
+    val blocking = ps.filter(_.contains("graft_minhash_bands"))
+    assert(blocking.size == 1,
+      s"one sub-plan should block on band buckets:\n${ps.mkString("\n----\n")}")
+    val p = blocking.head
+    assert(p.contains("Window"),
+      s"the corpus-side bucket cap must be a count window:\n$p")
+    val evals = p.linesIterator.count(_.contains("graft_minhash_bands"))
+    assert(evals == 2,
+      s"band buckets must be evaluated once per side (batch, corpus), got $evals:\n$p")
+  }
+
   test("pq ANN tiers: code-only scan exchanges, pre-shuffle top-k, equi-join probe") {
     val pq = plan("ann_pq_topk")
     assert(pq.contains("WindowGroupLimit"),

@@ -93,7 +93,8 @@ class ExtOpsSpec extends SparkSpec {
       (2L, "alpha beta gamma delta epsilon"), // exact dup of 1
       (3L, "totally different words here now")
     ).toDF("doc_id", "text")
-    val pairs = DedupOps.minhashLsh(docs, threshold = 0.9)
+    // a cap of the corpus size is above every bucket
+    val pairs = DedupOps.minhashLsh(docs, threshold = 0.9, maxBucket = 3)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 2L)))
   }
@@ -103,7 +104,8 @@ class ExtOpsSpec extends SparkSpec {
     val distinct = Seq((100L, "a genuinely different document body"),
       (101L, "a genuinely different document text"))
     val docs = (cluster ++ distinct).toDF("doc_id", "text")
-    val uncapped = DedupOps.minhashLsh(docs, threshold = 0.0)
+    // a cap of the corpus size (32) is above every bucket
+    val uncapped = DedupOps.minhashLsh(docs, threshold = 0.0, maxBucket = 32)
     assert(uncapped.count() >= 30L * 29 / 2) // the cluster dominates
     val capped = DedupOps.minhashLsh(docs, threshold = 0.0, maxBucket = 10)
     val cappedPairs = capped.select("id1", "id2").as[(Long, Long)].collect()
@@ -120,7 +122,7 @@ class ExtOpsSpec extends SparkSpec {
     val sig = DedupOps.simhashSignatures(docs)
       .as[(Long, Long)].collect().toMap
     assert(sig(1L) == sig(2L))
-    val pairs = DedupOps.simhashPairs(docs, maxHamming = 3, bands = 4)
+    val pairs = DedupOps.simhashPairs(docs, maxBucket = 3, maxHamming = 3, bands = 4)
       .select("id1", "id2", "hamming").as[(Long, Long, Int)].collect()
     assert(pairs.exists(p => p._1 == 1L && p._2 == 2L && p._3 == 0))
     assert(pairs.forall(_._3 <= 3))
@@ -290,8 +292,9 @@ class ExtOpsSpec extends SparkSpec {
     assert(out.length == 50)
     // exact Jaccard over ALL shingles: inter=2 (universal + pair), uni=4
     assert(out.forall(r => r._3 == 2 && r._4 == 4 && r._5 == 0.5))
-    // uncapped: same pairs at threshold 0.5, plus the hot-only pairs at 0
-    val uncapped = DedupOps.ngramJaccard(docs, threshold = 0.0, n = 1)
+    // a cap of the corpus size (100) is above every block: same pairs at
+    // threshold 0.5, plus the hot-only pairs at 0
+    val uncapped = DedupOps.ngramJaccard(docs, threshold = 0.0, n = 1, maxDf = 100)
     assert(uncapped.count() == 4950)
   }
 
@@ -446,7 +449,7 @@ class ExtOpsSpec extends SparkSpec {
       (2L, s"$passage and then some completely different tail content"),
       (3L, "nothing in common with anybody else at all whatsoever here")
     ).toDF("doc_id", "text")
-    val pairs = TextOps.winnowPairs(docs, minShared = 2)
+    val pairs = TextOps.winnowPairs(docs, minShared = 2, maxDf = 3)
       .as[(Long, Long, Long)].collect()
     assert(pairs.map(p => (p._1, p._2)).toSet == Set((1L, 2L)))
     assert(pairs.head._3 >= 2) // long shared run → several shared minima
@@ -617,7 +620,8 @@ class ExtOpsSpec extends SparkSpec {
     val v = Seq(1f, 0f, 0f, 0f)
     val w = Seq(0f, 1f, 0f, 0f)
     val embs = Seq((3L, v), (9L, v), (5L, w)).toDF("vec_id", "embedding")
-    val out = DedupOps.semDedup(embs, threshold = 0.9, nlist = 2, dims = 4)
+    val out = DedupOps.semDedup(embs, threshold = 0.9, maxPrev = 3, nlist = 2,
+        dims = 4)
       .as[(Long, Int, Boolean)].collect().map(r => r._1 -> r).toMap
     assert(out.size == 3, "one row per input vector")
     assert(out(3L)._2 == out(9L)._2, "identical vectors share a centroid")
@@ -634,14 +638,23 @@ class ExtOpsSpec extends SparkSpec {
     val family = Seq(40L, 7L, 23L, 91L, 2L, 55L).zipWithIndex.map {
       case (id, i) => (id, mk(i * 1e-4f))
     }
-    val embs = (family :+ (77L, Seq(0f, 1f, 0f, 0f)))
-      .toDF("vec_id", "embedding")
-    // a window at least as wide as the block == the exact all-pairs form
-    val exact = DedupOps.embeddingNearDup(embs, threshold = 0.99,
-        blockCol = "vec_id", idCol = "vec_id", dims = 4)
-    val wide = DedupOps.embeddingNearDup(embs, threshold = 0.99,
-        blockCol = "vec_id", idCol = "vec_id", dims = 4, maxPrev = 100)
-    assert(exact.collect().toSet == wide.collect().toSet)
+    val vecs = family :+ (77L, Seq(0f, 1f, 0f, 0f))
+    val embs = vecs.toDF("vec_id", "embedding").withColumn("blk", lit(0))
+    // a window at least as wide as the one shared block finds every pair
+    // of a driver-side brute-force cosine over all pairs
+    def cos(u: Seq[Float], v: Seq[Float]): Double = {
+      def dot(x: Seq[Float], y: Seq[Float]) =
+        x.zip(y).map { case (a, b) => a.toDouble * b }.sum
+      dot(u, v) / math.sqrt(dot(u, u) * dot(v, v))
+    }
+    val want = (for ((i, u) <- vecs; (j, v) <- vecs
+                     if i < j && cos(u, v) >= 0.99) yield (i, j) -> cos(u, v)).toMap
+    assert(want.size == 15, "the reference pairs the whole 6-vector family")
+    val wide = DedupOps.embeddingNearDup(embs, threshold = 0.99, maxPrev = 100,
+        blockCol = "blk", dims = 4)
+      .as[(Long, Long, Double)].collect().map(r => (r._1, r._2) -> r._3).toMap
+    assert(wide.keySet == want.keySet)
+    assert(want.forall { case (p, c) => math.abs(wide(p) - c) <= 1e-6 })
     // semDedup with maxPrev=1: adjacent-rank chain still drops every
     // family member except the lowest id reachable through the chain —
     // here projections are monotone in eps, so each drops against its
@@ -774,7 +787,7 @@ class ExtOpsSpec extends SparkSpec {
       (3L, base.replace("column", "colunm")),        // transposition-ish edit
       (4L, "the a big merge group stream filter row key vector data window")
     ).toDF("doc_id", "text")
-    val out = DedupOps.editVerifiedPairs(docs, maxDist = 10)
+    val out = DedupOps.editVerifiedPairs(docs, maxBucket = 4, maxDist = 10)
       .as[(Long, Long, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
     assert(out((1L, 2L)) == 0L)
     // the small edit shifts shingles but few chars: if LSH still blocks

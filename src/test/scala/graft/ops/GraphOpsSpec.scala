@@ -30,7 +30,8 @@ class GraphOpsSpec extends SparkSpec {
     // (the oracle-gated queries use the sparse minhash pairs; this covers
     // the dense regime against an independent driver-side union-find)
     val docs = Tables(spark, sf, "documents")
-    val pairs = DedupOps.simhashPairs(docs, maxHamming = 3, bands = 4)
+    val pairs = DedupOps.simhashPairs(docs,
+        maxBucket = graft.queries.Dedup.SimhashMaxBucket, maxHamming = 3, bands = 4)
       .select(col("id1"), col("id2"))
     val got = GraphOps.components(docs, pairs)
       .as[(Long, Long)].collect().toMap

@@ -108,7 +108,9 @@ class PipelineOpsSpec extends SparkSpec {
       (11L, "completely different content in every single position"),
       (12L, "alpha beta gamma delta epsilon zeta eta iota")   // near-dup of 1 too
     ).toDF("doc_id", "text")
-    val pairs = DedupOps.incrementalNearLsh(batch, corpus, threshold = 0.5)
+    // a cap of the corpus size (2) is above every corpus bucket
+    val pairs = DedupOps.incrementalNearLsh(batch, corpus, threshold = 0.5,
+        maxBucket = 2)
       .select(col("batch_id"), col("corpus_id")).as[(Long, Long)].collect().toSet
     assert(pairs == Set((10L, 1L), (12L, 1L)))
     // batch docs 10 and 12 are identical to each other — but within-side

@@ -4,14 +4,17 @@ import graft.SparkSpec
 
 /** Adversarial-skew properties of the near-dup pair generators: one giant
   * duplicate cluster (10% of the corpus identical) is the canonical
-  * worst case for inverted-index / LSH blocking — uncapped, the cluster
-  * alone contributes |C|·(|C|−1)/2 candidate pairs (quadratic), and at
-  * corpus scale one such family melts the self-join. The `maxBucket` /
-  * `maxDf` knobs exist exactly for this; these tests pin that they
+  * worst case for inverted-index / LSH blocking — with a cap above the
+  * cluster, it alone contributes |C|·(|C|−1)/2 candidate pairs
+  * (quadratic), and at corpus scale one such family melts the self-join.
+  * The required `maxBucket` / `maxDf` bounds exist exactly for this;
+  * these tests pin that they
   * (a) drop the hot blocks, bounding candidates at O(n·cap),
   * (b) leave rare-block pairs untouched, and
   * (c) keep surviving pairs' scores EXACT (computed over all shingles,
   *     not just the surviving blocks).
+  * A cap of `n` (the corpus size) is above every group, so it stands in
+  * for "no cap" as the reference.
   */
 class SkewPropertySpec extends SparkSpec {
   import spark.implicits._
@@ -40,16 +43,17 @@ class SkewPropertySpec extends SparkSpec {
   }
 
   private val clusterPairCount = 40 * 39 / 2 // 780
+  private val n = 400 // corpus size: a cap of n never bites
 
   private def isClusterPair(id1: String, id2: String): Boolean =
     id1.startsWith("dup") && id2.startsWith("dup")
 
   test("minhashLsh maxBucket drops the giant cluster's buckets and bounds " +
     "candidates at O(n·cap)") {
-    val uncapped = DedupOps.minhashLsh(docs, threshold = 0.5)
+    val uncapped = DedupOps.minhashLsh(docs, threshold = 0.5, maxBucket = n)
       .select("id1", "id2").as[(String, String)].collect()
     assert(uncapped.count(p => isClusterPair(p._1, p._2)) == clusterPairCount,
-      "uncapped run must surface the full quadratic cluster")
+      "a cap above every bucket must surface the full quadratic cluster")
 
     val capped = DedupOps.minhashLsh(docs, threshold = 0.5, maxBucket = 8)
       .select("id1", "id2").as[(String, String)].collect()
@@ -57,7 +61,6 @@ class SkewPropertySpec extends SparkSpec {
       "a 40-doc identical cluster fills every one of its band buckets " +
         "past cap 8 — none of its pairs may be generated")
     // candidate bound: Σ_buckets sz·(sz−1)/2 ≤ cap/2 · Σ sz ≤ cap·n·bands/2
-    val n = 400
     val bands = 4
     assert(capped.length <= n * bands * 8 / 2,
       s"capped pair count ${capped.length} exceeds the O(n·cap) bound")
@@ -65,11 +68,11 @@ class SkewPropertySpec extends SparkSpec {
 
   test("ngramJaccard maxDf drops hot-shingle blocks but keeps exact scores " +
     "for rare-block survivors") {
-    val uncapped = DedupOps.ngramJaccard(docs, threshold = 0.5)
+    val uncapped = DedupOps.ngramJaccard(docs, threshold = 0.5, maxDf = n)
       .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(4)))
     assert(uncapped.count(p => isClusterPair(p._1, p._2)) == clusterPairCount)
     val plantedUncapped = uncapped.find(p => p._1 == "pa" && p._2 == "pb")
-    assert(plantedUncapped.isDefined, "planted pair missing uncapped")
+    assert(plantedUncapped.isDefined, "planted pair missing under cap n")
 
     val capped = DedupOps.ngramJaccard(docs, threshold = 0.5, maxDf = 8)
       .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(4)))
@@ -132,5 +135,47 @@ class SkewPropertySpec extends SparkSpec {
     val winAt = lines.indexWhere(_.contains("Window"))
     assert(aggAt >= 0 && winAt > aggAt, // consumers print above producers
       s"count window must feed the collect_list aggregate:\n$plan")
+  }
+
+  test("incrementalNearLsh maxBucket drops the corpus cluster's buckets; " +
+    "a planted cross pair keeps its exact score") {
+    // corpus = the 400-doc skew corpus minus pb; batch = one more copy of
+    // the cluster text plus pb. The batch copy's buckets all hit corpus
+    // buckets of size 40 > cap 8, so it may pair with nothing.
+    val corpus = docs.filter($"doc_id" =!= "pb")
+    val batch = Seq(("bdup", clusterText), ("pb", plantedB)).toDF("doc_id", "text")
+    def run(cap: Int) = DedupOps.incrementalNearLsh(batch, corpus,
+        threshold = 0.5, maxBucket = cap)
+      .as[(String, String, Int, Int, Double)].collect()
+    val wide = run(n)
+    assert(wide.count(_._1 == "bdup") == 40,
+      "a cap above every bucket pairs the batch copy with all 40 members")
+    val capped = run(8)
+    assert(!capped.exists(_._1 == "bdup"),
+      "the 40-doc corpus cluster is over cap 8 — its buckets are dropped")
+    // 7 shared of 9 distinct 3-gram shingles: the exact Jaccard, as at
+    // any cap the pair's band bucket survives
+    assert(capped.toSeq == Seq(("pb", "pa", 7, 9, 0.777778)))
+    assert(wide.filter(_._1 == "pb").toSeq == capped.toSeq)
+  }
+
+  test("dedup_simhash_pairs' cap sits above every fixture's largest " +
+    "(band, slice) group") {
+    import graft.queries.Dedup.SimhashMaxBucket
+    // the query's 4 bands of 8 bits, cut on the driver from the signatures
+    def largestGroup(dir: String): Int = {
+      val sigs = DedupOps.simhashSignatures(graft.Tables(spark, dir, "documents"))
+        .select("simhash").as[Long].collect()
+      (0 until 4).flatMap(b => sigs.map(h => (b, (h >> (8 * b)) & 255L)))
+        .groupBy(identity).values.map(_.size).max
+    }
+    val sf01 = new java.io.File(new java.io.File(sf).getParentFile, "sf0.1").getPath
+    for (dir <- Seq(sf, sf01)) {
+      val largest = largestGroup(dir)
+      assert(largest < SimhashMaxBucket,
+        s"$dir: largest (band, slice) group $largest reaches the cap " +
+          s"$SimhashMaxBucket — the cap would bite and the oracle compare " +
+          "would no longer test the unbounded pair set")
+    }
   }
 }

@@ -143,7 +143,7 @@ class QueryRegistrySpec extends AnyFunSuite {
     "ann_ivfpq_trained_topk" -> "47680d7e458029be",
     "ann_ivf_auto_topk" -> "330280c1dd86c596",
     "dedup_ngram_jaccard" -> "f75517b17c43cec9",
-    "dedup_simhash_pairs" -> "9e749a3a75b18036",
+    "dedup_simhash_pairs" -> "e24081095f5aa571",
     "ann_ivf_auto_topk_half" -> "42427e1b62c38bae"
   )
   private val notBenched = Set("dedup_ngram_jaccard", "dedup_simhash_pairs", "ann_ivf_auto_topk_half")

@@ -618,6 +618,60 @@ def minhash_pairs(docs, max_bucket=64):
     return pairs
 
 
+def x_dedup_simhash_pairs(sf, max_hamming=3, bands=4, max_bucket=8192):
+    """SimHash band blocking (Manku et al. 2007): the 32-bit fingerprint
+    cut into `bands` slices; any pair within Hamming 3 shares a slice. A
+    (band, slice) group over max_bucket docs is dropped (the query's cap),
+    then every in-group pair is checked by popcount."""
+    sig = x_dedup_simhash(sf).sort_values("doc_id")
+    ids = sig["doc_id"].to_numpy()
+    hs = sig["simhash"].to_numpy().astype(np.uint32)
+    bits = 32 // bands
+    pairs = {}
+    for b in range(bands):
+        groups = defaultdict(list)
+        for i, h in enumerate(hs):
+            groups[(int(h) >> (bits * b)) & ((1 << bits) - 1)].append(i)
+        for members in groups.values():
+            if len(members) > max_bucket:
+                continue
+            m = np.array(members)  # ascending doc_id: sig is sorted
+            for j in range(len(m) - 1):
+                rest = m[j + 1:]
+                x = (hs[rest] ^ hs[m[j]]).astype(">u4").view(np.uint8)
+                ham = np.unpackbits(x).reshape(-1, 32).sum(axis=1)
+                for r, d in zip(rest[ham <= max_hamming], ham[ham <= max_hamming]):
+                    pairs[(ids[m[j]], ids[r])] = int(d)
+    rows = [(a, b, d) for (a, b), d in pairs.items()]
+    return pd.DataFrame(rows, columns=["id1", "id2", "hamming"])
+
+
+def x_dedup_incremental_near(sf, max_bucket=64):
+    """Batch-against-corpus MinHash LSH: the batch (doc_id % 3 == 0) is
+    paired with corpus docs (doc_id % 10 < 8) sharing a band bucket; a
+    bucket holding more than max_bucket CORPUS docs is dropped. Pairs are
+    scored by exact Jaccard over distinct word 3-gram sets."""
+    docs = load_table(sf, "documents")
+    band_rows = minhash_band_rows(docs)
+    corpus = defaultdict(list)
+    for did, b, bucket in band_rows:
+        if did % 10 < 8:
+            corpus[(b, bucket)].append(did)
+    pairs = set()
+    for did, b, bucket in band_rows:
+        members = corpus.get((b, bucket), [])
+        if did % 3 == 0 and len(members) <= max_bucket:
+            pairs.update((did, c) for c in members)
+    grams = {r["doc_id"]: set(distinct_grams(r["text"], 3))
+             for _, r in docs.iterrows()}
+    rows = []
+    for a, c in pairs:
+        inter = len(grams[a] & grams[c])
+        uni = len(grams[a]) + len(grams[c]) - inter
+        rows.append((a, c, inter, uni, round(inter / uni, 6)))
+    return pd.DataFrame(rows, columns=["batch_id", "corpus_id", "inter", "uni", "jaccard"])
+
+
 def x_graph_pagerank(sf, iters=5, scale=1000000):
     """Fixed-point integer PageRank (d=0.85) over the MinHash near-dup
     graph: undirected edges, contrib = floor(r/deg), r' = 0.15*scale +
@@ -681,6 +735,8 @@ CHECKS = {
     "ann_pq_topk": x_ann_pq_topk,
     "ann_ivfpq_trained_topk": x_ann_ivfpq_trained_topk,
     "dedup_simhash": x_dedup_simhash,
+    "dedup_simhash_pairs": x_dedup_simhash_pairs,
+    "dedup_incremental_near": x_dedup_incremental_near,
     "graph_pagerank": x_graph_pagerank,
     "corpus_zorder": x_corpus_zorder,
 }
