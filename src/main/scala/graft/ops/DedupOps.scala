@@ -557,10 +557,11 @@ object DedupOps {
       // restores compute parallelism for two-long rows — the cheapest
       // exchange in the plan.
       .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions)
-    val pfx = substring(col(textCol), 1, prefixLen)
+    // one (id, prefix) frame, joined once per side under renames
+    val prefixes = docs.select(col(idCol), substring(col(textCol), 1, prefixLen))
     cands
-      .join(docs.select(col(idCol).as("id1"), pfx.as("_t1")), "id1")
-      .join(docs.select(col(idCol).as("id2"), pfx.as("_t2")), "id2")
+      .join(prefixes.toDF("id1", "_t1"), "id1")
+      .join(prefixes.toDF("id2", "_t2"), "id2")
       .filter(abs(length(col("_t1")) - length(col("_t2"))) <= maxDist)
       .withColumn("edit_dist",
         levenshtein(col("_t1"), col("_t2"), maxDist.toInt).cast("long"))

@@ -5,10 +5,12 @@ import graft.sink.{ParquetStateStore, SinkKeys, SinkStrategy}
 import graft.model.Engine
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.JoinedRow
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.DriverRows
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
@@ -197,10 +199,7 @@ object Consume {
     */
   private[run] def tableChangelog(events: DataFrame, t: TableSync,
                                   ddls: Seq[(String, Long)]): DataFrame = {
-    val alters = ddls.sortBy(_._2).flatMap { case (stmt, ts) =>
-      graft.ddl.AlterParser.parse(stmt)
-        .filter(_.table == t.table).map(p => (p.action, ts))
-    }
+    val alters = altersOf(t, ddls)
     if (alters.isEmpty) tableChangelog(events, t)
     else {
       val schemas = alters.scanLeft(t.valueSchema) {
@@ -217,6 +216,14 @@ object Consume {
       slices.reduce(_.unionByName(_))
     }
   }
+
+  /** The parseable ALTERs of `t` among a batch's DDL statements, with
+    * their `event_unixtime`, in event order. */
+  private def altersOf(t: TableSync, ddls: Seq[(String, Long)])
+      : Seq[(graft.ddl.AlterParser.AlterAction, Long)] =
+    ddls.sortBy(_._2).flatMap { case (stmt, ts) =>
+      graft.ddl.AlterParser.parse(stmt).filter(_.table == t.table).map(p => (p.action, ts))
+    }
 
   /** Resolve ordering for a table: the configured version column when
     * set, else event arrival time; arrival metadata breaks ties. */
@@ -243,21 +250,47 @@ object Consume {
     * array and is the same for every batch.
     */
   def applyBatch(spark: SparkSession, t: TableSync, store: ParquetStateStore,
-                 changelog: DataFrame, batchId: Long): Unit =
-    store.append(delta(t, changelog, batchId), batchId)
+                 changelog: DataFrame, batchId: Long): Unit = {
+    val d = delta(t, changelog)
+    store.append(if (t.engine != Engine.MergeTree) d
+      else d.withColumn(batchColumn.name, udf(() => batchId).asNonNullable()()), batchId)
+  }
 
-  /** The delta [[applyBatch]] appends for one table's changelog (the
-    * one-partition consume path collects it and writes it on the driver
-    * instead). */
-  private[run] def delta(t: TableSync, changelog: DataFrame, batchId: Long): DataFrame =
+  /** The delta one table's changelog appends, without MergeTree's `_batch`
+    * stamp: [[applyBatch]] adds it as a column, the one-partition consume
+    * path to the collected rows ([[stampRows]]), so the plan that path
+    * keeps across batches holds no batch id. */
+  private[run] def delta(t: TableSync, changelog: DataFrame): DataFrame =
     t.engine match {
-      case Engine.MergeTree =>
-        SinkStrategy.latestPerKey(changelog, keysFor(t))
-          .withColumn("_batch", udf(() => batchId).asNonNullable()())
+      case Engine.MergeTree => SinkStrategy.latestPerKey(changelog, keysFor(t))
       case Engine.CollapsingMergeTree | Engine.VersionedCollapsingMergeTree =>
         CdcOps.withCollapsingSign(changelog)
       case Engine.ReplacingMergeTree => changelog
     }
+
+  private val batchColumn = StructField("_batch", LongType, nullable = false)
+
+  /** A [[delta]] collected on the driver, with MergeTree's `_batch` stamp
+    * appended to each row: the rows [[applyBatch]]'s `df.write` writes. */
+  private[run] def stampRows(t: TableSync, rows: DriverRows.Rows, batchId: Long): DriverRows.Rows =
+    if (t.engine != Engine.MergeTree) rows
+    else {
+      val stamp = InternalRow(batchId)
+      DriverRows.Rows(rows.schema.add(batchColumn), rows.rows.map(new JoinedRow(_, stamp)))
+    }
+
+  /** One table's delta over a one-partition batch of `schema`, prepared
+    * over rows bound when it runs ([[DriverRows.unbound]]): the changelog
+    * of `t` from the batch's events, split at the batch's ALTERs of `t`
+    * ([[tableChangelog]]), resolved per [[delta]] under the batch-END
+    * TableSync (a renamed PK column has its new name by the time the
+    * delta sees rows). A batch with ALTERs of `t` unions one slice per
+    * schema, hence the coalesce back to one partition. */
+  private[run] def deltaPlan(spark: SparkSession, t: TableSync, schema: StructType,
+                             ddls: Seq[(String, Long)]): SparkPlan = {
+    val events = DriverRows.unbound(spark, schema).drop("_src_file", "_src_seq")
+    DriverRows.prepare(delta(evolveTable(t, ddls), tableChangelog(events, t, ddls).coalesce(1)))
+  }
 
   /** MergeTree read-time resolution: batch (arrival) order dominates,
     * event time and action_seq break ties within a batch — the exact
@@ -514,9 +547,7 @@ object Consume {
     * batch). */
   private[run] def evolveTable(t: TableSync, ddls: Seq[(String, Long)]): TableSync = {
     import graft.ddl.AlterParser._
-    val alters = ddls.sortBy(_._2).flatMap(d =>
-      parse(d._1).filter(_.table == t.table).map(_.action))
-    alters.foldLeft(t) { (cur, a) =>
+    altersOf(t, ddls).map(_._1).foldLeft(t) { (cur, a) =>
       val renamed = a match {
         case ChangeColumn(o, n, _, _, _, _) if bare(o) != bare(n) =>
           cur.copy(
@@ -572,14 +603,19 @@ object Consume {
     * jobs. The first collects the stamped batch onto the driver as one
     * task ([[collectBatch]]): the source read, the parse and the stamps.
     * Its DDL rows are found and sorted on the driver ([[ddlAll]]), and
-    * each table's changelog and delta are planned over a one-partition
-    * local relation of the collected rows, so MergeTree's per-key dedup
-    * window needs no exchange. The second job computes every table's
-    * delta, one task per table ([[DriverRows.collectEach]]), and each
-    * delta is written on the driver as one part file
-    * ([[ParquetStateStore.appendRows]]): a Spark write job, or a job per
-    * table, costs more to ship and commit than the rows cost to compute
-    * and write. The store's log entry stays each version's commit point.
+    * the collected rows are bound into each table's delta plan
+    * ([[deltaPlan]]), a one-partition plan, so MergeTree's per-key dedup
+    * window needs no exchange. That plan is made once per table and kept
+    * while the table's TableSync and the batch schema hold, so a trigger
+    * without ALTERs of a table runs no analyzer, optimizer or planner
+    * for it; a batch with ALTERs of a table plans it for that batch
+    * alone. The second job computes every table's delta, one task per
+    * table ([[DriverRows.collectEach]]), and each delta is written on the
+    * driver as one part file ([[ParquetStateStore.appendRows]]), with
+    * MergeTree's `_batch` stamp added to its rows ([[stampRows]]): a
+    * Spark write job, or a job per table, costs more to ship and commit
+    * than the rows cost to compute and write. The store's log entry stays
+    * each version's commit point.
     * Larger batches, and batches without a size estimate (Kafka), keep
     * the source's partitioning: the batch is cached, its DDL collected in
     * one job, and the tables apply concurrently through `df.write`.
@@ -629,7 +665,7 @@ object Consume {
     // its own recorded schema — chaining through parked slices alone
     // loses any ALTER in a batch that applied live BETWEEN two parks (r13
     // property-test finding, DeadLetter.record).
-    def applyTable(t: TableSync, tCur: TableSync, stamped: DataFrame, batchId: Long)
+    def applyTable(t: TableSync, tCur: TableSync, stamped: => DataFrame, batchId: Long)
                   (apply: => Unit): Option[Exception] =
       try { apply; None }
       catch {
@@ -645,32 +681,47 @@ object Consume {
         case e: Exception => Some(e)
       }
 
+    // Each table's delta plan for a one-partition batch (deltaPlan),
+    // with the TableSync and batch schema it was planned for: the plan
+    // depends on nothing else, and neither changes between ALTERs, so a
+    // trigger binds its rows into the kept plan instead of analyzing,
+    // optimizing and planning the delta again.
+    val plans = scala.collection.concurrent.TrieMap.empty[TableSync, ((TableSync, StructType), SparkPlan)]
+
+    // One table's delta plan for a batch of `schema`. A batch with
+    // ALTERs of the table plans its own, used once; a plan that does not
+    // read the batch through exactly one leaf is not kept either.
+    def planFor(t: TableSync, schema: StructType, ddls: Seq[(String, Long)]): SparkPlan = {
+      val key = (live(t), schema)
+      if (altersOf(t, ddls).nonEmpty) deltaPlan(spark, live(t), schema, ddls)
+      else plans.get(t).collect { case (`key`, p) => p }.getOrElse {
+        val p = deltaPlan(spark, live(t), schema, Nil)
+        if (DriverRows.unboundLeaves(p) == 1) plans(t) = (key, p)
+        p
+      }
+    }
+
     // The one-partition batch: one job collects it, one job computes
     // every table's delta. Returns the batch's DDL and the tables' errors.
     def applyOnDriver(batch: DataFrame, batchId: Long)
         : (Map[String, Seq[(String, Long)]], Seq[Exception]) = {
       val rows = collectBatch(batch)
       val ddlBySchema = ddlAll(rows)
-      val stamped = DriverRows.frame(spark, rows)
-      val events = stamped.drop("_src_file", "_src_seq")
-      // each table's delta is built and planned on its own thread (the
-      // analysis and planning are driver CPU work); the one job that
-      // computes them all runs on this thread
+      // only a table that fails under skip-error parks a slice of it
+      lazy val stamped = DriverRows.frame(spark, rows)
+      // each table's plan is found (or planned: driver CPU work) and
+      // bound on its own thread; the one job that computes them all runs
+      // on this thread
       val deltas = perTable(tables) { t =>
-        val ddls = ddlBySchema.getOrElse(t.schema, Nil)
-        // the changelog is lifted to the batch-END shape, so key
-        // resolution uses the batch-END TableSync (a renamed PK column
-        // has its new name by the time the delta sees rows); a batch with
-        // DDL for the table unions one slice per schema, hence the
-        // coalesce back to one partition
-        try Right(DriverRows.plan(delta(evolveTable(live(t), ddls),
-          tableChangelog(events, live(t), ddls).coalesce(1), batchId)))
+        try Right(DriverRows.bind(spark,
+          planFor(t, rows.schema, ddlBySchema.getOrElse(t.schema, Nil)), rows))
         catch { case e: Exception => Left(e) }
       }
       val collected = DriverRows.collectEach(spark, deltas.collect { case Right(p) => p }).iterator
       val results = tables.zip(deltas.map(_.flatMap(_ => collected.next()))).toMap
       val errors = perTable(tables)(t => applyTable(t, live(t), stamped, batchId)(
-        stores(t).appendRows(results(t).fold(e => throw e, identity), batchId))).flatten
+        stores(t).appendRows(stampRows(t, results(t).fold(e => throw e, identity), batchId),
+          batchId))).flatten
       (ddlBySchema, errors)
     }
 

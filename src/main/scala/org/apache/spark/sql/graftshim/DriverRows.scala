@@ -1,12 +1,14 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.spark.{Partition, SparkContext, TaskContext}
 import org.apache.spark.rdd.{RDD, UnionRDD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Repartition}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Repartition}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
-import org.apache.spark.sql.execution.{QueryExecution, SQLExecution, SparkPlan}
+import org.apache.spark.sql.execution.{LocalTableScanExec, LogicalRDD, QueryExecution,
+  RDDScanExec, SQLExecution, SparkPlan}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
@@ -32,22 +34,27 @@ object DriverRows {
   /** A frame prepared to run: its schema and the RDD of its rows. */
   final case class Planned(schema: StructType, rdd: RDD[InternalRow])
 
-  /** Plan `df` and create its RDD without running it. Safe to call from
-    * any thread. The plan is prepared without adaptive query execution
-    * and without whole-stage code generation: AQE wraps any plan that
-    * holds a keyed operator (a window) even when no exchange is needed,
-    * and re-plans it as a query stage when it runs, and whole-stage
-    * codegen generates each stage's Java source on the driver at every
-    * execution (the compiled class is cached, the source is not). Each
-    * costs up to tens of milliseconds of driver work per frame, which a
-    * frame of a few hundred rows does not win back. */
+  /** Plan `df` and create its RDD without running it ([[prepare]]). */
   def plan(df: DataFrame): Planned = {
+    val plan = prepare(df)
+    Planned(schemaOf(plan), plan.execute())
+  }
+
+  /** `df`'s physical plan, prepared to run. Safe to call from any thread.
+    * The plan is prepared without adaptive query execution and without
+    * whole-stage code generation: AQE wraps any plan that holds a keyed
+    * operator (a window) even when no exchange is needed, and re-plans it
+    * as a query stage when it runs, and whole-stage codegen generates
+    * each stage's Java source on the driver at every execution (the
+    * compiled class is cached, the source is not). Each costs up to tens
+    * of milliseconds of driver work per frame, which a frame of a few
+    * hundred rows does not win back. */
+  def prepare(df: DataFrame): SparkPlan = {
     val qe = df.queryExecution
     val conf = qe.sparkSession.sessionState.conf.clone()
     conf.setConf(SQLConf.WHOLESTAGE_CODEGEN_ENABLED, false)
-    val plan = qe.sparkSession.withActive(SQLConf.withExistingConf(conf)(
+    qe.sparkSession.withActive(SQLConf.withExistingConf(conf)(
       QueryExecution.prepareExecutedPlan(qe.sparkSession, qe.sparkPlan)))
-    Planned(schemaOf(plan), plan.execute())
   }
 
   /** The rows of every planned frame in ONE job: the RDDs are unioned,
@@ -81,7 +88,49 @@ object DriverRows {
     * shuffle-free coalesce, so a keyed operator over it (a window) needs
     * no exchange, and a plan over it runs as one task. */
   def frame(spark: SparkSession, rows: Rows): DataFrame =
-    Dataset.ofRows(spark.asInstanceOf[ClassicSession],
-      Repartition(1, shuffle = false,
-        LocalRelation(DataTypeUtils.toAttributes(rows.schema), rows.rows.toSeq)))
+    onePartition(spark, LocalRelation(DataTypeUtils.toAttributes(rows.schema), rows.rows.toSeq))
+
+  /** A one-partition frame of `schema` whose rows are bound into its
+    * prepared plan later ([[prepare]], then [[bind]] once per set of
+    * rows), so one plan serves every batch of that schema. Its leaf
+    * states no row count, unlike a local relation, whose `maxRows` lets
+    * the optimizer specialise a plan to its rows (drop a sort or an
+    * aggregate over one row, fold a plan over none to an empty relation)
+    * and so makes it wrong for the next rows. */
+  def unbound(spark: SparkSession, schema: StructType): DataFrame = {
+    val session = spark.asInstanceOf[ClassicSession]
+    onePartition(spark, LogicalRDD(DataTypeUtils.toAttributes(schema),
+      new UnboundRows(session.sparkContext))(session))
+  }
+
+  private def onePartition(spark: SparkSession, leaf: LogicalPlan): DataFrame =
+    Dataset.ofRows(spark.asInstanceOf[ClassicSession], Repartition(1, shuffle = false, leaf))
+
+  /** How many leaves of a prepared plan read [[unbound]] rows. */
+  def unboundLeaves(plan: SparkPlan): Int = plan.collectLeaves().count(isUnbound)
+
+  private def isUnbound(p: SparkPlan) = p match {
+    case s: RDDScanExec => s.rdd.isInstanceOf[UnboundRows]
+    case _ => false
+  }
+
+  /** A prepared plan over [[unbound]] frames with `rows` in every unbound
+    * leaf, its RDD created to run: a copy of the plan, which itself
+    * stays unbound. */
+  def bind(spark: SparkSession, plan: SparkPlan, rows: Rows): Planned =
+    spark.asInstanceOf[ClassicSession].withActive {
+      val bound = plan.transformUp {
+        case s if isUnbound(s) => LocalTableScanExec(s.output, rows.rows.toSeq, None)
+      }
+      Planned(schemaOf(bound), bound.execute())
+    }
+
+  /** The rows of an [[unbound]] leaf: a plan that runs without binding
+    * them fails. */
+  private final class UnboundRows(sc: SparkContext) extends RDD[InternalRow](sc, Nil) {
+    override protected def getPartitions: Array[Partition] =
+      throw new IllegalStateException("a plan over unbound rows ran without DriverRows.bind")
+    override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] =
+      Iterator.empty
+  }
 }

@@ -32,8 +32,8 @@ class ConsumeSpec extends SparkSpec {
   private def applyBatch(t: TableSync, store: ParquetStateStore,
                          changelog: org.apache.spark.sql.DataFrame, batchId: Long,
                          onDriver: Boolean): Unit =
-    if (onDriver) store.appendRows(
-      org.apache.spark.sql.graftshim.DriverRows.collect(Consume.delta(t, changelog, batchId)), batchId)
+    if (onDriver) store.appendRows(Consume.stampRows(t,
+      org.apache.spark.sql.graftshim.DriverRows.collect(Consume.delta(t, changelog)), batchId), batchId)
     else Consume.applyBatch(spark, t, store, changelog, batchId)
 
   /** The canonical event frame of a directory of wire-JSON files, read
@@ -279,6 +279,80 @@ class ConsumeSpec extends SparkSpec {
             assert(!fd.schema("_batch").nullable, s"$what: the stamp is non-null")
       }
     }
+  }
+
+  test("a delta plan prepared once and bound to each batch's rows equals a fresh plan's delta, " +
+    "for every engine: a 1-row batch's plan bound to 300 rows, and to a batch without the table") {
+    import org.apache.spark.sql.graftshim.{DriverRows, ParquetFooters}
+    val root = Files.createTempDirectory("boundplan").toString
+    def batch(name: String, lines: Seq[String]) = {
+      val dir = s"$root/events-$name"; Files.createDirectories(Paths.get(dir))
+      writeBatch(dir, "b.json", lines)
+      Consume.collectBatch(readEvents(dir))
+    }
+    // 300 events over 40 keys: repeated keys, inserts, updates and
+    // deletes, three events per timestamp; plus rows of another table
+    val rnd = new scala.util.Random(14)
+    val actions = Seq("insert", "insert", "update", "update", "delete")
+    val batches = Seq(
+      "one" -> batch("one", Seq(ev("t", "insert", 1, 10.0, 100))),
+      "many" -> batch("many", (0 until 300).map(i =>
+        ev("t", actions(rnd.nextInt(actions.size)), rnd.nextInt(40), i.toDouble, 100 + i / 3)) ++
+        Seq(ev("u", "insert", 1, 1.0, 100))),
+      "none" -> batch("none", Seq(ev("u", "insert", 1, 1.0, 100), ev("u", "delete", 1, 1.0, 200))))
+    val schema = batches.head._2.schema
+    assert(batches.forall(_._2.schema == schema))
+    // the plan's leaf states no row count for the optimizer to fold in
+    assert(DriverRows.unbound(spark, schema).queryExecution.optimizedPlan.maxRows.isEmpty)
+    def rows(dir: String) = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
+    Engine.values.toSeq.foreach { engine =>
+      val t = TableSync("db", "t", valueSchema, Seq("id"), engine)
+      val plan = Consume.deltaPlan(spark, t, schema, Nil)
+      assert(DriverRows.unboundLeaves(plan) == 1, s"$engine")
+      batches.foreach { case (name, batchRows) =>
+        val what = s"$engine $name"
+        val bound = new ParquetStateStore(spark, s"$root/$engine-$name-bound")
+        bound.appendRows(Consume.stampRows(t, DriverRows.collectEach(spark,
+          Seq(DriverRows.bind(spark, plan, batchRows))).head.fold(e => throw e, identity), 0L), 0L)
+        // a plan of its own over a local relation of the same rows,
+        // written through df.write
+        val fresh = new ParquetStateStore(spark, s"$root/$engine-$name-fresh")
+        Consume.applyBatch(spark, t, fresh, Consume.tableChangelog(
+          DriverRows.frame(spark, batchRows).drop("_src_file", "_src_seq"), t), 0L)
+        val Seq(b, f) = Seq("bound", "fresh").map(k => s"$root/$engine-$name-$k/v=0")
+        assert(ParquetFooters.read(spark, b).schema == ParquetFooters.read(spark, f).schema, what)
+        assert(rows(b) == rows(f), what)
+        assert(rows(b).isEmpty == (name == "none"), what)
+      }
+    }
+  }
+
+  test("a DDL-free trigger after the first plans no table delta: its analyzer and " +
+    "optimizer rule runs are the same for three tables as for one") {
+    import ConsumeSpec.planningRuleRuns
+    val root = Files.createTempDirectory("planonce").toString
+    val all = Seq(
+      TableSync("db", "mt", valueSchema, Seq("id"), Engine.MergeTree),
+      TableSync("db", "rt", valueSchema, Seq("id"), Engine.ReplacingMergeTree),
+      TableSync("db", "ct", valueSchema, Seq("id"), Engine.CollapsingMergeTree))
+    // rule runs per trigger, one file per trigger; each file carries
+    // events of all three tables
+    def ruleRuns(tables: Seq[TableSync]): Seq[Long] = {
+      val dir = s"$root/${tables.size}"
+      val eventsDir = s"$dir/events"; Files.createDirectories(Paths.get(eventsDir))
+      val q = Consume.start(spark, EventSource.files(spark, eventsDir), tables,
+        s"$dir/state", s"$dir/ckpt", triggerInterval = "100 milliseconds")
+      try (0 until 3).map { b =>
+        val before = planningRuleRuns()
+        writeBatch(dir, s"b$b.json", all.map(t => ev(t.table, "insert", b, b.toDouble, 100 + b)))
+        Files.move(Paths.get(dir, s"b$b.json"), Paths.get(eventsDir, s"b$b.json"))
+        q.processAllAvailable()
+        planningRuleRuns() - before
+      } finally q.stop()
+    }
+    val (one, three) = (ruleRuns(all.take(1)), ruleRuns(all))
+    assert(three.head > one.head, s"the first trigger plans each table: $one vs $three")
+    assert(three.tail == one.tail, s"later triggers planned a table: $one vs $three")
   }
 
   test("the MergeTree _batch stamp keeps generated code stable across batch ids") {
@@ -649,4 +723,19 @@ class ConsumeSpec extends SparkSpec {
     assert(r.getAs[Long]("event_unixtime") == 123L)
     assert(r.getAs[Int]("action_seq") == 2)
   }
+}
+
+object ConsumeSpec {
+
+  /** Rule runs of every rule executor in this JVM so far (analyzer,
+    * optimizer and their helpers), except those of code generation's
+    * expression canonicalizer, which the tasks run as they compile their
+    * projections: those follow the tasks (one per table in a delta job),
+    * not planning. */
+  def planningRuleRuns(): Long =
+    org.apache.spark.sql.catalyst.rules.RuleExecutor.dumpTimeSpent().linesIterator
+      .map(_.trim.split("\\s+"))
+      .collect { case a if a.length > 1 && a(0).startsWith("org.") && !a(0).contains(".codegen.") =>
+        a.last.toLong }
+      .sum
 }

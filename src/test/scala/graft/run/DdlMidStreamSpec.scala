@@ -369,6 +369,63 @@ class DdlMidStreamSpec extends SparkSpec {
       (3L, 31.0, Some("upd2"))))
   }
 
+  test("ADD COLUMN and RENAME COLUMN mid-stream each make the table's delta plan anew " +
+    "in the DDL batch and the batch after it; the state equals the cached path's") {
+    import ConsumeSpec.planningRuleRuns
+    val root = Files.createTempDirectory("ddlplan").toString
+    val eventsDir = s"$root/events"; Files.createDirectories(Paths.get(eventsDir))
+    val v1 = StructType(Seq(StructField("id", LongType), StructField("amount", DoubleType)))
+    val t1 = TableSync("db", "t", v1, Seq("id"), Engine.MergeTree)
+    // one file per trigger: (label, lines); "plan" marks the triggers that
+    // must make the table's plan, "kept" those that bind the kept one
+    val files = Seq(
+      "plan" -> Seq(ev("t", "insert", """{"id":1,"amount":10.0}""", 100),
+        ev("t", "insert", """{"id":2,"amount":20.0}""", 100)),
+      "kept" -> Seq(ev("t", "update", """{"id":1,"amount":11.0}""", 110)),
+      "plan" -> Seq(ev("t", "insert", """{"id":3,"amount":30.0}""", 120),
+        ddl("ALTER TABLE db.t ADD COLUMN note VARCHAR(20)", 121),
+        ev("t", "update", """{"id":2,"amount":21.0,"note":"a"}""", 122)),
+      "plan" -> Seq(ev("t", "insert", """{"id":4,"amount":40.0,"note":"b"}""", 130)),
+      "kept" -> Seq(ev("t", "update", """{"id":3,"amount":31.0,"note":"c"}""", 140)),
+      "plan" -> Seq(ev("t", "update", """{"id":4,"amount":41.0,"note":"d"}""", 150),
+        ddl("ALTER TABLE db.t CHANGE COLUMN note memo VARCHAR(20)", 151),
+        ev("t", "insert", """{"id":5,"amount":50.0,"memo":"e"}""", 152)),
+      "plan" -> Seq(ev("t", "update", """{"id":1,"amount":12.0,"memo":"f"}""", 160)),
+      "kept" -> Seq(ev("t", "delete", """{"id":5,"amount":50.0,"memo":"e"}""", 170)))
+    val ruleRuns = {
+      val q = Consume.start(spark, EventSource.files(spark, eventsDir), Seq(t1),
+        s"$root/driver/state", s"$root/driver/ckpt", triggerInterval = "100 milliseconds")
+      try files.zipWithIndex.map { case ((_, lines), i) =>
+        val before = planningRuleRuns()
+        Files.write(Paths.get(root, f"b$i%02d.json"), lines.mkString("\n").getBytes("UTF-8"))
+        Files.move(Paths.get(root, f"b$i%02d.json"), Paths.get(eventsDir, f"b$i%02d.json"))
+        q.processAllAvailable()
+        planningRuleRuns() - before
+      } finally q.stop()
+    }
+    val kept = files.zip(ruleRuns).collect { case (("kept", _), n) => n }
+    assert(kept.distinct.size == 1, s"rule runs per trigger: $ruleRuns")
+    files.zip(ruleRuns).zipWithIndex.foreach {
+      case ((("plan", _), n), i) => assert(n > kept.head, s"trigger $i kept a plan: $ruleRuns")
+      case _ =>
+    }
+    // the same files, one per batch, through the cached df.write path
+    spark.conf.set("spark.sql.files.openCostInBytes", "1")
+    try {
+      val q = Consume.start(spark, EventSource.files(spark, eventsDir, maxFilesPerTrigger = 1),
+        Seq(t1), s"$root/cached/state", s"$root/cached/ckpt", triggerInterval = "100 milliseconds")
+      q.processAllAvailable(); q.stop()
+    } finally spark.conf.unset("spark.sql.files.openCostInBytes")
+    val t3 = t1.copy(valueSchema = v1.add(StructField("memo", StringType)))
+    val Seq(driver, cached) = Seq("driver", "cached").map(k =>
+      Consume.currentState(t3, new ParquetStateStore(spark, s"$root/$k/state/db/t")).get
+        .select("id", "amount", "memo").collect()
+        .map(r => (r.getLong(0), r.getDouble(1), Option(r.getString(2)))).toSet)
+    assert(driver == Set((1L, 12.0, Some("f")), (2L, 21.0, Some("a")), (3L, 31.0, Some("c")),
+      (4L, 41.0, Some("d"))))
+    assert(driver == cached)
+  }
+
   test("CHANGE COLUMN renaming the PRIMARY KEY column keeps key resolution") {
     // the rename compact runs BEFORE the resolver (pre-resolve transform),
     // so old-name versions group under the new key name — without that,
