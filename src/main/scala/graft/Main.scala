@@ -388,7 +388,7 @@ object Main {
           val store = new ParquetStateStore(spark, storePath)
           val snap = FullEtl.read(spark,
             scanSource(src, sync.schema, sync.table, sync.pkCols, sync.valueSchema))
-          Consume.applyBatch(spark, sync, store,
+          Consume.applyBatch(sync, store,
             Consume.snapshotAsChangelog(snap), batchId = -1L)
           // count the WRITTEN store version only — a source count() would
           // scan the production table a second time just for a log line
@@ -500,18 +500,18 @@ object Main {
             val rest = broker.stripPrefix("kafka:")
             val slash = rest.lastIndexOf('/')
             require(slash > 0, s"kafka broker must be kafka:<servers>/<topic>: $broker")
-            Produce.toKafka(spark, events, rest.substring(0, slash),
+            Produce.toKafka(events, rest.substring(0, slash),
               rest.substring(slash + 1),
               s"/tmp/graft_produce_ckpt/${src.alias}",
               triggerInterval = cfg.triggerInterval)
           } else if (broker == "redis" || broker.startsWith("redis:")) {
-            Produce.toRedis(spark, events,
+            Produce.toRedis(events,
               () => redisBroker(broker, cfg, src.alias),
               s"/tmp/graft_produce_ckpt/${src.alias}",
               triggerInterval = cfg.triggerInterval)
           } else {
             val dir = broker.stripPrefix("file:")
-            Produce.toFiles(spark, events, dir, s"$dir/_checkpoint",
+            Produce.toFiles(events, dir, s"$dir/_checkpoint",
               triggerInterval = cfg.triggerInterval)
           }
         Lifecycle.withGracefulShutdown(Seq(q))

@@ -1,11 +1,21 @@
 package graft.config
 
 import graft.model.Engine
+import org.yaml.snakeyaml.{DumperOptions, LoaderOptions, Yaml}
+import org.yaml.snakeyaml.constructor.SafeConstructor
+import org.yaml.snakeyaml.error.{Mark, YAMLException}
+import org.yaml.snakeyaml.nodes.{Node, Tag}
+import org.yaml.snakeyaml.representer.Representer
+import org.yaml.snakeyaml.resolver.Resolver
+import scala.jdk.CollectionConverters._
 
 /** Typed sync configuration, mirroring the reference's synch.yaml surface
   * (synch.yaml:1-75; accessors synch/settings.py:33-95). The engine is a
-  * library, so configuration is plain case classes; [[SyncConfig.fromProperties]]
-  * loads the same keys from a flat properties map for CLI-style use.
+  * library, so configuration is plain case classes, and each default is
+  * stated once, as a case-class default that both loaders read:
+  * [[SyncConfig.fromYaml]] loads the reference's `synch.yaml` and
+  * [[SyncConfig.fromProperties]] the same keys from a flat properties map
+  * for CLI-style use.
   *
   * Reference flags with no Spark-side meaning are kept as documented
   * no-ops for config compatibility:
@@ -35,8 +45,8 @@ final case class RedisConfig(
 
 final case class TableConfig(
     table: String,
-    // ReplacingMergeTree, matching BOTH loaders' missing-engine default
-    // (engineOf; r13 review: the old MergeTree default gave programmatic
+    // ReplacingMergeTree, which both loaders also read for a missing
+    // engine (a MergeTree default here once gave programmatic
     // construction different sink semantics than the same config loaded
     // from yaml/properties)
     engine: Engine.Value = Engine.ReplacingMergeTree,
@@ -76,18 +86,88 @@ final case class SyncConfig(core: CoreConfig, sources: Seq[SourceConfig],
 
 object SyncConfig {
 
-  /** Reference parity for BOTH loaders: a missing or empty engine means
-    * ReplacingMergeTree (synch.yaml:48 "default ReplacingMergeTree";
-    * synch/factory.py:71-72 maps engine None to the Replacing writer).
-    */
-  private def engineOf(raw: Option[String]): Engine.Value =
-    raw.map(_.trim).filter(_.nonEmpty).map(Engine.withName)
-      .getOrElse(Engine.ReplacingMergeTree)
+  private val DefaultDbType = "mysql"
 
-  /** Loader for the reference's own `synch.yaml` shape
-    * (/root/reference/synch.yaml; accessors synch/settings.py:33-95) via
-    * the dependency-free [[MiniYaml]] subset parser — a reference user
-    * can point the engine at their existing config file.
+  /** YAML-1.1 booleans, the set PyYAML (the reference's loader) accepts:
+    * a reference user's existing `monitoring: yes` must parse. */
+  private def bool(key: String)(v: String): Boolean = v.toLowerCase match {
+    case "true" | "yes" | "on" | "1" => true
+    case "false" | "no" | "off" | "0" => false
+    case other => throw new IllegalArgumentException(s"key '$key': not a boolean: '$other'")
+  }
+
+  // Each section from a key lookup, shared by both loaders; an absent key
+  // takes the case-class default.
+
+  private def coreOf(get: String => Option[String]): CoreConfig = {
+    val d = CoreConfig()
+    CoreConfig(
+      insertNum = get("insert_num").fold(d.insertNum)(_.toInt),
+      insertIntervalSec = get("insert_interval").fold(d.insertIntervalSec)(_.toInt),
+      skipError = get("skip_error").fold(d.skipError)(bool("skip_error")),
+      monitoring = get("monitoring").fold(d.monitoring)(bool("monitoring")))
+  }
+
+  private def redisOf(get: String => Option[String]): RedisConfig = {
+    val d = RedisConfig()
+    RedisConfig(
+      host = get("host").getOrElse(d.host),
+      port = get("port").fold(d.port)(_.toInt),
+      db = get("db").fold(d.db)(_.toInt),
+      password = get("password").filter(_.nonEmpty),
+      prefix = get("prefix").getOrElse(d.prefix),
+      // long: XADD MAXLEN caps above Int.MaxValue are legal
+      queueMaxLen = get("queue_max_len").fold(d.queueMaxLen)(_.toLong))
+  }
+
+  /** One table; the two formats name the engine and settings keys
+    * differently and spell `pk` as a list or a comma list. A missing or
+    * empty engine is the default, ReplacingMergeTree (synch.yaml:48
+    * "default ReplacingMergeTree"; synch/factory.py:71-72 maps engine None
+    * to the Replacing writer). */
+  private def tableOf(table: String, get: String => Option[String], engineKey: String,
+                      settingsKey: String, pk: Seq[String]): TableConfig = {
+    val d = TableConfig(table)
+    d.copy(
+      engine = get(engineKey).map(_.trim).filter(_.nonEmpty).fold(d.engine)(Engine.withName),
+      autoFullEtl = get("auto_full_etl").fold(d.autoFullEtl)(bool("auto_full_etl")),
+      signColumn = get("sign_column").getOrElse(d.signColumn),
+      versionColumn = get("version_column").getOrElse(d.versionColumn),
+      partitionBy = get("partition_by"),
+      engineSettings = get(settingsKey),
+      skipDecimal = get("skip_decimal").fold(d.skipDecimal)(bool("skip_decimal")),
+      pk = pk)
+  }
+
+  /** Plain scalars stay text: only `~`, `null` and the empty scalar resolve
+    * (to null), and `<<` to a merge key. SnakeYAML's default YAML-1.1
+    * typing would read `password: 0123` as 83, `1:20` as 80 (base 60) and
+    * `yes` as true; the loaders parse numbers and booleans from the text. */
+  private final class TextScalars extends Resolver {
+    override protected def addImplicitResolvers(): Unit = {
+      addImplicitResolver(Tag.NULL, Resolver.NULL, "~nN\u0000", 10)
+      addImplicitResolver(Tag.NULL, Resolver.EMPTY, null, 10)
+      addImplicitResolver(Tag.MERGE, Resolver.MERGE, "<", 10)
+    }
+  }
+
+  /** The safe constructor, noting where each value starts, so a value of
+    * the wrong shape is reported at its line and column. */
+  private final class Located(opts: LoaderOptions) extends SafeConstructor(opts) {
+    val marks = new java.util.IdentityHashMap[AnyRef, Mark]
+    override protected def constructObject(node: Node): AnyRef = {
+      val o = super.constructObject(node)
+      if (o != null) marks.put(o, node.getStartMark)
+      o
+    }
+  }
+
+  /** Loader for the reference's own `synch.yaml` shape (accessors
+    * synch/settings.py:33-95), read with SnakeYAML, the YAML library
+    * Spark ships, so a reference user can point the engine at their
+    * existing config file. Duplicate keys and malformed YAML fail with
+    * SnakeYAML's line and column, as does a value of the wrong shape (a
+    * scalar where a section, list item or list belongs).
     *
     * The `redis:` section is honored when the broker URI selects the
     * Redis-Streams transport; the remaining transport sections
@@ -96,61 +176,67 @@ object SyncConfig {
     * fine and are ignored here.
     */
   def fromYaml(text: String): SyncConfig = {
-    val root = MiniYaml.parse(text)
-    val core = root.get("core").map { c =>
-      CoreConfig(
-        insertNum = c.int("insert_num", 20000),
-        insertIntervalSec = c.int("insert_interval", 60),
-        skipError = c.bool("skip_error", default = false),
-        monitoring = c.bool("monitoring", default = true))
-    }.getOrElse(CoreConfig())
+    val opts = new LoaderOptions
+    opts.setAllowDuplicateKeys(false)
+    val located = new Located(opts)
+    val dumper = new DumperOptions
+    val root: Any =
+      try new Yaml(located, new Representer(dumper), dumper, opts, new TextScalars).load[AnyRef](text)
+      catch { case e: YAMLException => throw new IllegalArgumentException(e.getMessage, e) }
 
-    val redis = root.get("redis").map { r =>
-      RedisConfig(
-        host = r.str("host", "localhost"),
-        port = r.int("port", 6379),
-        db = r.int("db", 0),
-        password = r.get("password").flatMap(_.scalar).filter(_.nonEmpty),
-        prefix = r.str("prefix", "synch"),
-        // long: XADD MAXLEN caps above Int.MaxValue are legal, and the
-        // properties loader already accepts them — the two loaders must
-        // agree on the same documented key
-        queueMaxLen = r.long("queue_max_len", 200000L))
-    }.getOrElse(RedisConfig())
+    def fail(what: String, v: Any): Nothing = {
+      val at = Option(located.marks.get(v)).fold("")(m =>
+        s" (line ${m.getLine + 1}, column ${m.getColumn + 1})")
+      throw new IllegalArgumentException(s"$what, not '$v'$at")
+    }
+    def mapping(v: Any, what: String): java.util.Map[_, _] = v match {
+      case null => java.util.Map.of()
+      case m: java.util.Map[_, _] => m
+      case other => fail(s"$what must be a mapping", other)
+    }
+    def scalar(v: Any, what: String): Option[String] = v match {
+      case null => None
+      case _: java.util.Map[_, _] | _: java.util.List[_] => fail(s"$what must be a scalar", v)
+      case s => Some(s.toString)
+    }
+    def field(m: java.util.Map[_, _])(key: String): Option[String] = scalar(m.get(key), s"'$key'")
+    def list(m: java.util.Map[_, _], key: String): Seq[Any] = m.get(key) match {
+      case null => Nil
+      case l: java.util.List[_] => l.asScala.toSeq
+      case other => fail(s"'$key' must be a list", other)
+    }
+    def strings(m: java.util.Map[_, _], key: String): Seq[String] =
+      list(m, key).flatMap(scalar(_, s"an item of '$key'"))
 
-    val sources = root.get("source_dbs").map(_.items).getOrElse(Nil).map { s =>
-      val dbType = s.str("db_type", "mysql")
-      val host = s.str("host", "localhost")
-      val port = s.int("port", if (dbType == "postgres") 5432 else 3306)
+    val top = mapping(root, "the document")
+    val sources = list(top, "source_dbs").map { sv =>
+      val s = mapping(sv, "a source_dbs item")
+      val get = field(s) _
+      val dbType = get("db_type").getOrElse(DefaultDbType)
+      val host = get("host").getOrElse("localhost")
+      val port = get("port").fold(if (dbType == "postgres") 5432 else 3306)(_.toInt)
       val scheme = if (dbType == "postgres") "postgresql" else dbType
-      val databases = s.get("databases").map(_.items).getOrElse(Nil).map { d =>
-        val tables = d.get("tables").map(_.items).getOrElse(Nil).map { t =>
-          TableConfig(
-            table = t.str("table"),
-            engine = engineOf(Some(t.str("clickhouse_engine", ""))),
-            autoFullEtl = t.bool("auto_full_etl", default = true),
-            signColumn = t.str("sign_column", "sign"),
-            versionColumn = t.str("version_column", ""),
-            partitionBy = t.get("partition_by").flatMap(_.scalar),
-            engineSettings = t.get("settings").flatMap(_.scalar),
-            skipDecimal = t.bool("skip_decimal", default = false),
-            pk = t.strings("pk"))
-        }
-        DatabaseConfig(d.str("database"), tables)
+      val databases = list(s, "databases").map { dv =>
+        val d = mapping(dv, "a databases item")
+        DatabaseConfig(field(d)("database").getOrElse(""), list(d, "tables").map { tv =>
+          val t = mapping(tv, "a tables item")
+          tableOf(field(t)("table").getOrElse(""), field(t), "clickhouse_engine", "settings",
+            strings(t, "pk"))
+        })
       }
       SourceConfig(
-        alias = s.str("alias"),
+        alias = get("alias").getOrElse(""),
         dbType = dbType,
-        url = s.get("url").flatMap(_.scalar)
-          .getOrElse(s"jdbc:$scheme://$host:$port"),
-        user = s.str("user"),
-        password = s.str("password"),
+        url = get("url").getOrElse(s"jdbc:$scheme://$host:$port"),
+        user = get("user").getOrElse(""),
+        password = get("password").getOrElse(""),
         databases = databases,
-        skipDmls = s.strings("skip_dmls").toSet,
-        skipDeleteTables = s.strings("skip_delete_tables").toSet,
-        skipUpdateTables = s.strings("skip_update_tables").toSet)
+        skipDmls = strings(s, "skip_dmls").toSet,
+        skipDeleteTables = strings(s, "skip_delete_tables").toSet,
+        skipUpdateTables = strings(s, "skip_update_tables").toSet)
     }
-    SyncConfig(core, sources, redis)
+    SyncConfig(coreOf(field(mapping(top.get("core"), "'core'"))), sources,
+      redisOf(field(mapping(top.get("redis"), "'redis'"))))
   }
 
   /** Flat-properties loader, e.g.
@@ -165,56 +251,35 @@ object SyncConfig {
     * }}}
     */
   def fromProperties(props: Map[String, String]): SyncConfig = {
-    def p(key: String, default: String = ""): String = props.getOrElse(key, default)
-    val core = CoreConfig(
-      insertNum = p("core.insert_num", "20000").toInt,
-      insertIntervalSec = p("core.insert_interval", "60").toInt,
-      skipError = p("core.skip_error", "false").toBoolean,
-      monitoring = p("core.monitoring", "true").toBoolean)
-
-    val redis = RedisConfig(
-      host = p("redis.host", "localhost"),
-      port = p("redis.port", "6379").toInt,
-      db = p("redis.db", "0").toInt,
-      password = props.get("redis.password").filter(_.nonEmpty),
-      prefix = p("redis.prefix", "synch"),
-      queueMaxLen = p("redis.queue_max_len", "200000").toLong)
-
+    def p(key: String): String = props.getOrElse(key, "")
+    def csv(key: String): Seq[String] = p(key).split(',').map(_.trim).filter(_.nonEmpty).toSeq
     val sources = Iterator.from(0)
       .takeWhile(i => props.contains(s"source.$i.alias"))
       .map { i =>
         val databases = Iterator.from(0)
           .takeWhile(d => props.contains(s"source.$i.database.$d"))
           .map { d =>
-            val db = p(s"source.$i.database.$d")
             val tables = Iterator.from(0)
               .takeWhile(t => props.contains(s"source.$i.database.$d.table.$t"))
               .map { t =>
                 val base = s"source.$i.database.$d.table.$t"
-                TableConfig(
-                  table = p(base),
-                  engine = engineOf(props.get(s"$base.engine")),
-                  autoFullEtl = p(s"$base.auto_full_etl", "true").toBoolean,
-                  signColumn = p(s"$base.sign_column", "sign"),
-                  versionColumn = p(s"$base.version_column", ""),
-                  partitionBy = props.get(s"$base.partition_by"),
-                  engineSettings = props.get(s"$base.engine_settings"),
-                  skipDecimal = p(s"$base.skip_decimal", "false").toBoolean,
-                  pk = p(s"$base.pk").split(',').map(_.trim).filter(_.nonEmpty).toSeq)
+                tableOf(p(base), k => props.get(s"$base.$k"), "engine", "engine_settings",
+                  csv(s"$base.pk"))
               }.toSeq
-            DatabaseConfig(db, tables)
+            DatabaseConfig(p(s"source.$i.database.$d"), tables)
           }.toSeq
         SourceConfig(
           alias = p(s"source.$i.alias"),
-          dbType = p(s"source.$i.db_type", "mysql"),
+          dbType = props.getOrElse(s"source.$i.db_type", DefaultDbType),
           url = p(s"source.$i.url"),
           user = p(s"source.$i.user"),
           password = p(s"source.$i.password"),
           databases = databases,
-          skipDmls = p(s"source.$i.skip_dmls").split(',').map(_.trim).filter(_.nonEmpty).toSet,
-          skipDeleteTables = p(s"source.$i.skip_delete_tables").split(',').map(_.trim).filter(_.nonEmpty).toSet,
-          skipUpdateTables = p(s"source.$i.skip_update_tables").split(',').map(_.trim).filter(_.nonEmpty).toSet)
+          skipDmls = csv(s"source.$i.skip_dmls").toSet,
+          skipDeleteTables = csv(s"source.$i.skip_delete_tables").toSet,
+          skipUpdateTables = csv(s"source.$i.skip_update_tables").toSet)
       }.toSeq
-    SyncConfig(core, sources, redis)
+    SyncConfig(coreOf(k => props.get(s"core.$k")), sources,
+      redisOf(k => props.get(s"redis.$k")))
   }
 }

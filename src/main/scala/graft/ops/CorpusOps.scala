@@ -141,8 +141,7 @@ object CorpusOps {
     * identical: Σ_docs [term ∈ doc] ≡ countDistinct(doc_id), and the
     * union legs' zero-tags drop out of the sums.
     */
-  def vocabulary(docs: DataFrame, k: Int = 20, idCol: String = "doc_id",
-                 textCol: String = "text"): DataFrame = {
+  def vocabulary(docs: DataFrame, k: Int = 20, textCol: String = "text"): DataFrame = {
     val perDoc = docs.select(explode(wordGrams(lower(col(textCol)), 1)).as("term"))
       .select(col("term"), lit(1L).as("_d"), lit(0L).as("_t"))
     val inst = docs.select(explode(tokens(lower(col(textCol)))).as("term"))

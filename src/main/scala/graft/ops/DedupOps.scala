@@ -338,32 +338,6 @@ object DedupOps {
                           textCol: String): DataFrame =
     docs.select(col(idCol), explode(wordGrams(col(textCol), n)).as("g"))
 
-  /** MinHash signature (k minima) + LSH band buckets per document. */
-  def minhashSignatures(docs: DataFrame, n: Int = 3, k: Int = 8, bands: Int = 4,
-                        idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    require(bands > 0 && bands <= k && k % bands == 0,
-      s"bands ($bands) must divide k ($k): bands>k degenerates every bucket " +
-        "to a constant (O(n^2) candidates); a remainder silently drops minima")
-    val rowsPerBand = k / bands
-    // The signature is a pure per-document function of the shingle set:
-    // one native loop per row ([[graft.functions.MinHashExpr]]) inside
-    // the scan stage — no explode, no keyed exchange. The size>0 filter
-    // keeps the explode → groupBy form's semantics (shingle-less docs
-    // emit no row).
-    val sig = docs
-      .select(col(idCol), wordGrams(col(textCol), n).as("_g"))
-      .filter(size(col("_g")) > 0)
-      .select(col(idCol), minHash(col("_g"), k).as("minhash"))
-    // Band key: fold the band's rows into one bucket id (exact arithmetic;
-    // tiny k-element arrays — HOF cost is negligible here).
-    sig.withColumn("bands",
-      transform(sequence(lit(0), lit(bands - 1)), b =>
-        aggregate(
-          slice(col("minhash"), b * lit(rowsPerBand) + lit(1), lit(rowsPerBand)),
-          b.cast("long"),
-          (acc, v) => (acc * lit(31L) + v) % lit(P))))
-  }
-
   /** Exploded LSH band rows (id, band_idx, bucket) — the blocking index
     * every MinHash consumer joins on. The whole grams → minima → bucket
     * chain lives INSIDE the posexplode as one fused native expression

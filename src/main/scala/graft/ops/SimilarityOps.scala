@@ -432,18 +432,6 @@ object SimilarityOps {
     ivfTopKFixed(queries, corpus, k, nlist, nprobe, dims, idCol, vecCol)
   }
 
-  /** PQ codebooks: `m` subspaces × `ncode` centroids over `sub`-dim
-    * slices, derived from the deterministic LCG (same generator as the
-    * LSH hyperplanes / fixed IVF centroids) — every value is a dyadic
-    * rational, so an external engine reproduces the codebooks from the
-    * formula alone. Production swaps these for per-subspace k-means
-    * codebooks trained offline; nothing downstream changes.
-    */
-  def pqCodebooks(m: Int, ncode: Int, sub: Int): Seq[Seq[Seq[Double]]] =
-    (0 until m).map(s => (0 until ncode).map(c =>
-      (0 until sub).map(d => graft.functions.LshBucketExpr.hyperplane(
-        (s.toLong * ncode + c) * sub + d))))
-
   /** All `m` PQ codes in one native codegen'd pass (array<int>). */
   def pqCodes(vec: org.apache.spark.sql.Column, m: Int, ncode: Int,
               sub: Int): org.apache.spark.sql.Column = {

@@ -219,7 +219,7 @@ object Consume {
 
   /** The parseable ALTERs of `t` among a batch's DDL statements, with
     * their `event_unixtime`, in event order. */
-  private def altersOf(t: TableSync, ddls: Seq[(String, Long)])
+  private[run] def altersOf(t: TableSync, ddls: Seq[(String, Long)])
       : Seq[(graft.ddl.AlterParser.AlterAction, Long)] =
     ddls.sortBy(_._2).flatMap { case (stmt, ts) =>
       graft.ddl.AlterParser.parse(stmt).filter(_.table == t.table).map(p => (p.action, ts))
@@ -249,7 +249,7 @@ object Consume {
     * the UDF's generated code reads its function from the references
     * array and is the same for every batch.
     */
-  def applyBatch(spark: SparkSession, t: TableSync, store: ParquetStateStore,
+  def applyBatch(t: TableSync, store: ParquetStateStore,
                  changelog: DataFrame, batchId: Long): Unit = {
     val d = delta(t, changelog)
     store.append(if (t.engine != Engine.MergeTree) d
@@ -297,14 +297,17 @@ object Consume {
     * order the reference's eager per-batch flush applies. Keeps the
     * `_batch` column so compacted bases and fresh deltas share a schema.
     */
-  private def mergeTreeResolve(log: DataFrame, keys: SinkKeys): DataFrame = {
-    // a log written by `etl` alone predates any batch — treat it as batch 0
-    val withBatch =
-      if (log.columns.contains("_batch")) log else log.withColumn("_batch", lit(0L))
-    SinkStrategy.replacingResolve(withBatch,
+  private def mergeTreeResolve(log: DataFrame, keys: SinkKeys): DataFrame =
+    inArrivalOrder(log, keys)(SinkStrategy.replacingResolve(_, _))
+
+  /** Run `resolve` over a MergeTree log in arrival order: `_batch` first,
+    * then the table's own keys. A log written by `etl` alone predates any
+    * batch and reads as batch 0. */
+  private def inArrivalOrder(log: DataFrame, keys: SinkKeys)(
+      resolve: (DataFrame, SinkKeys) => DataFrame): DataFrame =
+    resolve(if (log.columns.contains("_batch")) log else log.withColumn("_batch", lit(0L)),
       SinkKeys(keys.pkCols, versionCol = "_batch",
         tieBreakers = keys.versionCol +: keys.tieBreakers))
-  }
 
   /** Read-time view of a table's current state, per engine (SURVEY §7.3). */
   def currentState(t: TableSync, store: ParquetStateStore): Option[DataFrame] = {
@@ -453,7 +456,7 @@ object Consume {
       // keyed by (schema, table): same-named tables in different schemas
       // must not share a snapshot source
       if (store.isEmpty) snapshots.get((t.schema, t.table)).foreach { src =>
-        applyBatch(spark, t, store, snapshotAsChangelog(FullEtl.read(spark, src)),
+        applyBatch(t, store, snapshotAsChangelog(FullEtl.read(spark, src)),
           batchId = -1L)
       }
     }
@@ -492,12 +495,7 @@ object Consume {
         case Engine.MergeTree =>
           // fold WITH _batch so the compacted base and later deltas keep
           // one schema (and arrival order stays total across compactions)
-          val withBatch =
-            if (log.columns.contains("_batch")) log
-            else log.withColumn("_batch", lit(0L))
-          SinkStrategy.replacingFold(withBatch,
-            SinkKeys(keys.pkCols, versionCol = "_batch",
-              tieBreakers = keys.versionCol +: keys.tieBreakers))
+          inArrivalOrder(log, keys)(SinkStrategy.replacingFold)
         case Engine.ReplacingMergeTree =>
           SinkStrategy.replacingFold(log, keys)
         case Engine.CollapsingMergeTree =>
@@ -741,7 +739,7 @@ object Consume {
         val errors = perTable(tables) { t =>
           val tCur = live(t)
           val ddls = ddlBySchema.getOrElse(t.schema, Nil)
-          applyTable(t, tCur, cached, batchId)(applyBatch(spark, evolveTable(tCur, ddls),
+          applyTable(t, tCur, cached, batchId)(applyBatch(evolveTable(tCur, ddls),
             stores(t), tableChangelog(events, tCur, ddls), batchId))
         }.flatten
         (ddlBySchema, errors)

@@ -362,22 +362,14 @@ final class DeadLetter(spark: SparkSession, root: String) {
     val ddls = Consume.collectDdl(stamped, t.schema)
     val events = stamped.drop("_src_file", "_src_seq")
     val next = Consume.evolveTable(cur, ddls)
-    Consume.applyBatch(spark, next, target,
-      Consume.tableChangelog(events, cur, ddls), bid)
-    import graft.ddl.AlterParser
-    val mine = ddls.sortBy(_._2)
-      .flatMap { case (stmt, _) => AlterParser.parse(stmt) }
-      .filter(_.table == t.table)
+    Consume.applyBatch(next, target, Consume.tableChangelog(events, cur, ddls), bid)
     DeadLetter.Replayed(
       next, pinned,
-      parkedRenames = mine.collect {
-        case AlterParser.ParsedAlter(_, AlterParser.ChangeColumn(o, n, _, _, _, _))
-          if AlterParser.bare(o) != AlterParser.bare(n) =>
-          (AlterParser.bare(o), AlterParser.bare(n))
+      parkedRenames = Consume.renamesIn(ddls).collect {
+        case (tbl, o, n) if tbl == t.table => (o, n)
       },
-      parkedAdds = mine.collect {
-        case AlterParser.ParsedAlter(_, AlterParser.AddColumn(c, _, _, _, _, _)) =>
-          AlterParser.bare(c)
+      parkedAdds = Consume.altersOf(t, ddls).collect {
+        case (graft.ddl.AlterParser.AddColumn(c, _, _, _, _, _), _) => graft.ddl.AlterParser.bare(c)
       })
   }
 

@@ -1,8 +1,7 @@
 package graft.run
 
 import graft.Tables
-import graft.ops.CdcOps
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Full-snapshot ETL (reference `synch etl`, synch/replication/etl.py:9-73).
   *
@@ -151,29 +150,5 @@ object FullEtl {
           }
         case None => base.load()
       }
-  }
-
-  /** Snapshot one table: read, optionally stamp the collapsing sign column
-    * (T1), write. Returns (sourceCount, targetCount) — the A5 `check`.
-    *
-    * The source count is OBSERVED during the single write pass
-    * (`Dataset.observe`), not re-counted afterwards: the old post-write
-    * `df0.count()` re-executed every JDBC range scan a second time
-    * (doubling source load on the 100 TB snapshot) and raced live writes
-    * — rows inserted between copy and count made the A5 check report a
-    * spurious mismatch for a perfectly good snapshot. The observation is
-    * the count of rows the write itself consumed, by construction
-    * race-free; the target count reads back parquet footers (cheap). */
-  def copyTable(spark: SparkSession, src: Source, targetPath: String,
-                withSign: Boolean = false): (Long, Long) = {
-    val df0 = read(spark, src)
-    val df = if (withSign) CdcOps.withSnapshotSign(df0) else df0
-    val obs = new org.apache.spark.sql.Observation("etl_src_count")
-    df.observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).parquet(targetPath)
-    val srcCount = obs.get("n").asInstanceOf[Long]
-    val tgtCount = spark.read.parquet(targetPath).count()
-    (srcCount, tgtCount)
   }
 }

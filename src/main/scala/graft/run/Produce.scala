@@ -2,7 +2,7 @@ package graft.run
 
 import graft.ops.CdcOps
 import graft.streaming.EventSource
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -33,7 +33,7 @@ object Produce {
   /** Start producing to a Kafka broker, keyed by schema so each schema is
     * one ordered partition stream (X1, synch/broker/kafka.py:32-38).
     */
-  def toKafka(spark: SparkSession, events: DataFrame, bootstrap: String,
+  def toKafka(events: DataFrame, bootstrap: String,
               topic: String, checkpoint: String,
               triggerInterval: String = "1 second"): StreamingQuery =
     kafkaProjection(events)
@@ -79,7 +79,7 @@ object Produce {
     * fresh connection (a long-lived socket would not survive driver
     * restarts).
     */
-  def toRedis(spark: SparkSession, events: DataFrame,
+  def toRedis(events: DataFrame,
               brokerF: () => graft.streaming.RedisBroker, checkpoint: String,
               triggerInterval: String = "1 second"): StreamingQuery =
     events.select(col("schema").cast("string").as("schema"),
@@ -544,7 +544,7 @@ object Produce {
 
   /** Hermetic broker stand-in: JSON files partitioned by schema — same
     * routing contract (one directory per schema, FIFO within). */
-  def toFiles(spark: SparkSession, events: DataFrame, dir: String,
+  def toFiles(events: DataFrame, dir: String,
               checkpoint: String,
               triggerInterval: String = "1 second"): StreamingQuery =
     events.select(col("schema"), EventSource.wireStruct(events).as("value"))

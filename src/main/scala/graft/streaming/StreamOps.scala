@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * no event-time semantics at all (SURVEY.md §2.7: ordering is producer
   * wall-clock, late data applied in arrival order); these are north-star
   * extensions (§7.5) for the training-data pipeline side, built on
-  * Structured Streaming's native session/tumbling windows.
+  * Structured Streaming's native session and sliding windows.
   */
 object StreamOps {
 
@@ -187,16 +187,4 @@ object StreamOps {
         col(s"l.$idCol").as("lead_id"), col(s"l.$tsCol").as("lead_ts"),
         col(s"r.$idCol").as("follow_id"), col(s"r.$tsCol").as("follow_ts"))
   }
-
-  /** Tumbling-window event counts per type — the monitoring-style rollup. */
-  def windowedCounts(events: DataFrame, window: String = "1 hour",
-                     watermark: String = "1 hour", tsCol: String = "ts",
-                     typeCol: String = "event_type"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(org.apache.spark.sql.functions.window(col(tsCol), window),
-        col(typeCol))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("window.start").as("window_start"), col(typeCol),
-        col("n_events"))
 }

@@ -3,7 +3,7 @@ package graft.config
 import graft.model.Engine
 import org.scalatest.funsuite.AnyFunSuite
 
-/** MiniYaml subset parser + synch.yaml-shaped config loading. */
+/** synch.yaml-shaped config loading through SnakeYAML. */
 class YamlSpec extends AnyFunSuite {
 
   test("parses the reference synch.yaml shape into SyncConfig") {
@@ -152,18 +152,28 @@ class YamlSpec extends AnyFunSuite {
   }
 
   test("scalar lists with colons, comments, null markers") {
-    val n = MiniYaml.parse(
-      """hosts:
-        |  - 10.0.0.1:5000 # first
-        |  - 10.0.0.2:5001
-        |empty:
-        |nothing: null
-        |quoted: "a: b # c"
+    val cfg = SyncConfig.fromYaml(
+      """source_dbs:
+        |  - alias: a
+        |    url: "a: b # c"
+        |    skip_delete_tables:
+        |      - 10.0.0.1:5000 # first
+        |      - 10.0.0.2:5001
+        |    databases:
+        |      - database: d
+        |        tables:
+        |          - table: t
+        |            partition_by:
+        |            settings: null
+        |            sign_column: ~
         |""".stripMargin)
-    assert(n.strings("hosts") == Seq("10.0.0.1:5000", "10.0.0.2:5001"))
-    assert(n.get("empty").flatMap(_.scalar).isEmpty)
-    assert(n.get("nothing").flatMap(_.scalar).isEmpty)
-    assert(n.str("quoted") == "a: b # c")
+    val src = cfg.sources.head
+    assert(src.skipDeleteTables == Set("10.0.0.1:5000", "10.0.0.2:5001"))
+    assert(src.url == "a: b # c")
+    val t = src.databases.head.tables.head
+    assert(t.partitionBy.isEmpty) // empty value → absent
+    assert(t.engineSettings.isEmpty) // null → absent
+    assert(t.signColumn == "sign") // ~ → absent → default
   }
 
   test("misaligned or tab indentation fails loud instead of dropping keys") {
@@ -171,32 +181,41 @@ class YamlSpec extends AnyFunSuite {
     // the previous entry and then discarded — skip_error quietly reverted
     // to its default where PyYAML rejects the file
     val outdented = intercept[IllegalArgumentException] {
-      MiniYaml.parse("core:\n    insert_num: 5\n  skip_error: true\n")
+      SyncConfig.fromYaml("core:\n    insert_num: 5\n  skip_error: true\n")
     }
-    assert(outdented.getMessage.contains("misaligned"))
+    assert(outdented.getMessage.contains("line 3,"), outdented.getMessage)
     val tabbed = intercept[IllegalArgumentException] {
-      MiniYaml.parse("core:\n\tinsert_num: 5\n")
+      SyncConfig.fromYaml("core:\n\tinsert_num: 5\n")
     }
-    assert(tabbed.getMessage.contains("tab"))
+    assert(tabbed.getMessage.contains("line 2,"), tabbed.getMessage)
+    // `key: scalar` over an indented block
     val both = intercept[IllegalArgumentException] {
-      MiniYaml.parse("key: scalar\n  child: 1\n")
+      SyncConfig.fromYaml("key: scalar\n  child: 1\n")
     }
-    assert(both.getMessage.contains("both"))
+    assert(both.getMessage.contains("line 2,"), both.getMessage)
   }
 
   test("apostrophe inside an unquoted scalar does not absorb the comment") {
     // regression: "bob's" flipped the quote tracker, so the trailing
     // comment leaked into the value
-    val n = MiniYaml.parse("alias: bob's db  # production\n")
-    assert(n.str("alias") == "bob's db")
+    val cfg = SyncConfig.fromYaml("source_dbs:\n  - alias: bob's db  # production\n")
+    assert(cfg.sources.head.alias == "bob's db")
   }
 
   test("apostrophe inside an unquoted KEY does not swallow the colon (r13)") {
-    // mapKeySplit lacked stripComment's boundary rule, so `o'brien:`
-    // opened a phantom quote at the apostrophe and the line failed to
-    // parse as a mapping
-    val n = MiniYaml.parse("o'brien: value\nplain: x\n")
-    assert(n.str("o'brien") == "value" && n.str("plain") == "x")
+    // a phantom quote opened at the apostrophe made the line fail to
+    // parse as a mapping; the key's siblings and an equal value read whole
+    val cfg = SyncConfig.fromYaml(
+      """core:
+        |  o'brien: value
+        |  insert_num: 7
+        |source_dbs:
+        |  - o'brien: value
+        |    alias: o'brien
+        |    user: x
+        |""".stripMargin)
+    assert(cfg.core.insertNum == 7)
+    assert(cfg.sources.head.alias == "o'brien" && cfg.sources.head.user == "x")
   }
 
   test("missing version_column stays UNSET (the reference's own empty default)") {
@@ -226,12 +245,104 @@ class YamlSpec extends AnyFunSuite {
         |  monitoring: 'off'
         |redis:
         |  queue_max_len: 3000000000
+        |source_dbs:
+        |  - alias: 1:20
+        |    user: yes
+        |    password: 0123
         |""".stripMargin)
     assert(cfg.core.skipError)
     assert(cfg.redis.queueMaxLen == 3000000000L)
+    // a string field keeps a plain scalar's text: YAML-1.1 typing would
+    // read 1:20 as 80 (base 60), yes as true and 0123 as 83 (octal)
+    val src = cfg.sources.head
+    assert((src.alias, src.user, src.password) == (("1:20", "yes", "0123")))
     val bad = intercept[IllegalArgumentException] {
-      MiniYaml.parse("x: maybe\n").bool("x", default = false)
+      SyncConfig.fromYaml("core:\n  monitoring: maybe\n")
     }
     assert(bad.getMessage.contains("not a boolean"))
+  }
+
+  test("flow lists load as lists") {
+    // the hand parser read `[a, b]` as one scalar, so the table fell back
+    // to PK discovery and deletes were not skipped
+    val cfg = SyncConfig.fromYaml(
+      """source_dbs:
+        |  - alias: a
+        |    skip_dmls: [delete]
+        |    databases:
+        |      - {database: d, tables: [{table: t, pk: [a, b]}]}
+        |""".stripMargin)
+    assert(cfg.sources.head.skipDmls == Set("delete"))
+    assert(cfg.sources.head.databases.head.tables.head.pk == Seq("a", "b"))
+  }
+
+  test("anchors and merge keys share table settings") {
+    val cfg = SyncConfig.fromYaml(
+      """collapsing: &collapsing
+        |  clickhouse_engine: CollapsingMergeTree
+        |  skip_decimal: yes
+        |source_dbs:
+        |  - alias: a
+        |    databases:
+        |      - database: d
+        |        tables:
+        |          - <<: *collapsing
+        |            table: t1
+        |          - <<: *collapsing
+        |            table: t2
+        |            skip_decimal: no
+        |""".stripMargin)
+    val Seq(t1, t2) = cfg.sources.head.databases.head.tables
+    assert(t1.engine == Engine.CollapsingMergeTree && t1.skipDecimal)
+    assert(t2.engine == Engine.CollapsingMergeTree && !t2.skipDecimal)
+  }
+
+  test("a duplicate key is refused") {
+    // the hand parser kept the first value and PyYAML keeps the last:
+    // either way one of the two settings is dropped without a word
+    val dup = intercept[IllegalArgumentException] {
+      SyncConfig.fromYaml("core:\n  insert_num: 1\n  insert_num: 2\n")
+    }
+    assert(dup.getMessage.contains("duplicate key insert_num"), dup.getMessage)
+    assert(dup.getMessage.contains("line 3,"), dup.getMessage)
+  }
+
+  test("a malformed file or a misshapen value fails naming its line") {
+    val unclosed = intercept[IllegalArgumentException] {
+      SyncConfig.fromYaml("core:\n  insert_num: 5\nsource_dbs: [{alias: a}\n")
+    }
+    assert(unclosed.getMessage.contains("line 3,"), unclosed.getMessage)
+    val scalarSection = intercept[IllegalArgumentException] {
+      SyncConfig.fromYaml("redis:\n  host: h\ncore: 5\n")
+    }
+    assert(scalarSection.getMessage.contains("'core' must be a mapping"), scalarSection.getMessage)
+    assert(scalarSection.getMessage.contains("line 3, column 7"), scalarSection.getMessage)
+    val scalarList = intercept[IllegalArgumentException] {
+      SyncConfig.fromYaml("source_dbs:\n  - alias: a\n    skip_dmls: delete\n")
+    }
+    assert(scalarList.getMessage.contains("'skip_dmls' must be a list"), scalarList.getMessage)
+    assert(scalarList.getMessage.contains("line 3, column 16"), scalarList.getMessage)
+  }
+
+  test("a bare table loads the case-class defaults from yaml and from properties") {
+    val fromYaml = SyncConfig.fromYaml(
+      """source_dbs:
+        |  - alias: a
+        |    databases:
+        |      - database: d
+        |        tables:
+        |          - table: t
+        |""".stripMargin)
+    val fromProps = SyncConfig.fromProperties(Map(
+      "source.0.alias" -> "a",
+      "source.0.database.0" -> "d",
+      "source.0.database.0.table.0" -> "t"))
+    def fields(p: Product) = p.productElementNames.zip(p.productIterator).toList
+    for (cfg <- Seq(fromYaml, fromProps)) {
+      assert(fields(cfg.core) == fields(CoreConfig()))
+      assert(fields(cfg.redis) == fields(RedisConfig()))
+      assert(fields(cfg.sources.head.databases.head.tables.head) == fields(TableConfig("t")))
+      assert(cfg.sources.head.dbType == "mysql")
+    }
   }
 }

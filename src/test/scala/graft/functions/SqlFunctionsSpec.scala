@@ -1,9 +1,29 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.FunctionRegistration
 
 class SqlFunctionsSpec extends SparkSpec {
+
+  /** MinHash signature (k minima) + LSH band buckets per document, as a
+    * signature column folded into band keys by array HOFs: the composed
+    * form [[graft.ops.DedupOps.minhashBandRows]]'s fused expression must
+    * equal. */
+  private def minhashSignatures(docs: DataFrame, n: Int, k: Int, bands: Int): DataFrame = {
+    val rowsPerBand = k / bands
+    docs
+      .select(col("doc_id"), CrossHash.wordGrams(col("text"), n).as("_g"))
+      .filter(size(col("_g")) > 0)
+      .select(col("doc_id"), CrossHash.minHash(col("_g"), k).as("minhash"))
+      .withColumn("bands",
+        transform(sequence(lit(0), lit(bands - 1)), b =>
+          aggregate(
+            slice(col("minhash"), b * lit(rowsPerBand) + lit(1), lit(rowsPerBand)),
+            b.cast("long"),
+            (acc, v) => (acc * lit(31L) + v) % lit(CrossHash.P))))
+  }
 
   test("native expressions are callable from SQL after registration") {
     FunctionRegistration.register(spark)
@@ -105,8 +125,7 @@ class SqlFunctionsSpec extends SparkSpec {
   test("fused minhash bands equal the signature+fold composition; null drops rows") {
     import org.apache.spark.sql.functions._
     val docs = graft.Tables(spark, sf, "documents").limit(200)
-    val composed = graft.ops.DedupOps
-      .minhashSignatures(docs, n = 3, k = 8, bands = 4)
+    val composed = minhashSignatures(docs, n = 3, k = 8, bands = 4)
       .select(col("doc_id"), posexplode(col("bands")).as(Seq("band_idx", "bucket")))
     val fused = graft.ops.DedupOps.minhashBandRows(docs, n = 3, k = 8, bands = 4)
     assert(fused.count() == composed.count())

@@ -483,7 +483,7 @@ class ExtOpsSpec extends SparkSpec {
 
   test("PqCodesExpr: native codes match the declarative struct-argmin chain") {
     val emb = Tables(spark, sf, "embeddings").limit(200)
-    val books = SimilarityOps.pqCodebooks(8, 16, 8)
+    val books = SimilarityHof.pqCodebooks(8, 16, 8)
     val native = SimilarityOps.pqCodes(col("embedding"), 8, 16, 8)
     val chain = (0 until 8).map(s =>
       SimilarityHof.pqCodeHof(col("embedding"), s, 8, books(s)).cast("int"))
@@ -495,7 +495,7 @@ class ExtOpsSpec extends SparkSpec {
 
   test("PqAdcTabsExpr: native ADC tables match the declarative fold chains") {
     val emb = Tables(spark, sf, "embeddings").limit(200)
-    val books = SimilarityOps.pqCodebooks(8, 16, 8)
+    val books = SimilarityHof.pqCodebooks(8, 16, 8)
     val native = SimilarityOps.pqAdcTabs(col("embedding"), 8, 16, 8)
     val chain = array((0 until 8).map(s => array(books(s).map(cv =>
       SimilarityHof.sliceDist(col("embedding"), s, 8, cv)): _*)): _*)

@@ -58,4 +58,16 @@ object SimilarityHof {
     array_min(array(book.zipWithIndex.map { case (cv, c) =>
       struct(sliceDist(vec, s, sub, cv).as("d"), lit(c).as("c"))
     }: _*)).getField("c")
+
+  /** PQ codebooks: `m` subspaces × `ncode` centroids over `sub`-dim
+    * slices, derived from the deterministic LCG (same generator as the
+    * LSH hyperplanes / fixed IVF centroids) — every value is a dyadic
+    * rational, so an external engine reproduces the codebooks from the
+    * formula alone. The codebooks [[graft.functions.PqCodesExpr]] and
+    * [[graft.functions.PqAdcTabsExpr]] compute in place.
+    */
+  def pqCodebooks(m: Int, ncode: Int, sub: Int): Seq[Seq[Seq[Double]]] =
+    (0 until m).map(s => (0 until ncode).map(c =>
+      (0 until sub).map(d => graft.functions.LshBucketExpr.hyperplane(
+        (s.toLong * ncode + c) * sub + d))))
 }

@@ -34,7 +34,7 @@ class ConsumeSpec extends SparkSpec {
                          onDriver: Boolean): Unit =
     if (onDriver) store.appendRows(Consume.stampRows(t,
       org.apache.spark.sql.graftshim.DriverRows.collect(Consume.delta(t, changelog)), batchId), batchId)
-    else Consume.applyBatch(spark, t, store, changelog, batchId)
+    else Consume.applyBatch(t, store, changelog, batchId)
 
   /** The canonical event frame of a directory of wire-JSON files, read
     * as a batch. */
@@ -317,7 +317,7 @@ class ConsumeSpec extends SparkSpec {
         // a plan of its own over a local relation of the same rows,
         // written through df.write
         val fresh = new ParquetStateStore(spark, s"$root/$engine-$name-fresh")
-        Consume.applyBatch(spark, t, fresh, Consume.tableChangelog(
+        Consume.applyBatch(t, fresh, Consume.tableChangelog(
           DriverRows.frame(spark, batchRows).drop("_src_file", "_src_seq"), t), 0L)
         val Seq(b, f) = Seq("bound", "fresh").map(k => s"$root/$engine-$name-$k/v=0")
         assert(ParquetFooters.read(spark, b).schema == ParquetFooters.read(spark, f).schema, what)
@@ -506,20 +506,20 @@ class ConsumeSpec extends SparkSpec {
 
     // same event second, split across batches: the reference's eager flush
     // applies batch 1's delete AFTER batch 0's insert → row gone
-    Consume.applyBatch(spark, t, store, batch(Seq((1L, 10.0, "insert", 100L))), 0L)
-    Consume.applyBatch(spark, t, store, batch(Seq((1L, 10.0, "delete", 100L))), 1L)
+    Consume.applyBatch(t, store, batch(Seq((1L, 10.0, "insert", 100L))), 0L)
+    Consume.applyBatch(t, store, batch(Seq((1L, 10.0, "delete", 100L))), 1L)
     assert(ids == Set.empty[Long])
 
     // out-of-order event time: a later batch's delete with an OLDER
     // timestamp still wins (arrival order, not event order)
-    Consume.applyBatch(spark, t, store, batch(Seq((2L, 20.0, "insert", 200L))), 2L)
-    Consume.applyBatch(spark, t, store, batch(Seq((2L, 20.0, "delete", 50L))), 3L)
+    Consume.applyBatch(t, store, batch(Seq((2L, 20.0, "insert", 200L))), 2L)
+    Consume.applyBatch(t, store, batch(Seq((2L, 20.0, "delete", 50L))), 3L)
     assert(ids == Set.empty[Long])
 
     // compaction preserves the resolution and later batches still apply
     Consume.compact(t, store)
     assert(ids == Set.empty[Long])
-    Consume.applyBatch(spark, t, store, batch(Seq((1L, 11.0, "insert", 10L))), 4L)
+    Consume.applyBatch(t, store, batch(Seq((1L, 11.0, "insert", 10L))), 4L)
     assert(ids == Set(1L))
   }
 
@@ -533,9 +533,9 @@ class ConsumeSpec extends SparkSpec {
       rows.toDF("id", "amount", "action", "event_unixtime")
         .withColumn("action_seq", when(col("action") === "delete", 1).otherwise(2))
 
-    Consume.applyBatch(spark, t, store,
+    Consume.applyBatch(t, store,
       batch((1L to 5000L).map(i => (i, i.toDouble, "insert", 100L))), 0L)
-    Consume.applyBatch(spark, t, store,
+    Consume.applyBatch(t, store,
       batch((1L to 10L).map(i => (i, -1.0, "insert", 200L))), 1L)
 
     def dirBytes(v: Long): Long = {
@@ -671,16 +671,16 @@ class ConsumeSpec extends SparkSpec {
     def state = Consume.currentState(t, store).get
       .select("id", "ver", "amount").as[(Long, Long, Double)].collect().toSet
 
-    Consume.applyBatch(spark, t, store,
+    Consume.applyBatch(t, store,
       batch(Seq((1L, 1L, 10.0, "insert", 100L))), 0L)
     assert(state == Set((1L, 1L, 10.0)))
     // wire-format update: delete carries the BEFORE image (old version),
     // insert the after image — the -1 cancels the +1 of the same version
-    Consume.applyBatch(spark, t, store,
+    Consume.applyBatch(t, store,
       batch(Seq((1L, 1L, 10.0, "delete", 200L), (1L, 2L, 11.0, "insert", 200L))), 1L)
     assert(state == Set((1L, 2L, 11.0)))
     // final delete cancels the current version → row disappears
-    Consume.applyBatch(spark, t, store,
+    Consume.applyBatch(t, store,
       batch(Seq((1L, 2L, 11.0, "delete", 300L))), 2L)
     assert(state == Set.empty[(Long, Long, Double)])
   }

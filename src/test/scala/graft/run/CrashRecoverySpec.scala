@@ -155,7 +155,7 @@ class CrashRecoverySpec extends SparkSpec {
         StructField("action", StringType), StructField("event_unixtime", LongType),
         StructField("action_seq", IntegerType), StructField("id", LongType),
         StructField("amount", DoubleType))))
-    Consume.applyBatch(spark, tables.head, store, preApplied, batchId = 1L)
+    Consume.applyBatch(tables.head, store, preApplied, batchId = 1L)
 
     val logBefore = store.readLog().get.count()
     val q2 = Consume.start(spark, EventSource.files(spark, eventsDir),

@@ -333,7 +333,7 @@ class DeadLetterSpec extends SparkSpec {
       ("db", "t", "query", "ALTER TABLE db.t ADD COLUMN note VARCHAR(20)", 110L, 0, "f", 1L)))
     val ddls1 = Consume.collectDdl(b1, "db")
     val t1 = Consume.evolveTable(t0, ddls1)
-    Consume.applyBatch(spark, t1, new ParquetStateStore(spark, s"$stateRoot/db/t"),
+    Consume.applyBatch(t1, new ParquetStateStore(spark, s"$stateRoot/db/t"),
       Consume.tableChangelog(b1.drop("_src_file", "_src_seq"), t0, ddls1), 1L)
     // batch 2: DML USING the live-added column — parks (pre-batch schema = t1)
     dl.record(df(Seq(("db", "t", "insert", """{"id":2,"amount":20.0,"note":"kept"}""",
@@ -378,7 +378,7 @@ class DeadLetterSpec extends SparkSpec {
     val t1 = Consume.evolveTable(t0, ddls1)
     assert(t1.pkCols == Seq("uid"), "fixture: evolveTable must rename the pk")
     val store = new ParquetStateStore(spark, s"$stateRoot/db/t")
-    Consume.applyBatch(spark, t1, store,
+    Consume.applyBatch(t1, store,
       Consume.tableChangelog(b1.drop("_src_file", "_src_seq"), t0, ddls1), 1L)
     // the live loop's store-side rename half (Consume.start does this for
     // every renamesIn hit — replicate it for the simulated live batch)
@@ -431,14 +431,14 @@ class DeadLetterSpec extends SparkSpec {
     val t1 = Consume.evolveTable(t0, ddls1)
     assert(t1.pkCols == Seq("uid"), "fixture: evolveTable must rename the pk")
     val store = new ParquetStateStore(spark, s"$stateRoot/db/t")
-    Consume.applyBatch(spark, t1, store,
+    Consume.applyBatch(t1, store,
       Consume.tableChangelog(b1.drop("_src_file", "_src_seq"), t0, ddls1), 1L)
     Consume.renamesIn(ddls1).foreach { case (_, o, n) =>
       Consume.compact(t1, store, Consume.renameTransform(o, n)) }
     // batch 2: DML under the renamed pk — applies LIVE (never parked)
     val b2 = df(Seq(("db", "t", "insert", """{"uid":2,"amount":20.0}""",
       120L, 2, "f", 1L)))
-    Consume.applyBatch(spark, t1, store,
+    Consume.applyBatch(t1, store,
       Consume.tableChangelog(b2.drop("_src_file", "_src_seq"), t1, Nil), 2L)
 
     // drain with the CURRENT sync (pk=uid): the parked batch replays
@@ -576,7 +576,7 @@ class DeadLetterSpec extends SparkSpec {
         val cached = frame(s)
         val ddls = Consume.collectDdl(cached, "db")
         val tNext = Consume.evolveTable(tCur, ddls)
-        Consume.applyBatch(spark, tNext,
+        Consume.applyBatch(tNext,
           new ParquetStateStore(spark, s"$stateRoot/db/t"),
           Consume.tableChangelog(cached.drop("_src_file", "_src_seq"), tCur, ddls),
           bid)
@@ -627,7 +627,7 @@ class DeadLetterSpec extends SparkSpec {
               preSync = Some(tLive))
           if (tAtFirstPark.isEmpty) tAtFirstPark = Some(tLive)
         } else {
-          Consume.applyBatch(spark, tNext,
+          Consume.applyBatch(tNext,
             new ParquetStateStore(spark, s"$root/int/db/t"),
             Consume.tableChangelog(
               cached.drop("_src_file", "_src_seq"), tLive, ddls), i.toLong)
@@ -757,7 +757,7 @@ class DeadLetterSpec extends SparkSpec {
         val ddls = Consume.collectDdl(cached, "db")
         val tNext = Consume.evolveTable(tCur, ddls)
         val store = new ParquetStateStore(spark, s"$stateRoot/db/t")
-        Consume.applyBatch(spark, tNext, store,
+        Consume.applyBatch(tNext, store,
           Consume.tableChangelog(cached.drop("_src_file", "_src_seq"), tCur, ddls),
           bid)
         Consume.renamesIn(ddls).foreach { case (_, o, n) =>
@@ -831,7 +831,7 @@ class DeadLetterSpec extends SparkSpec {
               preSync = Some(tLive))
         } else {
           if (debug) println(s"[dlprop] batch $i applies LIVE")
-          Consume.applyBatch(spark, tNext,
+          Consume.applyBatch(tNext,
             new ParquetStateStore(spark, s"$root/int/db/t"),
             Consume.tableChangelog(
               cached.drop("_src_file", "_src_seq"), tLive, ddls), i.toLong)
@@ -901,7 +901,7 @@ class DeadLetterSpec extends SparkSpec {
     val store = new ParquetStateStore(spark, s"$stateRoot/db/t")
     val b1 = df(Seq(("db", "t", "delete", """{"id":5,"amount":66.7}""",
       200L, 1, "f", 1L)))
-    Consume.applyBatch(spark, t, store,
+    Consume.applyBatch(t, store,
       Consume.tableChangelog(b1.drop("_src_file", "_src_seq"), t, Nil), 1L)
     // the compaction that used to erase the tombstone
     Consume.compact(t, store)
@@ -943,7 +943,7 @@ class DeadLetterSpec extends SparkSpec {
 
     def runLive(stateRoot: String): ParquetStateStore = {
       val store = new ParquetStateStore(spark, s"$stateRoot/db/t")
-      Consume.applyBatch(spark, t1, store,
+      Consume.applyBatch(t1, store,
         Consume.tableChangelog(b1.drop("_src_file", "_src_seq"), t0, ddls1), 1L)
       Consume.renamesIn(ddls1).foreach { case (_, o, n) =>
         Consume.compact(t1, store, Consume.renameTransform(o, n)) }

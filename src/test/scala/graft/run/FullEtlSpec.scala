@@ -1,16 +1,27 @@
 package graft.run
 
 import graft.SparkSpec
+import graft.model.Engine
+import graft.sink.ParquetStateStore
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 
 class FullEtlSpec extends SparkSpec {
 
+  /** The snapshot as `Main etl` writes it: one changelog of inserts,
+    * applied to the table's store as version -1; returns that version. */
+  private def etl(src: FullEtl.Source, pk: String, engine: Engine.Value): (DataFrame, DataFrame) = {
+    val snap = FullEtl.read(spark, src)
+    val store = new ParquetStateStore(spark, Files.createTempDirectory("etl").toString + "/t")
+    Consume.applyBatch(TableSync("db", "t", snap.schema, Seq(pk), engine), store,
+      Consume.snapshotAsChangelog(snap), -1L)
+    (snap, store.readVersion(-1L).get)
+  }
+
   test("snapshot copy preserves counts and stamps the sign column") {
-    val tgt = Files.createTempDirectory("etl").toString + "/orders"
-    val (src, dst) = FullEtl.copyTable(spark,
-      FullEtl.ParquetSource(s"$sf/orders.parquet"), tgt, withSign = true)
-    assert(src == dst && src > 0)
-    val out = spark.read.parquet(tgt)
+    val (src, out) = etl(FullEtl.ParquetSource(s"$sf/orders.parquet"), "o_orderkey",
+      Engine.CollapsingMergeTree)
+    assert(out.count() == src.count() && src.count() > 0)
     assert(out.columns.contains("sign"))
     assert(out.selectExpr("min(sign)", "max(sign)").collect().head.toSeq == Seq(1, 1))
   }
@@ -26,13 +37,13 @@ class FullEtlSpec extends SparkSpec {
     spark.createDataFrame(
         java.util.List.of(Row(1, new java.math.BigDecimal("1.00"))), schema)
       .write.parquet(s"$tmp/test.parquet")
-    val (s, c) = FullEtl.copyTable(spark,
-      FullEtl.ParquetSource(s"$tmp/test.parquet"), s"$tmp/target")
-    assert(s == 1 && c == 1)
-    val row = spark.read.parquet(s"$tmp/target").collect().head
-    assert(row.getInt(0) == 1)
-    assert(row.getDecimal(1) == new java.math.BigDecimal("1.00"))
-    assert(spark.read.parquet(s"$tmp/target").schema("amount").dataType ==
+    val (src, out) = etl(FullEtl.ParquetSource(s"$tmp/test.parquet"), "id",
+      Engine.ReplacingMergeTree)
+    assert(src.count() == 1 && out.count() == 1)
+    val row = out.collect().head
+    assert(row.getAs[Int]("id") == 1)
+    assert(row.getAs[java.math.BigDecimal]("amount") == new java.math.BigDecimal("1.00"))
+    assert(out.schema("amount").dataType ==
       DecimalType(10, 2)) // no precision loss, no skip_decimal workaround
   }
 

@@ -31,7 +31,7 @@ class ProduceSpec extends SparkSpec {
     try {
       val normalized = Produce.normalize(
         EventSource.files(spark, rawDir), schemas = Seq("db"))
-      val pq = Produce.toFiles(spark, Monitor.observed(normalized),
+      val pq = Produce.toFiles(Monitor.observed(normalized),
         s"$root/broker", s"$root/ckpt_produce")
       pq.processAllAvailable(); pq.stop()
 
@@ -93,7 +93,7 @@ class ProduceSpec extends SparkSpec {
     // the environmental half: format("kafka") is not loadable here
     val streaming = EventSource.files(spark, rawDir)
     val e = intercept[Exception] {
-      val q = Produce.toKafka(spark, streaming, "localhost:9092", "t",
+      val q = Produce.toKafka(streaming, "localhost:9092", "t",
         s"$root/ckpt")
       try q.processAllAvailable() finally q.stop()
     }

@@ -44,8 +44,8 @@ class ResumeSpec extends SparkSpec {
     def batch(id: Long, ts: Long) =
       Seq((id, 1.0, "insert", ts)).toDF("id", "amount", "action", "event_unixtime")
         .withColumn("action_seq", org.apache.spark.sql.functions.lit(2))
-    Consume.applyBatch(spark, t, store, batch(1, 100), 0L)
-    Consume.applyBatch(spark, t, store, batch(2, 200), 5L)
+    Consume.applyBatch(t, store, batch(1, 100), 0L)
+    Consume.applyBatch(t, store, batch(2, 200), 5L)
     Consume.compact(t, store) // folds batches 0..5 into v=5
     // truncating past the compaction would delete batch-0 data too
     intercept[IllegalStateException] { store.truncateAfter(2L) }
@@ -107,8 +107,8 @@ class ResumeSpec extends SparkSpec {
     val sa = new ParquetStateStore(spark, s"$stateRoot/db/a")
     val sb = new ParquetStateStore(spark, s"$stateRoot/db/b")
     Seq(ta -> sa, tb -> sb).foreach { case (t, s) =>
-      Consume.applyBatch(spark, t, s, batch(1), 0L)
-      Consume.applyBatch(spark, t, s, batch(2), 1L)
+      Consume.applyBatch(t, s, batch(1), 0L)
+      Consume.applyBatch(t, s, batch(2), 1L)
     }
     // a system dir under the root must not be mistaken for a store
     Files.createDirectories(Paths.get(stateRoot, "_dead_letter", "db", "a"))
@@ -140,10 +140,10 @@ class ResumeSpec extends SparkSpec {
     val tb = TableSync("db", "b", valueSchema, Seq("id"), Engine.MergeTree)
     val sa = new ParquetStateStore(spark, s"$stateRoot/db/a")
     val sb = new ParquetStateStore(spark, s"$stateRoot/db/b")
-    Consume.applyBatch(spark, ta, sa, batch(1, 100), 0L)
-    Consume.applyBatch(spark, ta, sa, batch(2, 200), 1L)
-    Consume.applyBatch(spark, tb, sb, batch(1, 100), 0L)
-    Consume.applyBatch(spark, tb, sb, batch(2, 200), 1L)
+    Consume.applyBatch(ta, sa, batch(1, 100), 0L)
+    Consume.applyBatch(ta, sa, batch(2, 200), 1L)
+    Consume.applyBatch(tb, sb, batch(1, 100), 0L)
+    Consume.applyBatch(tb, sb, batch(2, 200), 1L)
     Consume.compact(tb, sb) // b's data now lives in a compaction at v=1
 
     val e = intercept[IllegalStateException] {

@@ -149,8 +149,8 @@ class RewindDrainSpec extends SparkSpec {
     val store = new ParquetStateStore(spark, s"$stateRoot/db/t")
     def batch(id: Long, ts: Long) = Seq((id, 1.0, "insert", ts, 2))
       .toDF("id", "amount", "action", "event_unixtime", "action_seq")
-    Consume.applyBatch(spark, t, store, batch(1, 100), 0L)
-    Consume.applyBatch(spark, t, store, batch(2, 200), 1L)
+    Consume.applyBatch(t, store, batch(1, 100), 0L)
+    Consume.applyBatch(t, store, batch(2, 200), 1L)
     val dl = new DeadLetter(spark, s"$root/dead")
     dl.record(Seq(("db", "t", "insert", """{"id":3,"amount":3.0}""", 300L, 2))
       .toDF("schema", "table", "action", "values", "event_unixtime", "action_seq"),
@@ -189,9 +189,9 @@ class RewindDrainSpec extends SparkSpec {
       rows.map { case (id, a, act, ts) => (id, a, act, ts, if (act == "delete") 1 else 2) }
         .toDF("id", "amount", "action", "event_unixtime", "action_seq")
 
-    Consume.applyBatch(spark, t, store,
+    Consume.applyBatch(t, store,
       batch(Seq((1L, 1.0, "insert", 100), (2L, 2.0, "insert", 110))), 0L)
-    Consume.applyBatch(spark, t, store, batch(Seq((3L, 3.0, "insert", 200))), 1L)
+    Consume.applyBatch(t, store, batch(Seq((3L, 3.0, "insert", 200))), 1L)
     Consume.compact(t, store) // folds batches 0..1 into one +1-signed base at v=1
 
     // broker replay of batch 0 after the fold: the fold kept version 1,
@@ -199,18 +199,18 @@ class RewindDrainSpec extends SparkSpec {
     // re-append batch 0's +1 rows — the manifest must no-op it. (A
     // replay of batch 1 never triggered the bug: the compacted base IS
     // the committed v=1 dir.)
-    Consume.applyBatch(spark, t, store,
+    Consume.applyBatch(t, store,
       batch(Seq((1L, 1.0, "insert", 100), (2L, 2.0, "insert", 110))), 0L)
     // ONE delete must kill the row — under the double-apply bug the
     // sign-sum is +2-1 and id=2 stays alive
-    Consume.applyBatch(spark, t, store, batch(Seq((2L, 2.0, "delete", 300))), 2L)
+    Consume.applyBatch(t, store, batch(Seq((2L, 2.0, "delete", 300))), 2L)
     val ids = Consume.currentState(t, store).get
       .select("id").collect().map(_.getLong(0)).toSet
     assert(ids == Set(1L, 3L), s"deleted row resurrected by a folded-batch replay: $ids")
 
     // a batch the fold did NOT contain (it was parked at compact time)
     // still applies at an id below the base version
-    Consume.applyBatch(spark, t, store, batch(Seq((4L, 4.0, "insert", 150))), -1L)
+    Consume.applyBatch(t, store, batch(Seq((4L, 4.0, "insert", 150))), -1L)
     val ids2 = Consume.currentState(t, store).get
       .select("id").collect().map(_.getLong(0)).toSet
     assert(ids2 == Set(1L, 3L, 4L), s"never-folded low-id batch must still apply: $ids2")
@@ -298,7 +298,7 @@ class RewindDrainSpec extends SparkSpec {
       def applyLive(stateRoot: String, tCur: TableSync, bid: Long, s: Slice): Unit = {
         val cached = frame(s)
         val ddls = Consume.collectDdl(cached, "db")
-        Consume.applyBatch(spark, Consume.evolveTable(tCur, ddls),
+        Consume.applyBatch(Consume.evolveTable(tCur, ddls),
           new ParquetStateStore(spark, s"$stateRoot/db/t"),
           Consume.tableChangelog(cached.drop("_src_file", "_src_seq"), tCur, ddls),
           bid)
@@ -341,7 +341,7 @@ class RewindDrainSpec extends SparkSpec {
             preSync = Some(tCur))
           if (tAtFirstPark.isEmpty) tAtFirstPark = Some(tCur)
         } else {
-          Consume.applyBatch(spark, tNext, store,
+          Consume.applyBatch(tNext, store,
             Consume.tableChangelog(
               cached.drop("_src_file", "_src_seq"), tCur, ddls), i.toLong)
         }

@@ -110,7 +110,9 @@ class NoForkLocalFsSpec extends SparkSpec {
       store.append(Seq(3L).toDF("id"), 1)
       store.compact(store.readLog().get)
 
-      FullEtl.copyTable(spark, FullEtl.ParquetSource(s"$sf/orders.parquet"), s"$root/etl", withSign = true)
+      val snap = FullEtl.read(spark, FullEtl.ParquetSource(s"$sf/orders.parquet"))
+      Consume.applyBatch(TableSync("db", "orders", snap.schema, Seq("o_orderkey"), Engine.CollapsingMergeTree),
+        new ParquetStateStore(spark, s"$root/etl"), Consume.snapshotAsChangelog(snap), -1L)
 
       val q = Consume.start(spark, EventSource.files(spark, events.toString, maxFilesPerTrigger = 1),
         tables, s"$root/state", s"$root/ckpt", triggerInterval = "100 milliseconds")

@@ -123,8 +123,7 @@ class RedisBrokerSpec extends SparkSpec {
         ev("t", "insert", 2, 20.0, 200))
       Files.write(Paths.get(rawDir, "raw.json"), lines.mkString("\n").getBytes)
 
-      val q = graft.run.Produce.toRedis(spark,
-        EventSource.files(spark, rawDir),
+      val q = graft.run.Produce.toRedis(EventSource.files(spark, rawDir),
         () => new RedisBroker("127.0.0.1", server.port, "mysql_db"),
         s"$root/ckpt", triggerInterval = "200 milliseconds")
       q.processAllAvailable(); q.stop()
@@ -265,8 +264,7 @@ class RedisBrokerSpec extends SparkSpec {
     try {
       val root = Files.createTempDirectory("redis-reset").toString
       def runProduce(rawDir: String, ckpt: String): Unit = {
-        val q = graft.run.Produce.toRedis(spark,
-          EventSource.files(spark, rawDir),
+        val q = graft.run.Produce.toRedis(EventSource.files(spark, rawDir),
           () => new RedisBroker("127.0.0.1", server.port, "rst"),
           ckpt, triggerInterval = "200 milliseconds")
         try { q.processAllAvailable() } finally q.stop()

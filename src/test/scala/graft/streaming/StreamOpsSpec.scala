@@ -53,26 +53,6 @@ class StreamOpsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("tumbling windowed counts") {
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[(Timestamp, String)]
-    val counts = StreamOps.windowedCounts(
-      input.toDF().toDF("ts", "event_type"), window = "30 minutes",
-      watermark = "0 seconds")
-    val q = counts.writeStream.format("memory")
-      .queryName("windows_test").outputMode("append").start()
-    try {
-      input.addData((ts(1), "click"), (ts(2), "click"), (ts(40), "view"))
-      q.processAllAvailable()
-      input.addData((Timestamp.valueOf("2024-01-01 13:00:00"), "late"))
-      q.processAllAvailable()
-      val rows = spark.table("windows_test")
-        .select("event_type", "n_events").as[(String, Long)].collect().toSet
-      assert(rows.contains(("click", 2L)))
-      assert(rows.contains(("view", 1L)))
-    } finally q.stop()
-  }
-
   test("stateful streaming funnel advances across micro-batches, emits only progress") {
     implicit val sc = spark.sqlContext
     val input = MemoryStream[(Long, Long, Timestamp, String)]
